@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
   * driver-side gaps (planning, file ops, meta I/O) from cluster work.
   *
   * Usage: runMain graft.JobProfile <q1,q2,...> [sfDir]
-  * Prints, per query: total wall, Σ job wall, Σ executor run time,
-  * job count, task count — and the per-job table (desc, wall, tasks).
-  * The GAP row (wall − Σ job wall) is pure driver time.
+  * Prints, per query: total wall, job wall (the union of the jobs'
+  * intervals), Σ executor run time, job count, task count — and the
+  * per-job table (desc, wall, tasks). The GAP row (wall − job wall) is
+  * pure driver time, never negative.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -73,13 +74,16 @@ object JobProfile {
           // otherwise land in (and pollute) the measured run's maps
           org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(spark.sparkContext)
           lock.synchronized { jobs.clear(); stageToJob.clear() }
-          val t0 = System.nanoTime()
+          // wall on the listener's clock (epoch ms), so the job
+          // intervals are clipped to the very window they are subtracted from
+          val t0 = System.currentTimeMillis()
           try { fn(spark, sfDir).queryExecution.toRdd.count() }
           catch { case e: Throwable => System.err.println(s"[prof] $name: $e") }
           org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(spark.sparkContext)
-          val wallS = (System.nanoTime() - t0) / 1e9
+          val t1 = System.currentTimeMillis()
+          val wallS = (t1 - t0) / 1e3
           val snap = lock.synchronized { jobs.values.toVector }
-          val jobWall = snap.map(j => math.max(0L, j.end - j.start)).sum / 1e3
+          val jobWall = covered(snap.map(j => (j.start, j.end)), t0, t1) / 1e3
           val execS = snap.map(_.execRunMs).sum / 1e3
           val cpuS = snap.map(_.cpuMs).sum / 1e3
           println(f"%n==== $name%s wall=$wallS%.2fs jobs=${snap.size}%d " +
@@ -101,5 +105,20 @@ object JobProfile {
       }
     }
     spark.stop()
+  }
+
+  /** Milliseconds of `[lo, hi]` covered by the union of the
+    * `[start, end]` job intervals. Concurrent jobs overlap, so summing
+    * their walls counts shared time twice and drove driverGap
+    * (wall − jobWall) negative; the union never exceeds `hi − lo`.
+    */
+  private[graft] def covered(intervals: Seq[(Long, Long)], lo: Long, hi: Long): Long = {
+    var total = 0L
+    var reach = lo
+    intervals.map { case (s, e) => (math.max(s, lo), math.min(e, hi)) }
+      .filter { case (s, e) => e > s }.sortBy(_._1).foreach { case (s, e) =>
+        if (e > reach) { total += e - math.max(s, reach); reach = e }
+      }
+    total
   }
 }

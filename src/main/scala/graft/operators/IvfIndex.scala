@@ -36,11 +36,11 @@ object IvfIndex {
     *
     * `files`: optional MANIFEST-pinned file set (cell → absolute file
     * paths) — the table-attached index's MVCC snapshot. When set, scans
-    * plan from exactly these files (no directory listing — at
-    * nlist=4096 on an object store that is thousands of LIST calls per
-    * probe) and are isolated from concurrent refreshes, which only add
-    * files and never touch referenced ones. None (standalone layouts) =
-    * scan the directory.
+    * plan from the probed cells' files among these ([[cellScan]]: no
+    * directory listing — at nlist=4096 on an object store that is
+    * thousands of LIST calls per probe) and are isolated from concurrent
+    * refreshes, which only add files and never touch referenced ones.
+    * None (standalone layouts) = scan the directory.
     *
     * `storage`: "float32" (default — cells store the float vector
     * column) | "sq8" (cells store `vq_code array<tinyint>` +
@@ -354,9 +354,7 @@ object IvfIndex {
       s"standalone probe of a '${model.storage}' ivf layout: quantized cells carry no " +
         "float vectors to score exactly — serve through the table-attached " +
         "GraftIndex (two-stage: quantized candidates, exact rerank from the table)")
-    val cells = nearestCells(model, query, nprobe)
-    val scan = layoutScan(spark, model)
-      .filter(col("cluster_id").isin(cells: _*)) // partition-pruning filter
+    val scan = cellScan(spark, model, nearestCells(model, query, nprobe))
     val filtered = pred.fold(scan)(scan.filter)
     VectorSearch.topK(filtered, vecCol, idCol, query, k, model.metric)
   }
@@ -377,8 +375,7 @@ object IvfIndex {
       : DataFrame = {
     require(model.storage != "float32", "quantizedCandidates needs a quantized layout")
     val cells = nearestCells(model, query, nprobe)
-    val scan = layoutScan(spark, model)
-      .filter(col("cluster_id").isin(cells: _*))
+    val scan = cellScan(spark, model, cells)
     val filtered = pred.fold(scan)(scan.filter)
     if (model.storage == "rabitq") {
       import spark.implicits._
@@ -488,35 +485,47 @@ object IvfIndex {
         vecCol)
       .write.mode(SaveMode.Append).partitionBy("cluster_id").parquet(model.path)
 
-  private[graft] def layoutScan(spark: SparkSession, model: Model): DataFrame =
-    scanLayout(spark, model.schema, model.files, model.path)
+  private[graft] def cellScan(spark: SparkSession, model: Model, cells: Seq[Int]): DataFrame =
+    cellScan(spark, model.schema, model.files, model.path, cells)
 
-  /** Layout scan honoring an optional manifest-pinned file set — shared
-    * by IVF and PQ probes. With `files`, each generation directory
-    * (the parent of its `cluster_id=` dirs) is read with its own
-    * `basePath` so the partition column parses, and the generations are
-    * unioned; a later `cluster_id IN (...)` filter partition-prunes the
-    * in-memory file index of every branch, so only probed cells' files
-    * are ever opened — zero FS listing on the probe path.
+  /** The scan of the probed `cells` — the one way every IVF/PQ probe
+    * (and the refresh's kept-cells rewrite) reads cells. With a
+    * manifest-pinned file set the relation is built from the probed
+    * cells' files only: Spark stats every path a relation is given (one
+    * stat per file on the driver, and a distributed listing job once
+    * there are more than `parallelPartitionDiscovery.threshold` = 32
+    * paths), so it must never see the rest of the manifest. Each
+    * generation directory (the parent of its `cluster_id=` dirs) is
+    * read with its own `basePath` so the partition column parses, and
+    * the generations are unioned. Probed cells that deletes dropped
+    * from the manifest contribute nothing; when none is left the scan
+    * is empty in the layout schema. Without a file set (standalone and
+    * legacy layouts) it is the directory scan with the
+    * `cluster_id IN (cells)` partition filter.
     */
-  private[graft] def scanLayout(spark: SparkSession,
-                                schema: Option[org.apache.spark.sql.types.StructType],
-                                files: Option[Map[Int, Seq[String]]],
-                                path: String): DataFrame =
+  private[graft] def cellScan(spark: SparkSession,
+                              schema: Option[org.apache.spark.sql.types.StructType],
+                              files: Option[Map[Int, Seq[String]]],
+                              path: String, cells: Seq[Int]): DataFrame = {
+    def reader = schema.fold(spark.read)(spark.read.schema(_))
     files match {
-      case None => schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+      case None => reader.parquet(path).filter(col("cluster_id").isin(cells: _*))
       case Some(fm) =>
-        val all = fm.values.flatten.toSeq
-        require(all.nonEmpty, s"empty index manifest for layout $path — caller handles empty")
-        all.groupBy(f => new org.apache.hadoop.fs.Path(f).getParent.getParent.toString)
+        require(fm.nonEmpty, s"empty index manifest for layout $path — caller handles empty")
+        val probed = cells.distinct.flatMap(c => fm.getOrElse(c, Nil))
+        if (probed.isEmpty) schema match {
+          case Some(sc) =>
+            spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), sc)
+          // no recorded schema: infer it from one cell, keep no rows
+          case None => cellScan(spark, None, files, path, Seq(fm.keys.min)).limit(0)
+        }
+        else probed.groupBy(f => new org.apache.hadoop.fs.Path(f).getParent.getParent.toString)
           .toSeq.sortBy(_._1)
-          .map { case (base, fs) =>
-            schema.fold(spark.read)(spark.read.schema(_))
-              .option("basePath", base).parquet(fs: _*)
-          }
+          .map { case (base, fs) => reader.option("basePath", base).parquet(fs: _*) }
           // additive evolution: older generations pad newer columns null
           .reduce(_.unionByName(_, allowMissingColumns = true))
     }
+  }
 
   /** Nearest-existing-centroid assignment as a UDF (the same normalized
     * space the build used) — shared by [[append]] and the table-attached
@@ -571,8 +580,7 @@ object IvfIndex {
     }
     val probes = probeRows.toDF("qid", "cell", "qvec")
     val allCells = probeRows.map(_._2).distinct
-    val scan0 = layoutScan(spark, model)
-      .filter(col("cluster_id").isin(allCells: _*)) // partition pruning
+    val scan0 = cellScan(spark, model, allCells)
     // pred pushes INTO the pruned cell scan (cells store full rows);
     // at partial nprobe a selective pred can leave fewer than k matches
     // inside the probed cells — the table-attached caller measures
@@ -641,8 +649,7 @@ object IvfIndex {
       }
       val probes = probeRows.toDF("qid", "cell", "__w", "__aux", "__qn")
       val allCells = probeRows.map(_._2).distinct
-      val scan0 = layoutScan(spark, model)
-        .filter(col("cluster_id").isin(allCells: _*))
+      val scan0 = cellScan(spark, model, allCells)
       val scan = pred.fold(scan0)(scan0.filter)
       val scored = scan.join(broadcast(probes), col("cluster_id") === col("cell"))
         .withColumn("score", rabitqScore(model.metric, queries.head._2.length))
@@ -655,8 +662,7 @@ object IvfIndex {
     }
     val probes = probeRows.toDF("qid", "cell", "qvec")
     val allCells = probeRows.map(_._2).distinct
-    val scan0 = layoutScan(spark, model)
-      .filter(col("cluster_id").isin(allCells: _*)) // partition pruning
+    val scan0 = cellScan(spark, model, allCells)
     val scan = pred.fold(scan0)(scan0.filter)
     val scored = scan.join(broadcast(probes), col("cluster_id") === col("cell"))
       .withColumn("score", quantizedScoreVs(model.storage, model.metric, col("qvec")))
@@ -674,7 +680,7 @@ object IvfIndex {
     * cells that can be L2-far from the query (standard IVF-IP coarse
     * ranking). Exhaustive probes (nprobe = nlist) are exact either way.
     */
-  private[operators] def nearestCells(model: Model, query: Seq[Float], nprobe: Int): Seq[Int] = {
+  private[graft] def nearestCells(model: Model, query: Seq[Float], nprobe: Int): Seq[Int] = {
     val q = if (model.metric == "cosine") normalize(query.toArray) else query.toArray
     val byDot = model.metric == "dot"
     model.centroids.zipWithIndex.map { case (c, i) =>

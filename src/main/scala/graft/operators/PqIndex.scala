@@ -38,7 +38,7 @@ object PqIndex {
     * included) — see [[IvfIndex.Model]]; set by the table-attached
     * index so additively-evolved columns resolve without mergeSchema.
     * `files`: optional manifest-pinned file set (cell → paths) — the
-    * MVCC snapshot scan, see [[IvfIndex.scanLayout]].
+    * MVCC snapshot scan, see [[IvfIndex.cellScan]].
     */
   final case class Model(path: String, coarse: Array[Array[Float]],
                          codebooks: Array[Array[Array[Float]]],
@@ -315,9 +315,8 @@ object PqIndex {
       s.toDouble
     }
     val asc = model.metric == "l2"
-    def layoutScan = IvfIndex.scanLayout(spark, model.schema, model.files, model.path)
-    val adcScan = layoutScan
-      .filter(col("cluster_id").isin(cells: _*))       // partition pruning
+    def scanCells = IvfIndex.cellScan(spark, model.schema, model.files, model.path, cells)
+    val adcScan = scanCells
     val adc = pred.fold(adcScan)(adcScan.filter)       // pushed predicate: non-matches never ADC-scored
       .select(col(idCol), adcUdf(col("pq_code")).as("adc")) // code column only — no vectors read
       .orderBy(if (asc) col("adc").asc else col("adc").desc, col(idCol))
@@ -327,8 +326,7 @@ object PqIndex {
     // 3. exact re-rank of the survivors (fetch k' true vectors via pushed id
     // filter); ids kept as their external type — no bigint assumption
     val ids = adc.select(idCol).collect().map(_.get(0)).toSeq
-    val rerankScan = layoutScan
-      .filter(col("cluster_id").isin(cells: _*) && col(idCol).isin(ids: _*))
+    val rerankScan = scanCells.filter(col(idCol).isin(ids: _*))
     val survivors = pred.fold(rerankScan)(rerankScan.filter)
     VectorSearch.topK(survivors, vecCol, idCol, query, k, model.metric)
       .drop("pq_code", "cluster_id")

@@ -56,9 +56,11 @@ import graft.operators.{IvfIndex, PqIndex}
   *    generation's files — no torn cell, no FileNotFound mid-query;
   *  - a refresh that crashes anywhere before the meta swap is invisible
   *    (orphan generation dir, overwritten by the retry);
-  *  - probes plan from the manifest's explicit file list — zero
-  *    directory listing on the serving path (at nlist=4096 on an object
-  *    store, that is thousands of LIST calls saved per probe).
+  *  - probes plan from the manifest's explicit file list, cut down to
+  *    the probed cells before Spark sees it — no directory listing of
+  *    the layout: one stat per probed-cell file on the driver, and a
+  *    distributed listing job only when more than 32 such files exist
+  *    (`parallelPartitionDiscovery.threshold`).
   * Old generations are reclaimed by [[vacuum]] (run it with the same
   * single-maintainer discipline as refresh).
   *
@@ -241,42 +243,85 @@ object GraftIndex {
         org.apache.spark.sql.types.StructType(base ++ extra)
       }
 
-  private def loadModel(spark: SparkSession, tablePath: String, m: IndexMeta,
-                        files: Option[Map[Int, Seq[String]]])
-      : Either[IvfIndex.Model, PqIndex.Model] = {
-    val rows = spark.read.parquet(modelPath(tablePath, m.name, m.modelGen))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
-        r.getSeq[Float](3).toArray))
-    val coarse = rows.filter(_._1 == "coarse").sortBy(_._2).map(_._4)
-    val data = dataPath(tablePath, m.name)
-    val sc = layoutSchema(tablePath, m)
-    if (m.kind == "ivf") {
-      val ivfRot = rows.filter(_._1 == "rot").sortBy(_._2).map(_._4)
-      Left(IvfIndex.Model(data, coarse, m.metric, sc, files, m.storage,
-        rot = if (ivfRot.isEmpty) None else Some(ivfRot)))
+  /** A model dir's parsed rows: coarse centroids, PQ codebooks (empty
+    * for kind ivf) and the optional rotation.
+    */
+  private final case class ModelParts(coarse: Array[Array[Float]],
+                                      books: Array[Array[Array[Float]]],
+                                      rot: Option[Array[Array[Float]]])
+
+  /** Parsed models keyed by (model dir, its part files' names and
+    * lengths). Model dirs are immutable once written: [[rebuild]]
+    * writes a new `model-g<K>`, and a drop + re-create rewrites the dir
+    * with new part files, whose names carry the writing job's UUID. So
+    * one listing of the dir keys the parse soundly, and a probe pays
+    * that listing instead of a parquet schema-inference job plus a
+    * collect job. Bounded LRU, per JVM: an entry is a few KB of
+    * centroids (up to a few MB with PQ codebooks or a rotation), and a
+    * process serves a handful of indexes.
+    */
+  private val modelCache =
+    new java.util.LinkedHashMap[(String, Seq[(String, Long)]), ModelParts](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Seq[(String, Long)]), ModelParts]): Boolean =
+        size() > 16
     }
-    else {
-      val books = rows.filter(_._1 == "book").groupBy(_._2).toSeq.sortBy(_._1)
-        .map { case (_, bs) => bs.sortBy(_._3).map(_._4) }.toArray
+
+  private val modelSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("part STRING, i INT, j INT, vec ARRAY<FLOAT>")
+
+  private def modelParts(spark: SparkSession, dir: String): ModelParts = {
+    val files = GraftTable.MetaIO.list(new Path(dir))
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+    require(files.nonEmpty, s"no index model files under $dir")
+    val key = (dir, files.map(s => (s.getPath.getName, s.getLen)))
+    modelCache.synchronized(Option(modelCache.get(key))).getOrElse {
+      // explicit schema: one collect job, no inference job
+      val rows = spark.read.schema(modelSchema).parquet(files.map(_.getPath.toString): _*)
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
+          r.getSeq[Float](3).toArray))
       val rotRows = rows.filter(_._1 == "rot").sortBy(_._2).map(_._4)
-      val rot = if (rotRows.isEmpty) None else Some(rotRows)
-      val dsub = books(0)(0).length
-      Right(PqIndex.Model(data, coarse, books, books.length, dsub, m.metric, rot, sc, files))
+      val parts = ModelParts(
+        rows.filter(_._1 == "coarse").sortBy(_._2).map(_._4),
+        rows.filter(_._1 == "book").groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (_, bs) => bs.sortBy(_._3).map(_._4) }.toArray,
+        if (rotRows.isEmpty) None else Some(rotRows))
+      modelCache.synchronized(modelCache.put(key, parts))
+      parts
     }
   }
 
-  /** The serving snapshot: meta + model pinned to meta's generation.
-    * The manifest is resolved HERE, once — everything planned from the
+  private def loadModel(spark: SparkSession, tablePath: String, m: IndexMeta,
+                        files: Option[Map[Int, Seq[String]]])
+      : Either[IvfIndex.Model, PqIndex.Model] = {
+    val parts = modelParts(spark, modelPath(tablePath, m.name, m.modelGen))
+    val data = dataPath(tablePath, m.name)
+    val sc = layoutSchema(tablePath, m)
+    if (m.kind == "ivf")
+      Left(IvfIndex.Model(data, parts.coarse, m.metric, sc, files, m.storage, parts.rot))
+    else
+      Right(PqIndex.Model(data, parts.coarse, parts.books, parts.books.length,
+        parts.books(0)(0).length, m.metric, parts.rot, sc, files))
+  }
+
+  /** The serving snapshot of meta `m`: its manifest and model. The
+    * manifest is resolved HERE, once — everything planned from the
     * returned model keeps reading this generation's files even if a
     * refresh commits concurrently (it only adds files and swaps meta).
     */
-  private def open(spark: SparkSession, tablePath: String, name: String)
-      : (IndexMeta, Either[IvfIndex.Model, PqIndex.Model]) = {
-    val m = meta(tablePath, name)
+  private def open(spark: SparkSession, tablePath: String, m: IndexMeta)
+      : Either[IvfIndex.Model, PqIndex.Model] = {
     val files = m.manifestName.map(n =>
-      absFiles(tablePath, name, readManifest(tablePath, name, n)))
-    (m, loadModel(spark, tablePath, m, files))
+      absFiles(tablePath, m.name, readManifest(tablePath, m.name, n)))
+    loadModel(spark, tablePath, m, files)
   }
+
+  /** The model a probe would serve from right now (spec-facing). */
+  private[graft] def servingModel(spark: SparkSession, tablePath: String,
+                                  name: String = "vec"): Either[IvfIndex.Model, PqIndex.Model] =
+    open(spark, tablePath, meta(tablePath, name))
 
   /** Build the index from the table's CURRENT snapshot and record that
     * version. `kind = "ivf"` (default) or `"ivfpq"` (`m` subspaces,
@@ -450,8 +495,7 @@ object GraftIndex {
       val headSchema = layoutSchema(tablePath, m.copy(indexedVersion = head))
       val kept =
         if (curManifest.isEmpty) additions.limit(0) // emptied layout: rebuild from additions
-        else IvfIndex.scanLayout(spark, headSchema, Some(curFiles), data)
-          .filter(col("cluster_id").isin(affected: _*)) // file-index-pruned
+        else IvfIndex.cellScan(spark, headSchema, Some(curFiles), data, affected)
           .join(changedKeys, m.keyCols, "left_anti")
       // allowMissingColumns: additive table evolution — older index
       // rows read the new columns as null, like the table itself
@@ -662,8 +706,10 @@ object GraftIndex {
             nprobe: Int, name: String = "vec", pred: Option[Column] = None,
             allowStale: Boolean = false, rerankFactor: Int = 4,
             bruteForceCap: Int = 10000): DataFrame = {
-    val (m, model) = open(spark, tablePath, name)
+    val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
+    // the brute leg needs only meta: the manifest and model are opened
+    // for the index legs alone
     pred.foreach { p =>
       val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
         .filter(p).filter(col(m.vecCol).isNotNull)
@@ -686,6 +732,7 @@ object GraftIndex {
           .select(canonical.map(col): _*)
       }
     }
+    val model = open(spark, tablePath, m)
     // an index over an EMPTY table (every cell dropped) is valid state:
     // zero rows, shaped like any other probe (table columns minus the
     // vector, plus score) — not a parquet schema-inference crash
@@ -817,14 +864,11 @@ object GraftIndex {
               allowStale: Boolean = false, rerankFactor: Int = 4,
               pred: Option[org.apache.spark.sql.Column] = None,
               bruteForceCap: Int = 10000): DataFrame = {
-    val (m, model) = open(spark, tablePath, name)
+    val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
-    val ivf = model.fold(identity, pq => IvfIndex.Model(pq.path,
-      pq.rot.fold(pq.coarse)(r => pq.coarse.map(derotate(_, r))),
-      pq.metric, pq.schema, pq.files))
     def emptyOut = GraftTable.read(spark, tablePath, m.indexedVersion).limit(0)
       .select(lit(0L).as("qid") +: m.keyCols.map(col) :+ lit(0.0).as("score"): _*)
-    if (ivf.files.exists(_.isEmpty)) return emptyOut
+    // the brute leg needs only meta (see probe)
     pred.foreach { p =>
       require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
       import spark.implicits._
@@ -854,6 +898,10 @@ object GraftIndex {
       // loose pred: fall through — the pred pushes into the cell scans
       // below (both the float32 and quantized candidate stages take it)
     }
+    val ivf = open(spark, tablePath, m).fold(identity, pq => IvfIndex.Model(pq.path,
+      pq.rot.fold(pq.coarse)(r => pq.coarse.map(derotate(_, r))),
+      pq.metric, pq.schema, pq.files))
+    if (ivf.files.exists(_.isEmpty)) return emptyOut
     if (m.storage == "float32")
       IvfIndex.knnJoinKeys(spark, ivf, m.keyCols, m.vecCol, queries, k, nprobe, pred)
     else {

@@ -5,7 +5,7 @@ import org.scalatest.matchers.should.Matchers
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
-import graft.operators.VectorSearch
+import graft.operators.{IvfIndex, VectorSearch}
 import graft.sources.{GraftIndex, GraftTable}
 import java.nio.file.Files
 
@@ -955,5 +955,112 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
       pred = Some(pred), bruteForceCap = 0)
     exh.select("k", "score").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq shouldBe want
+  }
+
+  test("a probe whose every probed cell was emptied by deletes serves the canonical empty shape") {
+    val path = freshTable(200)
+    GraftIndex.create(spark, path, "v", nlist = 4)
+    val q = vec(4242L)
+    val ivf = GraftIndex.servingModel(spark, path).left.toOption.get
+    val near = IvfIndex.nearestCells(ivf, q, 1).head
+    // every key living in the query's nearest cell, read off that cell's files
+    val doomed = spark.read.parquet(ivf.files.get(near): _*).select("k")
+    doomed.count() should be > 0L
+    GraftTable.delete(spark, path, doomed)
+    GraftIndex.refresh(spark, path) shouldBe Some((0, 1))
+    GraftIndex.manifest(path).keySet should not contain near
+    // centroids are not refit, so nprobe = 1 probes exactly the dropped cell
+    val out = GraftIndex.probe(spark, path, q, 10, nprobe = 1)
+    out.columns.toSeq shouldBe Seq("k", "s", "score")
+    out.count() shouldBe 0L
+    // an exhaustive probe still serves the surviving cells exactly
+    GraftIndex.probe(spark, path, q, 10, nprobe = 4)
+      .select("k", "score").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq shouldBe exactTopK(path, q, 10)
+  }
+
+  test("the model cache follows a drop + re-create at the same version, and a rebuild") {
+    val path = freshTable(400)
+    GraftIndex.create(spark, path, "v", nlist = 8)
+    def served = GraftIndex.servingModel(spark, path).left.toOption.get
+      .centroids.map(_.toSeq).toSeq
+    def onDisk(dir: String) = spark.read.parquet(s"$path/_index/vec/$dir")
+      .filter($"part" === "coarse").orderBy("i").select("vec")
+      .collect().map(_.getSeq[Float](0)).toSeq
+    val metaFile = new java.io.File(path + "/_index/vec/meta").toPath
+    val metaText = new String(Files.readAllBytes(metaFile))
+    val before = served // cached from here on
+    before shouldBe onDisk("model-g0")
+    // same version, nlist and metric: the meta text is identical, only
+    // the centroids (fit on another sample) differ
+    GraftIndex.drop(path) shouldBe true
+    GraftIndex.create(spark, path, "v", nlist = 8, fitSampleFraction = Some(0.5))
+    new String(Files.readAllBytes(metaFile)) shouldBe metaText
+    val recreated = onDisk("model-g0")
+    recreated should not be before
+    served shouldBe recreated
+    // nprobe = 1 probes the cell the NEW centroids rank first
+    val q = vec(9191L)
+    val cell = IvfIndex.nearestCells(
+      IvfIndex.Model("", recreated.map(_.toArray).toArray, "cosine"), q, 1).head
+    val cellKeys = spark.read.parquet(
+      GraftIndex.servingModel(spark, path).left.toOption.get.files.get(cell): _*)
+      .select("k").collect().map(_.getLong(0)).toSet
+    GraftIndex.probe(spark, path, q, 5, nprobe = 1)
+      .select("k").collect().map(_.getLong(0)).toSet.subsetOf(cellKeys) shouldBe true
+    // a rebuild moves probes to model-g1
+    GraftIndex.rebuild(spark, path, nlist = Some(4))
+    served shouldBe onDisk("model-g1")
+    served.length shouldBe 4
+  }
+
+  test("the brute leg of a filtered probe reads meta only, never the model") {
+    val path = freshTable(200)
+    GraftIndex.create(spark, path, "v", nlist = 4)
+    val q = vec(31L)
+    val pred = col("k") % 50 === 3 // 4 matches: the exact brute leg
+    val want = GraftIndex.probe(spark, path, q, 3, nprobe = 1, pred = Some(pred))
+      .select("k", "score").collect().toSeq
+    val model = new java.io.File(path + "/_index/vec/model-g0")
+    val moved = new java.io.File(path + "/_index/vec/model-moved")
+    model.renameTo(moved) shouldBe true
+    try {
+      GraftIndex.probe(spark, path, q, 3, nprobe = 1, pred = Some(pred))
+        .select("k", "score").collect().toSeq shouldBe want
+      GraftIndex.knnJoin(spark, path, Seq((1L, q)), 3, nprobe = 1, pred = Some(pred))
+        .select("k", "score").collect().toSeq shouldBe want
+      // the index legs do need it
+      intercept[IllegalArgumentException] { GraftIndex.probe(spark, path, q, 3, nprobe = 1) }
+    } finally moved.renameTo(model)
+  }
+
+  test("a warm graft_index_search on a >32-file layout plans with ZERO Spark jobs") {
+    val path = Files.createTempDirectory("graft_index_plan").toString + "/t"
+    GraftTable.create((0L until 2000L).map(k => (k, s"doc-$k", vec(k))).toDF("k", "s", "v"),
+      path, Seq("k"), nbuckets = 16)
+    GraftIndex.create(spark, path, "v", nlist = 16)
+    // more files than parallelPartitionDiscovery.threshold (32): handed
+    // the whole manifest, Spark would list them in a distributed job
+    GraftIndex.manifest(path).values.map(_.size).sum should be > 32
+    val q = vec(77L)
+    val sql = s"SELECT * FROM graft_index_search('$path', " +
+      s"CAST(array(${q.mkString(", ")}) AS ARRAY<FLOAT>), 5, 2)"
+    val want = spark.sql(sql).collect().toSeq // warms the model cache
+    want.size shouldBe 5
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val df = spark.sql(sql) // analysis plans the probe
+      org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(sc)
+      withClue("Spark jobs during analysis: ") { jobs.get shouldBe 0 }
+      df.collect().toSeq shouldBe want
+    } finally sc.removeSparkListener(listener)
   }
 }
