@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry.queries entry on
@@ -27,23 +26,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner frees broadcasts/localCheckpoint blocks only when
-      // the JVM GCs, and a 128 GiB heap almost never does on its own —
-      // Spark's own escape hatch is this periodic forced GC (default
-      // 30 min: ONE tick in a 44-min board). 3 min keeps the cleaner
-      // draining, so late-board rows don't pay earlier rows' block/
-      // broadcast debt (measured r13: dedup_incremental_minhash_build
-      // 28.6 s at board position ~40 vs 3.8 s targeted, quiet host both).
-      .config("spark.cleaner.periodicGC.interval", "3min")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // Warm every query once at the tiny SF: same plan shape → janino
     // codegen-cache hits + hot JIT, so the timed runs below measure the

@@ -1,11 +1,11 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Where do a query's seconds go? Runs named queries under the exact
-  * Bench session config with a listener that records every Spark job's
-  * wall time, stage/task counts and executor-cpu totals — separating
-  * driver-side gaps (planning, file ops, meta I/O) from cluster work.
+/** Where do a query's seconds go? Runs named queries under the session
+  * Bench times ([[GraftSession.local]]) with a listener that records
+  * every Spark job's wall time, stage/task counts and executor-cpu
+  * totals — separating driver-side gaps (planning, file ops, meta I/O)
+  * from cluster work.
   *
   * Usage: runMain graft.JobProfile <q1,q2,...> [sfDir]
   * Prints, per query: total wall, job wall (the union of the jobs'
@@ -18,16 +18,7 @@ object JobProfile {
     require(args.nonEmpty, "usage: JobProfile <q1,q2,...> [sfDir]")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "3min")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     case class Job(id: Int, start: Long, var end: Long = 0L,

@@ -103,7 +103,7 @@ object Probe {
         .map(walk).sum
     }
     val exact = scala.collection.mutable.Map.empty[String, Seq[Long]]
-    Seq("float32", "sq8", "binary", "rabitq").foreach { st =>
+    graft.operators.Quantize.storages.foreach { st =>
       val root = s"${sys.props("java.io.tmpdir")}/graft_probe_hnsw_$st"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val tbl = s"$root/t"
@@ -200,7 +200,7 @@ object Probe {
       walk(new java.io.File(s"$tbl/_index/vec/data"))
     }
     val tops = scala.collection.mutable.Map.empty[String, Map[Long, Set[Long]]]
-    Seq("float32", "sq8", "binary", "rabitq").foreach { st =>
+    graft.operators.Quantize.storages.foreach { st =>
       val root = s"${sys.props("java.io.tmpdir")}/graft_probe_ivf_$st"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val tbl = s"$root/t"
@@ -375,12 +375,7 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     args.toList match {
       case "fuzzy" :: rest =>

@@ -45,7 +45,8 @@ import scala.collection.mutable
   * rows-only with recall pinned against brute force in HnswSpec —
   * unlike IVF, where nprobe = nlist earns a DuckDB oracle.
   *
-  * QUANTIZED STORAGE (`storage` = "sq8" | "binary"): at 100 TB the
+  * QUANTIZED STORAGE (`storage` = "sq8" | "binary" | "rabitq"; rabitq
+  * is the next paragraph): at 100 TB the
   * dominant serve cost is segment SCAN BYTES, and a float32 vector
   * column is 32 bits/dim of it — the reference's format ships IVF_PQ
   * for exactly this reason (README.md:40-44, the Lance index types).
@@ -64,11 +65,12 @@ import scala.collection.mutable
   * index. Recall vs the float32 layout is pinned in HnswSpec.
   *
   * `storage = "rabitq"` is the ESTIMATOR-grade 1-bit layout (Gao &
-  * Long, SIGMOD 2024 — the same public math as [[IvfIndex]]'s rabitq
-  * cells): sign bits of the seeded-rotated residual against ONE global
-  * layout centroid plus two scalars (the residual norm and the align
-  * normalizer), decoded to v̂ = c + (‖r‖/align)·Pᵀ(s/√D) so the plain
-  * walk kernels replay the unbiased RaBitQ estimate. The measured
+  * Long, SIGMOD 2024 — the same [[Quantize.rabitqEncode]] kernel as
+  * [[IvfIndex]]'s rabitq cells): sign bits of the seeded-rotated
+  * residual against ONE global layout centroid plus two scalars (the
+  * residual norm and the align normalizer), decoded to
+  * v̂ = c + (‖r‖/align)·Pᵀ(s/√D) so the plain walk kernels replay the
+  * unbiased RaBitQ estimate. The measured
   * reason it exists here: plain sign bits are NORM-BLIND — on a
   * log-normal-norm dot-metric corpus they collapse (0.27 overlap@10 in
   * the IVF measurement, SURVEY §15.13) because every high-norm vector
@@ -83,8 +85,6 @@ object HnswIndex {
                          efConstruction: Int, nPartitions: Int,
                          storage: String = "float32",
                          centroid: Option[Array[Float]] = None)
-
-  private[graft] val storages = Seq("float32", "sq8", "binary", "rabitq")
 
   /** The rabitq rotation's fixed seed: the matrix is DERIVED (dim comes
     * from the stored centroid), never persisted — deterministic like
@@ -107,7 +107,7 @@ object HnswIndex {
   private[graft] def rabitqCtx(model: Model): RabitqCtx = {
     val c = model.centroid.getOrElse(throw new IllegalStateException(
       "rabitq hnsw layout carries no centroid — corrupt model save"))
-    RabitqCtx(c, IvfIndex.randomRotation(c.length, RabitqSeed),
+    RabitqCtx(c, Quantize.randomRotation(c.length, RabitqSeed),
       model.metric == "cosine")
   }
 
@@ -119,152 +119,27 @@ object HnswIndex {
     * [[IvfIndex.storageFields]] for the estimator math provenance,
     * Gao & Long SIGMOD 2024) + dim.
     */
-  private def storageFields(storage: String): Seq[StructField] = storage match {
-    case "float32" => Seq(
-      StructField("vec", ArrayType(FloatType, containsNull = false), nullable = false))
-    case "sq8" => Seq(
-      StructField("qvec", BinaryType, nullable = false),
-      StructField("scale", FloatType, nullable = false))
-    case "binary" => Seq(
-      StructField("bits", ArrayType(LongType, containsNull = false), nullable = false),
-      StructField("dim", IntegerType, nullable = false))
-    case "rabitq" => Seq(
-      StructField("bits", ArrayType(LongType, containsNull = false), nullable = false),
-      StructField("rnorm", FloatType, nullable = false),
-      StructField("align", FloatType, nullable = false),
-      StructField("dim", IntegerType, nullable = false))
-    case other => throw new IllegalArgumentException(
-      s"unknown hnsw storage '$other' (one of ${storages.mkString(", ")})")
-  }
+  private def storageFields(storage: String): Seq[StructField] =
+    Quantize.requireStorage(storage, "hnsw") match {
+      case "float32" => Seq(
+        StructField("vec", ArrayType(FloatType, containsNull = false), nullable = false))
+      case "sq8" => Seq(
+        StructField("qvec", BinaryType, nullable = false),
+        StructField("scale", FloatType, nullable = false))
+      case "binary" => Seq(
+        StructField("bits", ArrayType(LongType, containsNull = false), nullable = false),
+        StructField("dim", IntegerType, nullable = false))
+      case "rabitq" => Seq(
+        StructField("bits", ArrayType(LongType, containsNull = false), nullable = false),
+        StructField("rnorm", FloatType, nullable = false),
+        StructField("align", FloatType, nullable = false),
+        StructField("dim", IntegerType, nullable = false))
+    }
 
   private def graphSchema(storage: String): StructType = StructType(
     (StructField("id", LongType, nullable = false) +: storageFields(storage)) :+
       StructField("links", ArrayType(ArrayType(LongType, containsNull = false),
         containsNull = false), nullable = false))
-
-  // ---- quantization kernels (the Quantize / SignBits arithmetic, on
-  // plain JVM arrays for the imperative build path) ------------------------
-
-  private[graft] def sq8Encode(v: Array[Float]): (Array[Byte], Float) = {
-    var mx = 0.0; var i = 0
-    while (i < v.length) {
-      val a = math.abs(v(i).toDouble); if (a > mx) mx = a; i += 1
-    }
-    val scale = math.max(mx, 1e-30) / 127.0
-    val out = new Array[Byte](v.length)
-    i = 0
-    while (i < v.length) {
-      out(i) = math.floor(v(i).toDouble / scale + 0.5).toByte; i += 1
-    }
-    (out, scale.toFloat)
-  }
-
-  private[graft] def sq8Decode(codes: Array[Byte], scale: Float): Array[Float] = {
-    val out = new Array[Float](codes.length)
-    var i = 0
-    while (i < codes.length) {
-      out(i) = (codes(i).toDouble * scale.toDouble).toFloat; i += 1
-    }
-    out
-  }
-
-  private[graft] def packSigns(v: Array[Float]): Array[Long] = {
-    val out = new Array[Long]((v.length + 63) >>> 6)
-    var i = 0
-    while (i < v.length) {
-      if (v(i) >= 0.0f) out(i >>> 6) |= 1L << (i & 63)
-      i += 1
-    }
-    out
-  }
-
-  private[graft] def signDecode(bits: Array[Long], dim: Int): Array[Float] = {
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < dim) {
-      out(i) = if (((bits(i >>> 6) >>> (i & 63)) & 1L) == 1L) 1.0f else -1.0f
-      i += 1
-    }
-    out
-  }
-
-  /** v·Rᵀ — undoes [[PqIndex.rotateVec]]'s row-vector rotation (R is
-    * orthonormal, so the transpose IS the inverse).
-    */
-  private def derotateVec(v: Array[Float], r: Array[Array[Float]]): Array[Float] = {
-    val d = v.length
-    val out = new Array[Float](d)
-    var j = 0
-    while (j < d) {
-      var s = 0.0; var i = 0
-      while (i < d) { s += v(i).toDouble * r(j)(i).toDouble; i += 1 }
-      out(j) = s.toFloat
-      j += 1
-    }
-    out
-  }
-
-  /** rabitq encode: residual against the layout centroid (UNIT space
-    * for cosine — the residual must measure the angular offset, or the
-    * estimator's noise scales with ‖v‖ instead of the corpus spread),
-    * rotated, sign-packed; scalars ‖r‖ and align = ‖P·r‖₁/(‖r‖√D)
-    * (the per-vector ⟨x̄, r̂'⟩ normalizer that makes the proxy an
-    * UNBIASED estimator — dividing by the expectation √(2/π) instead
-    * would leave per-vector bias).
-    */
-  private[graft] def rabitqEncode(v: Array[Float], ctx: RabitqCtx)
-      : (Array[Long], Float, Float) = {
-    val d = v.length
-    var vn2 = 0.0; var i = 0
-    while (i < d) { vn2 += v(i).toDouble * v(i); i += 1 }
-    val inv = if (ctx.cosine && vn2 > 0.0) 1.0 / math.sqrt(vn2) else 1.0
-    val r = new Array[Float](d)
-    var rn2 = 0.0
-    i = 0
-    while (i < d) {
-      val x = (v(i) * inv - ctx.centroid(i)).toFloat
-      r(i) = x; rn2 += x.toDouble * x; i += 1
-    }
-    val rr = PqIndex.rotateVec(r, ctx.rot)
-    val bits = new Array[Long]((d + 63) >>> 6)
-    var l1 = 0.0
-    i = 0
-    while (i < d) {
-      if (rr(i) >= 0.0f) bits(i >>> 6) |= 1L << (i & 63)
-      l1 += math.abs(rr(i).toDouble); i += 1
-    }
-    val rn = math.sqrt(rn2)
-    val align = if (rn == 0.0) 1.0 else l1 / (rn * math.sqrt(d.toDouble))
-    (bits, rn.toFloat, align.toFloat)
-  }
-
-  /** rabitq decode: v̂ = c + (‖r‖/align)·Pᵀ(s/√D) — the reconstruction
-    * whose plain dot/l2 kernels REPLAY the RaBitQ estimator exactly
-    * (⟨v̂, q⟩ = ⟨c, q⟩ + ‖r‖‖q‖·est⟨r̂, q̂⟩, the [[IvfIndex]] rabitqScore
-    * arithmetic as a vector instead of per-cell consts): the graph is
-    * built AND walked on these, so build/serve share one geometry and
-    * the norm scalar survives into every walk comparison — the part
-    * norm-blind ±1 sign decoding loses in the MIPS regime.
-    */
-  private[graft] def rabitqDecode(bits: Array[Long], rnorm: Float, align: Float,
-                                  dim: Int, ctx: RabitqCtx): Array[Float] = {
-    val s = new Array[Float](dim)
-    val isq = (1.0 / math.sqrt(dim.toDouble)).toFloat
-    var i = 0
-    while (i < dim) {
-      s(i) = if (((bits(i >>> 6) >>> (i & 63)) & 1L) == 1L) isq else -isq
-      i += 1
-    }
-    val u = derotateVec(s, ctx.rot)
-    val scale = rnorm.toDouble / math.max(align.toDouble, 1e-30)
-    val out = new Array[Float](dim)
-    i = 0
-    while (i < dim) {
-      out(i) = (ctx.centroid(i) + scale * u(i)).toFloat
-      i += 1
-    }
-    out
-  }
 
   /** (vector the graph sees, storage payload cells). The graph is built
     * over the DECODED values — identical floats to what a probe decodes
@@ -279,26 +154,31 @@ object HnswIndex {
     storage match {
       case "float32" => (v, Seq(v.toSeq))
       case "sq8" =>
-        val (codes, scale) = sq8Encode(v)
-        (sq8Decode(codes, scale), Seq(codes, scale))
+        val (codes, scale) = Quantize.sq8Encode(v)
+        (Quantize.sq8Decode(codes, scale), Seq(codes, scale))
       case "binary" =>
-        val bits = packSigns(v)
-        (signDecode(bits, v.length), Seq(bits.toSeq, v.length))
+        val bits = Quantize.packSigns(v)
+        (Quantize.signDecode(bits, v.length), Seq(bits.toSeq, v.length))
       case "rabitq" =>
-        val (bits, rn, align) = rabitqEncode(v, ctx)
-        (rabitqDecode(bits, rn, align, v.length, ctx),
+        // the layout stores the two estimator scalars as floats, and the
+        // graph is built over the decode of exactly those floats
+        val (bits, rn0, align0, _) =
+          Quantize.rabitqEncode(v, ctx.centroid, ctx.rot, ctx.cosine)
+        val (rn, align) = (rn0.toFloat, align0.toFloat)
+        (Quantize.rabitqDecode(bits, rn, align, v.length, ctx.centroid, ctx.rot),
           Seq(bits.toSeq, rn, align, v.length))
-      case other => throw new IllegalArgumentException(s"unknown hnsw storage '$other'")
     }
 
+  /** A stored row's payload decoded to the vector the graph sees; the
+    * storage was validated by [[graphSchema]] before any row is read.
+    */
   private def decodeRow(storage: String, ctx: RabitqCtx)(r: Row): Array[Float] =
     storage match {
       case "float32" => r.getSeq[Float](1).toArray
-      case "sq8"     => sq8Decode(r.getAs[Array[Byte]](1), r.getFloat(2))
-      case "binary"  => signDecode(r.getSeq[Long](1).toArray, r.getInt(2))
-      case "rabitq"  => rabitqDecode(r.getSeq[Long](1).toArray, r.getFloat(2),
-        r.getFloat(3), r.getInt(4), ctx)
-      case other     => throw new IllegalArgumentException(s"unknown hnsw storage '$other'")
+      case "sq8"     => Quantize.sq8Decode(r.getAs[Array[Byte]](1), r.getFloat(2))
+      case "binary"  => Quantize.signDecode(r.getSeq[Long](1).toArray, r.getInt(2))
+      case "rabitq"  => Quantize.rabitqDecode(r.getSeq[Long](1).toArray, r.getFloat(2),
+        r.getFloat(3), r.getInt(4), ctx.centroid, ctx.rot)
     }
 
   /** Internal distance: smaller = better, monotone with the metric's
@@ -571,21 +451,20 @@ object HnswIndex {
     * `path/pid=<p>/`. With `storage = "float32"` vectors are stored
     * raw (cosine normalization happens inside the distance kernel, so
     * scores replay from the raw floats — no quantization to undo);
-    * `"sq8"`/`"binary"` store the quantized payload instead and the
-    * graph walks the reconstructed values — see the class docs.
+    * `"sq8"`/`"binary"`/`"rabitq"` store the quantized payload instead
+    * and the graph walks the reconstructed values — see the class docs.
     */
   def build(data: DataFrame, idCol: String, vecCol: String, path: String,
             m: Int = 16, efConstruction: Int = 100, metric: String = "cosine",
             nPartitions: Int = 4, storage: String = "float32"): Model = {
     require(m >= 2, s"need m >= 2, got $m")
     require(efConstruction >= m, s"need efConstruction >= m, got $efConstruction")
-    require(storages.contains(storage),
-      s"unknown hnsw storage '$storage' (one of ${storages.mkString(", ")})")
+    Quantize.requireStorage(storage, "hnsw")
     val spark = data.sparkSession
     val centroid = if (storage == "rabitq")
       Some(meanVector(data, vecCol, metric == "cosine")) else None
     val ctx = centroid.map(c => RabitqCtx(c,
-      IvfIndex.randomRotation(c.length, RabitqSeed), metric == "cosine")).orNull
+      Quantize.randomRotation(c.length, RabitqSeed), metric == "cosine")).orNull
     val enc = Encoders.row(StructType(StructField("pid", IntegerType, nullable = false)
       +: graphSchema(storage).fields.toSeq))
     val rows = data.select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))

@@ -5,6 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.vectors._
+import Quantize.normalize
 
 /** IVF (inverted-file) ANN index — the scale path for vector search,
   * mirroring Lance's IVF index family (the reference's table declares
@@ -42,11 +43,13 @@ object IvfIndex {
     * refreshes, which only add files and never touch referenced ones.
     * None (standalone layouts) = scan the directory.
     *
-    * `storage`: "float32" (default — cells store the float vector
-    * column) | "sq8" (cells store `vq_code array<tinyint>` +
-    * `vq_scale double` instead — 4× fewer scan bytes, the [[Quantize]]
-    * arithmetic) | "binary" (`vq_bits array<bigint>`, packed sign bits
-    * — 32× fewer, the [[graft.functions.SignPack]] convention).
+    * `storage`: one of [[Quantize.storages]] — "float32" (default —
+    * cells store the float vector column) | "sq8" (cells store
+    * `vq_code array<tinyint>` + `vq_scale double` instead — 4× fewer
+    * scan bytes, the [[Quantize]] arithmetic) | "binary" (`vq_bits
+    * array<bigint>`, packed sign bits — 32× fewer, the
+    * [[graft.functions.SignPack]] convention) | "rabitq" (`vq_bits` of
+    * the rotated residual plus three scalars, see [[storageFields]]).
     * Quantized cells have NO float vector column, so [[probe]] refuses
     * them loudly: exact re-rank needs a float source the standalone
     * layout doesn't carry — the table-attached [[graft.sources.GraftIndex]]
@@ -57,8 +60,6 @@ object IvfIndex {
                          files: Option[Map[Int, Seq[String]]] = None,
                          storage: String = "float32",
                          rot: Option[Array[Array[Float]]] = None)
-
-  private[graft] val storages = Seq("float32", "sq8", "binary", "rabitq")
 
   /** The quantized layouts' vector-payload fields (what replaces the
     * float vector column in cell files).
@@ -82,7 +83,7 @@ object IvfIndex {
     */
   private[graft] def storageFields(storage: String): Seq[org.apache.spark.sql.types.StructField] = {
     import org.apache.spark.sql.types._
-    storage match {
+    Quantize.requireStorage(storage, "ivf") match {
       case "float32" => Nil
       case "sq8" => Seq(StructField("vq_code", ArrayType(ByteType)),
         StructField("vq_scale", DoubleType))
@@ -91,134 +92,54 @@ object IvfIndex {
         StructField("vq_norm", DoubleType),
         StructField("vq_align", DoubleType),
         StructField("vq_vnorm", DoubleType))
-      case other => throw new IllegalArgumentException(
-        s"unknown ivf storage '$other' (one of ${storages.mkString(", ")})")
     }
-  }
-
-  /** Seeded random orthonormal rotation (Gaussian rows + modified
-    * Gram-Schmidt; full rank w.p. 1), row-vector convention shared
-    * with [[PqIndex.rotateVec]] — deterministic, so two builds of the
-    * same data are bit-identical (the house contract).
-    *
-    * Memoized per (dim, seed): the matrix is O(dim²) to derive and the
-    * HNSW rabitq family re-derives it on EVERY probe/segmentVectors/
-    * append call (the r12 advice item) — negligible at tested dims but
-    * quadratic per call at production embedding dims (768+). The cache
-    * is per-JVM (driver derives once; executor tasks receive the matrix
-    * in their closure either way) and bounded by the handful of
-    * (dim, seed) pairs a process ever touches.
-    */
-  private val rotationCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Long), Array[Array[Float]]]()
-
-  private[graft] def randomRotation(dim: Int, seed: Long): Array[Array[Float]] =
-    rotationCache.computeIfAbsent((dim, seed), _ => deriveRotation(dim, seed))
-
-  private def deriveRotation(dim: Int, seed: Long): Array[Array[Float]] = {
-    val rnd = new java.util.Random(seed)
-    val m = Array.fill(dim, dim)(rnd.nextGaussian())
-    var i = 0
-    while (i < dim) {
-      var j = 0
-      while (j < i) {
-        var dp = 0.0; var k = 0
-        while (k < dim) { dp += m(i)(k) * m(j)(k); k += 1 }
-        k = 0
-        while (k < dim) { m(i)(k) -= dp * m(j)(k); k += 1 }
-        j += 1
-      }
-      var n = 0.0; var k = 0
-      while (k < dim) { n += m(i)(k) * m(i)(k); k += 1 }
-      val inv = 1.0 / math.sqrt(n)
-      k = 0
-      while (k < dim) { m(i)(k) *= inv; k += 1 }
-      i += 1
-    }
-    m.map(_.map(_.toFloat))
   }
 
   /** Swap the float vector column for its quantized representation —
     * shared by [[build]], [[append]], and the table-attached refresh
-    * (additions must match the layout's storage). Codegen'd column
-    * arithmetic, no UDF: sq8 is the [[Quantize]] scale/encode pair
-    * (scale MATERIALIZED first — substituting scaleCol into the encode
-    * lambda would re-evaluate array_max per element), binary is the
-    * [[graft.functions.SignPack]] expression.
-    */
-  private[graft] def quantizeLayout(df: DataFrame, vecCol: String,
-                                    storage: String): DataFrame = storage match {
-    case "float32" => df
-    case "sq8" =>
-      df.withColumn("vq_scale", Quantize.scaleCol(col(vecCol)))
-        .withColumn("vq_code", Quantize.encode(col(vecCol), col("vq_scale")))
-        .drop(vecCol)
-    case "binary" =>
-      df.withColumn("vq_bits", graft.functions.vectors.sign_pack(col(vecCol)))
-        .drop(vecCol)
-    case "rabitq" => throw new IllegalArgumentException(
-      "rabitq quantization is cluster-relative (residual signs) — use quantizeLayoutModel")
-    case other => throw new IllegalArgumentException(
-      s"unknown ivf storage '$other' (one of ${storages.mkString(", ")})")
-  }
-
-  /** Model-aware [[quantizeLayout]]: identical for float32/sq8/binary
-    * (their codes are cluster-independent), and the only valid entry
-    * for "rabitq", whose payload derives from the row's RESIDUAL
-    * against its cell centroid and the model's rotation. The rabitq
-    * encode is a build/refresh-path UDF (one matrix-vector product per
-    * row — the same cost class as [[cellUdf]]'s assignment, amortized
-    * over the layout's life); the SERVE path stays pure column
-    * arithmetic ([[rabitqCandidates]]).
+    * (additions must match the layout's storage). sq8 and binary are
+    * codegen'd column arithmetic, no UDF, and cluster-independent: sq8
+    * is the [[Quantize]] scale/encode pair (scale MATERIALIZED first —
+    * substituting scaleCol into the encode lambda would re-evaluate
+    * array_max per element), binary is the [[graft.functions.SignPack]]
+    * expression. rabitq's payload derives from the row's RESIDUAL
+    * against its cell centroid (`cluster_id` must be set) and the
+    * model's rotation: a build/refresh-path UDF over
+    * [[Quantize.rabitqEncode]] (one matrix-vector product per row — the
+    * same cost class as [[cellUdf]]'s assignment, amortized over the
+    * layout's life); the SERVE path stays pure column arithmetic
+    * ([[rabitqScore]]).
     */
   private[graft] def quantizeLayoutModel(model: Model, df: DataFrame,
                                          vecCol: String): DataFrame =
-    if (model.storage != "rabitq") quantizeLayout(df, vecCol, model.storage)
-    else {
-      val spark = df.sparkSession
-      val bcC = spark.sparkContext.broadcast(model.centroids)
-      val bcR = spark.sparkContext.broadcast(model.rot.getOrElse(
-        throw new IllegalStateException("rabitq model carries no rotation — corrupt save")))
-      // cosine centroids live in NORMALIZED space (the build's
-      // spherical-kmeans) — the residual must too, or it measures the
-      // norm gap instead of the angular offset and the estimator's
-      // noise scales with ‖v‖ instead of the within-cell spread
-      val cosine = model.metric == "cosine"
-      val enc = udf { (v: Seq[Float], cid: Int) =>
-        val c = bcC.value(cid)
-        val d = v.length
-        var vn2 = 0.0
-        var i = 0
-        while (i < d) { vn2 += v(i).toDouble * v(i); i += 1 }
-        val vn = math.sqrt(vn2)
-        val inv = if (cosine && vn > 0.0) 1.0 / vn else 1.0
-        val r = new Array[Float](d)
-        var rn2 = 0.0
-        i = 0
-        while (i < d) {
-          val x = (v(i) * inv - c(i)).toFloat; r(i) = x
-          rn2 += x.toDouble * x; i += 1
+    Quantize.requireStorage(model.storage, "ivf") match {
+      case "float32" => df
+      case "sq8" =>
+        df.withColumn("vq_scale", Quantize.scaleCol(col(vecCol)))
+          .withColumn("vq_code", Quantize.encode(col(vecCol), col("vq_scale")))
+          .drop(vecCol)
+      case "binary" =>
+        df.withColumn("vq_bits", graft.functions.vectors.sign_pack(col(vecCol)))
+          .drop(vecCol)
+      case "rabitq" =>
+        val spark = df.sparkSession
+        val bcC = spark.sparkContext.broadcast(model.centroids)
+        val bcR = spark.sparkContext.broadcast(model.rot.getOrElse(
+          throw new IllegalStateException("rabitq model carries no rotation — corrupt save")))
+        // cosine centroids live in NORMALIZED space (the build's
+        // spherical-kmeans) — the residual must too
+        val cosine = model.metric == "cosine"
+        val enc = udf { (v: Seq[Float], cid: Int) =>
+          val (bits, rn, align, vn) =
+            Quantize.rabitqEncode(v.toArray, bcC.value(cid), bcR.value, cosine)
+          (bits.toSeq, rn, align, vn)
         }
-        val rr = PqIndex.rotateVec(r, bcR.value)
-        val bits = new Array[Long]((d + 63) >>> 6)
-        var l1 = 0.0
-        i = 0
-        while (i < d) {
-          if (rr(i) >= 0.0f) bits(i >>> 6) |= 1L << (i & 63)
-          l1 += math.abs(rr(i).toDouble); i += 1
-        }
-        val rn = math.sqrt(rn2)
-        // zero residual (v == centroid): the estimator term is
-        // multiplied by vq_norm = 0 anyway; align = 1 avoids 0/0
-        val align = if (rn == 0.0) 1.0 else l1 / (rn * math.sqrt(d.toDouble))
-        (bits.toSeq, rn, align, vn)
-      }
-      df.withColumn("__rq", enc(col(vecCol), col("cluster_id")))
-        .withColumn("vq_bits", col("__rq._1"))
-        .withColumn("vq_norm", col("__rq._2"))
-        .withColumn("vq_align", col("__rq._3"))
-        .withColumn("vq_vnorm", col("__rq._4"))
-        .drop("__rq", vecCol)
+        df.withColumn("__rq", enc(col(vecCol), col("cluster_id")))
+          .withColumn("vq_bits", col("__rq._1"))
+          .withColumn("vq_norm", col("__rq._2"))
+          .withColumn("vq_align", col("__rq._3"))
+          .withColumn("vq_vnorm", col("__rq._4"))
+          .drop("__rq", vecCol)
     }
 
   /** The quantized rank score for a cell scan: larger = better for
@@ -228,25 +149,18 @@ object IvfIndex {
     * first. binary ranks by the asymmetric [[graft.functions.AdcDot]]
     * ⟨q, sign(v)⟩, the correct rank proxy for all three metrics over
     * ±1 reconstructions: cosine and l2 are monotone in it (|sign(v)| is
-    * the constant √dim) and dot IS it.
+    * the constant √dim) and dot IS it. `qvec` is the query: a literal
+    * for one query, or a column in the batch (knn-join) shape, where
+    * each row carries its own query vector.
     */
   private[graft] def quantizedScore(storage: String, metric: String,
-                                    query: Seq[Float]): Column =
-    quantizedScoreVs(storage, metric, typedlit(query))
-
-  /** Column-query variant of [[quantizedScore]] — the batch (knn-join)
-    * shape, where each row carries its own query vector.
-    */
-  private[graft] def quantizedScoreVs(storage: String, metric: String,
-                                      qvec: Column): Column = storage match {
+                                    qvec: Column): Column = storage match {
     case "sq8" =>
       val dec = Quantize.decode(col("vq_code"), col("vq_scale"))
       val s = VectorSearch.scoreCol(dec, qvec.cast("array<double>"), metric)
       if (metric == "l2") -s else s
     case "binary" =>
       graft.functions.vectors.adc_dot(qvec, col("vq_bits"))
-    case other => throw new IllegalArgumentException(
-      s"no quantized score for storage '$other'")
   }
 
   /** Fit nlist centroids and lay the table out as one partition dir per
@@ -259,8 +173,7 @@ object IvfIndex {
             fitSampleFraction: Option[Double] = None,
             persistModel: Boolean = true,
             storage: String = "float32"): Model = {
-    require(storages.contains(storage),
-      s"unknown ivf storage '$storage' (one of ${storages.mkString(", ")})")
+    Quantize.requireStorage(storage, "ivf")
     val feat =
       if (metric == "cosine")
         data.withColumn("_n", vector_norm(col(vecCol))) // hoisted: norm once per row, not per element
@@ -286,7 +199,7 @@ object IvfIndex {
     // rabitq: one seeded rotation per layout, derived before any row is
     // encoded (dim from the fitted centroids — no extra data pass)
     val rot = if (storage == "rabitq")
-      Some(randomRotation(model.clusterCenters.head.size, seed + 1)) else None
+      Some(Quantize.randomRotation(model.clusterCenters.head.size, seed + 1)) else None
     val m0 = Model(path, model.clusterCenters.map(_.toArray.map(_.toFloat)), metric,
       storage = storage, rot = rot)
     quantizeLayoutModel(m0, model.transform(feat).drop("_feat"), vecCol)
@@ -363,7 +276,7 @@ object IvfIndex {
     * nearest cells (partition-pruned, `pred` pushed into the scan like
     * [[probe]]) and keep the `kf` best rows by the quantized rank score
     * — a TakeOrderedAndProject over 1-byte/dim (sq8) or 1-bit/dim
-    * (binary) scan bytes, deterministic (ties on ascending id). The
+    * (binary, rabitq) scan bytes, deterministic (ties on ascending id). The
     * caller exact-reranks the survivors from a float source; the
     * `__qscore` column is the RANK proxy, not an emitted score, and is
     * kept only for diagnostics.
@@ -386,7 +299,8 @@ object IvfIndex {
         .drop("__w", "__aux", "__qn")
         .orderBy(desc("__qscore"), asc(idCol)).limit(kf)
     } else
-      filtered.withColumn("__qscore", quantizedScore(model.storage, model.metric, query))
+      filtered
+        .withColumn("__qscore", quantizedScore(model.storage, model.metric, typedlit(query)))
         .orderBy(desc("__qscore"), asc(idCol)).limit(kf)
   }
 
@@ -421,11 +335,11 @@ object IvfIndex {
           var k = 0
           while (k < w.length) { w(k) = (w(k) / qcn).toFloat; k += 1 }
         }
-        (cid, PqIndex.rotateVec(w, rot).toSeq, qcn, qn)
+        (cid, Quantize.rotateVec(w, rot).toSeq, qcn, qn)
       }
     else {
       val unit = if (qn == 0.0) q else q.map(x => (x / qn).toFloat)
-      val wrot = PqIndex.rotateVec(unit, rot).toSeq
+      val wrot = Quantize.rotateVec(unit, rot).toSeq
       // cosine scores live on the unit sphere (residuals were encoded
       // against normalized-space centroids): __aux = ⟨c, q̂⟩ and the
       // estimate is a cosine directly; dot stays in raw space
@@ -617,20 +531,10 @@ object IvfIndex {
     * broadcast-probes shape as [[knnJoin]] (big side never shuffles,
     * each cell row scored only against the queries probing it), ranked
     * by the quantized proxy, `kf` best per query via the bounded-heap
-    * reducer. Returns (qid, idCol, score) where score is the RANK
-    * PROXY — the caller exact-reranks from a float source.
-    */
-  private[graft] def quantizedKnnCandidates(spark: SparkSession, model: Model,
-                                            idCol: String,
-                                            queries: Seq[(Long, Seq[Float])],
-                                            kf: Int, nprobe: Int,
-                                            pred: Option[org.apache.spark.sql.Column] = None)
-      : DataFrame =
-    quantizedKnnCandidatesKeys(spark, model, Seq(idCol), queries, kf, nprobe, pred)
-
-  /** [[quantizedKnnCandidates]] for composite record keys — the
-    * [[knnJoinKeys]] convention: keys ride the per-query cut as one
-    * struct, output is (qid, key…, score-proxy) expanded.
+    * reducer. Composite record keys follow the [[knnJoinKeys]]
+    * convention: they ride the per-query cut as one struct. Returns
+    * (qid, key…, score) where score is the RANK PROXY — the caller
+    * exact-reranks from a float source.
     */
   private[graft] def quantizedKnnCandidatesKeys(spark: SparkSession, model: Model,
                                                 keyCols: Seq[String],
@@ -639,33 +543,26 @@ object IvfIndex {
                                                 pred: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
     import spark.implicits._
-    require(model.storage != "float32", "quantizedKnnCandidates needs a quantized layout")
-    if (model.storage == "rabitq") {
-      // per-(query, cell) consts instead of per-row query vectors — the
-      // same broadcast-probes shape, scored by the estimator
-      val probeRows = queries.flatMap { case (qid, qv) =>
-        rabitqProbeRows(model, qv, nearestCells(model, qv, nprobe))
-          .map { case (cid, w, aux, qn) => (qid, cid, w, aux, qn) }
-      }
-      val probes = probeRows.toDF("qid", "cell", "__w", "__aux", "__qn")
-      val allCells = probeRows.map(_._2).distinct
-      val scan0 = cellScan(spark, model, allCells)
-      val scan = pred.fold(scan0)(scan0.filter)
-      val scored = scan.join(broadcast(probes), col("cluster_id") === col("cell"))
-        .withColumn("score", rabitqScore(model.metric, queries.head._2.length))
-        .select(col("qid"), keyStruct(keyCols), col("score"))
-      return expandKey(
-        VectorSearch.perQueryTopK(scored, "qid", keyName(keyCols), kf, "dot"), keyCols)
-    }
-    val probeRows = queries.flatMap { case (qid, qv) =>
-      nearestCells(model, qv, nprobe).map(c => (qid, c, qv))
-    }
-    val probes = probeRows.toDF("qid", "cell", "qvec")
-    val allCells = probeRows.map(_._2).distinct
-    val scan0 = cellScan(spark, model, allCells)
+    require(model.storage != "float32", "quantizedKnnCandidatesKeys needs a quantized layout")
+    val probed = queries.map { case (qid, qv) => (qid, qv, nearestCells(model, qv, nprobe)) }
+    // only the per-(query, cell) probe columns and the score depend on
+    // the storage: rabitq scores from per-cell estimator consts, sq8 and
+    // binary from the query vector itself
+    val (probes, score) =
+      if (model.storage == "rabitq")
+        (probed.flatMap { case (qid, qv, cells) =>
+          rabitqProbeRows(model, qv, cells)
+            .map { case (cid, w, aux, qn) => (qid, cid, w, aux, qn) }
+        }.toDF("qid", "cell", "__w", "__aux", "__qn"),
+          rabitqScore(model.metric, queries.head._2.length))
+      else
+        (probed.flatMap { case (qid, qv, cells) => cells.map(c => (qid, c, qv)) }
+          .toDF("qid", "cell", "qvec"),
+          quantizedScore(model.storage, model.metric, col("qvec")))
+    val scan0 = cellScan(spark, model, probed.flatMap(_._3).distinct)
     val scan = pred.fold(scan0)(scan0.filter)
     val scored = scan.join(broadcast(probes), col("cluster_id") === col("cell"))
-      .withColumn("score", quantizedScoreVs(model.storage, model.metric, col("qvec")))
+      .withColumn("score", score)
       .select(col("qid"), keyStruct(keyCols), col("score"))
     // the proxy is larger-is-better for EVERY metric — rank with a
     // descending metric regardless of model.metric
@@ -689,12 +586,5 @@ object IvfIndex {
       else { while (j < c.length) { val t = c(j) - q(j); acc += t * t; j += 1 } }
       (acc, i)
     }.sortBy(_._1).take(nprobe).map(_._2).toSeq
-  }
-
-  private def normalize(v: Array[Float]): Array[Float] = {
-    var n = 0.0; var i = 0
-    while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-    val inv = if (n == 0.0) 0.0 else 1.0 / math.sqrt(n)
-    v.map(x => (x * inv).toFloat)
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.vectors._
+import Quantize.{normalize, rotateVec}
 
 import scala.util.Random
 
@@ -205,20 +206,6 @@ object PqIndex {
     (r, books)
   }
 
-  /** row-vector rotation: out_j = Σ_i v_i · R(i)(j). */
-  private[graft] def rotateVec(v: Array[Float], r: Array[Array[Float]]): Array[Float] = {
-    val d = v.length
-    val out = new Array[Float](d)
-    var j = 0
-    while (j < d) {
-      var s = 0.0; var i = 0
-      while (i < d) { s += v(i).toDouble * r(i)(j).toDouble; i += 1 }
-      out(j) = s.toFloat
-      j += 1
-    }
-    out
-  }
-
   /** Incremental maintenance, like [[IvfIndex.append]]: new vectors are
     * normalized/rotated into the build's quantization space, assigned
     * to their nearest existing coarse cell, PQ-encoded with the
@@ -344,13 +331,6 @@ object PqIndex {
     var s = 0.0; var i = 0
     while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
     s
-  }
-
-  private def normalize(v: Array[Float]): Array[Float] = {
-    var n = 0.0; var i = 0
-    while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-    val inv = if (n == 0.0) 0.0 else 1.0 / math.sqrt(n)
-    v.map(x => (x * inv).toFloat)
   }
 
   private[graft] def nearestIdx(cents: Array[Array[Float]], v: Array[Float]): Int = {

@@ -612,7 +612,7 @@ object GraftHnsw {
     * unless `allowStale`. Output: full table rows (minus the vector) +
     * score, the [[GraftIndex.probe]] shape.
     *
-    * Quantized layouts (`storage` sq8/binary) are served TWO-STAGE: the
+    * Quantized layouts (`storage` sq8/binary/rabitq) are served TWO-STAGE: the
     * walk ranks a `rerankFactor`·k frontier per segment on the
     * reconstructed vectors (the cheap, small-scan-bytes pass), then the
     * frontier's exact scores come from the TABLE's float column via a

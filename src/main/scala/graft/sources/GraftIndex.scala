@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{IvfIndex, PqIndex}
+import graft.operators.{IvfIndex, PqIndex, Quantize}
 
 /** A vector index that lives WITH its [[GraftTable]] — the analog of the
   * reference serving `hudi_vector_search('{TABLE_PATH}', …)` from an
@@ -13,8 +13,10 @@ import graft.operators.{IvfIndex, PqIndex}
   * inside probed cells) and `kind = "ivfpq"` (PQ codes + ADC probe +
   * exact re-rank, optionally OPQ-rotated).
   *
-  * `storage = "sq8" | "binary"` (kind "ivf") swaps the cells' float32
-  * vector column for int8 codes / packed sign bits (4×/32× fewer serve
+  * `storage = "sq8" | "binary" | "rabitq"` (kind "ivf", the
+  * [[graft.operators.Quantize]] formats) swaps the cells' float32
+  * vector column for int8 codes / packed sign bits / RaBitQ residual
+  * sign bits with their estimator scalars (4×/32×/~25× fewer serve
   * scan bytes — the dominant 100 TB cost; the [[GraftHnsw]] twin of the
   * same lever) and serving becomes TWO-STAGE: the cell scan ranks a
   * rerankFactor·k frontier on quantized arithmetic, then exact scores
@@ -334,8 +336,7 @@ object GraftIndex {
              fitSampleFraction: Option[Double] = None,
              storage: String = "float32"): Unit = {
     require(kind == "ivf" || kind == "ivfpq", s"unknown index kind '$kind'")
-    require(IvfIndex.storages.contains(storage),
-      s"unknown index storage '$storage' (one of ${IvfIndex.storages.mkString(", ")})")
+    Quantize.requireStorage(storage, "index")
     // ivfpq's cells are ALREADY the quantized scan path (ADC over
     // pq_code reads only the code column; the float column is touched
     // solely by the bounded rerank) — layering a second quantization
@@ -752,7 +753,7 @@ object GraftIndex {
         else {
           // QUANTIZED layout, two-stage (the 7d/7g rerank shape on the
           // stored index): the cell scan ranks a rerankFactor·k
-          // frontier on 1-byte/dim (sq8) or 1-bit/dim (binary)
+          // frontier on 1-byte/dim (sq8) or 1-bit/dim (binary, rabitq)
           // candidates — the 100 TB scan-bytes lever — then exact
           // scores come from the TABLE's float column via the
           // bucket-pruned point lookup, so emitted scores are exact
@@ -785,8 +786,8 @@ object GraftIndex {
     // Projected explicitly so no per-kind drop list can drift. For
     // quantized layouts the schema lacks the vector column already; the
     // rerank join's vecCol and proxy columns die here too.
-    val internal = Set("cluster_id", "pq_code", "vq_code", "vq_scale", "vq_bits",
-      "vq_norm", "vq_align", "vq_vnorm", "__qscore")
+    val internal = Set("cluster_id", "pq_code", "__qscore") ++
+      Quantize.storages.flatMap(IvfIndex.storageFields).map(_.name)
     val canonical = model.fold(_.schema, _.schema) match {
       case Some(sc) => sc.fieldNames.toSeq
         .filterNot(c => c == m.vecCol || internal(c)) :+ "score"
@@ -899,7 +900,7 @@ object GraftIndex {
       // below (both the float32 and quantized candidate stages take it)
     }
     val ivf = open(spark, tablePath, m).fold(identity, pq => IvfIndex.Model(pq.path,
-      pq.rot.fold(pq.coarse)(r => pq.coarse.map(derotate(_, r))),
+      pq.rot.fold(pq.coarse)(r => pq.coarse.map(Quantize.derotate(_, r))),
       pq.metric, pq.schema, pq.files))
     if (ivf.files.exists(_.isEmpty)) return emptyOut
     if (m.storage == "float32")
@@ -931,21 +932,5 @@ object GraftIndex {
       IvfIndex.expandKey(graft.operators.VectorSearch.perQueryTopK(
         scored, "qid", IvfIndex.keyName(m.keyCols), k, m.metric), m.keyCols)
     }
-  }
-
-  /** v·Rᵀ for a row-vector rotation R — maps a rotated-space point back
-    * to the original space.
-    */
-  private def derotate(v: Array[Float], r: Array[Array[Float]]): Array[Float] = {
-    val d = v.length
-    val out = new Array[Float](d)
-    var j = 0
-    while (j < d) {
-      var s = 0.0; var i = 0
-      while (i < d) { s += v(i).toDouble * r(j)(i).toDouble; i += 1 }
-      out(j) = s.toFloat
-      j += 1
-    }
-    out
   }
 }

@@ -97,7 +97,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers {
   }
 
   test("OPQ rotation cuts PQ reconstruction error on anisotropic data") {
-    import graft.operators.PqIndex
+    import graft.operators.{PqIndex, Quantize}
     import scala.util.Random
     // strongly correlated vectors: low-rank mix + small noise — the regime
     // plain PQ handles worst (cross-subspace correlation) and OPQ fixes
@@ -114,7 +114,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers {
     def mse(r: Array[Array[Float]], books: Array[Array[Array[Float]]]): Double = {
       val dsub = d / m
       sample.map { v =>
-        val rv = PqIndex.rotateVec(v, r)
+        val rv = Quantize.rotateVec(v, r)
         (0 until m).map { mi =>
           val sub = rv.slice(mi * dsub, (mi + 1) * dsub)
           val c = books(mi)(PqIndex.nearestIdx(books(mi), sub))

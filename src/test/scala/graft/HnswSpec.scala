@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import org.apache.spark.sql.functions._
-import graft.operators.{HnswIndex, VectorSearch}
+import graft.operators.{HnswIndex, Quantize, VectorSearch}
 import java.nio.file.Files
 
 /** HNSW segment-graph index: recall vs brute force, determinism, the
@@ -83,8 +83,8 @@ class HnswSpec extends AnyFunSuite with Matchers {
         val v = r.getSeq[Float](1).toArray
         val dec =
           if (storage == "sq8") {
-            val (c, s) = HnswIndex.sq8Encode(v); HnswIndex.sq8Decode(c, s)
-          } else HnswIndex.signDecode(HnswIndex.packSigns(v), v.length)
+            val (c, s) = Quantize.sq8Encode(v); Quantize.sq8Decode(c, s)
+          } else Quantize.signDecode(Quantize.packSigns(v), v.length)
         (r.getLong(0), cos(query, dec))
       }.sortBy { case (id, s) => (-s, id) }.take(10).toSeq
       got.map(_._1) shouldBe want.map(_._1)
