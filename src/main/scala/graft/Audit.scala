@@ -44,11 +44,21 @@ object Audit {
         // q_events_gapfill / _ffill cross-join distinct event types
         // (~5 rows) with the exploded day spine of ONE aggregate row —
         // the dimension-sized date spine, never a fact-sized side.
+        // mm_clip_maxsim broadcasts the query's frames (doc 0, frame_idx
+        // < 8: at most 8 rows) against every doc frame — MaxSim's
+        // query × candidate dot matrix. q_hard_negatives is the
+        // vs_knn_join shape: the vec_id < 10 query set broadcast under a
+        // label-inequality condition. vs_sql_knn_tvf_filtered is
+        // GraftIndex.knnJoin's exact brute leg: it broadcasts the
+        // predicate's match set, which that leg only serves when the
+        // measured match count is <= bruteForceCap, against the query
+        // batch's local rows.
         val expectedBnlj =
           Set("vs_knn_join", "q22_idle_rich_customers", "q_sample_temperature",
             "q_balance_deciles", "q_events_funnel", "q11_important_stock",
             "q_segment_overlap_sketch", "q_segment_overlap_sql", "q_events_gapfill",
-            "q_events_gapfill_ffill")
+            "q_events_gapfill_ffill", "mm_clip_maxsim", "q_hard_negatives",
+            "vs_sql_knn_tvf_filtered")
         val danger =
           (if (plan.contains("BroadcastNestedLoopJoin") && !expectedBnlj(name)) " !!BNLJ" else "") +
           (if (plan.contains("CartesianProduct")) " !!CARTESIAN" else "")

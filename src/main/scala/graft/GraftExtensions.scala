@@ -93,10 +93,7 @@ object GraftFunctions {
   private def vectorSearchPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length == 4 || args.length == 5,
       s"graft_vector_search(path, vecCol, queryVec, k[, metric]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_vector_search: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_vector_search", args)
     val path = lit(0, "path").toString
     val vecCol = lit(1, "vecCol").toString
     val k = lit(3, "k").asInstanceOf[Number].intValue()
@@ -131,26 +128,9 @@ object GraftFunctions {
   private def indexSearchPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 3 && args.length <= 6,
       s"graft_index_search(tablePath, queryVec, k[, nprobe[, name[, predSql]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_index_search: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_index_search", args)
     val path = lit(0, "tablePath").toString
-    val query: Seq[Float] = (args(1).dataType, lit(1, "queryVec")) match {
-      case (org.apache.spark.sql.types.ArrayType(et, _),
-            a: org.apache.spark.sql.catalyst.util.ArrayData) => et match {
-        case org.apache.spark.sql.types.FloatType => a.toFloatArray().toSeq
-        case org.apache.spark.sql.types.DoubleType => a.toDoubleArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.IntegerType => a.toIntArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.LongType => a.toLongArray().map(_.toFloat).toSeq
-        case dt: org.apache.spark.sql.types.DecimalType => // array(0.1, …) literals
-          a.toObjectArray(dt).map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toFloat).toSeq
-        case other => throw new IllegalArgumentException(
-          s"graft_index_search: unsupported query element type $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "graft_index_search: queryVec must be a foldable numeric array")
-    }
+    val query = foldVec("graft_index_search", args(1))
     val k = lit(2, "k").asInstanceOf[Number].intValue()
     val nprobe = if (args.length >= 4) lit(3, "nprobe").asInstanceOf[Number].intValue() else -1
     val name = if (args.length >= 5) lit(4, "name").toString else "vec"
@@ -186,6 +166,35 @@ object GraftFunctions {
     }
   }
 
+  /** A TVF's plan-shaping argument reader: `lit(i, what)` evaluates
+    * `args(i)`, refusing a non-literal as "`fn`: `what` must be a
+    * literal".
+    */
+  private def literals(fn: String, args: Seq[Expression]): (Int, String) => Any =
+    (i, what) => {
+      require(args(i).foldable, s"$fn: $what must be a literal")
+      args(i).eval(null)
+    }
+
+  /** A k-NN-join TVF's query batch: every row of the SQL-visible
+    * `qtable` as (key as long, vector as floats).
+    */
+  private def queryRows(spark: SparkSession, fn: String, qtable: String, keyCol: String,
+                        vecCol: String): Seq[(Long, Seq[Float])] =
+    spark.table(qtable)
+      .select(col(keyCol).cast("long"), col(vecCol)).collect().toSeq
+      .map { r =>
+        (r.getLong(0), r.getSeq[Any](1).map {
+          case f: Float => f
+          case d: Double => d.toFloat
+          case i: Int => i.toFloat
+          case l: Long => l.toFloat
+          case d: java.math.BigDecimal => d.floatValue()
+          case other => throw new IllegalArgumentException(
+            s"$fn: unsupported vector element $other")
+        })
+      }
+
   /** A numeric TVF argument as Double: SQL decimal literals (`0.6`)
     * eval to Spark's own Decimal, which is NOT a java.lang.Number —
     * both shapes accepted here.
@@ -219,10 +228,7 @@ object GraftFunctions {
   private def indexMmrPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 5 && args.length <= 8,
       s"graft_index_mmr(tablePath, queryVec, k, lambda, candidates[, nprobe[, name[, predSql]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_index_mmr: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_index_mmr", args)
     val path = lit(0, "tablePath").toString
     val query = foldVec("graft_index_mmr", args(1))
     val k = lit(2, "k").asInstanceOf[Number].intValue()
@@ -247,10 +253,7 @@ object GraftFunctions {
   private def hnswMmrPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 5 && args.length <= 8,
       s"graft_hnsw_mmr(tablePath, queryVec, k, lambda, candidates[, ef[, name[, predSql]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_hnsw_mmr: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_hnsw_mmr", args)
     val path = lit(0, "tablePath").toString
     val query = foldVec("graft_hnsw_mmr", args(1))
     val k = lit(2, "k").asInstanceOf[Number].intValue()
@@ -337,10 +340,7 @@ object GraftFunctions {
   private def textSearchPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 3 && args.length <= 8,
       s"graft_text_search(tablePath, query, k[, mode[, name[, predSql[, maxDist[, q]]]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_text_search: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_text_search", args)
     val path = lit(0, "tablePath").toString
     val query = lit(1, "query").toString
     val k = lit(2, "k").asInstanceOf[Number].intValue()
@@ -385,26 +385,9 @@ object GraftFunctions {
   private def hybridSearchPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 4 && args.length <= 7,
       s"graft_hybrid_search(tablePath, queryVec, textQuery, k[, n[, nprobe[, predSql]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_hybrid_search: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_hybrid_search", args)
     val path = lit(0, "tablePath").toString
-    val query: Seq[Float] = (args(1).dataType, lit(1, "queryVec")) match {
-      case (org.apache.spark.sql.types.ArrayType(et, _),
-            a: org.apache.spark.sql.catalyst.util.ArrayData) => et match {
-        case org.apache.spark.sql.types.FloatType => a.toFloatArray().toSeq
-        case org.apache.spark.sql.types.DoubleType => a.toDoubleArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.IntegerType => a.toIntArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.LongType => a.toLongArray().map(_.toFloat).toSeq
-        case dt: org.apache.spark.sql.types.DecimalType =>
-          a.toObjectArray(dt).map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toFloat).toSeq
-        case other => throw new IllegalArgumentException(
-          s"graft_hybrid_search: unsupported query element type $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "graft_hybrid_search: queryVec must be a foldable numeric array")
-    }
+    val query = foldVec("graft_hybrid_search", args(1))
     val textQuery = lit(2, "textQuery").toString
     val k = lit(3, "k").asInstanceOf[Number].intValue()
     val n = if (args.length >= 5) lit(4, "n").asInstanceOf[Number].intValue() else 50
@@ -470,10 +453,7 @@ object GraftFunctions {
   private def rerankSearchPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 4 && args.length <= 7,
       s"graft_rerank_search(tablePath, queryVec, textQuery, k[, n[, nprobe[, predSql]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_rerank_search: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_rerank_search", args)
     val path = lit(0, "tablePath").toString
     val query = foldVec("graft_rerank_search", args(1))
     val textQuery = lit(2, "textQuery").toString
@@ -517,10 +497,7 @@ object GraftFunctions {
   private def knnJoinPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 3 && args.length <= 6,
       s"graft_knn_join(tablePath, queryTable, k[, nprobe[, name[, predSql]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_knn_join: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_knn_join", args)
     val path = lit(0, "tablePath").toString
     val qtable = lit(1, "queryTable").toString
     val k = lit(2, "k").asInstanceOf[Number].intValue()
@@ -531,20 +508,7 @@ object GraftFunctions {
       lit(5, "predSql").toString)) else None
     val m = graft.sources.GraftIndex.meta(path, name)
     val np = if (nprobe > 0) nprobe else m.nlist
-    val key = m.keyCols.head
-    val qs = spark.table(qtable)
-      .select(col(key).cast("long"), col(m.vecCol)).collect().toSeq
-      .map { r =>
-        (r.getLong(0), r.getSeq[Any](1).map {
-          case f: Float => f
-          case d: Double => d.toFloat
-          case i: Int => i.toFloat
-          case l: Long => l.toFloat
-          case d: java.math.BigDecimal => d.floatValue()
-          case other => throw new IllegalArgumentException(
-            s"graft_knn_join: unsupported vector element $other")
-        })
-      }
+    val qs = queryRows(spark, "graft_knn_join", qtable, m.keyCols.head, m.vecCol)
     graft.sources.GraftIndex.knnJoin(spark, path, qs, k, np, name, pred = pred)
       .queryExecution.logical
   }
@@ -562,10 +526,7 @@ object GraftFunctions {
   private def hnswKnnJoinPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 3 && args.length <= 6,
       s"graft_hnsw_knn_join(tablePath, queryTable, k[, ef[, name[, predSql]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_hnsw_knn_join: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_hnsw_knn_join", args)
     val path = lit(0, "tablePath").toString
     val qtable = lit(1, "queryTable").toString
     val k = lit(2, "k").asInstanceOf[Number].intValue()
@@ -575,19 +536,7 @@ object GraftFunctions {
     val pred = if (args.length == 6) Some(parsePred(spark, "graft_hnsw_knn_join",
       lit(5, "predSql").toString)) else None
     val m = graft.sources.GraftHnsw.meta(path, name)
-    val qs = spark.table(qtable)
-      .select(col(m.keyCol).cast("long"), col(m.vecCol)).collect().toSeq
-      .map { r =>
-        (r.getLong(0), r.getSeq[Any](1).map {
-          case f: Float => f
-          case d: Double => d.toFloat
-          case i: Int => i.toFloat
-          case l: Long => l.toFloat
-          case d: java.math.BigDecimal => d.floatValue()
-          case other => throw new IllegalArgumentException(
-            s"graft_hnsw_knn_join: unsupported vector element $other")
-        })
-      }
+    val qs = queryRows(spark, "graft_hnsw_knn_join", qtable, m.keyCol, m.vecCol)
     graft.sources.GraftHnsw.knnJoin(spark, path, qs, k, ef, name, pred = pred)
       .queryExecution.logical
   }
@@ -603,26 +552,9 @@ object GraftFunctions {
   private def hnswSearchPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length == 3 || args.length == 4,
       s"graft_hnsw_search(layoutPath, queryVec, k[, ef]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_hnsw_search: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_hnsw_search", args)
     val path = lit(0, "layoutPath").toString
-    val query: Seq[Float] = (args(1).dataType, lit(1, "queryVec")) match {
-      case (org.apache.spark.sql.types.ArrayType(et, _),
-            a: org.apache.spark.sql.catalyst.util.ArrayData) => et match {
-        case org.apache.spark.sql.types.FloatType => a.toFloatArray().toSeq
-        case org.apache.spark.sql.types.DoubleType => a.toDoubleArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.IntegerType => a.toIntArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.LongType => a.toLongArray().map(_.toFloat).toSeq
-        case dt: org.apache.spark.sql.types.DecimalType =>
-          a.toObjectArray(dt).map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toFloat).toSeq
-        case other => throw new IllegalArgumentException(
-          s"graft_hnsw_search: unsupported query element type $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "graft_hnsw_search: queryVec must be a foldable numeric array")
-    }
+    val query = foldVec("graft_hnsw_search", args(1))
     val k = lit(2, "k").asInstanceOf[Number].intValue()
     val ef = if (args.length == 4) lit(3, "ef").asInstanceOf[Number].intValue() else 64
     val spark = SparkSession.active
@@ -645,26 +577,9 @@ object GraftFunctions {
   private def hnswProbePlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 3 && args.length <= 6,
       s"graft_hnsw_probe(tablePath, queryVec, k[, ef[, name[, predSql]]]): got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_hnsw_probe: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_hnsw_probe", args)
     val path = lit(0, "tablePath").toString
-    val query: Seq[Float] = (args(1).dataType, lit(1, "queryVec")) match {
-      case (org.apache.spark.sql.types.ArrayType(et, _),
-            a: org.apache.spark.sql.catalyst.util.ArrayData) => et match {
-        case org.apache.spark.sql.types.FloatType => a.toFloatArray().toSeq
-        case org.apache.spark.sql.types.DoubleType => a.toDoubleArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.IntegerType => a.toIntArray().map(_.toFloat).toSeq
-        case org.apache.spark.sql.types.LongType => a.toLongArray().map(_.toFloat).toSeq
-        case dt: org.apache.spark.sql.types.DecimalType =>
-          a.toObjectArray(dt).map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toFloat).toSeq
-        case other => throw new IllegalArgumentException(
-          s"graft_hnsw_probe: unsupported query element type $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "graft_hnsw_probe: queryVec must be a foldable numeric array")
-    }
+    val query = foldVec("graft_hnsw_probe", args(1))
     val k = lit(2, "k").asInstanceOf[Number].intValue()
     val ef = if (args.length >= 4) lit(3, "ef").asInstanceOf[Number].intValue() else 64
     val name = if (args.length >= 5) lit(4, "name").toString else "hnsw"
@@ -749,10 +664,7 @@ object GraftFunctions {
     require(args.length >= 5 && args.length <= 6,
       s"graft_fuzzy_match(corpusTable, textCol, idCol, probe, maxDist[, q]): " +
         s"got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_fuzzy_match: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_fuzzy_match", args)
     val corpus = lit(0, "corpusTable").toString
     val textCol = lit(1, "textCol").toString
     val idCol = lit(2, "idCol").toString
@@ -781,10 +693,7 @@ object GraftFunctions {
     require(args.length >= 5 && args.length <= 8,
       s"graft_fuzzy_names(tableA, colA, tableB, colB, maxDist[, q[, dfCap[, bandShard]]]): " +
         s"got ${args.length} args")
-    def lit(i: Int, what: String): Any = {
-      require(args(i).foldable, s"graft_fuzzy_names: $what must be a literal")
-      args(i).eval(null)
-    }
+    val lit = literals("graft_fuzzy_names", args)
     val spark = SparkSession.active
     val maxDist = lit(4, "maxDist").asInstanceOf[Number].intValue()
     val q = if (args.length >= 6) lit(5, "q").asInstanceOf[Number].intValue() else 2

@@ -262,27 +262,35 @@ object IvfIndex {
     */
   def probe(spark: SparkSession, model: Model, idCol: String, vecCol: String,
             query: Seq[Float], k: Int, nprobe: Int,
-            pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+            pred: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    probeKeys(spark, model, Seq(idCol), vecCol, query, k, nprobe, pred)
+
+  /** [[probe]] for COMPOSITE record keys: ties at the k-th score break
+    * on every key column, in key order.
+    */
+  private[graft] def probeKeys(spark: SparkSession, model: Model, keyCols: Seq[String],
+                               vecCol: String, query: Seq[Float], k: Int, nprobe: Int,
+                               pred: Option[org.apache.spark.sql.Column]): DataFrame = {
     require(model.storage == "float32",
       s"standalone probe of a '${model.storage}' ivf layout: quantized cells carry no " +
         "float vectors to score exactly — serve through the table-attached " +
         "GraftIndex (two-stage: quantized candidates, exact rerank from the table)")
     val scan = cellScan(spark, model, nearestCells(model, query, nprobe))
     val filtered = pred.fold(scan)(scan.filter)
-    VectorSearch.topK(filtered, vecCol, idCol, query, k, model.metric)
+    VectorSearch.topKBy(filtered, vecCol, keyCols, query, k, model.metric)
   }
 
   /** The QUANTIZED candidate stage for a single query: scan the nprobe
     * nearest cells (partition-pruned, `pred` pushed into the scan like
     * [[probe]]) and keep the `kf` best rows by the quantized rank score
     * — a TakeOrderedAndProject over 1-byte/dim (sq8) or 1-bit/dim
-    * (binary, rabitq) scan bytes, deterministic (ties on ascending id). The
-    * caller exact-reranks the survivors from a float source; the
-    * `__qscore` column is the RANK proxy, not an emitted score, and is
-    * kept only for diagnostics.
+    * (binary, rabitq) scan bytes, deterministic (ties on every key
+    * column, ascending, in key order). The caller exact-reranks the
+    * survivors from a float source; the `__qscore` column is the RANK
+    * proxy, not an emitted score, and is kept only for diagnostics.
     */
   private[graft] def quantizedCandidates(spark: SparkSession, model: Model,
-                                         idCol: String, query: Seq[Float],
+                                         keyCols: Seq[String], query: Seq[Float],
                                          kf: Int, nprobe: Int,
                                          pred: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
@@ -297,11 +305,11 @@ object IvfIndex {
       filtered.join(broadcast(consts), "cluster_id")
         .withColumn("__qscore", rabitqScore(model.metric, query.length))
         .drop("__w", "__aux", "__qn")
-        .orderBy(desc("__qscore"), asc(idCol)).limit(kf)
+        .orderBy(desc("__qscore") +: keyCols.map(asc): _*).limit(kf)
     } else
       filtered
         .withColumn("__qscore", quantizedScore(model.storage, model.metric, typedlit(query)))
-        .orderBy(desc("__qscore"), asc(idCol)).limit(kf)
+        .orderBy(desc("__qscore") +: keyCols.map(asc): _*).limit(kf)
   }
 
   /** RaBitQ serving constants for ONE query, per probed cell:

@@ -77,10 +77,17 @@ object VectorSearch {
     * ascending `idCol`. Plan: TakeOrderedAndProject (per-partition heap).
     */
   def topK(data: DataFrame, vecCol: String, idCol: String, query: Seq[Float], k: Int,
-           metric: String = "cosine"): DataFrame = {
+           metric: String = "cosine"): DataFrame =
+    topKBy(data, vecCol, Seq(idCol), query, k, metric)
+
+  /** [[topK]] with ties broken by every column of a composite record
+    * key, in key order.
+    */
+  private[graft] def topKBy(data: DataFrame, vecCol: String, keyCols: Seq[String],
+                            query: Seq[Float], k: Int, metric: String): DataFrame = {
     val scored = score(data, vecCol, query, metric).drop(vecCol)
     val ord = if (descending(metric)) desc("score") else asc("score")
-    scored.orderBy(ord, asc(idCol)).limit(k)
+    scored.orderBy(ord +: keyCols.map(asc): _*).limit(k)
   }
 
   /** MMR — Maximal Marginal Relevance (Carbonell & Goldstein, 1998):

@@ -45,7 +45,10 @@ import graft.operators.HnswIndex
   * Probes return full table rows like [[GraftIndex.probe]] — the HNSW
   * layout stores only (id, vec, links), so the payload comes from a
   * BUCKET-PRUNED point lookup of the k result keys against the pinned
-  * table version (k keys → ≤ k buckets read, never a table scan).
+  * table version (k keys → ≤ k buckets read, never a table scan). That
+  * lookup and the other serving decisions both families share (stale
+  * refusal, match set and count, exact cuts, output shapes, MMR stage
+  * 2, refresh ticker) live once in [[IndexServing]].
   *
   * `storage = "sq8" | "binary" | "rabitq"` swaps the layout's float32
   * vectors for int8 codes / packed sign bits / RaBitQ estimator codes
@@ -362,9 +365,10 @@ object GraftHnsw {
     * segment graph loads ONCE and serves every query (|Q| bounded-`ef`
     * beam walks per segment), dead copies die by the same horizon
     * tombstone filter as [[probe]], then the bounded-heap per-query
-    * top-k. The [[GraftIndex.knnJoin]] twin for the graph index;
-    * returns (qid, keyCol, score) — join payload back per key if
-    * needed (the batch shape keeps the big side unjoined).
+    * top-k. The batch shape of [[probe]] (same legs, same
+    * [[IndexServing]] cuts); returns (qid, keyCol, score) — join payload
+    * back per key if needed (the batch shape keeps the big side
+    * unjoined).
     */
   def knnJoin(spark: SparkSession, tablePath: String,
               queries: Seq[(Long, Seq[Float])], k: Int, ef: Int,
@@ -373,7 +377,6 @@ object GraftHnsw {
               bruteForceCap: Int = 10000, acceptCap: Int = 1000000): DataFrame = {
     val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
-    import spark.implicits._
     // the internal graph id is long; emit the key in the TABLE's key
     // type (as joinBack does) so int-keyed tables don't get bigint back
     val keyType = GraftTable.snapshotSchema(tablePath, m.indexedVersion)
@@ -382,10 +385,7 @@ object GraftHnsw {
     if (pred.isDefined)
       return knnJoinFiltered(spark, tablePath, m, queries, k, ef, pred.get,
         rerankFactor, bruteForceCap, acceptCap, keyType)
-    if (m.segs.isEmpty)
-      return Seq.empty[(Long, Long, Double)].toDF("qid", m.keyCol, "score")
-        .withColumn(m.keyCol, col(m.keyCol).cast(keyType))
-        .select("qid", m.keyCol, "score")
+    if (m.segs.isEmpty) return emptyBatch(spark, tablePath, m)
     val model = HnswIndex.load(spark, layoutPath(tablePath, name, m.gen))
     if (m.storage == "float32") {
       val cands = HnswIndex.probeSegmentsWithPid(spark, model,
@@ -395,34 +395,12 @@ object GraftHnsw {
       graft.operators.VectorSearch.perQueryTopK(live, "qid", m.keyCol, k, m.metric)
     } else {
       // quantized layout: widen the per-(query, segment) frontier, then
-      // exact-score every surviving (qid, key) pair from the table's
-      // float column before the bounded-heap per-query cut — one
-      // bucket-pruned lookup serves ALL queries' candidates (the pair
-      // set is ≤ |Q|·|segs|·rerankFactor·k rows, serving-sized)
-      require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-      val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
+      // exact-rerank every surviving (qid, key) pair from the table
       val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-        queries.map { case (qid, v) => (qid, v.toArray) }, kf, ef, Some(m.segs.toSet))
-      val pairs = liveCandidates(spark, tablePath, m, cands)
-        .select("qid", "id").distinct()
-      val frontier = pairs.select("id").distinct().collect().map(_.getLong(0))
-      if (frontier.isEmpty)
-        return Seq.empty[(Long, Long, Double)].toDF("qid", m.keyCol, "score")
-          .withColumn(m.keyCol, col(m.keyCol).cast(keyType))
-          .select("qid", m.keyCol, "score")
-      val qdf = queries.toDF("qid", "__qvec")
-      // select, not withColumn+drop: the table's key may itself be
-      // named "id" (the graph's internal id column name)
-      val probeSide = broadcast(
-        pairs.select(col("qid"), col("id").cast(keyType).as(m.keyCol))
-          .join(qdf, "qid"))
-      val scored = candidateRows(spark, tablePath, m, frontier)
-        .select(col(m.keyCol), col(m.vecCol))
-        .join(probeSide, Seq(m.keyCol))
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col(m.vecCol), col("__qvec"), m.metric))
-        .select(col("qid"), col(m.keyCol), col("score"))
-      graft.operators.VectorSearch.perQueryTopK(scored, "qid", m.keyCol, k, m.metric)
+        queries.map { case (qid, v) => (qid, v.toArray) },
+        IndexServing.frontierWidth(k, rerankFactor), ef, Some(m.segs.toSet))
+      rerankPairs(spark, tablePath, m, queries, k, keyType,
+        liveCandidates(spark, tablePath, m, cands).select("qid", "id").distinct())
     }
   }
 
@@ -437,76 +415,30 @@ object GraftHnsw {
                               pred: Column, rerankFactor: Int, bruteForceCap: Int,
                               acceptCap: Int,
                               keyType: org.apache.spark.sql.types.DataType): DataFrame = {
-    require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-    import spark.implicits._
-    def empty = Seq.empty[(Long, Long, Double)].toDF("qid", m.keyCol, "score")
-      .withColumn(m.keyCol, col(m.keyCol).cast(keyType))
-      .select("qid", m.keyCol, "score")
-    if (queries.isEmpty) return empty
-    val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
-      .filter(pred).filter(col(m.vecCol).isNotNull)
-    val n = matchCount(spark, tablePath, m, matched, pred, bruteForceCap, acceptCap)
-    if (n == 0) return empty
-    val qdf = queries.toDF("qid", "__qvec")
-    if (n <= bruteForceCap || m.segs.isEmpty) {
-      // exact: broadcast the filtered subset once, score every
-      // (query, match) pair — ≤ |Q|·bruteForceCap rows, bounded
-      val scored = qdf.crossJoin(broadcast(
-          matched.select(col(m.keyCol).as("__mkey"), col(m.vecCol).as("__mvec"))))
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col("__mvec"), col("__qvec"), m.metric))
-        .select(col("qid"), col("__mkey").cast(keyType).as(m.keyCol), col("score"))
-      return graft.operators.VectorSearch.perQueryTopK(scored, "qid", m.keyCol, k, m.metric)
-    }
-    val model = HnswIndex.load(spark, layoutPath(tablePath, m.name, m.gen))
-    val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
-    val acceptIds: Option[Array[Long]] =
-      if (n <= acceptCap) {
-        val arr = matched.select(col(m.keyCol).cast("long")).distinct()
-          .collect().map(_.getLong(0))
-        java.util.Arrays.sort(arr)
-        Some(arr)
-      } else None
-    val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-      queries.map { case (qid, v) => (qid, v.toArray) }, kf, ef,
-      Some(m.segs.toSet), acceptIds)
-    var pairs = liveCandidates(spark, tablePath, m, cands)
-      .select("qid", "id").distinct()
-    if (acceptIds.isEmpty)
-      pairs = pairs.join(
-        matched.select(col(m.keyCol).cast("long").as("id")).distinct(),
-        Seq("id"), "left_semi")
-    val frontier = pairs.select("id").distinct().collect().map(_.getLong(0))
-    if (frontier.isEmpty) return empty
-    val probeSide = broadcast(
-      pairs.select(col("qid"), col("id").cast(keyType).as(m.keyCol))
-        .join(qdf, "qid"))
-    val scored = candidateRows(spark, tablePath, m, frontier)
-      .select(col(m.keyCol), col(m.vecCol))
-      .join(probeSide, Seq(m.keyCol))
-      .withColumn("score", graft.operators.VectorSearch.scoreCol(
-        col(m.vecCol), col("__qvec"), m.metric))
-      .select(col("qid"), col(m.keyCol), col("score"))
-    graft.operators.VectorSearch.perQueryTopK(scored, "qid", m.keyCol, k, m.metric)
+    val kf = IndexServing.frontierWidth(k, rerankFactor)
+    if (queries.isEmpty) return emptyBatch(spark, tablePath, m)
+    val (matched, n) = IndexServing.matchSet(spark, tablePath, m.indexedVersion, m.vecCol,
+      pred, bruteForceCap, acceptCap)
+    if (n == 0) return emptyBatch(spark, tablePath, m)
+    if (n <= bruteForceCap || m.segs.isEmpty)
+      return IndexServing.bruteBatch(spark, queries, matched, col(m.keyCol).as("__mkey"),
+        col("__mkey").cast(keyType).as(m.keyCol), Seq(m.keyCol), m.vecCol, k, m.metric)
+    rerankPairs(spark, tablePath, m, queries, k, keyType,
+      filteredWalk(spark, tablePath, m, queries, kf, ef, matched, n, acceptCap)
+        .select("qid", "id").distinct())
   }
 
-  /** Continuous maintenance: a Structured Streaming ticker drives
-    * [[refresh]] per micro-batch so the index FOLLOWS the table — the
-    * [[GraftIndex.streamRefresh]] twin for the graph index. Position is
-    * owned by `meta.indexedVersion` (restart-safe, replays idempotent:
-    * a re-applied change range re-tombstones the same keys and appends
-    * duplicate fresh copies whose max-horizon arbitration still serves
-    * exactly one).
+  /** Continuous maintenance: [[refresh]] per micro-batch of the shared
+    * ticker ([[IndexServing.streamRefresh]]) so the index FOLLOWS the
+    * table. A re-applied change range re-tombstones the same keys and
+    * appends duplicate fresh copies whose max-horizon arbitration still
+    * serves exactly one.
     */
   def streamRefresh(spark: SparkSession, tablePath: String, name: String = "hnsw",
                     trigger: org.apache.spark.sql.streaming.Trigger =
                       org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .writeStream
-      .foreachBatch { (_: DataFrame, _: Long) => refresh(spark, tablePath, name); () }
-      .trigger(trigger)
-      .start()
+    IndexServing.streamRefresh(spark, trigger)(refresh(spark, tablePath, name))
 
   /** Drop the index entirely; false when absent (IF EXISTS contract). */
   def drop(tablePath: String, name: String = "hnsw"): Boolean = {
@@ -515,28 +447,9 @@ object GraftHnsw {
     existed
   }
 
-  /** The filtered paths' match count, metadata-first — the shared
-    * three-regime ladder ([[GraftTable.metadataMatchCount]], hoisted
-    * there in r13 so the three call sites' case sets cannot drift):
-    * stats-answerable bounds that already decide the serving leg skip
-    * the count job; anything undecided pays the exact count. The helper
-    * also enforces acceptCap ≥ bruteForceCap — the assumption the
-    * `lo > acceptCap` shortcut's proof rests on.
-    */
-  private def matchCount(spark: SparkSession, tablePath: String, m: HnswMeta,
-                         matched: DataFrame, pred: Column,
-                         bruteForceCap: Int, acceptCap: Int): Long =
-    GraftTable.metadataMatchCount(spark, tablePath, m.indexedVersion, pred,
-      Seq(m.vecCol), bruteForceCap, acceptCap)(matched.count())
-
-  private def requireFresh(tablePath: String, m: HnswMeta, allowStale: Boolean): Unit = {
-    val head = GraftTable.latestVersion(tablePath)
-    if (!allowStale && head != m.indexedVersion)
-      throw new IllegalStateException(
-        s"hnsw index '${m.name}' on $tablePath is STALE: it reflects table version " +
-          s"${m.indexedVersion} but the table is at $head — run GraftHnsw.refresh, " +
-          "or probe(allowStale = true) to serve the indexed snapshot")
-  }
+  private def requireFresh(tablePath: String, m: HnswMeta, allowStale: Boolean): Unit =
+    IndexServing.requireFresh(tablePath, "hnsw index", m.name, m.indexedVersion, allowStale,
+      "GraftHnsw.refresh, or probe(allowStale = true)")
 
   /** Candidates surviving the horizon tombstones: a candidate (id, pid)
     * dies iff some tombstone for its id has horizon > pid — i.e. the
@@ -554,57 +467,96 @@ object GraftHnsw {
       .drop("__hz")
   }
 
-  /** The empty probe shape: table columns (minus the vector) + score. */
-  private def emptyShaped(spark: SparkSession, tablePath: String,
-                          m: HnswMeta): DataFrame =
-    GraftTable.read(spark, tablePath, m.indexedVersion).limit(0)
-      .withColumn("score", lit(0.0)).drop(m.vecCol)
-
-  /** Bucket-pruned point lookup of candidate keys' FULL table rows
-    * (vector column included) at the pinned version — the exact-rerank
-    * substrate for quantized layouts: n keys → ≤ n bucket reads, never
-    * a table scan.
-    */
-  private def candidateRows(spark: SparkSession, tablePath: String, m: HnswMeta,
-                            ids: Array[Long]): DataFrame = {
-    import spark.implicits._
-    val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
+  private def snapshotSchema(tablePath: String, m: HnswMeta)
+      : org.apache.spark.sql.types.StructType =
+    GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
       throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
-    val keyType = sc(m.keyCol).dataType
-    val (_, defaultBuckets, _) = GraftTable.meta(tablePath)
-    val nb = GraftTable.bucketsAt(tablePath, m.indexedVersion, defaultBuckets)
-    val idsDf = ids.toSeq.toDF("__id")
-      .withColumn(m.keyCol, col("__id").cast(keyType)).drop("__id")
-    val buckets = idsDf
-      .select(GraftTable.bucketCol(Seq(m.keyCol), nb).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    GraftTable.readBuckets(spark, tablePath, m.indexedVersion, buckets)
-      .join(broadcast(idsDf), Seq(m.keyCol))
-  }
+
+  private def emptyShape(spark: SparkSession, tablePath: String, m: HnswMeta): DataFrame =
+    IndexServing.emptyShape(spark, tablePath, m.indexedVersion, m.vecCol)
+
+  private def emptyBatch(spark: SparkSession, tablePath: String, m: HnswMeta): DataFrame =
+    IndexServing.emptyBatch(spark, tablePath, m.indexedVersion, Seq(m.keyCol))
+
+  /** Graph ids (`__id`, long) re-keyed in the TABLE's key type — the
+    * point lookup's join key. Other columns of `ids` ride along.
+    */
+  private def keyed(ids: DataFrame, m: HnswMeta,
+                    keyType: org.apache.spark.sql.types.DataType): DataFrame =
+    ids.withColumn(m.keyCol, col("__id").cast(keyType)).drop("__id")
 
   /** Payload join-back: the k result keys point-look-up their buckets
     * at the PINNED table version (k keys → ≤ k bucket reads, never a
-    * scan), and the canonical probe shape comes out — table columns
-    * (snapshot order) minus the vector, score last.
+    * scan), and the canonical probe shape comes out.
     */
   private def joinBack(spark: SparkSession, tablePath: String, m: HnswMeta,
                        top: Array[(Long, Double)]): DataFrame = {
-    if (top.isEmpty) return emptyShaped(spark, tablePath, m)
+    if (top.isEmpty) return emptyShape(spark, tablePath, m)
     import spark.implicits._
-    val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
-      throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
-    val keyType = sc(m.keyCol).dataType
-    val (_, defaultBuckets, _) = GraftTable.meta(tablePath)
-    val nb = GraftTable.bucketsAt(tablePath, m.indexedVersion, defaultBuckets)
-    val idsDf = top.toSeq.toDF("__id", "score")
-      .withColumn(m.keyCol, col("__id").cast(keyType)).drop("__id")
-    val buckets = idsDf
-      .select(GraftTable.bucketCol(Seq(m.keyCol), nb).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val rows = GraftTable.readBuckets(spark, tablePath, m.indexedVersion, buckets)
-    val canonical = sc.fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
-    rows.join(broadcast(idsDf), Seq(m.keyCol))
-      .select(canonical.map(col): _*)
+    val sc = snapshotSchema(tablePath, m)
+    IndexServing.pointLookup(spark, tablePath, m.indexedVersion, Seq(m.keyCol),
+        keyed(top.toSeq.toDF("__id", "score"), m, sc(m.keyCol).dataType))
+      .select(IndexServing.shape(sc.fieldNames.toSeq, m.vecCol).map(col): _*)
+  }
+
+  /** The walk legs' single-query tail: the live frontier (≤ |segs|·kf
+    * ids — serving-sized by construction) is scored exactly from the
+    * TABLE's float column, so quantized layouts never surface
+    * reconstructed arithmetic.
+    */
+  private def rerankFrontier(spark: SparkSession, tablePath: String, m: HnswMeta,
+                             query: Seq[Float], k: Int, live: DataFrame): DataFrame = {
+    import spark.implicits._
+    val frontier = live.select("id").distinct().collect().map(_.getLong(0))
+    if (frontier.isEmpty) return emptyShape(spark, tablePath, m)
+    val sc = snapshotSchema(tablePath, m)
+    IndexServing.exactCut(
+      IndexServing.pointLookup(spark, tablePath, m.indexedVersion, Seq(m.keyCol),
+        keyed(frontier.toSeq.toDF("__id"), m, sc(m.keyCol).dataType)),
+      m.vecCol, query, m.metric, Seq(m.keyCol), k,
+      IndexServing.shape(sc.fieldNames.toSeq, m.vecCol))
+  }
+
+  /** The walk legs' batch tail: the live (qid, id) frontier pairs are
+    * exact-reranked from the table — ONE point lookup serves all
+    * queries' candidates (≤ |Q|·|segs|·kf pairs, serving-sized).
+    */
+  private def rerankPairs(spark: SparkSession, tablePath: String, m: HnswMeta,
+                          queries: Seq[(Long, Seq[Float])], k: Int,
+                          keyType: org.apache.spark.sql.types.DataType,
+                          pairs: DataFrame): DataFrame = {
+    import spark.implicits._
+    val frontier = pairs.select("id").distinct().collect().map(_.getLong(0))
+    if (frontier.isEmpty) return emptyBatch(spark, tablePath, m)
+    // select, not withColumn+drop: the table's key may itself be
+    // named "id" (the graph's internal id column name)
+    IndexServing.rerankBatch(spark, tablePath, m.indexedVersion, Seq(m.keyCol), m.vecCol,
+      queries, pairs.select(col("qid"), col("id").cast(keyType).as(m.keyCol)),
+      keyed(frontier.toSeq.toDF("__id"), m, keyType), k, m.metric)
+  }
+
+  /** The middle and post-filter legs' live candidates for every query:
+    * with ≤ `acceptCap` matches the match keys broadcast once as a
+    * sorted accept set and each walk collects only accepted nodes;
+    * above it an unfiltered walk's candidates are semi-joined against
+    * the match keys (the match set is never collected).
+    */
+  private def filteredWalk(spark: SparkSession, tablePath: String, m: HnswMeta,
+                           queries: Seq[(Long, Seq[Float])], kf: Int, ef: Int,
+                           matched: DataFrame, n: Long, acceptCap: Int): DataFrame = {
+    val model = HnswIndex.load(spark, layoutPath(tablePath, m.name, m.gen))
+    val acceptIds: Option[Array[Long]] =
+      if (n <= acceptCap) {
+        val arr = matched.select(col(m.keyCol).cast("long")).distinct()
+          .collect().map(_.getLong(0))
+        java.util.Arrays.sort(arr)
+        Some(arr)
+      } else None
+    val live = liveCandidates(spark, tablePath, m, HnswIndex.probeSegmentsWithPid(spark, model,
+      queries.map { case (qid, v) => (qid, v.toArray) }, kf, ef, Some(m.segs.toSet), acceptIds))
+    if (acceptIds.isDefined) live
+    else live.join(matched.select(col(m.keyCol).cast("long").as("id")).distinct(),
+      Seq("id"), "left_semi")
   }
 
   /** Top-k against the table-attached HNSW index. `ef` is the
@@ -636,7 +588,7 @@ object GraftHnsw {
     if (pred.isDefined)
       return probeFiltered(spark, tablePath, m, query, k, ef, pred.get,
         rerankFactor, bruteForceCap, acceptCap)
-    if (m.segs.isEmpty) return emptyShaped(spark, tablePath, m)
+    if (m.segs.isEmpty) return emptyShape(spark, tablePath, m)
     val model = HnswIndex.load(spark, layoutPath(tablePath, name, m.gen))
     if (m.storage == "float32") {
       // fetch k per COMMITTED segment (meta-listed pids only: a crashed
@@ -644,39 +596,24 @@ object GraftHnsw {
       // then the global cut
       val cands = HnswIndex.probeSegmentsWithPid(spark, model,
         Seq((0L, query.toArray)), k, ef, Some(m.segs.toSet))
-      val live = liveCandidates(spark, tablePath, m, cands)
-      val ord = if (m.metric == "l2") asc("score") else desc("score")
-      val top = live.orderBy(ord, asc("id")).limit(k)
+      val top = liveCandidates(spark, tablePath, m, cands)
+        .orderBy(IndexServing.scoreOrder(m.metric), asc("id")).limit(k)
         .select("id", "score").collect().map(r => (r.getLong(0), r.getDouble(1)))
       joinBack(spark, tablePath, m, top)
     } else {
-      require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-      val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
-      val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-        Seq((0L, query.toArray)), kf, ef, Some(m.segs.toSet))
-      // frontier is ≤ |segs|·kf ids — serving-sized by construction
-      val frontier = liveCandidates(spark, tablePath, m, cands)
-        .select("id").distinct().collect().map(_.getLong(0))
-      if (frontier.isEmpty) return emptyShaped(spark, tablePath, m)
-      val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
-        throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
-      val exact = candidateRows(spark, tablePath, m, frontier)
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col(m.vecCol), typedlit(query), m.metric))
-      val ord = if (m.metric == "l2") asc("score") else desc("score")
-      val canonical = sc.fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
-      exact.orderBy(ord, asc(m.keyCol)).limit(k).select(canonical.map(col): _*)
+      val cands = HnswIndex.probeSegmentsWithPid(spark, model, Seq((0L, query.toArray)),
+        IndexServing.frontierWidth(k, rerankFactor), ef, Some(m.segs.toSet))
+      rerankFrontier(spark, tablePath, m, query, k, liveCandidates(spark, tablePath, m, cands))
     }
   }
 
-  /** DIVERSIFIED top-k through the table-attached HNSW — the
-    * [[GraftIndex.probeMmr]] twin for the graph family: stage 1 is the
+  /** DIVERSIFIED top-k through the table-attached HNSW: stage 1 is the
     * existing [[probe]] widened to `candidates` (freshness, tombstones,
-    * pred legs, quantized rerank all apply unchanged), stage 2 the MMR
-    * greedy over that serving-sized slice with vectors from the
-    * bucket-pruned point lookup. Output: `rank` + canonical probe shape
-    * + `mmr_score`; λ=1 degenerates to the plain probe order
-    * (spec-pinned). SQL surface: the `graft_hnsw_mmr` TVF.
+    * pred legs, quantized rerank all apply unchanged), stage 2 the
+    * shared MMR greedy ([[IndexServing.mmr]]) over that serving-sized
+    * slice. Output: `rank` + canonical probe shape + `mmr_score`; λ=1
+    * degenerates to the plain probe order (spec-pinned). SQL surface:
+    * the `graft_hnsw_mmr` TVF.
     */
   def probeMmr(spark: SparkSession, tablePath: String, query: Seq[Float], k: Int,
                ef: Int, lambda: Double, candidates: Int, name: String = "hnsw",
@@ -688,24 +625,17 @@ object GraftHnsw {
     val m = meta(tablePath, name)
     val cand = probe(spark, tablePath, query, candidates, ef, name, allowStale,
       rerankFactor, pred, bruteForceCap, acceptCap).localCheckpoint()
-    val ids = cand.select(col(m.keyCol).cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (ids.isEmpty)
-      return cand.limit(0).select(
-        lit(0).as("rank") +: cand.columns.map(col).toSeq :+ lit(0.0).as("mmr_score"): _*)
-    val vecs = candidateRows(spark, tablePath, m, ids)
-      .select(col(m.keyCol), col(m.vecCol))
-    graft.operators.VectorSearch.mmrOverCandidates(
-      cand, Seq(m.keyCol), vecs, m.vecCol, k, lambda, m.metric)
+    IndexServing.mmr(spark, tablePath, m.indexedVersion, Seq(m.keyCol), m.vecCol, cand, k,
+      lambda, m.metric)
   }
 
   /** FILTERED top-k — Lucene's two-strategy filtered KNN
     * (KnnFloatVectorQuery + filter, public), generalized to three
     * regimes. The predicate is evaluated against the PINNED table
     * snapshot and the serving path is picked by its measured match
-    * count, never guessed — measured METADATA-FIRST: a stats-answerable
-    * pred whose upper bound already decides the leg (see [[matchCount]])
-    * skips the count job entirely:
+    * count, never guessed — measured METADATA-FIRST
+    * ([[IndexServing.matchSet]]): a stats-answerable pred whose bounds
+    * already decide the leg skips the count job entirely:
     *
     *  - ≤ `bruteForceCap` matches (or no segments): EXACT brute force
     *    over the filtered subset. The pred pushes into the snapshot's
@@ -727,57 +657,26 @@ object GraftHnsw {
     *    collected to the driver; recall tracks the filter's pass rate,
     *    which is high exactly when this path engages.
     *
-    * All paths emit EXACT float scores (walk paths rerank the frontier
-    * from the TABLE's float column via the bucket-pruned point lookup,
-    * so quantized layouts never surface reconstructed arithmetic) in
-    * the canonical probe shape. Acceptance is BY KEY against the pinned
-    * snapshot: an updated row's stale segment copies inherit the key's
-    * acceptance and then die by the horizon-tombstone filter, so the
-    * served copy is exactly the one the snapshot predicate saw.
+    * All paths emit EXACT float scores in the canonical probe shape.
+    * `acceptCap >= bruteForceCap` is enforced by the shared count
+    * ladder. Acceptance is BY KEY against the pinned snapshot: an
+    * updated row's stale segment copies inherit the key's acceptance
+    * and then die by the horizon-tombstone filter, so the served copy
+    * is exactly the one the snapshot predicate saw.
     */
   private def probeFiltered(spark: SparkSession, tablePath: String, m: HnswMeta,
                             query: Seq[Float], k: Int, ef: Int, pred: Column,
                             rerankFactor: Int, bruteForceCap: Int,
                             acceptCap: Int): DataFrame = {
-    require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-    // bruteForceCap >= 0 and acceptCap >= bruteForceCap are enforced by
-    // the shared matchCount ladder (GraftTable.metadataMatchCount)
-    val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
-      throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
-    val canonical = sc.fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
-    val ord = if (m.metric == "l2") asc("score") else desc("score")
-    val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
-      .filter(pred).filter(col(m.vecCol).isNotNull)
-    val n = matchCount(spark, tablePath, m, matched, pred, bruteForceCap, acceptCap)
-    if (n == 0) return emptyShaped(spark, tablePath, m)
+    val kf = IndexServing.frontierWidth(k, rerankFactor)
+    val sc = snapshotSchema(tablePath, m)
+    val (matched, n) = IndexServing.matchSet(spark, tablePath, m.indexedVersion, m.vecCol,
+      pred, bruteForceCap, acceptCap)
+    if (n == 0) return emptyShape(spark, tablePath, m)
     if (n <= bruteForceCap || m.segs.isEmpty)
-      return matched
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col(m.vecCol), typedlit(query), m.metric))
-        .orderBy(ord, asc(m.keyCol)).limit(k)
-        .select(canonical.map(col): _*)
-    val model = HnswIndex.load(spark, layoutPath(tablePath, m.name, m.gen))
-    val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
-    val acceptIds: Option[Array[Long]] =
-      if (n <= acceptCap) {
-        val arr = matched.select(col(m.keyCol).cast("long")).distinct()
-          .collect().map(_.getLong(0))
-        java.util.Arrays.sort(arr)
-        Some(arr)
-      } else None
-    val cands = HnswIndex.probeSegmentsWithPid(spark, model,
-      Seq((0L, query.toArray)), kf, ef, Some(m.segs.toSet), acceptIds)
-    var live = liveCandidates(spark, tablePath, m, cands)
-    if (acceptIds.isEmpty)
-      live = live.join(
-        matched.select(col(m.keyCol).cast("long").as("id")).distinct(),
-        Seq("id"), "left_semi")
-    val frontier = live.select("id").distinct().collect().map(_.getLong(0))
-    if (frontier.isEmpty) return emptyShaped(spark, tablePath, m)
-    candidateRows(spark, tablePath, m, frontier)
-      .withColumn("score", graft.operators.VectorSearch.scoreCol(
-        col(m.vecCol), typedlit(query), m.metric))
-      .orderBy(ord, asc(m.keyCol)).limit(k)
-      .select(canonical.map(col): _*)
+      return IndexServing.exactCut(matched, m.vecCol, query, m.metric, Seq(m.keyCol), k,
+        IndexServing.shape(sc.fieldNames.toSeq, m.vecCol))
+    rerankFrontier(spark, tablePath, m, query, k,
+      filteredWalk(spark, tablePath, m, Seq((0L, query)), kf, ef, matched, n, acceptCap))
   }
 }

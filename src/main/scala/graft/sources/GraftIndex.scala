@@ -17,14 +17,19 @@ import graft.operators.{IvfIndex, PqIndex, Quantize}
   * [[graft.operators.Quantize]] formats) swaps the cells' float32
   * vector column for int8 codes / packed sign bits / RaBitQ residual
   * sign bits with their estimator scalars (4×/32×/~25× fewer serve
-  * scan bytes — the dominant 100 TB cost; the [[GraftHnsw]] twin of the
-  * same lever) and serving becomes TWO-STAGE: the cell scan ranks a
-  * rerankFactor·k frontier on quantized arithmetic, then exact scores
-  * come from the TABLE's float column via a bucket-pruned point lookup
-  * — emitted scores are exact float arithmetic either way, and
-  * nprobe = nlist with a corpus-covering rerankFactor stays EXACT
-  * (quantization costs recall headroom at partial settings, never
-  * score fidelity).
+  * scan bytes — the dominant 100 TB cost) and serving becomes
+  * TWO-STAGE: the cell scan ranks a rerankFactor·k frontier on
+  * quantized arithmetic, then exact scores come from the TABLE's float
+  * column via a bucket-pruned point lookup — emitted scores are exact
+  * float arithmetic either way, and nprobe = nlist with a
+  * corpus-covering rerankFactor stays EXACT (quantization costs recall
+  * headroom at partial settings, never score fidelity).
+  *
+  * The serving decisions this index shares with [[GraftHnsw]] — the
+  * stale refusal, the filtered match set and its count, the exact cuts
+  * behind the brute legs and the rerank, the output shapes, the point
+  * lookup, MMR stage 2 and the refresh ticker — live once in
+  * [[IndexServing]]; this object keeps what is IVF/PQ-specific.
   *
   * Layout, under the table's own directory:
   * {{{
@@ -643,50 +648,20 @@ object GraftIndex {
     deleted
   }
 
-  /** Continuous maintenance: a Structured Streaming ticker drives
-    * [[refresh]] per micro-batch, so the index FOLLOWS the table —
-    * upserts/deletes/streamed writes land, the next tick folds them in —
-    * with start/stop/trigger lifecycle and no manual refresh calls. The
-    * composition twin of [[ChangeFeed.streamInto]]; position is owned by
-    * `meta.indexedVersion` (restart-safe without a checkpoint, replays
-    * idempotent per the refresh contract).
+  /** Continuous maintenance: [[refresh]] per micro-batch of the shared
+    * ticker ([[IndexServing.streamRefresh]]), so the index FOLLOWS the
+    * table — upserts/deletes/streamed writes land, the next tick folds
+    * them in.
     */
   def streamRefresh(spark: SparkSession, tablePath: String, name: String = "vec",
                     trigger: org.apache.spark.sql.streaming.Trigger =
                       org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .writeStream
-      .foreachBatch { (_: DataFrame, _: Long) => refresh(spark, tablePath, name); () }
-      .trigger(trigger)
-      .start()
+    IndexServing.streamRefresh(spark, trigger)(refresh(spark, tablePath, name))
 
-  /** Bucket-pruned point lookup of candidate keys' float vectors at the
-    * pinned version — the exact-rerank substrate for quantized layouts
-    * (the [[GraftHnsw]] shape): n candidate keys → ≤ n bucket reads,
-    * never a table scan. `keys` is the serving-sized distinct key set
-    * (all key columns); returns keyCols + the float vector column.
-    */
-  private def exactVectors(spark: SparkSession, tablePath: String, m: IndexMeta,
-                           keys: DataFrame): DataFrame = {
-    val (_, defaultBuckets, _) = GraftTable.meta(tablePath)
-    val nb = GraftTable.bucketsAt(tablePath, m.indexedVersion, defaultBuckets)
-    val buckets = keys
-      .select(GraftTable.bucketCol(m.keyCols, nb).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    GraftTable.readBuckets(spark, tablePath, m.indexedVersion, buckets)
-      .join(broadcast(keys), m.keyCols)
-      .select(m.keyCols.map(col) :+ col(m.vecCol): _*)
-  }
-
-  private def requireFresh(tablePath: String, m: IndexMeta, allowStale: Boolean): Unit = {
-    val head = GraftTable.latestVersion(tablePath)
-    if (!allowStale && head != m.indexedVersion)
-      throw new IllegalStateException(
-        s"index '${m.name}' on $tablePath is STALE: it reflects table version " +
-          s"${m.indexedVersion} but the table is at $head — run " +
-          "GraftIndex.refresh, or probe(allowStale = true) to serve the indexed snapshot")
-  }
+  private def requireFresh(tablePath: String, m: IndexMeta, allowStale: Boolean): Unit =
+    IndexServing.requireFresh(tablePath, "index", m.name, m.indexedVersion, allowStale,
+      "GraftIndex.refresh, or probe(allowStale = true)")
 
   /** Top-k against the table-attached index (ivf: exact inside probed
     * cells; ivfpq: ADC + exact re-rank of `rerankFactor`·k survivors —
@@ -697,7 +672,9 @@ object GraftIndex {
     * matches ≤ `bruteForceCap` rows of the pinned snapshot (measured,
     * one count on the pruned scan): then the probe brute-forces the
     * filtered subset EXACTLY instead of consulting the index at all —
-    * the same Lucene selective-filter fallback [[GraftHnsw]] applies.
+    * the Lucene selective-filter fallback ([[IndexServing.matchSet]],
+    * [[IndexServing.exactCut]]). Ties at the k-th score break on every
+    * key column, in key order (ivfpq's index leg: on the first).
     * Why: at partial nprobe a very selective pred can leave fewer than
     * k matches inside the probed cells and the top-k silently
     * UNDER-FILLS; the brute leg costs one predicate-pruned scan of a
@@ -712,25 +689,15 @@ object GraftIndex {
     // the brute leg needs only meta: the manifest and model are opened
     // for the index legs alone
     pred.foreach { p =>
-      val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
-        .filter(p).filter(col(m.vecCol).isNotNull)
       // metadata-first leg selection (two regimes: brute vs pushed scan,
       // so acceptCap = bruteForceCap) — see GraftTable.metadataMatchCount
-      val nMatched = GraftTable.metadataMatchCount(spark, tablePath,
-        m.indexedVersion, p, Seq(m.vecCol), bruteForceCap, bruteForceCap)(
-        matched.count())
+      val (matched, nMatched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion,
+        m.vecCol, p, bruteForceCap, bruteForceCap)
       if (nMatched <= bruteForceCap) {
-        val ord = if (m.metric == "l2") asc("score") else desc("score")
-        val sc = GraftTable.snapshotSchema(tablePath, m.indexedVersion)
-        val canonical = sc match {
-          case Some(st) => st.fieldNames.toSeq.filterNot(_ == m.vecCol) :+ "score"
-          case None => matched.columns.toSeq.filterNot(_ == m.vecCol) :+ "score"
-        }
-        return matched
-          .withColumn("score", graft.operators.VectorSearch.scoreCol(
-            col(m.vecCol), typedlit(query), m.metric))
-          .orderBy(ord, asc(m.keyCols.head)).limit(k)
-          .select(canonical.map(col): _*)
+        val cols = GraftTable.snapshotSchema(tablePath, m.indexedVersion)
+          .fold(matched.columns.toSeq)(_.fieldNames.toSeq)
+        return IndexServing.exactCut(matched, m.vecCol, query, m.metric, m.keyCols, k,
+          IndexServing.shape(cols, m.vecCol))
       }
     }
     val model = open(spark, tablePath, m)
@@ -743,43 +710,7 @@ object GraftIndex {
       case None => !GraftTable.MetaIO.list(new Path(layoutPath))
         .exists(_.getPath.getName.startsWith("cluster_id="))
     }
-    if (layoutEmpty)
-      return GraftTable.read(spark, tablePath, m.indexedVersion).limit(0)
-        .withColumn("score", lit(0.0)).drop(m.vecCol)
-    val out = model.fold(
-      ivf =>
-        if (m.storage == "float32")
-          IvfIndex.probe(spark, ivf, m.keyCols.head, m.vecCol, query, k, nprobe, pred)
-        else {
-          // QUANTIZED layout, two-stage (the 7d/7g rerank shape on the
-          // stored index): the cell scan ranks a rerankFactor·k
-          // frontier on 1-byte/dim (sq8) or 1-bit/dim (binary, rabitq)
-          // candidates — the 100 TB scan-bytes lever — then exact
-          // scores come from the TABLE's float column via the
-          // bucket-pruned point lookup, so emitted scores are exact
-          // float arithmetic either way. Corpus-covering rerankFactor
-          // with nprobe = nlist ⇒ exact, full stop (the oracle row).
-          require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-          val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
-          // localCheckpoint: the frontier is serving-sized and feeds
-          // BOTH the bucket-set computation and the rerank join
-          val front = IvfIndex.quantizedCandidates(spark, ivf, m.keyCols.head,
-            query, kf, nprobe, pred).localCheckpoint()
-          if (front.isEmpty)
-            GraftTable.read(spark, tablePath, m.indexedVersion).limit(0)
-              .withColumn("score", lit(0.0))
-          else {
-            val vecs = exactVectors(spark, tablePath, m,
-              front.select(m.keyCols.map(col): _*).distinct())
-            val ord = if (m.metric == "l2") asc("score") else desc("score")
-            front.join(broadcast(vecs), m.keyCols)
-              .withColumn("score", graft.operators.VectorSearch.scoreCol(
-                col(m.vecCol), typedlit(query), m.metric))
-              .orderBy(ord, asc(m.keyCols.head)).limit(k)
-          }
-        },
-      pq => PqIndex.probe(spark, pq, m.keyCols.head, m.vecCol, query, k, nprobe,
-        rerankFactor, pred))
+    if (layoutEmpty) return IndexServing.emptyShape(spark, tablePath, m.indexedVersion, m.vecCol)
     // ONE canonical probe schema regardless of kind or layout state:
     // table columns (snapshot order) minus the vector, score last —
     // never the layout internals (cluster_id, pq_code, vq_*, __qscore).
@@ -788,13 +719,39 @@ object GraftIndex {
     // rerank join's vecCol and proxy columns die here too.
     val internal = Set("cluster_id", "pq_code", "__qscore") ++
       Quantize.storages.flatMap(IvfIndex.storageFields).map(_.name)
-    val canonical = model.fold(_.schema, _.schema) match {
-      case Some(sc) => sc.fieldNames.toSeq
-        .filterNot(c => c == m.vecCol || internal(c)) :+ "score"
-      case None => out.columns.toSeq
-        .filterNot(c => c == m.vecCol || internal(c) || c == "score") :+ "score"
+    def canonical(out: DataFrame): Seq[String] = IndexServing.shape(
+      model.fold(_.schema, _.schema)
+        .fold(out.columns.toSeq.filterNot(_ == "score"))(_.fieldNames.toSeq)
+        .filterNot(internal), m.vecCol)
+    def project(out: DataFrame): DataFrame = out.select(canonical(out).map(col): _*)
+    model match {
+      case Left(ivf) if m.storage == "float32" =>
+        project(IvfIndex.probeKeys(spark, ivf, m.keyCols, m.vecCol, query, k, nprobe, pred))
+      case Left(ivf) =>
+        // QUANTIZED layout, two-stage (the 7d/7g rerank shape on the
+        // stored index): the cell scan ranks a rerankFactor·k frontier
+        // on 1-byte/dim (sq8) or 1-bit/dim (binary, rabitq) candidates
+        // — the 100 TB scan-bytes lever — then exact scores come from
+        // the TABLE's float column via the bucket-pruned point lookup,
+        // so emitted scores are exact float arithmetic either way.
+        // Corpus-covering rerankFactor with nprobe = nlist ⇒ exact, full
+        // stop (the oracle row).
+        // localCheckpoint: the frontier is serving-sized and feeds BOTH
+        // the bucket-set computation and the rerank join
+        val front = IvfIndex.quantizedCandidates(spark, ivf, m.keyCols, query,
+          IndexServing.frontierWidth(k, rerankFactor), nprobe, pred).localCheckpoint()
+        if (front.isEmpty)
+          IndexServing.emptyShape(spark, tablePath, m.indexedVersion, m.vecCol)
+        else {
+          val rows = front.join(broadcast(IndexServing.exactVectors(spark, tablePath,
+            m.indexedVersion, m.keyCols, m.vecCol,
+            front.select(m.keyCols.map(col): _*).distinct())), m.keyCols)
+          IndexServing.exactCut(rows, m.vecCol, query, m.metric, m.keyCols, k, canonical(rows))
+        }
+      case Right(pq) =>
+        project(PqIndex.probe(spark, pq, m.keyCols.head, m.vecCol, query, k, nprobe,
+          rerankFactor, pred))
     }
-    out.select(canonical.map(col): _*)
   }
 
   /** DIVERSIFIED top-k through the table-attached index — MMR as a
@@ -806,7 +763,8 @@ object GraftIndex {
     *     probe's machinery applies unchanged (freshness check, pred
     *     legs incl. the metadata-first brute/pushed selection, quantized
     *     two-stage rerank), and this is where the 100 TB cost lives;
-    *  2. the [[graft.operators.VectorSearch.mmrSelect]] greedy over
+    *  2. [[IndexServing.mmr]]: the
+    *     [[graft.operators.VectorSearch.mmrSelect]] greedy over
     *     that serving-sized slice, its float vectors fetched by ONE
     *     bucket-pruned point lookup (candidates keys → ≤ candidates
     *     bucket reads, never a table scan). The greedy is inherently
@@ -830,10 +788,8 @@ object GraftIndex {
     // lookup, the greedy collect, AND the final rank join
     val cand = probe(spark, tablePath, query, candidates, nprobe, name, pred,
       allowStale, rerankFactor, bruteForceCap).localCheckpoint()
-    val vecs = exactVectors(spark, tablePath, m,
-      cand.select(m.keyCols.map(col): _*).distinct())
-    graft.operators.VectorSearch.mmrOverCandidates(
-      cand, m.keyCols, vecs, m.vecCol, k, lambda, m.metric)
+    IndexServing.mmr(spark, tablePath, m.indexedVersion, m.keyCols, m.vecCol, cand, k,
+      lambda, m.metric)
   }
 
   /** Batched ANN k-NN join THROUGH the table-attached index: every
@@ -867,35 +823,21 @@ object GraftIndex {
               bruteForceCap: Int = 10000): DataFrame = {
     val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
-    def emptyOut = GraftTable.read(spark, tablePath, m.indexedVersion).limit(0)
-      .select(lit(0L).as("qid") +: m.keyCols.map(col) :+ lit(0.0).as("score"): _*)
+    def emptyOut = IndexServing.emptyBatch(spark, tablePath, m.indexedVersion, m.keyCols)
     // the brute leg needs only meta (see probe)
     pred.foreach { p =>
-      require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-      import spark.implicits._
-      val matched = GraftTable.read(spark, tablePath, m.indexedVersion)
-        .filter(p).filter(col(m.vecCol).isNotNull)
+      IndexServing.frontierWidth(k, rerankFactor) // refuses rerankFactor < 1 before any job
       // metadata-first leg selection (two regimes: brute vs pushed scan,
       // so acceptCap = bruteForceCap) — see GraftTable.metadataMatchCount
-      val n = GraftTable.metadataMatchCount(spark, tablePath,
-        m.indexedVersion, p, Seq(m.vecCol), bruteForceCap, bruteForceCap)(
-        matched.count())
+      val (matched, n) = IndexServing.matchSet(spark, tablePath, m.indexedVersion,
+        m.vecCol, p, bruteForceCap, bruteForceCap)
       if (n == 0) return emptyOut
-      if (n <= bruteForceCap) {
-        // exact: broadcast the filtered subset once, score every
-        // (query, match) pair — ≤ |Q|·bruteForceCap rows, bounded.
-        // Composite record keys ((tenant, id)-keyed tables) ride the
-        // per-query cut as ONE orderable struct and expand back — the
-        // IvfIndex.keyStruct/expandKey convention.
-        val qdf = queries.toDF("qid", "__qvec")
-        val scored = qdf.crossJoin(broadcast(
-            matched.select(IvfIndex.keyStruct(m.keyCols), col(m.vecCol).as("__mvec"))))
-          .withColumn("score", graft.operators.VectorSearch.scoreCol(
-            col("__mvec"), col("__qvec"), m.metric))
-          .select(col("qid"), col(IvfIndex.keyName(m.keyCols)), col("score"))
-        return IvfIndex.expandKey(graft.operators.VectorSearch.perQueryTopK(
-          scored, "qid", IvfIndex.keyName(m.keyCols), k, m.metric), m.keyCols)
-      }
+      // exact: every (query, match) pair scored. Composite record keys
+      // ((tenant, id)-keyed tables) ride the per-query cut as ONE
+      // orderable struct and expand back
+      if (n <= bruteForceCap)
+        return IndexServing.bruteBatch(spark, queries, matched, IvfIndex.keyStruct(m.keyCols),
+          col(IvfIndex.keyName(m.keyCols)), m.keyCols, m.vecCol, k, m.metric)
       // loose pred: fall through — the pred pushes into the cell scans
       // below (both the float32 and quantized candidate stages take it)
     }
@@ -908,29 +850,14 @@ object GraftIndex {
     else {
       // quantized layout: widen each query's candidate cut, then
       // exact-score every surviving (qid, key) pair from the table's
-      // float column before the bounded-heap per-query cut — ONE
-      // bucket-pruned lookup serves all queries' candidates (the pair
-      // set is ≤ |Q|·rerankFactor·k rows, serving-sized). The
-      // [[GraftHnsw.knnJoin]] shape on IVF cells. Composite keys ride
-      // the cuts as one struct (the keyStruct/expandKey convention).
-      require(rerankFactor >= 1, s"need rerankFactor >= 1, got $rerankFactor")
-      import spark.implicits._
-      val kf = math.min(Int.MaxValue.toLong, k.toLong * rerankFactor).toInt
+      // float column before the per-query cut
       val cands = IvfIndex.quantizedKnnCandidatesKeys(spark, ivf, m.keyCols, queries,
-          kf, nprobe, pred)
+          IndexServing.frontierWidth(k, rerankFactor), nprobe, pred)
         .localCheckpoint()
       if (cands.isEmpty) return emptyOut
-      val vecs = exactVectors(spark, tablePath, m,
-        cands.select(m.keyCols.map(col): _*).distinct())
-      val qdf = queries.toDF("qid", "__qvec")
-      val scored = vecs
-        .join(broadcast(cands.select(col("qid") +: m.keyCols.map(col): _*)
-          .join(qdf, "qid")), m.keyCols)
-        .withColumn("score", graft.operators.VectorSearch.scoreCol(
-          col(m.vecCol), col("__qvec"), m.metric))
-        .select(col("qid"), IvfIndex.keyStruct(m.keyCols), col("score"))
-      IvfIndex.expandKey(graft.operators.VectorSearch.perQueryTopK(
-        scored, "qid", IvfIndex.keyName(m.keyCols), k, m.metric), m.keyCols)
+      IndexServing.rerankBatch(spark, tablePath, m.indexedVersion, m.keyCols, m.vecCol,
+        queries, cands.select(col("qid") +: m.keyCols.map(col): _*),
+        cands.select(m.keyCols.map(col): _*).distinct(), k, m.metric)
     }
   }
 }

@@ -314,14 +314,9 @@ object TextIndex {
 
   // ---- serving -----------------------------------------------------------
 
-  private def requireFresh(tablePath: String, m: TextMeta, allowStale: Boolean): Unit = {
-    val head = GraftTable.latestVersion(tablePath)
-    if (!allowStale && head != m.indexedVersion)
-      throw new IllegalStateException(
-        s"text index '${m.name}' on $tablePath is STALE: it reflects table version " +
-          s"${m.indexedVersion} but the table is at $head — run " +
-          "TextIndex.refresh, or search(allowStale = true) to serve the indexed snapshot")
-  }
+  private def requireFresh(tablePath: String, m: TextMeta, allowStale: Boolean): Unit =
+    IndexServing.requireFresh(tablePath, "text index", m.name, m.indexedVersion, allowStale,
+      "TextIndex.refresh, or search(allowStale = true)")
 
   /** LIVE postings of the query's terms: every segment's posting
     * partitions for the terms' tbuckets (all other partitions pruned),
@@ -652,23 +647,17 @@ object TextIndex {
       segments = if (m.nDocs > 0) Seq(entry) else Seq.empty))
   }
 
-  /** Continuous maintenance: a Structured Streaming ticker drives
-    * [[refresh]] per micro-batch so the text index FOLLOWS the table —
-    * the keyword twin of [[GraftIndex.streamRefresh]]. Position is
-    * owned by `meta.indexedVersion` (restart-safe without a
-    * checkpoint; replays idempotent per the refresh contract).
+  /** Continuous maintenance: [[refresh]] (with its `maxSegments` cap)
+    * per micro-batch of the shared ticker
+    * ([[IndexServing.streamRefresh]]), so the text index FOLLOWS the
+    * table.
     */
   def streamRefresh(spark: SparkSession, tablePath: String, name: String = "txt",
                     trigger: org.apache.spark.sql.streaming.Trigger =
                       org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"),
                     maxSegments: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .writeStream
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        refresh(spark, tablePath, name, maxSegments); () }
-      .trigger(trigger)
-      .start()
+    IndexServing.streamRefresh(spark, trigger)(refresh(spark, tablePath, name, maxSegments))
 
   /** Delete segment dirs the current meta no longer references (crashed
     * attempts, compacted-away segments, racing losers). Same

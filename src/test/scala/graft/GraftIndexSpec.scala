@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{IvfIndex, VectorSearch}
-import graft.sources.{GraftIndex, GraftTable}
+import graft.sources.{GraftHnsw, GraftIndex, GraftTable}
 import java.nio.file.Files
 
 /** The table-attached ANN index: built FROM a GraftTable snapshot,
@@ -1062,5 +1062,76 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
       withClue("Spark jobs during analysis: ") { jobs.get shouldBe 0 }
       df.collect().toSeq shouldBe want
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("COMPOSITE-key ties break on the whole key: every probe leg returns the smaller keys, == knnJoin") {
+    // (tenant, id)-keyed; eight rows of tenant t0 share one vector, so
+    // the query ties all eight at score 1 and k = 3 cuts between them:
+    // ordering ties by tenant alone would return any three of them
+    val dup = Seq(10L, 12L, 14L, 16L, 18L, 20L, 22L, 24L)
+    val path = Files.createTempDirectory("graft_index").toString + "/t"
+    val df = (0L until 60L).map(k => (s"t${k % 2}", k, s"doc-$k",
+        if (dup.contains(k)) vec(999L) else vec(k)))
+      .toDF("tenant", "id", "s", "v")
+    GraftTable.create(df, path, Seq("tenant", "id"), nbuckets = 4)
+    GraftIndex.create(spark, path, "v", nlist = 4)
+    GraftIndex.create(spark, path, "v", nlist = 4, name = "q8", storage = "sq8")
+    val q = vec(999L)
+    val want = dup.take(3).map(id => ("t0", id))
+    def keys(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+      df.collect().map(r => (r.getString(r.fieldIndex("tenant")), r.getLong(r.fieldIndex("id"))))
+        .toSeq
+    keys(GraftIndex.probe(spark, path, q, 3, nprobe = 4)) shouldBe want
+    keys(GraftIndex.probe(spark, path, q, 3, nprobe = 4,
+      pred = Some(col("tenant") === "t0"))) shouldBe want
+    keys(GraftIndex.probe(spark, path, q, 3, nprobe = 4, name = "q8",
+      rerankFactor = Int.MaxValue)) shouldBe want
+    // the single-query probe == the batch join for that query at nprobe = nlist
+    val joined = GraftIndex.knnJoin(spark, path, Seq((1L, q)), k = 3, nprobe = 4)
+      .orderBy(desc("score"), col("tenant"), col("id"))
+    keys(joined) shouldBe want
+    GraftIndex.probe(spark, path, q, 3, nprobe = 4).select("score").as[Double].collect()
+      .toSeq shouldBe joined.select("score").as[Double].collect().toSeq
+  }
+
+  test("cross-index agreement: every family's filtered brute leg == plain filtered brute force") {
+    // one table, five indexes (ivf float32 / rabitq, ivfpq, hnsw float32
+    // / sq8); the preds match <= bruteForceCap rows, so every probe and
+    // knnJoin serves the exact brute leg and must agree row for row.
+    // Rows 3 and 7 match pred A but carry no vector; ids 1, 5, 9, 13, 17
+    // (label 1) share one vector, so pred B's k = 3 cuts inside a tie
+    val dup = Set(1L, 5L, 9L, 13L, 17L)
+    val path = Files.createTempDirectory("graft_index").toString + "/t"
+    val df = (0L until 80L).map(k => (k, s"doc-$k", (k % 4).toInt,
+        if (k == 3L || k == 7L) null else if (dup(k)) vec(999L) else vec(k)))
+      .toDF("id", "s", "label", "v")
+    GraftTable.create(df, path, Seq("id"), nbuckets = 4)
+    GraftIndex.create(spark, path, "v", nlist = 4)
+    GraftIndex.create(spark, path, "v", nlist = 4, name = "rq", storage = "rabitq")
+    GraftIndex.create(spark, path, "v", nlist = 4, name = "pq", kind = "ivfpq", m = 4)
+    GraftHnsw.create(spark, path, "v", name = "h32", nSegments = 2, m = 8, efConstruction = 32)
+    GraftHnsw.create(spark, path, "v", name = "h8", nSegments = 2, m = 8, efConstruction = 32,
+      storage = "sq8")
+    val cases = Seq((col("id") < 12, vec(5000L), 12), (col("label") === 1, vec(999L), 3))
+    cases.foreach { case (p, q, k) =>
+      val want = VectorSearch.topK(GraftTable.read(spark, path).filter(p)
+        .filter(col("v").isNotNull), "v", "id", q, k).collect().toSeq
+      val wantJoin = want.map(r => (1L, r.getLong(0), r.getDouble(3)))
+      def joinRows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .sortBy(t => (-t._3, t._2)).toSeq
+      Seq("vec", "rq", "pq").foreach { n =>
+        GraftIndex.probe(spark, path, q, k, nprobe = 1, name = n, pred = Some(p))
+          .collect().toSeq shouldBe want
+        joinRows(GraftIndex.knnJoin(spark, path, Seq((1L, q)), k, nprobe = 1, name = n,
+          pred = Some(p))) shouldBe wantJoin
+      }
+      Seq("h32", "h8").foreach { n =>
+        GraftHnsw.probe(spark, path, q, k, ef = 8, name = n, pred = Some(p))
+          .collect().toSeq shouldBe want
+        joinRows(GraftHnsw.knnJoin(spark, path, Seq((1L, q)), k, ef = 8, name = n,
+          pred = Some(p))) shouldBe wantJoin
+      }
+    }
   }
 }
