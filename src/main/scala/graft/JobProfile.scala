@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Where do a query's seconds go? Runs named queries under the session
   * Bench times ([[GraftSession.local]]) with a listener that records
@@ -10,8 +11,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * Usage: runMain graft.JobProfile <q1,q2,...> [sfDir]
   * Prints, per query: total wall, job wall (the union of the jobs'
   * intervals), Σ executor run time, job count, task count — and the
-  * per-job table (desc, wall, tasks). The GAP row (wall − job wall) is
-  * pure driver time, never negative.
+  * per-job table (wall, tasks, and the call site: the first `graft.*`
+  * frame that started the job's SQL execution, so an AQE query-stage
+  * job shows the library line that planned it, not "… at
+  * CompletableFuture.java"). The GAP row (wall − job wall) is pure
+  * driver time, never negative.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -21,34 +25,9 @@ object JobProfile {
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
-    case class Job(id: Int, start: Long, var end: Long = 0L,
-                   var stages: Int = 0, var tasks: Int = 0,
-                   var execRunMs: Long = 0L, var cpuMs: Long = 0L)
-    // ONE lock shared by the listener callbacks and the main thread's
-    // snapshot/clear — the callbacks used to lock the listener instance
-    // while the snapshot locked the JobProfile object (different
-    // monitors, so the "synchronized" read raced the writes)
-    val lock = new Object
-    val jobs = scala.collection.mutable.LinkedHashMap.empty[Int, Job]
-    val stageToJob = scala.collection.mutable.HashMap.empty[Int, Int]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = lock.synchronized {
-        jobs(js.jobId) = Job(js.jobId, js.time)
-        js.stageIds.foreach(sid => stageToJob(sid) = js.jobId)
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = lock.synchronized {
-        jobs.get(je.jobId).foreach(_.end = je.time)
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = lock.synchronized {
-        val si = sc.stageInfo
-        stageToJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
-          j.stages += 1
-          j.tasks += si.numTasks
-          j.execRunMs += si.taskMetrics.executorRunTime
-          j.cpuMs += si.taskMetrics.executorCpuTime / 1000000L
-        }
-      }
-    }
+    val listener = new JobLog
+    val lock = listener.lock
+    val jobs = listener.jobs
     spark.sparkContext.addSparkListener(listener)
 
     names.foreach { name =>
@@ -64,7 +43,7 @@ object JobProfile {
           // drain BEFORE clearing: late events from the warm run would
           // otherwise land in (and pollute) the measured run's maps
           org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(spark.sparkContext)
-          lock.synchronized { jobs.clear(); stageToJob.clear() }
+          listener.clear()
           // wall on the listener's clock (epoch ms), so the job
           // intervals are clipped to the very window they are subtracted from
           val t0 = System.currentTimeMillis()
@@ -83,7 +62,7 @@ object JobProfile {
           snap.sortBy(j => -(j.end - j.start)).take(25).foreach { j =>
             println(f"  job ${j.id}%4d  wall=${(j.end - j.start) / 1e3}%7.3fs " +
               f"stages=${j.stages}%3d tasks=${j.tasks}%5d " +
-              f"execRun=${j.execRunMs / 1e3}%7.3fs cpu=${j.cpuMs / 1e3}%7.3fs")
+              f"execRun=${j.execRunMs / 1e3}%7.3fs cpu=${j.cpuMs / 1e3}%7.3fs  ${j.site}")
           }
           // where the driver gap sits: the dead time BEFORE each job
           // (prev job end → this job start = planning, commit metadata
@@ -96,6 +75,62 @@ object JobProfile {
       }
     }
     spark.stop()
+  }
+
+  final case class Job(id: Int, start: Long, site: String, var end: Long = 0L,
+                       var stages: Int = 0, var tasks: Int = 0,
+                       var execRunMs: Long = 0L, var cpuMs: Long = 0L)
+
+  /** The first `graft.*` frame of a call-site long form (one frame per
+    * line, optionally "at "-prefixed).
+    */
+  private[graft] def graftFrame(details: String): Option[String] =
+    details.linesIterator.map(_.trim.stripPrefix("at ")).find(_.startsWith("graft."))
+
+  /** The per-job record: interval, stage/task counts, executor times,
+    * and the call site — the first `graft.*` frame of the job's SQL
+    * execution (`spark.sql.execution.id` → that execution's start
+    * details), else of the job's first stage.
+    */
+  private[graft] class JobLog extends SparkListener {
+    // ONE lock shared by the listener callbacks and the main thread's
+    // snapshot/clear — the callbacks used to lock the listener instance
+    // while the snapshot locked the JobProfile object (different
+    // monitors, so the "synchronized" read raced the writes)
+    val lock = new Object
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[Int, Job]
+    private val stageToJob = scala.collection.mutable.HashMap.empty[Int, Int]
+    private val execDetails = scala.collection.mutable.HashMap.empty[Long, String]
+
+    def clear(): Unit = lock.synchronized { jobs.clear(); stageToJob.clear(); execDetails.clear() }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => lock.synchronized {
+        execDetails(s.executionId) = s.details
+      }
+      case _ =>
+    }
+    override def onJobStart(js: SparkListenerJobStart): Unit = lock.synchronized {
+      val exec = Option(js.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+      val site = exec.flatMap(execDetails.get).flatMap(graftFrame)
+        .orElse(js.stageInfos.headOption.flatMap(si => graftFrame(si.details)))
+        .getOrElse(js.stageInfos.headOption.map(_.name).getOrElse(""))
+      jobs(js.jobId) = Job(js.jobId, js.time, site)
+      js.stageIds.foreach(sid => stageToJob(sid) = js.jobId)
+    }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit = lock.synchronized {
+      jobs.get(je.jobId).foreach(_.end = je.time)
+    }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = lock.synchronized {
+      val si = sc.stageInfo
+      stageToJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
+        j.stages += 1
+        j.tasks += si.numTasks
+        j.execRunMs += si.taskMetrics.executorRunTime
+        j.cpuMs += si.taskMetrics.executorCpuTime / 1000000L
+      }
+    }
   }
 
   /** Milliseconds of `[lo, hi]` covered by the union of the

@@ -279,7 +279,19 @@ object PqIndex {
     */
   def probe(spark: SparkSession, model: Model, idCol: String, vecCol: String,
             query: Seq[Float], k: Int, nprobe: Int, rerankFactor: Int = 4,
-            pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+            pred: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    probeKeys(spark, model, Seq(idCol), vecCol, query, k, nprobe, rerankFactor, pred)
+
+  /** [[probe]] over a composite record key: the ADC cut and the exact
+    * rerank break ties on every key column, in key order, and the
+    * survivors are refetched by their full key (a broadcast join of the
+    * ≤ k·rerankFactor survivor keys). A single key keeps the plan of
+    * [[probe]]: its survivors are refetched by a pushed `isin` filter.
+    */
+  private[graft] def probeKeys(spark: SparkSession, model: Model, keyCols: Seq[String],
+                               vecCol: String, query: Seq[Float], k: Int, nprobe: Int,
+                               rerankFactor: Int,
+                               pred: Option[org.apache.spark.sql.Column]): DataFrame = {
     val qn = if (model.metric == "cosine") normalize(query.toArray) else query.toArray
     // OPQ: coarse cells, codes, and LUT all live in the rotated space;
     // rotation is orthonormal so distances/dots there equal the original
@@ -305,17 +317,21 @@ object PqIndex {
     def scanCells = IvfIndex.cellScan(spark, model.schema, model.files, model.path, cells)
     val adcScan = scanCells
     val adc = pred.fold(adcScan)(adcScan.filter)       // pushed predicate: non-matches never ADC-scored
-      .select(col(idCol), adcUdf(col("pq_code")).as("adc")) // code column only — no vectors read
-      .orderBy(if (asc) col("adc").asc else col("adc").desc, col(idCol))
+      .select(keyCols.map(col) :+ adcUdf(col("pq_code")).as("adc"): _*) // code column only — no vectors read
+      .orderBy((if (asc) col("adc").asc else col("adc").desc) +: keyCols.map(col): _*)
       // long math then cap: rerankFactor = Int.MaxValue means "discard
       // nothing" (the exhaustive-exact mode) without k·f overflowing
       .limit(math.min(k.toLong * rerankFactor, Int.MaxValue.toLong).toInt)
-    // 3. exact re-rank of the survivors (fetch k' true vectors via pushed id
-    // filter); ids kept as their external type — no bigint assumption
-    val ids = adc.select(idCol).collect().map(_.get(0)).toSeq
-    val rerankScan = scanCells.filter(col(idCol).isin(ids: _*))
+    // 3. exact re-rank of the survivors (fetch k' true vectors by key);
+    // keys kept as their external type — no bigint assumption
+    val rerankScan = keyCols match {
+      case Seq(idCol) => // pushed id filter
+        val ids = adc.select(idCol).collect().map(_.get(0)).toSeq
+        scanCells.filter(col(idCol).isin(ids: _*))
+      case _ => scanCells.join(broadcast(adc.select(keyCols.map(col): _*)), keyCols)
+    }
     val survivors = pred.fold(rerankScan)(rerankScan.filter)
-    VectorSearch.topK(survivors, vecCol, idCol, query, k, model.metric)
+    VectorSearch.topKBy(survivors, vecCol, keyCols, query, k, model.metric)
       .drop("pq_code", "cluster_id")
   }
 

@@ -417,14 +417,14 @@ object GraftHnsw {
                               keyType: org.apache.spark.sql.types.DataType): DataFrame = {
     val kf = IndexServing.frontierWidth(k, rerankFactor)
     if (queries.isEmpty) return emptyBatch(spark, tablePath, m)
-    val (matched, n) = IndexServing.matchSet(spark, tablePath, m.indexedVersion, m.vecCol,
+    val (n, matched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion, m.vecCol,
       pred, bruteForceCap, acceptCap)
     if (n == 0) return emptyBatch(spark, tablePath, m)
     if (n <= bruteForceCap || m.segs.isEmpty)
-      return IndexServing.bruteBatch(spark, queries, matched, col(m.keyCol).as("__mkey"),
+      return IndexServing.bruteBatch(spark, queries, matched(), col(m.keyCol).as("__mkey"),
         col("__mkey").cast(keyType).as(m.keyCol), Seq(m.keyCol), m.vecCol, k, m.metric)
     rerankPairs(spark, tablePath, m, queries, k, keyType,
-      filteredWalk(spark, tablePath, m, queries, kf, ef, matched, n, acceptCap)
+      filteredWalk(spark, tablePath, m, queries, kf, ef, matched(), n, acceptCap)
         .select("qid", "id").distinct())
   }
 
@@ -670,13 +670,13 @@ object GraftHnsw {
                             acceptCap: Int): DataFrame = {
     val kf = IndexServing.frontierWidth(k, rerankFactor)
     val sc = snapshotSchema(tablePath, m)
-    val (matched, n) = IndexServing.matchSet(spark, tablePath, m.indexedVersion, m.vecCol,
+    val (n, matched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion, m.vecCol,
       pred, bruteForceCap, acceptCap)
     if (n == 0) return emptyShape(spark, tablePath, m)
     if (n <= bruteForceCap || m.segs.isEmpty)
-      return IndexServing.exactCut(matched, m.vecCol, query, m.metric, Seq(m.keyCol), k,
+      return IndexServing.exactCut(matched(), m.vecCol, query, m.metric, Seq(m.keyCol), k,
         IndexServing.shape(sc.fieldNames.toSeq, m.vecCol))
     rerankFrontier(spark, tablePath, m, query, k,
-      filteredWalk(spark, tablePath, m, Seq((0L, query)), kf, ef, matched, n, acceptCap))
+      filteredWalk(spark, tablePath, m, Seq((0L, query)), kf, ef, matched(), n, acceptCap))
   }
 }

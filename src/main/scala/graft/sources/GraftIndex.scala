@@ -674,7 +674,7 @@ object GraftIndex {
     * filtered subset EXACTLY instead of consulting the index at all —
     * the Lucene selective-filter fallback ([[IndexServing.matchSet]],
     * [[IndexServing.exactCut]]). Ties at the k-th score break on every
-    * key column, in key order (ivfpq's index leg: on the first).
+    * key column, in key order.
     * Why: at partial nprobe a very selective pred can leave fewer than
     * k matches inside the probed cells and the top-k silently
     * UNDER-FILLS; the brute leg costs one predicate-pruned scan of a
@@ -691,12 +691,12 @@ object GraftIndex {
     pred.foreach { p =>
       // metadata-first leg selection (two regimes: brute vs pushed scan,
       // so acceptCap = bruteForceCap) — see GraftTable.metadataMatchCount
-      val (matched, nMatched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion,
+      val (nMatched, matched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion,
         m.vecCol, p, bruteForceCap, bruteForceCap)
       if (nMatched <= bruteForceCap) {
         val cols = GraftTable.snapshotSchema(tablePath, m.indexedVersion)
-          .fold(matched.columns.toSeq)(_.fieldNames.toSeq)
-        return IndexServing.exactCut(matched, m.vecCol, query, m.metric, m.keyCols, k,
+          .fold(matched().columns.toSeq)(_.fieldNames.toSeq)
+        return IndexServing.exactCut(matched(), m.vecCol, query, m.metric, m.keyCols, k,
           IndexServing.shape(cols, m.vecCol))
       }
     }
@@ -749,7 +749,7 @@ object GraftIndex {
           IndexServing.exactCut(rows, m.vecCol, query, m.metric, m.keyCols, k, canonical(rows))
         }
       case Right(pq) =>
-        project(PqIndex.probe(spark, pq, m.keyCols.head, m.vecCol, query, k, nprobe,
+        project(PqIndex.probeKeys(spark, pq, m.keyCols, m.vecCol, query, k, nprobe,
           rerankFactor, pred))
     }
   }
@@ -829,14 +829,14 @@ object GraftIndex {
       IndexServing.frontierWidth(k, rerankFactor) // refuses rerankFactor < 1 before any job
       // metadata-first leg selection (two regimes: brute vs pushed scan,
       // so acceptCap = bruteForceCap) — see GraftTable.metadataMatchCount
-      val (matched, n) = IndexServing.matchSet(spark, tablePath, m.indexedVersion,
+      val (n, matched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion,
         m.vecCol, p, bruteForceCap, bruteForceCap)
       if (n == 0) return emptyOut
       // exact: every (query, match) pair scored. Composite record keys
       // ((tenant, id)-keyed tables) ride the per-query cut as ONE
       // orderable struct and expand back
       if (n <= bruteForceCap)
-        return IndexServing.bruteBatch(spark, queries, matched, IvfIndex.keyStruct(m.keyCols),
+        return IndexServing.bruteBatch(spark, queries, matched(), IvfIndex.keyStruct(m.keyCols),
           col(IvfIndex.keyName(m.keyCols)), m.keyCols, m.vecCol, k, m.metric)
       // loose pred: fall through — the pred pushes into the cell scans
       // below (both the float32 and quantized candidate stages take it)

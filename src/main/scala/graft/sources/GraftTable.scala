@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.security.UserGroupInformation
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession, types}
 import org.apache.spark.sql.functions._
 import graft.operators.Upsert
@@ -68,17 +69,56 @@ object GraftTable {
         .map(_.sessionState.newHadoopConf())
         .getOrElse(new Configuration())
 
-    private def fs(p: Path): FileSystem = p.getFileSystem(conf)
+    // FileSystems by (scheme, authority, user) — the key Hadoop's own
+    // FileSystem cache hands the same instance back for — so a metadata
+    // call copies the session's Hadoop configuration once per store and
+    // user, not once per call. Schemes whose cache is disabled
+    // (`fs.<scheme>.impl.disable.cache`) resolve afresh every time, as
+    // Hadoop would; a scheme first used after its `fs.<scheme>.impl` was
+    // set still resolves with it (the first use makes the entry). An
+    // instance closed under us ("Filesystem closed") fails the call
+    // that meets it and is dropped, so later calls resolve afresh — as
+    // Hadoop's cache drops an instance on close.
+    private val filesystems =
+      new java.util.concurrent.ConcurrentHashMap[(String, String, UserGroupInformation), FileSystem]()
 
-    def exists(p: Path): Boolean = fs(p).exists(p)
+    private def key(p: Path) = {
+      val uri = p.toUri
+      (Option(uri.getScheme).map(_.toLowerCase).getOrElse(""),
+        Option(uri.getAuthority).map(_.toLowerCase).getOrElse(""),
+        UserGroupInformation.getCurrentUser)
+    }
 
-    def readString(p: Path): String = {
-      val in = fs(p).open(p)
+    private def fs(p: Path): FileSystem = {
+      val k = key(p)
+      val cached = filesystems.get(k)
+      if (cached != null) cached
+      else {
+        val c = conf
+        val f = p.getFileSystem(c)
+        val s = Option(f.getScheme).getOrElse(k._1)
+        if (!c.getBoolean(s"fs.$s.impl.disable.cache", false)) filesystems.putIfAbsent(k, f)
+        f
+      }
+    }
+
+    private def withFs[T](p: Path)(op: FileSystem => T): T =
+      try op(fs(p))
+      catch {
+        case e: java.io.IOException if String.valueOf(e.getMessage).contains("Filesystem closed") =>
+          filesystems.remove(key(p))
+          throw e
+      }
+
+    def exists(p: Path): Boolean = withFs(p)(_.exists(p))
+
+    def readString(p: Path): String = withFs(p) { f =>
+      val in = f.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     }
 
-    def writeString(p: Path, s: String): Unit = {
-      val out = fs(p).create(p, true) // creates parent dirs; overwrite ok
+    def writeString(p: Path, s: String): Unit = withFs(p) { f =>
+      val out = f.create(p, true) // creates parent dirs; overwrite ok
       try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
     }
 
@@ -105,8 +145,7 @@ object GraftTable {
       *    rather than letting two racing writers both "win" a
       *    check-then-act emulation.
       */
-    def putIfAbsent(p: Path, s: String): Boolean = {
-      val filesystem = fs(p)
+    def putIfAbsent(p: Path, s: String): Boolean = withFs(p) { filesystem =>
       val scheme = Option(filesystem.getScheme).getOrElse("").toLowerCase
       GraftTable.lockProvider match {
         case Some(lp) if lp.handles(scheme) =>
@@ -142,11 +181,12 @@ object GraftTable {
     def replaceString(p: Path, s: String): Unit = {
       val tmp = new Path(p.getParent, p.getName + ".tmp")
       writeString(tmp, s)
-      val f = fs(p)
-      if (!f.rename(tmp, p)) {
-        f.delete(p, false)
-        if (!f.rename(tmp, p))
-          throw new java.io.IOException(s"atomic replace failed for $p")
+      withFs(p) { f =>
+        if (!f.rename(tmp, p)) {
+          f.delete(p, false)
+          if (!f.rename(tmp, p))
+            throw new java.io.IOException(s"atomic replace failed for $p")
+        }
       }
     }
 
@@ -157,11 +197,10 @@ object GraftTable {
     val listCalls = new java.util.concurrent.atomic.AtomicLong(0L)
     def list(p: Path): Seq[FileStatus] = {
       listCalls.incrementAndGet()
-      if (!exists(p)) Seq.empty else fs(p).listStatus(p).toSeq
+      withFs(p)(f => if (!f.exists(p)) Seq.empty else f.listStatus(p).toSeq)
     }
 
-    def delete(p: Path): Unit = {
-      val f = fs(p)
+    def delete(p: Path): Unit = withFs(p) { f =>
       if (f.exists(p)) f.delete(p, true)
       ()
     }
@@ -176,11 +215,20 @@ object GraftTable {
   // File-level stats live in per-ATTEMPT segment files next to the
   // manifests (`manifests/<attempt>.stats`, where <attempt> is the
   // unique `v<N>-<uuid>` token of one writer's data dir), holding:
-  //   #file=<relFile>\t<rowCount>    one per data file
-  //   #stat=<relFile>\t<col>\t<min>\t<max>\t<nullCount>
+  //   #file=<relFile>\t<rowCount>\t<bytes>    one per data file
+  //   #stat=<relFile>\t<col>\t<min>\t<max>\t<nullCount>[\t<values>\t<bins>]
   // min/max are type-serialized (numerics as decimal strings, strings/
   // dates as URL-encoded text, timestamps as epoch micros; "-" =
-  // unknown). Readers derive the segments to consult from the
+  // unknown). The two trailing fields are the column's per-file row
+  // counts over non-null values ([[FileCounts]]): <values> is
+  // "l<enc(v)>=<n>,…" — every distinct value with its rows, when the
+  // file holds at most 32 values of at most 120 chars — or "m<n>", an
+  // upper bound on any one value's rows (the mode's count); <bins> is
+  // "<e>:<base>:<n0>,<n1>,…", the rows in bins base, base+1, … of width
+  // 2^e (numeric, date and timestamp columns without NaN/±Infinity), or
+  // "-". They let matchBounds bound the rows that MATCH an equality,
+  // IN or range filter; lines without them (written before the fields
+  // existed) keep the whole-file bounds. Readers derive the segments to consult from the
   // manifest's dir lines by name — no pointer list to maintain — and
   // legacy manifests with INLINE #file/#stat lines still resolve (the
   // lines are merged; writers copy a carried legacy manifest's inline
@@ -202,7 +250,8 @@ object GraftTable {
     * `org.apache.spark.util.sketch.BloomFilter` over xxhash64 values)
     * for columns enabled via [[enableBloomFilters]].
     */
-  final case class ColStat(min: Option[String], max: Option[String], nullCount: Long)
+  final case class ColStat(min: Option[String], max: Option[String], nullCount: Long,
+                           counts: Option[FileCounts.Counts] = None)
   /** `bytes` = the parquet file's on-disk length, recorded so scan
     * PLANNING (the DSv2 storage-partitioned read) can build its file
     * list from metadata alone — no per-query driver-side filesystem
@@ -374,12 +423,12 @@ object GraftTable {
     * sized for n holds fpp for any m ≤ n).
     */
   private def collectBloomLines(spark: SparkSession, tableRoot: String,
-                                writtenRelDirs: Seq[String],
+                                writtenRelDirs: Seq[String], schema: types.StructType,
                                 statLines: Seq[String]): Seq[String] = {
     val cfg = bloomConfig(tableRoot)
     if (cfg.isEmpty || writtenRelDirs.isEmpty) return Nil
     val (cfgCols, fpp) = cfg.get
-    val src = spark.read.parquet(writtenRelDirs.map(d => s"$tableRoot/$d"): _*)
+    val src = spark.read.schema(schema).parquet(writtenRelDirs.map(d => s"$tableRoot/$d"): _*)
     val cols = cfgCols.filter(src.schema.fieldNames.contains)
     if (cols.isEmpty) return Nil
     val maxRows = statLines.collect {
@@ -411,15 +460,18 @@ object GraftTable {
   /** One aggregate scan over the freshly written dirs → #file/#stat
     * lines. Runs BEFORE the manifest commit (same ordering as the data
     * itself); files just written are page-cache-warm, and the job is
-    * O(written buckets), not O(table). Stats failures must never fail
-    * a commit — they are an optimization, and a manifest without them
-    * simply doesn't prune.
+    * O(written buckets), not O(table). The dirs are read with the
+    * `schema` just written (no footer-inference job). Stats failures
+    * must never fail a commit — they are an optimization, and a
+    * manifest without them simply doesn't prune.
     */
   private def collectStatLines(spark: SparkSession, tableRoot: String,
-                               writtenRelDirs: Seq[String]): Seq[String] = {
+                               writtenRelDirs: Seq[String],
+                               schema: types.StructType): Seq[String] = {
     if (writtenRelDirs.isEmpty) return Nil
-    val src = spark.read.parquet(writtenRelDirs.map(d => s"$tableRoot/$d"): _*)
+    val src = spark.read.schema(schema).parquet(writtenRelDirs.map(d => s"$tableRoot/$d"): _*)
     val fields = statFields(src.schema)
+    val utc = spark.conf.get("spark.sql.session.timeZone") == "UTC"
     // null-count-ONLY stats for array/binary columns (min/max have no
     // total order there, but NULL COUNT is well-defined for any type):
     // recorded as `min = max = "-"`, which mayMatch already treats as
@@ -434,6 +486,28 @@ object GraftTable {
         case _: types.ArrayType | types.BinaryType => true
         case _ => false
       }).take(32)
+    // per column: (serialized value, bin key) for FileCounts — the
+    // value text the min/max bounds use (float zeros normalized, as
+    // -0.0 = 0.0) and the double the bins place it by; None = no
+    // counts (NTZ from a non-UTC session, like its bounds)
+    def countInputs(f: types.StructField): Option[(Column, Column)] = {
+      val c = col(s"`${f.name}`")
+      val noKey = lit(null).cast(types.DoubleType)
+      f.dataType match {
+        case types.FloatType => Some(((c + lit(0.0f)).cast("string"), c.cast(types.DoubleType)))
+        case types.DoubleType => Some(((c + lit(0.0)).cast("string"), c))
+        case _: types.DecimalType => Some((c.cast("string"), noKey))
+        case types.StringType => Some((c, noKey))
+        case types.DateType => Some((c.cast("string"), unix_date(c).cast(types.DoubleType)))
+        case types.TimestampType =>
+          Some((unix_micros(c).cast("string"), unix_micros(c).cast(types.DoubleType)))
+        case types.TimestampNTZType if utc =>
+          val m = unix_micros(c.cast(types.TimestampType))
+          Some((m.cast("string"), m.cast(types.DoubleType)))
+        case types.TimestampNTZType => None
+        case _ => Some((c.cast("string"), c.cast(types.DoubleType)))
+      }
+    }
     val aggs = (count(lit(1)).as("__n") +: fields.zipWithIndex.flatMap { case (f, i) =>
       val c = col(s"`${f.name}`")
       val (mn, mx) = f.dataType match {
@@ -446,14 +520,16 @@ object GraftTable {
           // would disagree with the probe and over-prune, so they are
           // recorded as unknown instead (the library API does not pin
           // the session zone — only this repo's entry points do)
-          if (spark.conf.get("spark.sql.session.timeZone") == "UTC")
+          if (utc)
             (unix_micros(min(c).cast(types.TimestampType)),
               unix_micros(max(c).cast(types.TimestampType)))
           else (lit(null).cast("string"), lit(null).cast("string"))
         case _ => (min(c), max(c))
       }
       Seq(mn.cast("string").as(s"__mn$i"), mx.cast("string").as(s"__mx$i"),
-        sum(when(c.isNull, 1L).otherwise(0L)).as(s"__nl$i"))
+        sum(when(c.isNull, 1L).otherwise(0L)).as(s"__nl$i"),
+        countInputs(f).fold(lit(null).cast("string")) { case (value, key) =>
+          FileCounts.agg(value, key) }.as(s"__ct$i"))
     }) ++ nullOnly.zipWithIndex.map { case (f, i) =>
       sum(when(col(s"`${f.name}`").isNull, 1L).otherwise(0L)).as(s"__no$i")
     }
@@ -489,11 +565,12 @@ object GraftTable {
                   case Some(s) if isMin => enc(s.substring(0, 120))
                   case _ => "-"
                 }
-              val mn = bounded(Option(r.getString(2 + 3 * i)), isMin = true)
-              val mx = bounded(Option(r.getString(3 + 3 * i)), isMin = false)
-              s"#stat=$rel\t${enc(f.name)}\t$mn\t$mx\t${r.getLong(4 + 3 * i)}"
+              val mn = bounded(Option(r.getString(2 + 4 * i)), isMin = true)
+              val mx = bounded(Option(r.getString(3 + 4 * i)), isMin = false)
+              val counts = Option(r.getString(5 + 4 * i)).fold("")("\t" + _)
+              s"#stat=$rel\t${enc(f.name)}\t$mn\t$mx\t${r.getLong(4 + 4 * i)}$counts"
             }
-            val base = 2 + 3 * fields.length
+            val base = 2 + 4 * fields.length
             val nullLines = nullOnly.zipWithIndex.map { case (f, i) =>
               s"#stat=$rel\t${enc(f.name)}\t-\t-\t${r.getLong(base + i)}"
             }
@@ -580,7 +657,7 @@ object GraftTable {
       val p = l.stripPrefix("#stat=").split("\t")
       (p(0), dec(p(1)),
         ColStat(Some(p(2)).filter(_ != "-").map(dec), Some(p(3)).filter(_ != "-").map(dec),
-          p(4).toLong))
+          p(4).toLong, if (p.length >= 7) FileCounts.parse(p(5), p(6)) else None))
     }.groupBy(_._1)
     val blooms = lines.collect { case l if l.startsWith("#bloom=") =>
       val p = l.stripPrefix("#bloom=").split("\t")
@@ -626,22 +703,11 @@ object GraftTable {
           case _ => None
         }).map(s => Integer.signum(bound.compareTo(s)))
       case "ts" =>
-        val micros = v match {
-          case t: java.sql.Timestamp =>
-            Some(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos.toLong / 1000)
-          case i: java.time.Instant =>
-            Some(i.getEpochSecond * 1000000L + i.getNano.toLong / 1000)
-          case d: java.time.LocalDateTime =>
-            // NTZ filter value (zone-free by definition): convert
-            // as-if-UTC, the SAME convention collectStatLines records
-            // NTZ bounds under (it declines to record them at all from
-            // a non-UTC writer session), so bound and probe always
-            // share an epoch convention whatever zone this reader runs
-            Some(d.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-              + d.getNano.toLong / 1000)
-          case _ => None
-        }
-        for (b <- scala.util.Try(bound.toLong).toOption; m <- micros)
+        // NTZ filter values convert as-if-UTC, the SAME convention
+        // collectStatLines records NTZ bounds under (it declines to
+        // record them at all from a non-UTC writer session), so bound
+        // and probe share an epoch convention whatever zone this reader runs
+        for (b <- scala.util.Try(bound.toLong).toOption; m <- FileCounts.tsMicros(v))
           yield java.lang.Long.compare(b, m)
       case _ => None
   }
@@ -789,16 +855,21 @@ object GraftTable {
     matchBounds(path, v, filters, complete = false)._2
 
   /** Metadata-only (LOWER, UPPER) bounds on snapshot `v`'s rows
-    * matching `filters` — the [[matchUpperBound]] pair form. The lower
-    * bound (Σ rows over files where every filter [[mustMatch]], and
-    * every `requireNonNull` column has a recorded zero null count) is
-    * only sound when the caller proved the filter set COMPLETE
-    * (`complete = true`, every conjunct of the original predicate
-    * translated — a dropped conjunct can only shrink the true match
-    * set, which an upper bound survives but a lower bound does not);
-    * otherwise the lower slot is None. Both None when the machinery
-    * can't answer at all (empty filters, stat-less dirs, MOR logs —
-    * [[matchUpperBound]]'s refusals).
+    * matching `filters` — the [[matchUpperBound]] pair form, summed
+    * over files from each file's [[fileBounds]] (the conjunction of
+    * every filter). Files whose stats carry [[FileCounts]] bound the
+    * rows that MATCH; files without them (legacy segments) contribute
+    * the whole-file bound — their rows if the file may match, and to
+    * the lower bound only if every row provably matches. The lower
+    * bound additionally needs every `requireNonNull` column to have a
+    * recorded zero null count in the file, and is only sound when the
+    * caller proved the filter set COMPLETE (`complete = true`, every
+    * conjunct of the original predicate translated — a dropped
+    * conjunct can only shrink the true match set, which an upper bound
+    * survives but a lower bound does not); otherwise the lower slot is
+    * None. Both None when the machinery can't answer at all (empty
+    * filters, stat-less dirs, MOR logs — [[matchUpperBound]]'s
+    * refusals).
     */
   def matchBounds(path: String, v: Int,
                   filters: Seq[org.apache.spark.sql.sources.Filter],
@@ -810,6 +881,7 @@ object GraftTable {
     if (stats.isEmpty) return (None, None)
     val schema = snapshotSchema(path, v).getOrElse(return (None, None))
     val kinds = schema.fields.flatMap(f => statKind(f.dataType).map(f.name -> _)).toMap
+    val dataTypes = schema.fields.map(f => f.name -> f.dataType).toMap
     var hi = 0L
     var lo = 0L
     manifest(path, v).values.toSeq.foreach { d =>
@@ -817,13 +889,103 @@ object GraftTable {
       if (files.isEmpty) return (None, None) // stat-less dir: rows unknown
       files.foreach { rel =>
         val st = stats(rel)
-        if (filters.forall(fl => mayMatch(st, kinds, fl))) hi += st.rows
-        if (complete && filters.forall(fl => mustMatch(st, kinds, fl)) &&
-            requireNonNull.forall(c => st.cols.get(c).exists(_.nullCount == 0L)))
-          lo += st.rows
+        val (l, h) = filters.map(fileBounds(st, kinds, dataTypes, _)).reduce(both(st.rows))
+        hi += h
+        if (complete && requireNonNull.forall(c => st.cols.get(c).exists(_.nullCount == 0L)))
+          lo += l
       }
     }
     (if (complete) Some(lo) else None, Some(hi))
+  }
+
+  /** [lo, hi] of a conjunction in a file of `rows` rows, from its two
+    * sides' bounds: the smaller upper bound, and Bonferroni's lower
+    * bound (at most rows − lo₁ rows fail the first side).
+    */
+  private def both(rows: Long)(a: (Long, Long), b: (Long, Long)): (Long, Long) =
+    (math.max(0L, a._1 + b._1 - rows), math.min(a._2, b._2))
+
+  /** Sound [lo, hi] on the rows of ONE file matching ONE filter. The
+    * whole-file bound ([[mustMatch]] ⇒ every row, ![[mayMatch]] ⇒ none)
+    * is tightened from the column's [[FileCounts]] when recorded:
+    *  - IsNull / IsNotNull: the null count, exactly;
+    *  - equality and IN over a listed column: the rows of the listed
+    *    values that equal (one of) the value(s); unlisted: at most the
+    *    mode's count per value, and at most the rows of the value's bin
+    *    (IN: the sum, at most the file's non-null rows);
+    *  - comparisons (numeric, date and timestamp columns): the bins
+    *    above or below the value's bin count toward both bounds and the
+    *    value's own bin toward the upper bound only;
+    *  - AND: [[both]];
+    *  - anything else: the whole-file bound.
+    * Nulls never match (no list or bin holds them); NaN equals only
+    * NaN and sorts above every value (a file with NaN or ±Infinity
+    * records no bins, and a NaN filter value has no bin, so ranges
+    * there keep the whole-file bound). A listed value the reader cannot
+    * compare counts toward the upper bound only.
+    */
+  private def fileBounds(st: FileStat, kinds: Map[String, String],
+                         dataTypes: Map[String, types.DataType],
+                         f: org.apache.spark.sql.sources.Filter): (Long, Long) = {
+    import org.apache.spark.sql.sources._
+    val whole = (if (mustMatch(st, kinds, f)) st.rows else 0L,
+      if (mayMatch(st, kinds, f)) st.rows else 0L)
+    def counted(a: String): Option[(ColStat, FileCounts.Counts, types.DataType)] =
+      for (cs <- st.cols.get(a); c <- cs.counts; dt <- dataTypes.get(a)) yield (cs, c, dt)
+    // Σ rows of the listed values by test outcome: (sure, sure + unknown)
+    def listed(l: Seq[(String, Long)], test: String => Option[Boolean]): (Long, Long) =
+      l.foldLeft((0L, 0L)) { case ((lo, hi), (s, n)) =>
+        test(s) match {
+          case Some(true) => (lo + n, hi + n)
+          case Some(false) => (lo, hi)
+          case None => (lo, hi + n)
+        }
+      }
+    // at most this many rows hold the single value v
+    def pointHi(c: FileCounts.Counts, dt: types.DataType, v: Any): Long =
+      (for (b <- c.bins; k <- FileCounts.keyOf(dt, v)) yield {
+        val i = FileCounts.binOf(k, b.e) - b.base
+        if (i < 0 || i >= b.counts.length) 0L else b.counts(i.toInt)
+      }).fold(c.mode)(math.min(c.mode, _))
+    // rows whose value x satisfies ok(sign(x − v)), from the bins
+    def compared(a: String, v: Any, ok: Int => Boolean): Option[(Long, Long)] =
+      for ((_, c, dt) <- counted(a); b <- c.bins; k <- FileCounts.keyOf(dt, v)) yield {
+        val at = FileCounts.binOf(k, b.e)
+        b.counts.zipWithIndex.foldLeft((0L, 0L)) { case ((lo, hi), (n, i)) =>
+          val bin = b.base + i
+          if (bin == at) (lo, hi + n)
+          else if (ok(if (bin > at) 1 else -1)) (lo + n, hi + n)
+          else (lo, hi)
+        }
+      }
+    val refined: Option[(Long, Long)] = f match {
+      case IsNull(a) => st.cols.get(a).map(cs => (cs.nullCount, cs.nullCount))
+      case IsNotNull(a) => st.cols.get(a).map(cs => (st.rows - cs.nullCount, st.rows - cs.nullCount))
+      case EqualTo(a, v) if v != null =>
+        counted(a).map { case (_, c, dt) =>
+          c.list.fold((0L, pointHi(c, dt, v)))(l => listed(l, FileCounts.listedEq(dt, _, v)))
+        }
+      case In(a, vs) =>
+        val values = vs.toSeq.filter(_ != null).distinct
+        counted(a).map { case (cs, c, dt) =>
+          c.list.fold((0L, math.min(st.rows - cs.nullCount, values.map(pointHi(c, dt, _)).sum))) {
+            l => listed(l, s => {
+              val eqs = values.map(FileCounts.listedEq(dt, s, _))
+              if (eqs.contains(Some(true))) Some(true)
+              else if (eqs.forall(_.isDefined)) Some(false)
+              else None
+            })
+          }
+        }
+      case GreaterThan(a, v)        => compared(a, v, _ > 0)
+      case GreaterThanOrEqual(a, v) => compared(a, v, _ >= 0)
+      case LessThan(a, v)           => compared(a, v, _ < 0)
+      case LessThanOrEqual(a, v)    => compared(a, v, _ <= 0)
+      case And(l, r) =>
+        Some(both(st.rows)(fileBounds(st, kinds, dataTypes, l), fileBounds(st, kinds, dataTypes, r)))
+      case _ => None
+    }
+    refined.fold(whole)(r => (math.max(whole._1, r._1), math.min(whole._2, r._2)))
   }
 
   /** The filtered serving paths' match count, METADATA-FIRST — the ONE
@@ -832,7 +994,12 @@ object GraftTable {
     * with slightly different case sets through r12; hoisted so they
     * cannot drift): when the pred's pushable form is stats-answerable
     * AND the bounds already DECIDE the serving leg, the count job is
-    * skipped entirely. Every shortcut is provably identical to
+    * skipped entirely. The pred is translated against the snapshot's
+    * RECORDED schema (an empty relation of that schema — no table
+    * relation is resolved, no file listed), and [[matchBounds]] bounds
+    * the matching rows from the commit-time [[FileCounts]], so
+    * equality, IN and range preds on a COW snapshot usually decide the
+    * leg with no job at all. Every shortcut is provably identical to
     * count-based selection:
     *  - upper ≤ bruteForceCap ⇒ true count ≤ cap ⇒ brute leg, same leg
     *    (upper == 0 ⇒ exactly zero matches);
@@ -842,8 +1009,10 @@ object GraftTable {
     *    enforced by [[matchBounds]]);
     *  - bruteForceCap < lower AND upper ≤ acceptCap ⇒ the middle
     *    (filtered-walk / pushed-scan) leg.
-    * Anything undecided pays `exactCount` (by-name — only evaluated
-    * then), exactly as before. Two-regime callers (no middle leg) pass
+    * Anything undecided — legacy manifests without a recorded schema or
+    * counts, MOR logs, bounds that straddle a cap — pays `exactCount`
+    * (by-name — only evaluated then), exactly as before. Nothing is
+    * cached per pred or per query. Two-regime callers (no middle leg) pass
     * acceptCap = bruteForceCap and the middle case vanishes (lo ≤ hi
     * makes it unreachable). `acceptCap >= bruteForceCap` is REQUIRED:
     * with acceptCap < bruteForceCap the `lo > acceptCap` case could
@@ -861,10 +1030,12 @@ object GraftTable {
       s"need acceptCap ($acceptCap) >= bruteForceCap ($bruteForceCap) — the " +
         "metadata leg-selection proof assumes it (a smaller acceptCap could " +
         "route an unboundedly large match set onto the broadcast brute leg)")
-    val (filters, complete) =
-      org.apache.spark.sql.graftshim.Bridge.translateFiltersWithCompleteness(
-        read(spark, path, v), pred)
-    val (lo, hi) = matchBounds(path, v, filters, complete, requireNonNull)
+    val (lo, hi) = snapshotSchema(path, v).fold((Option.empty[Long], Option.empty[Long])) { sc =>
+      val (filters, complete) =
+        org.apache.spark.sql.graftshim.Bridge.translateFiltersWithCompleteness(
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc), pred)
+      matchBounds(path, v, filters, complete, requireNonNull)
+    }
     hi match {
       case Some(h) if h <= bruteForceCap => h
       case _ => lo match {
@@ -4088,8 +4259,8 @@ object GraftTable {
     }
     val freshStats =
       try {
-        val sl = collectStatLines(spark, path, written.values.toSeq)
-        sl ++ collectBloomLines(spark, path, written.values.toSeq, sl)
+        val sl = collectStatLines(spark, path, written.values.toSeq, newSchema)
+        sl ++ collectBloomLines(spark, path, written.values.toSeq, newSchema, sl)
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[graft] stats collection failed for $path v$v: $e"); Nil

@@ -71,17 +71,19 @@ private[graft] object IndexServing {
     pointLookup(spark, tablePath, version, keyCols, keys)
       .select(keyCols.map(col) :+ col(vecCol): _*)
 
-  /** The filtered legs' match set at the pinned version — rows passing
-    * `pred` that carry a vector — and its count, metadata-first through
+  /** The filtered legs' match count at the pinned version — rows
+    * passing `pred` that carry a vector — metadata-first through
     * [[GraftTable.metadataMatchCount]] (two-regime callers pass
-    * acceptCap = bruteForceCap).
+    * acceptCap = bruteForceCap), and the match set itself, built on
+    * first use: only the legs that scan it (and a count the metadata
+    * could not decide) resolve the table relation.
     */
   def matchSet(spark: SparkSession, tablePath: String, version: Int, vecCol: String,
-               pred: Column, bruteForceCap: Int, acceptCap: Int): (DataFrame, Long) = {
-    val matched = GraftTable.read(spark, tablePath, version)
+               pred: Column, bruteForceCap: Int, acceptCap: Int): (Long, () => DataFrame) = {
+    lazy val matched = GraftTable.read(spark, tablePath, version)
       .filter(pred).filter(col(vecCol).isNotNull)
-    (matched, GraftTable.metadataMatchCount(spark, tablePath, version, pred,
-      Seq(vecCol), bruteForceCap, acceptCap)(matched.count()))
+    (GraftTable.metadataMatchCount(spark, tablePath, version, pred,
+      Seq(vecCol), bruteForceCap, acceptCap)(matched.count()), () => matched)
   }
 
   /** The quantized frontier width rerankFactor·k, capped so

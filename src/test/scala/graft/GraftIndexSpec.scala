@@ -1064,6 +1064,43 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a warm filtered GraftIndex.probe picks its leg from commit-time counts with ZERO Spark jobs") {
+    val path = Files.createTempDirectory("graft_index_plan").toString + "/t"
+    // every file holds all seven g values and d values across 0..364, so
+    // per-file min/max bound neither pred: only the row counts decide
+    GraftTable.create((0L until 2000L).map(k => (k, (k % 7).toInt, (k * 37 % 365).toInt, vec(k)))
+      .toDF("k", "g", "d", "v"), path, Seq("k"), nbuckets = 16)
+    GraftIndex.create(spark, path, "v", nlist = 16)
+    val cap = 400
+    val eq = col("g") === 3 // 286 matches: the brute leg
+    val range = col("d") >= 20 // ~1900 matches: the pushed leg
+    GraftTable.read(spark, path).filter(eq).count() should be <= cap.toLong
+    GraftTable.read(spark, path).filter(range).count() should be > cap.toLong
+    val q = vec(77L)
+    def probe(p: org.apache.spark.sql.Column) =
+      GraftIndex.probe(spark, path, q, 5, nprobe = 2, pred = Some(p), bruteForceCap = cap)
+    val want = Seq(eq, range).map(p => probe(p).collect().toSeq) // warms the model cache
+    want.foreach(_.size shouldBe 5)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      Seq(eq, range).zip(want).foreach { case (p, w) =>
+        jobs.set(0)
+        val df = probe(p) // picks the leg and plans it
+        org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(sc)
+        withClue(s"Spark jobs while planning the probe under $p: ") { jobs.get shouldBe 0 }
+        df.collect().toSeq shouldBe w
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("COMPOSITE-key ties break on the whole key: every probe leg returns the smaller keys, == knnJoin") {
     // (tenant, id)-keyed; eight rows of tenant t0 share one vector, so
     // the query ties all eight at score 1 and k = 3 cuts between them:
@@ -1076,6 +1113,7 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
     GraftTable.create(df, path, Seq("tenant", "id"), nbuckets = 4)
     GraftIndex.create(spark, path, "v", nlist = 4)
     GraftIndex.create(spark, path, "v", nlist = 4, name = "q8", storage = "sq8")
+    GraftIndex.create(spark, path, "v", nlist = 4, name = "pq", kind = "ivfpq", m = 4)
     val q = vec(999L)
     val want = dup.take(3).map(id => ("t0", id))
     def keys(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
@@ -1092,6 +1130,15 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
     keys(joined) shouldBe want
     GraftIndex.probe(spark, path, q, 3, nprobe = 4).select("score").as[Double].collect()
       .toSeq shouldBe joined.select("score").as[Double].collect().toSeq
+    // ivfpq: the ADC cut and the rerank order ties by the whole key too,
+    // and the survivors are refetched by the whole key
+    val pq = GraftIndex.probe(spark, path, q, 3, nprobe = 4, name = "pq", rerankFactor = Int.MaxValue)
+    keys(pq) shouldBe want
+    val pqJoined = GraftIndex.knnJoin(spark, path, Seq((1L, q)), k = 3, nprobe = 4, name = "pq")
+      .orderBy(desc("score"), col("tenant"), col("id"))
+    keys(pqJoined) shouldBe want
+    pq.select("score").as[Double].collect().toSeq shouldBe
+      pqJoined.select("score").as[Double].collect().toSeq
   }
 
   test("cross-index agreement: every family's filtered brute leg == plain filtered brute force") {

@@ -19,4 +19,27 @@ class JobProfileSpec extends AnyFunSuite with Matchers {
     walls.map { case (s, e) => e - s }.sum shouldBe 150L
     JobProfile.covered(walls, 0L, 100L) should be <= 100L
   }
+
+  test("each job names the graft.* call site of its SQL execution") {
+    JobProfile.graftFrame("org.apache.spark.sql.Dataset.count(Dataset.scala:1)\n" +
+      "graft.sources.GraftTable$.metadataMatchCount(GraftTable.scala:873)\n" +
+      "graft.sources.IndexServing$.matchSet(IndexServing.scala:80)") shouldBe
+      Some("graft.sources.GraftTable$.metadataMatchCount(GraftTable.scala:873)")
+    JobProfile.graftFrame("org.apache.spark.rdd.RDD.collect(RDD.scala:1)") shouldBe None
+    // end to end: an AQE shuffle (query-stage jobs run on other threads)
+    // started from this spec still names this spec's frame
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val log = new JobProfile.JobLog
+    org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(log)
+    try {
+      spark.range(0, 1000).groupBy(org.apache.spark.sql.functions.col("id") % 7).count()
+        .collect().length shouldBe 7
+      org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(sc)
+    } finally sc.removeSparkListener(log)
+    val jobs = log.lock.synchronized(log.jobs.values.toVector)
+    jobs.size should be >= 2 // the shuffle stage's job and the result job
+    jobs.foreach(_.site should startWith("graft.JobProfileSpec"))
+  }
 }
