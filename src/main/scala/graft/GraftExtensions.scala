@@ -282,7 +282,9 @@ object GraftFunctions {
     // through the DSv1 relation (not a raw snapshot read): WHERE clauses
     // above the TVF reach GraftRelation's buildScan, so SQL readers get
     // full-key bucket point lookups and manifest-stats file skipping,
-    // exactly like spark.read.format("graft")
+    // exactly like spark.read.format("graft"). The RESOLVED plan: an
+    // unresolved data source would be resolved again in the outer
+    // query, building (and pinning) a second relation
     val reader = SparkSession.active.read.format("graft")
     val versioned =
       if (args.length == 2) args(1).eval(null) match {
@@ -299,7 +301,7 @@ object GraftFunctions {
                     .map { case (t, v) => s"$t→v$v" }.mkString(", ")})")))
       }
       else reader
-    versioned.load(path).queryExecution.logical
+    versioned.load(path).queryExecution.analyzed
   }
 
   /** `graft_table_changes(path, fromVersion, toVersion)` — SQL read of

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import graft.sources.GraftTable
 
 /** Where do a query's seconds go? Runs named queries under the session
   * Bench times ([[GraftSession.local]]) with a listener that records
@@ -10,7 +11,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *
   * Usage: runMain graft.JobProfile <q1,q2,...> [sfDir]
   * Prints, per query: total wall, job wall (the union of the jobs'
-  * intervals), Σ executor run time, job count, task count — and the
+  * intervals), Σ executor run time, job count, task count, the table
+  * metadata I/O (directory listings and manifest reads) — and the
   * per-job table (wall, tasks, and the call site: the first `graft.*`
   * frame that started the job's SQL execution, so an AQE query-stage
   * job shows the library line that planned it, not "… at
@@ -46,11 +48,16 @@ object JobProfile {
           listener.clear()
           // wall on the listener's clock (epoch ms), so the job
           // intervals are clipped to the very window they are subtracted from
+          // planning metadata I/O over the measured run: table directory
+          // listings and manifest reads
+          val (lists0, reads0) = (GraftTable.metaListCalls, GraftTable.metaReadCalls)
           val t0 = System.currentTimeMillis()
           try { fn(spark, sfDir).queryExecution.toRdd.count() }
           catch { case e: Throwable => System.err.println(s"[prof] $name: $e") }
           org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(spark.sparkContext)
           val t1 = System.currentTimeMillis()
+          val (lists, reads) =
+            (GraftTable.metaListCalls - lists0, GraftTable.metaReadCalls - reads0)
           val wallS = (t1 - t0) / 1e3
           val snap = lock.synchronized { jobs.values.toVector }
           val jobWall = covered(snap.map(j => (j.start, j.end)), t0, t1) / 1e3
@@ -58,7 +65,8 @@ object JobProfile {
           val cpuS = snap.map(_.cpuMs).sum / 1e3
           println(f"%n==== $name%s wall=$wallS%.2fs jobs=${snap.size}%d " +
             f"jobWall=$jobWall%.2fs driverGap=${wallS - jobWall}%.2fs " +
-            f"execRun=$execS%.2fs cpu=$cpuS%.2fs tasks=${snap.map(_.tasks).sum}%d")
+            f"execRun=$execS%.2fs cpu=$cpuS%.2fs tasks=${snap.map(_.tasks).sum}%d " +
+            f"metaLists=$lists%d manifestReads=$reads%d")
           snap.sortBy(j => -(j.end - j.start)).take(25).foreach { j =>
             println(f"  job ${j.id}%4d  wall=${(j.end - j.start) / 1e3}%7.3fs " +
               f"stages=${j.stages}%3d tasks=${j.tasks}%5d " +

@@ -334,9 +334,9 @@ object Probe {
           clusterBy = Some(Seq("o_orderdate", "o_totalprice", "o_custkey")),
           targetFilesPerBucket = 256, curve = curve)
       }
-      val v = GraftTable.latestVersion(tbl)
+      val snap = GraftTable.snapshotAt(tbl, -1)
       val kept = preds.map { case (name, fs) =>
-        val Some((_, k, t)) = GraftTable.prunedDataPaths(tbl, v, fs)
+        val Some((_, k, t)) = GraftTable.prunedDataPaths(snap, fs)
         s"$name=$k/$t"
       }.mkString(" ")
       println(s"PROBE curves curve=$curve compact_s=${f"$secs%.1f"} kept[$kept]")

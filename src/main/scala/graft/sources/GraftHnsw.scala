@@ -129,12 +129,12 @@ object GraftHnsw {
   /** The table's single integral record-key column, or a loud refusal —
     * the HNSW layout addresses vectors by a long id.
     */
-  private def keyColOf(tablePath: String, v: Int): String = {
-    val keys = GraftTable.keyColumns(tablePath)
+  private def keyColOf(s: GraftTable.Snapshot): String = {
+    val keys = GraftTable.keyColumns(s.path)
     require(keys.length == 1,
       s"hnsw index needs a single record-key column, table has ${keys.mkString(", ")}")
-    val sc = GraftTable.snapshotSchema(tablePath, v).getOrElse(
-      throw new IllegalStateException(s"$tablePath: no recorded snapshot schema " +
+    val sc = s.schema.getOrElse(
+      throw new IllegalStateException(s"${s.path}: no recorded snapshot schema " +
         "(legacy manifest) — commit once through a write to upgrade"))
     val dt = sc(keys.head).dataType
     require(Seq("int", "bigint", "smallint", "tinyint").contains(dt.simpleString),
@@ -162,8 +162,9 @@ object GraftHnsw {
     val v = GraftTable.latestVersion(tablePath)
     require(v >= 0, s"no table at $tablePath")
     require(!exists(tablePath, name), s"hnsw index '$name' already exists at $tablePath")
-    val keyCol = keyColOf(tablePath, v)
-    val snap = GraftTable.read(spark, tablePath, v).filter(col(vecCol).isNotNull)
+    val s = GraftTable.snapshot(tablePath, v)
+    val keyCol = keyColOf(s)
+    val snap = GraftTable.read(spark, s).filter(col(vecCol).isNotNull)
     HnswIndex.build(snap, keyCol, vecCol, layoutPath(tablePath, name, 0),
       m, efConstruction, metric, nSegments, storage)
     writeMeta(tablePath, HnswMeta(name, vecCol, keyCol, metric, m, efConstruction,
@@ -377,15 +378,15 @@ object GraftHnsw {
               bruteForceCap: Int = 10000, acceptCap: Int = 1000000): DataFrame = {
     val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
+    val s = GraftTable.snapshot(tablePath, m.indexedVersion)
     // the internal graph id is long; emit the key in the TABLE's key
     // type (as joinBack does) so int-keyed tables don't get bigint back
-    val keyType = GraftTable.snapshotSchema(tablePath, m.indexedVersion)
-      .map(_(m.keyCol).dataType)
+    val keyType = s.schema.map(_(m.keyCol).dataType)
       .getOrElse(org.apache.spark.sql.types.LongType)
     if (pred.isDefined)
-      return knnJoinFiltered(spark, tablePath, m, queries, k, ef, pred.get,
+      return knnJoinFiltered(spark, tablePath, s, m, queries, k, ef, pred.get,
         rerankFactor, bruteForceCap, acceptCap, keyType)
-    if (m.segs.isEmpty) return emptyBatch(spark, tablePath, m)
+    if (m.segs.isEmpty) return emptyBatch(spark, s, m)
     val model = HnswIndex.load(spark, layoutPath(tablePath, name, m.gen))
     if (m.storage == "float32") {
       val cands = HnswIndex.probeSegmentsWithPid(spark, model,
@@ -399,7 +400,7 @@ object GraftHnsw {
       val cands = HnswIndex.probeSegmentsWithPid(spark, model,
         queries.map { case (qid, v) => (qid, v.toArray) },
         IndexServing.frontierWidth(k, rerankFactor), ef, Some(m.segs.toSet))
-      rerankPairs(spark, tablePath, m, queries, k, keyType,
+      rerankPairs(spark, s, m, queries, k, keyType,
         liveCandidates(spark, tablePath, m, cands).select("qid", "id").distinct())
     }
   }
@@ -410,20 +411,20 @@ object GraftHnsw {
     * subset once and scores all (query, match) pairs). Emitted scores
     * are exact float arithmetic on all paths.
     */
-  private def knnJoinFiltered(spark: SparkSession, tablePath: String, m: HnswMeta,
-                              queries: Seq[(Long, Seq[Float])], k: Int, ef: Int,
+  private def knnJoinFiltered(spark: SparkSession, tablePath: String, s: GraftTable.Snapshot,
+                              m: HnswMeta, queries: Seq[(Long, Seq[Float])], k: Int, ef: Int,
                               pred: Column, rerankFactor: Int, bruteForceCap: Int,
                               acceptCap: Int,
                               keyType: org.apache.spark.sql.types.DataType): DataFrame = {
     val kf = IndexServing.frontierWidth(k, rerankFactor)
-    if (queries.isEmpty) return emptyBatch(spark, tablePath, m)
-    val (n, matched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion, m.vecCol,
+    if (queries.isEmpty) return emptyBatch(spark, s, m)
+    val (n, matched) = IndexServing.matchSet(spark, s, m.vecCol,
       pred, bruteForceCap, acceptCap)
-    if (n == 0) return emptyBatch(spark, tablePath, m)
+    if (n == 0) return emptyBatch(spark, s, m)
     if (n <= bruteForceCap || m.segs.isEmpty)
       return IndexServing.bruteBatch(spark, queries, matched(), col(m.keyCol).as("__mkey"),
         col("__mkey").cast(keyType).as(m.keyCol), Seq(m.keyCol), m.vecCol, k, m.metric)
-    rerankPairs(spark, tablePath, m, queries, k, keyType,
+    rerankPairs(spark, s, m, queries, k, keyType,
       filteredWalk(spark, tablePath, m, queries, kf, ef, matched(), n, acceptCap)
         .select("qid", "id").distinct())
   }
@@ -467,16 +468,15 @@ object GraftHnsw {
       .drop("__hz")
   }
 
-  private def snapshotSchema(tablePath: String, m: HnswMeta)
-      : org.apache.spark.sql.types.StructType =
-    GraftTable.snapshotSchema(tablePath, m.indexedVersion).getOrElse(
-      throw new IllegalStateException(s"$tablePath: no recorded snapshot schema"))
+  private def schemaOf(s: GraftTable.Snapshot): org.apache.spark.sql.types.StructType =
+    s.schema.getOrElse(
+      throw new IllegalStateException(s"${s.path}: no recorded snapshot schema"))
 
-  private def emptyShape(spark: SparkSession, tablePath: String, m: HnswMeta): DataFrame =
-    IndexServing.emptyShape(spark, tablePath, m.indexedVersion, m.vecCol)
+  private def emptyShape(spark: SparkSession, s: GraftTable.Snapshot, m: HnswMeta): DataFrame =
+    IndexServing.emptyShape(spark, s, m.vecCol)
 
-  private def emptyBatch(spark: SparkSession, tablePath: String, m: HnswMeta): DataFrame =
-    IndexServing.emptyBatch(spark, tablePath, m.indexedVersion, Seq(m.keyCol))
+  private def emptyBatch(spark: SparkSession, s: GraftTable.Snapshot, m: HnswMeta): DataFrame =
+    IndexServing.emptyBatch(spark, s, Seq(m.keyCol))
 
   /** Graph ids (`__id`, long) re-keyed in the TABLE's key type — the
     * point lookup's join key. Other columns of `ids` ride along.
@@ -489,12 +489,12 @@ object GraftHnsw {
     * at the PINNED table version (k keys → ≤ k bucket reads, never a
     * scan), and the canonical probe shape comes out.
     */
-  private def joinBack(spark: SparkSession, tablePath: String, m: HnswMeta,
+  private def joinBack(spark: SparkSession, s: GraftTable.Snapshot, m: HnswMeta,
                        top: Array[(Long, Double)]): DataFrame = {
-    if (top.isEmpty) return emptyShape(spark, tablePath, m)
+    if (top.isEmpty) return emptyShape(spark, s, m)
     import spark.implicits._
-    val sc = snapshotSchema(tablePath, m)
-    IndexServing.pointLookup(spark, tablePath, m.indexedVersion, Seq(m.keyCol),
+    val sc = schemaOf(s)
+    IndexServing.pointLookup(spark, s, Seq(m.keyCol),
         keyed(top.toSeq.toDF("__id", "score"), m, sc(m.keyCol).dataType))
       .select(IndexServing.shape(sc.fieldNames.toSeq, m.vecCol).map(col): _*)
   }
@@ -504,14 +504,14 @@ object GraftHnsw {
     * TABLE's float column, so quantized layouts never surface
     * reconstructed arithmetic.
     */
-  private def rerankFrontier(spark: SparkSession, tablePath: String, m: HnswMeta,
+  private def rerankFrontier(spark: SparkSession, s: GraftTable.Snapshot, m: HnswMeta,
                              query: Seq[Float], k: Int, live: DataFrame): DataFrame = {
     import spark.implicits._
     val frontier = live.select("id").distinct().collect().map(_.getLong(0))
-    if (frontier.isEmpty) return emptyShape(spark, tablePath, m)
-    val sc = snapshotSchema(tablePath, m)
+    if (frontier.isEmpty) return emptyShape(spark, s, m)
+    val sc = schemaOf(s)
     IndexServing.exactCut(
-      IndexServing.pointLookup(spark, tablePath, m.indexedVersion, Seq(m.keyCol),
+      IndexServing.pointLookup(spark, s, Seq(m.keyCol),
         keyed(frontier.toSeq.toDF("__id"), m, sc(m.keyCol).dataType)),
       m.vecCol, query, m.metric, Seq(m.keyCol), k,
       IndexServing.shape(sc.fieldNames.toSeq, m.vecCol))
@@ -521,16 +521,16 @@ object GraftHnsw {
     * exact-reranked from the table — ONE point lookup serves all
     * queries' candidates (≤ |Q|·|segs|·kf pairs, serving-sized).
     */
-  private def rerankPairs(spark: SparkSession, tablePath: String, m: HnswMeta,
+  private def rerankPairs(spark: SparkSession, s: GraftTable.Snapshot, m: HnswMeta,
                           queries: Seq[(Long, Seq[Float])], k: Int,
                           keyType: org.apache.spark.sql.types.DataType,
                           pairs: DataFrame): DataFrame = {
     import spark.implicits._
     val frontier = pairs.select("id").distinct().collect().map(_.getLong(0))
-    if (frontier.isEmpty) return emptyBatch(spark, tablePath, m)
+    if (frontier.isEmpty) return emptyBatch(spark, s, m)
     // select, not withColumn+drop: the table's key may itself be
     // named "id" (the graph's internal id column name)
-    IndexServing.rerankBatch(spark, tablePath, m.indexedVersion, Seq(m.keyCol), m.vecCol,
+    IndexServing.rerankBatch(spark, s, Seq(m.keyCol), m.vecCol,
       queries, pairs.select(col("qid"), col("id").cast(keyType).as(m.keyCol)),
       keyed(frontier.toSeq.toDF("__id"), m, keyType), k, m.metric)
   }
@@ -585,11 +585,19 @@ object GraftHnsw {
             bruteForceCap: Int = 10000, acceptCap: Int = 1000000): DataFrame = {
     val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
+    probeAt(spark, tablePath, GraftTable.snapshot(tablePath, m.indexedVersion), m, query, k,
+      ef, rerankFactor, pred, bruteForceCap, acceptCap)
+  }
+
+  /** [[probe]] against the pinned snapshot `s` of the indexed version. */
+  private def probeAt(spark: SparkSession, tablePath: String, s: GraftTable.Snapshot,
+                      m: HnswMeta, query: Seq[Float], k: Int, ef: Int, rerankFactor: Int,
+                      pred: Option[Column], bruteForceCap: Int, acceptCap: Int): DataFrame = {
     if (pred.isDefined)
-      return probeFiltered(spark, tablePath, m, query, k, ef, pred.get,
+      return probeFiltered(spark, tablePath, s, m, query, k, ef, pred.get,
         rerankFactor, bruteForceCap, acceptCap)
-    if (m.segs.isEmpty) return emptyShape(spark, tablePath, m)
-    val model = HnswIndex.load(spark, layoutPath(tablePath, name, m.gen))
+    if (m.segs.isEmpty) return emptyShape(spark, s, m)
+    val model = HnswIndex.load(spark, layoutPath(tablePath, m.name, m.gen))
     if (m.storage == "float32") {
       // fetch k per COMMITTED segment (meta-listed pids only: a crashed
       // refresh's orphan segment stays invisible), filter dead copies,
@@ -599,11 +607,11 @@ object GraftHnsw {
       val top = liveCandidates(spark, tablePath, m, cands)
         .orderBy(IndexServing.scoreOrder(m.metric), asc("id")).limit(k)
         .select("id", "score").collect().map(r => (r.getLong(0), r.getDouble(1)))
-      joinBack(spark, tablePath, m, top)
+      joinBack(spark, s, m, top)
     } else {
       val cands = HnswIndex.probeSegmentsWithPid(spark, model, Seq((0L, query.toArray)),
         IndexServing.frontierWidth(k, rerankFactor), ef, Some(m.segs.toSet))
-      rerankFrontier(spark, tablePath, m, query, k, liveCandidates(spark, tablePath, m, cands))
+      rerankFrontier(spark, s, m, query, k, liveCandidates(spark, tablePath, m, cands))
     }
   }
 
@@ -623,10 +631,11 @@ object GraftHnsw {
     require(k >= 1 && candidates >= k,
       s"need 1 <= k <= candidates, got k=$k, candidates=$candidates")
     val m = meta(tablePath, name)
-    val cand = probe(spark, tablePath, query, candidates, ef, name, allowStale,
-      rerankFactor, pred, bruteForceCap, acceptCap).localCheckpoint()
-    IndexServing.mmr(spark, tablePath, m.indexedVersion, Seq(m.keyCol), m.vecCol, cand, k,
-      lambda, m.metric)
+    requireFresh(tablePath, m, allowStale)
+    val s = GraftTable.snapshot(tablePath, m.indexedVersion)
+    val cand = probeAt(spark, tablePath, s, m, query, candidates, ef, rerankFactor, pred,
+      bruteForceCap, acceptCap).localCheckpoint()
+    IndexServing.mmr(spark, s, Seq(m.keyCol), m.vecCol, cand, k, lambda, m.metric)
   }
 
   /** FILTERED top-k — Lucene's two-strategy filtered KNN
@@ -664,19 +673,19 @@ object GraftHnsw {
     * and then die by the horizon-tombstone filter, so the served copy
     * is exactly the one the snapshot predicate saw.
     */
-  private def probeFiltered(spark: SparkSession, tablePath: String, m: HnswMeta,
-                            query: Seq[Float], k: Int, ef: Int, pred: Column,
+  private def probeFiltered(spark: SparkSession, tablePath: String, s: GraftTable.Snapshot,
+                            m: HnswMeta, query: Seq[Float], k: Int, ef: Int, pred: Column,
                             rerankFactor: Int, bruteForceCap: Int,
                             acceptCap: Int): DataFrame = {
     val kf = IndexServing.frontierWidth(k, rerankFactor)
-    val sc = snapshotSchema(tablePath, m)
-    val (n, matched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion, m.vecCol,
+    val sc = schemaOf(s)
+    val (n, matched) = IndexServing.matchSet(spark, s, m.vecCol,
       pred, bruteForceCap, acceptCap)
-    if (n == 0) return emptyShape(spark, tablePath, m)
+    if (n == 0) return emptyShape(spark, s, m)
     if (n <= bruteForceCap || m.segs.isEmpty)
       return IndexServing.exactCut(matched(), m.vecCol, query, m.metric, Seq(m.keyCol), k,
         IndexServing.shape(sc.fieldNames.toSeq, m.vecCol))
-    rerankFrontier(spark, tablePath, m, query, k,
+    rerankFrontier(spark, s, m, query, k,
       filteredWalk(spark, tablePath, m, Seq((0L, query)), kf, ef, matched(), n, acceptCap))
   }
 }

@@ -223,18 +223,15 @@ object GraftIndex {
   }
 
   /** Explicit layout schema: the table's manifest-recorded snapshot
-    * schema (at the INDEXED version) + the layout's own columns, so
-    * probes and refreshes resolve additively-evolved columns without a
-    * whole-layout mergeSchema footer pass (older cell files pad the new
-    * columns as null, like the table itself). None when the table
-    * predates schema recording (or the indexed manifest was vacuumed —
-    * the head manifest still exists for a fresh index, so only
-    * allowStale probes can hit that) — plain inference then.
+    * schema `table` + the layout's own columns, so probes and refreshes
+    * resolve additively-evolved columns without a whole-layout
+    * mergeSchema footer pass (older cell files pad the new columns as
+    * null, like the table itself). None when the table predates schema
+    * recording — plain inference then.
     */
-  private def layoutSchema(tablePath: String, m: IndexMeta)
+  private def layoutSchema(m: IndexMeta, table: Option[org.apache.spark.sql.types.StructType])
       : Option[org.apache.spark.sql.types.StructType] =
-    scala.util.Try(GraftTable.snapshotSchema(tablePath, m.indexedVersion)).toOption
-      .flatten.map { ts =>
+    table.map { ts =>
         val extra =
           (if (m.kind == "ivfpq")
             Seq(org.apache.spark.sql.types.StructField("pq_code",
@@ -301,11 +298,12 @@ object GraftIndex {
   }
 
   private def loadModel(spark: SparkSession, tablePath: String, m: IndexMeta,
-                        files: Option[Map[Int, Seq[String]]])
+                        files: Option[Map[Int, Seq[String]]],
+                        table: Option[org.apache.spark.sql.types.StructType])
       : Either[IvfIndex.Model, PqIndex.Model] = {
     val parts = modelParts(spark, modelPath(tablePath, m.name, m.modelGen))
     val data = dataPath(tablePath, m.name)
-    val sc = layoutSchema(tablePath, m)
+    val sc = layoutSchema(m, table)
     if (m.kind == "ivf")
       Left(IvfIndex.Model(data, parts.coarse, m.metric, sc, files, m.storage, parts.rot))
     else
@@ -317,18 +315,24 @@ object GraftIndex {
     * manifest is resolved HERE, once — everything planned from the
     * returned model keeps reading this generation's files even if a
     * refresh commits concurrently (it only adds files and swaps meta).
+    * `table` is the indexed table snapshot, when readable: a vacuumed
+    * indexed manifest (only allowStale probes can meet one — the head
+    * manifest still exists for a fresh index) serves by plain schema
+    * inference.
     */
-  private def open(spark: SparkSession, tablePath: String, m: IndexMeta)
-      : Either[IvfIndex.Model, PqIndex.Model] = {
+  private def open(spark: SparkSession, tablePath: String, m: IndexMeta,
+                   table: => GraftTable.Snapshot): Either[IvfIndex.Model, PqIndex.Model] = {
     val files = m.manifestName.map(n =>
       absFiles(tablePath, m.name, readManifest(tablePath, m.name, n)))
-    loadModel(spark, tablePath, m, files)
+    loadModel(spark, tablePath, m, files, scala.util.Try(table).toOption.flatMap(_.schema))
   }
 
   /** The model a probe would serve from right now (spec-facing). */
   private[graft] def servingModel(spark: SparkSession, tablePath: String,
-                                  name: String = "vec"): Either[IvfIndex.Model, PqIndex.Model] =
-    open(spark, tablePath, meta(tablePath, name))
+                                  name: String = "vec"): Either[IvfIndex.Model, PqIndex.Model] = {
+    val m = meta(tablePath, name)
+    open(spark, tablePath, m, GraftTable.snapshot(tablePath, m.indexedVersion))
+  }
 
   /** Build the index from the table's CURRENT snapshot and record that
     * version. `kind = "ivf"` (default) or `"ivfpq"` (`m` subspaces,
@@ -402,7 +406,7 @@ object GraftIndex {
       saveModel(spark, tablePath, name, model.centroids, None, model.rot, Some(newModelGen))
     } else {
       // defaults for the PQ shape come from the CURRENT model
-      val cur = loadModel(spark, tablePath, meta0, None).toOption.get
+      val cur = loadModel(spark, tablePath, meta0, None, None).toOption.get
       val model = PqIndex.build(snap, meta0.keyCols.head, meta0.vecCol, newNlist,
         m.getOrElse(cur.m), layout, meta0.metric, opq = opq.getOrElse(cur.rot.isDefined),
         persistModel = false)
@@ -459,14 +463,17 @@ object GraftIndex {
     val curGen = m.gen.get
     val curManifest = readManifest(tablePath, name, m.manifestName.get)
     val curFiles = absFiles(tablePath, name, curManifest)
-    val model = loadModel(spark, tablePath, m, Some(curFiles))
+    // the two table snapshots a refresh reads, each once
+    val (from, to) = (GraftTable.snapshot(tablePath, m.indexedVersion),
+      GraftTable.snapshot(tablePath, head))
+    val model = loadModel(spark, tablePath, m, Some(curFiles), from.schema)
     val cell = model.fold(IvfIndex.cellUdf(spark, _), PqIndex.cellUdf(spark, _))
     val data = dataPath(tablePath, name)
-    val batch = GraftTable.changes(spark, tablePath, m.indexedVersion, head)
+    val batch = GraftTable.changes(spark, from, to)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val changedKeys = batch.select(m.keyCols.map(col): _*).distinct()
-      val oldCells = GraftTable.read(spark, tablePath, m.indexedVersion)
+      val oldCells = GraftTable.read(spark, from)
         .join(changedKeys, m.keyCols, "left_semi")
         .filter(col(m.vecCol).isNotNull)
         .select(cell(col(m.vecCol)).as("c")).distinct().collect().map(_.getInt(0))
@@ -498,7 +505,7 @@ object GraftIndex {
       val genDir = s"g$newGen-${java.util.UUID.randomUUID.toString.take(8)}"
       // scan with the CURRENT (head) snapshot schema so the rewrite
       // pads evolved columns for kept rows instead of dropping them
-      val headSchema = layoutSchema(tablePath, m.copy(indexedVersion = head))
+      val headSchema = layoutSchema(m, to.schema)
       val kept =
         if (curManifest.isEmpty) additions.limit(0) // emptied layout: rebuild from additions
         else IvfIndex.cellScan(spark, headSchema, Some(curFiles), data, affected)
@@ -686,21 +693,32 @@ object GraftIndex {
             bruteForceCap: Int = 10000): DataFrame = {
     val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
+    probeAt(spark, tablePath, m, GraftTable.snapshot(tablePath, m.indexedVersion), query, k,
+      nprobe, pred, rerankFactor, bruteForceCap)
+  }
+
+  /** [[probe]] against the indexed table snapshot, read on first use
+    * and once per probe.
+    */
+  private def probeAt(spark: SparkSession, tablePath: String, m: IndexMeta,
+                      table: => GraftTable.Snapshot, query: Seq[Float], k: Int,
+                      nprobe: Int, pred: Option[Column], rerankFactor: Int,
+                      bruteForceCap: Int): DataFrame = {
+    lazy val snap = table
     // the brute leg needs only meta: the manifest and model are opened
     // for the index legs alone
     pred.foreach { p =>
       // metadata-first leg selection (two regimes: brute vs pushed scan,
       // so acceptCap = bruteForceCap) — see GraftTable.metadataMatchCount
-      val (nMatched, matched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion,
+      val (nMatched, matched) = IndexServing.matchSet(spark, snap,
         m.vecCol, p, bruteForceCap, bruteForceCap)
       if (nMatched <= bruteForceCap) {
-        val cols = GraftTable.snapshotSchema(tablePath, m.indexedVersion)
-          .fold(matched().columns.toSeq)(_.fieldNames.toSeq)
+        val cols = snap.schema.fold(matched().columns.toSeq)(_.fieldNames.toSeq)
         return IndexServing.exactCut(matched(), m.vecCol, query, m.metric, m.keyCols, k,
           IndexServing.shape(cols, m.vecCol))
       }
     }
-    val model = open(spark, tablePath, m)
+    val model = open(spark, tablePath, m, snap)
     // an index over an EMPTY table (every cell dropped) is valid state:
     // zero rows, shaped like any other probe (table columns minus the
     // vector, plus score) — not a parquet schema-inference crash
@@ -710,7 +728,7 @@ object GraftIndex {
       case None => !GraftTable.MetaIO.list(new Path(layoutPath))
         .exists(_.getPath.getName.startsWith("cluster_id="))
     }
-    if (layoutEmpty) return IndexServing.emptyShape(spark, tablePath, m.indexedVersion, m.vecCol)
+    if (layoutEmpty) return IndexServing.emptyShape(spark, snap, m.vecCol)
     // ONE canonical probe schema regardless of kind or layout state:
     // table columns (snapshot order) minus the vector, score last —
     // never the layout internals (cluster_id, pq_code, vq_*, __qscore).
@@ -741,11 +759,10 @@ object GraftIndex {
         val front = IvfIndex.quantizedCandidates(spark, ivf, m.keyCols, query,
           IndexServing.frontierWidth(k, rerankFactor), nprobe, pred).localCheckpoint()
         if (front.isEmpty)
-          IndexServing.emptyShape(spark, tablePath, m.indexedVersion, m.vecCol)
+          IndexServing.emptyShape(spark, snap, m.vecCol)
         else {
-          val rows = front.join(broadcast(IndexServing.exactVectors(spark, tablePath,
-            m.indexedVersion, m.keyCols, m.vecCol,
-            front.select(m.keyCols.map(col): _*).distinct())), m.keyCols)
+          val rows = front.join(broadcast(IndexServing.exactVectors(spark, snap,
+            m.keyCols, m.vecCol, front.select(m.keyCols.map(col): _*).distinct())), m.keyCols)
           IndexServing.exactCut(rows, m.vecCol, query, m.metric, m.keyCols, k, canonical(rows))
         }
       case Right(pq) =>
@@ -784,12 +801,13 @@ object GraftIndex {
     require(k >= 1 && candidates >= k,
       s"need 1 <= k <= candidates, got k=$k, candidates=$candidates")
     val m = meta(tablePath, name)
+    requireFresh(tablePath, m, allowStale)
+    val snap = GraftTable.snapshot(tablePath, m.indexedVersion)
     // localCheckpoint: the slice is serving-sized and feeds the vector
     // lookup, the greedy collect, AND the final rank join
-    val cand = probe(spark, tablePath, query, candidates, nprobe, name, pred,
-      allowStale, rerankFactor, bruteForceCap).localCheckpoint()
-    IndexServing.mmr(spark, tablePath, m.indexedVersion, m.keyCols, m.vecCol, cand, k,
-      lambda, m.metric)
+    val cand = probeAt(spark, tablePath, m, snap, query, candidates, nprobe, pred,
+      rerankFactor, bruteForceCap).localCheckpoint()
+    IndexServing.mmr(spark, snap, m.keyCols, m.vecCol, cand, k, lambda, m.metric)
   }
 
   /** Batched ANN k-NN join THROUGH the table-attached index: every
@@ -823,13 +841,14 @@ object GraftIndex {
               bruteForceCap: Int = 10000): DataFrame = {
     val m = meta(tablePath, name)
     requireFresh(tablePath, m, allowStale)
-    def emptyOut = IndexServing.emptyBatch(spark, tablePath, m.indexedVersion, m.keyCols)
+    lazy val snap = GraftTable.snapshot(tablePath, m.indexedVersion)
+    def emptyOut = IndexServing.emptyBatch(spark, snap, m.keyCols)
     // the brute leg needs only meta (see probe)
     pred.foreach { p =>
       IndexServing.frontierWidth(k, rerankFactor) // refuses rerankFactor < 1 before any job
       // metadata-first leg selection (two regimes: brute vs pushed scan,
       // so acceptCap = bruteForceCap) — see GraftTable.metadataMatchCount
-      val (n, matched) = IndexServing.matchSet(spark, tablePath, m.indexedVersion,
+      val (n, matched) = IndexServing.matchSet(spark, snap,
         m.vecCol, p, bruteForceCap, bruteForceCap)
       if (n == 0) return emptyOut
       // exact: every (query, match) pair scored. Composite record keys
@@ -841,7 +860,7 @@ object GraftIndex {
       // loose pred: fall through — the pred pushes into the cell scans
       // below (both the float32 and quantized candidate stages take it)
     }
-    val ivf = open(spark, tablePath, m).fold(identity, pq => IvfIndex.Model(pq.path,
+    val ivf = open(spark, tablePath, m, snap).fold(identity, pq => IvfIndex.Model(pq.path,
       pq.rot.fold(pq.coarse)(r => pq.coarse.map(Quantize.derotate(_, r))),
       pq.metric, pq.schema, pq.files))
     if (ivf.files.exists(_.isEmpty)) return emptyOut
@@ -855,7 +874,7 @@ object GraftIndex {
           IndexServing.frontierWidth(k, rerankFactor), nprobe, pred)
         .localCheckpoint()
       if (cands.isEmpty) return emptyOut
-      IndexServing.rerankBatch(spark, tablePath, m.indexedVersion, m.keyCols, m.vecCol,
+      IndexServing.rerankBatch(spark, snap, m.keyCols, m.vecCol,
         queries, cands.select(col("qid") +: m.keyCols.map(col): _*),
         cands.select(m.keyCols.map(col): _*).distinct(), k, m.metric)
     }

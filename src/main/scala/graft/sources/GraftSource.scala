@@ -317,15 +317,14 @@ private[sources] class GraftRelation(val sqlContext: SQLContext, path: String,
                                      version: Int)
     extends BaseRelation with PrunedFilteredScan {
 
-  /** Resolved ONCE per relation: every scan path (full snapshot AND
-    * point lookup) reads this same pinned version, so two scans of one
-    * DataFrame can never straddle a concurrent commit (read skew).
+  /** Resolved and read ONCE per relation: every scan path (full
+    * snapshot, point lookup, stats-pruned scan) plans from this same
+    * pinned manifest, so two scans of one DataFrame can never straddle
+    * a concurrent commit (read skew) and no scan re-reads it.
     */
-  private lazy val resolvedVersion: Int =
-    if (version >= 0) version else GraftTable.latestVersion(path)
+  private lazy val pinned: GraftTable.Snapshot = GraftTable.snapshotAt(path, version)
 
-  private lazy val snapshot: DataFrame =
-    GraftTable.read(sqlContext.sparkSession, path, resolvedVersion)
+  private lazy val snapshot: DataFrame = GraftTable.read(sqlContext.sparkSession, pinned)
 
   override def schema: StructType = snapshot.schema
 
@@ -340,13 +339,13 @@ private[sources] class GraftRelation(val sqlContext: SQLContext, path: String,
     val eqs = filters.collect { case EqualTo(a, v) if keys.contains(a) => a -> v }.toMap
     if (keys.nonEmpty && keys.forall(eqs.contains)) {
       val spark = sqlContext.sparkSession
-      // the relation-pinned version: the bucket computation, the dir
-      // read, AND the full-snapshot scan all use resolvedVersion, so a
-      // commit (worst case a rebucket) landing mid-query can neither
-      // hash the key under one layout and read dirs of another, nor
-      // serve different snapshots to different filter shapes
-      val b = GraftTable.bucketFor(spark, path, resolvedVersion, eqs)
-      Some(GraftTable.readBuckets(spark, path, resolvedVersion, Set(b)))
+      // the relation-pinned snapshot: the bucket computation, the dir
+      // read, AND the full-snapshot scan all use it, so a commit (worst
+      // case a rebucket) landing mid-query can neither hash the key
+      // under one layout and read dirs of another, nor serve different
+      // snapshots to different filter shapes
+      val b = GraftTable.bucketFor(spark, pinned, eqs)
+      Some(GraftTable.readBuckets(spark, pinned, Set(b)))
     } else None
   }
 
@@ -357,8 +356,8 @@ private[sources] class GraftRelation(val sqlContext: SQLContext, path: String,
     // are decided from the manifest alone — no footer reads; the
     // filters are re-applied on top either way.
     val base = pointLookup(filters)
-      .orElse(GraftTable.readStatsPruned(sqlContext.sparkSession, path,
-        resolvedVersion, filters.toIndexedSeq))
+      .orElse(GraftTable.readStatsPruned(sqlContext.sparkSession, pinned,
+        filters.toIndexedSeq))
       .getOrElse(snapshot)
     val filtered = filters.flatMap(translate).foldLeft(base)(_.filter(_))
     val pruned =

@@ -25,6 +25,12 @@ import java.nio.charset.StandardCharsets
   *     unique per write attempt so racing writers never share a dir)
   * }}}
   *
+  * A manifest is immutable once committed, so it is parsed ONCE per
+  * operation: [[snapshot]] reads `manifests/v<N>` into a [[Snapshot]]
+  * (the one manifest parser — bucket dirs, schema, layout headers, MOR
+  * log, lazily the file stats), and every read, planning and commit
+  * path takes that value instead of re-reading by (path, version).
+  *
   * ALL metadata IO (keys file, manifests, commit markers, vacuum
   * listings) goes through the Hadoop [[FileSystem]] API resolved from
   * the active session's Hadoop configuration, so the table lives
@@ -579,16 +585,161 @@ object GraftTable {
       }
   }
 
-  /** The snapshot schema recorded in manifest `v` (all-nullable — files
-    * written before an additive evolution read the newer columns as
-    * null). None for manifests written before schemas were recorded.
+  /** One committed manifest, parsed once. [[snapshot]] is the ONE reader
+    * of `manifests/v<N>`; every read, planning and commit path takes the
+    * value instead of re-reading the file by (path, version), so one
+    * operation reads each manifest once and can never plan against one
+    * version and read another. Immutable like the file it parses.
+    *  - `nbuckets`: the bucket count the snapshot was written with — the
+    *    `#nbuckets=` header, else (manifests written before the header
+    *    existed) the `_keys` create-time count. PER-SNAPSHOT, not
+    *    table-global, so [[rebucket]] can evolve the layout: writers
+    *    bucket new data by the head's count, and the OCC manifest lock
+    *    serializes a racing upsert against a rebucket (the loser re-reads
+    *    the new head — and with it the new count).
+    *  - `dirs`: bucket → relative data dir.
+    *  - `schema`: the recorded snapshot schema, all-nullable (files
+    *    written before an additive evolution read the newer columns as
+    *    null); None for manifests written before schemas were recorded.
+    *  - `sortedBy`: the `#sorted=` claim — present only when EVERY data
+    *    file of the snapshot was written internally sorted by these
+    *    columns (ascending, nulls first), i.e. after a full key-sorted
+    *    rewrite (compact/rebucket). Partial commits write no header, so
+    *    the claim lapses conservatively. None = no claim, never a guess.
+    *  - `dropped`: the `#dropped=` ledger ([[droppedColumns]]).
+    *  - `dv` / `delta`: the MOR log — deletion vectors and delta commits
+    *    as (relative path, create version), ascending by version; empty
+    *    for pure-COW snapshots (every read path short-circuits to its
+    *    plain plan then).
+    *  - `text`: the manifest verbatim (metadata-only commits copy it).
     */
-  def snapshotSchema(path: String, v: Int): Option[types.StructType] =
-    manifestText(path, v).split("\n")
-      .collectFirst { case l if l.startsWith("#schema=") =>
-        types.StructType(types.StructType.fromDDL(dec(l.stripPrefix("#schema=")))
-          .fields.map(_.copy(nullable = true)))
+  final case class Snapshot(path: String, version: Int, nbuckets: Int,
+                            dirs: Map[Int, String], schema: Option[types.StructType],
+                            sortedBy: Option[Seq[String]], dropped: Set[String],
+                            dv: Seq[(String, Int)], delta: Seq[(String, Int)],
+                            text: String) {
+    def lines: Seq[String] = text.split("\n").toSeq
+
+    /** An outstanding MOR log: metadata (row counts, stats bounds) no
+      * longer describes the rows a read serves.
+      */
+    def hasLog: Boolean = dv.nonEmpty || delta.nonEmpty
+
+    /** [[text]] with a `#nbuckets=` header: a legacy manifest copied
+      * into a new version gets the count it was read with, so writers on
+      * top of the copy bucket correctly.
+      */
+    def headedText: String =
+      if (lines.exists(_.startsWith("#nbuckets="))) text else s"#nbuckets=$nbuckets\n" + text
+
+    /** relFile → recorded stats (empty for legacy manifests), read from
+      * the stat segments on first use. Inline lines (written before the
+      * segment format) and per-attempt segments are merged; either alone
+      * is complete for the dirs it covers.
+      */
+    lazy val fileStats: Map[String, FileStat] = {
+      val segLines = dirs.values.toSeq.flatMap(attemptOfRel).distinct.flatMap { a =>
+        scala.util.Try(MetaIO.readString(statsSegPath(path, a))).toOption
+          .toSeq.flatMap(_.split("\n").toSeq)
       }
+      // a segment covers its whole ATTEMPT; restrict to the dirs this
+      // snapshot actually references (a later version may have rewritten
+      // some of the attempt's buckets)
+      val dirSet = dirs.values.toSet
+      def inSnapshot(l: String): Boolean = {
+        val rel = l.substring(l.indexOf('=') + 1).split("\t")(0)
+        val cut = rel.lastIndexOf('/')
+        cut > 0 && dirSet.contains(rel.substring(0, cut))
+      }
+      val all = lines ++
+        segLines.filter(l => (!l.startsWith("#file=") && !l.startsWith("#stat=") &&
+          !l.startsWith("#bloom=")) || inSnapshot(l))
+      val rows = all.collect { case l if l.startsWith("#file=") =>
+        // 2-field legacy lines carry no byte length (bytes = -1)
+        val p = l.stripPrefix("#file=").split("\t")
+        p(0) -> (p(1).toLong, if (p.length >= 3) p(2).toLong else -1L)
+      }.toMap
+      val stats = all.collect { case l if l.startsWith("#stat=") =>
+        val p = l.stripPrefix("#stat=").split("\t")
+        (p(0), dec(p(1)),
+          ColStat(Some(p(2)).filter(_ != "-").map(dec), Some(p(3)).filter(_ != "-").map(dec),
+            p(4).toLong, if (p.length >= 7) FileCounts.parse(p(5), p(6)) else None))
+      }.groupBy(_._1)
+      val blooms = all.collect { case l if l.startsWith("#bloom=") =>
+        val p = l.stripPrefix("#bloom=").split("\t")
+        (p(0), dec(p(1)), java.util.Base64.getDecoder.decode(p(2)))
+      }.groupBy(_._1)
+      rows.map { case (f, (n, bytes)) =>
+        f -> FileStat(n, stats.getOrElse(f, Seq.empty).map(s => s._2 -> s._3).toMap,
+          blooms.getOrElse(f, Seq.empty).map(s => s._2 -> s._3).toMap, bytes)
+      }
+    }
+  }
+
+  private val manifestReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Total manifest reads ([[snapshot]] calls) performed so far
+    * (test-facing, like [[metaListCalls]]: the read-once guard reads the
+    * delta across an operation).
+    */
+  def metaReadCalls: Long = manifestReads.get()
+
+  /** Snapshot `v` of the table at `path`, from ONE read of its manifest
+    * — the only code that reads `manifests/v<N>`. A missing manifest gets
+    * the clear failure modes a lakehouse owes its users instead of a raw
+    * filesystem error:
+    *  - version committed but manifest reclaimed → "vacuumed", naming
+    *    the earliest still-readable version (the commit markers keep
+    *    full history for audit, so this case is precisely detectable);
+    *  - version never committed → "no committed version", naming the
+    *    latest. Every snapshot read, time travel, restore, and change
+    *    feed routes through here.
+    */
+  def snapshot(path: String, v: Int): Snapshot = {
+    manifestReads.incrementAndGet()
+    val text =
+      try MetaIO.readString(manifestPath(path, v))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          val readable = MetaIO.list(new Path(path, "manifests")).map(_.getPath.getName)
+            .collect { case VersionFile(n) => n.toInt }
+          if (MetaIO.exists(commitMarker(path, v)))
+            throw new IllegalStateException(
+              s"version $v of $path was vacuumed" +
+                (if (readable.nonEmpty) s"; earliest readable version is ${readable.min}"
+                 else "") +
+                " — snapshot reads, time travel, restore, and change feeds cannot cross the vacuum horizon")
+          else
+            throw new IllegalArgumentException(
+              s"no committed version $v at $path (latest is ${latestVersion(path)})")
+      }
+    val lines = text.split("\n").toSeq
+    def header(name: String): Option[String] =
+      lines.collectFirst { case l if l.startsWith(s"#$name=") => l.stripPrefix(s"#$name=") }
+    def log(kind: String): Seq[(String, Int)] =
+      lines.collect { case l if l.startsWith(s"#$kind=") =>
+        val rel = l.stripPrefix(s"#$kind=").trim
+        rel -> relVersion(rel)
+      }.sortBy(_._2)
+    Snapshot(path, v,
+      header("nbuckets").fold(meta(path)._2)(_.trim.toInt),
+      lines.filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
+        val Array(b, d) = line.split("\t")
+        b.toInt -> d
+      }.toMap,
+      header("schema").map(ddl => types.StructType(types.StructType.fromDDL(dec(ddl))
+        .fields.map(_.copy(nullable = true)))),
+      header("sorted").map(dec(_).split(",").toSeq),
+      header("dropped").fold(Set.empty[String])(dec(_).split(",").filter(_.nonEmpty).toSet),
+      log("dv"), log("delta"), text)
+  }
+
+  /** Snapshot `version` of the table at `path`, -1 = the head. */
+  def snapshotAt(path: String, version: Int): Snapshot = {
+    val v = if (version >= 0) version else latestVersion(path)
+    require(v >= 0, s"no table at $path")
+    snapshot(path, v)
+  }
 
   /** The attempt token of a `data/<attempt>/<bucket>/…` relative path —
     * the unit both data-dir layout and stat segments are keyed by.
@@ -609,65 +760,6 @@ object GraftTable {
     */
   private def statsSegPath(path: String, attempt: String) =
     new Path(new Path(path, "manifests"), s"$attempt.stats")
-
-  /** The snapshot's recorded whole-file sort columns (`#sorted=`
-    * manifest header) — present only when EVERY data file of the
-    * snapshot was written internally sorted by them (ascending, nulls
-    * first), i.e. after a full key-sorted rewrite (compact/rebucket).
-    * Partial commits write no header, so the claim lapses
-    * conservatively. None = no claim, never a guess.
-    */
-  def sortedBy(path: String, v: Int): Option[Seq[String]] =
-    manifestText(path, v).split("\n").collectFirst {
-      case l if l.startsWith("#sorted=") =>
-        dec(l.stripPrefix("#sorted=")).split(",").toSeq
-    }
-
-  /** relFile → recorded stats for snapshot `v` (empty for legacy
-    * manifests). Inline lines (written before the segment format) and
-    * per-attempt segments are merged; either alone is complete for the
-    * dirs it covers.
-    */
-  def manifestFileStats(path: String, v: Int): Map[String, FileStat] = {
-    val text = manifestText(path, v)
-    val dirs = text.split("\n").toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split("\t")(1))
-    val segLines = dirs.flatMap(attemptOfRel).distinct.flatMap { a =>
-      scala.util.Try(MetaIO.readString(statsSegPath(path, a))).toOption
-        .toSeq.flatMap(_.split("\n").toSeq)
-    }
-    // a segment covers its whole ATTEMPT; restrict to the dirs this
-    // snapshot actually references (a later version may have rewritten
-    // some of the attempt's buckets)
-    val dirSet = dirs.toSet
-    def inSnapshot(l: String): Boolean = {
-      val rel = l.substring(l.indexOf('=') + 1).split("\t")(0)
-      val cut = rel.lastIndexOf('/')
-      cut > 0 && dirSet.contains(rel.substring(0, cut))
-    }
-    val lines = text.split("\n").toSeq ++
-      segLines.filter(l => (!l.startsWith("#file=") && !l.startsWith("#stat=") &&
-        !l.startsWith("#bloom=")) || inSnapshot(l))
-    val rows = lines.collect { case l if l.startsWith("#file=") =>
-      // 2-field legacy lines carry no byte length (bytes = -1)
-      val p = l.stripPrefix("#file=").split("\t")
-      p(0) -> (p(1).toLong, if (p.length >= 3) p(2).toLong else -1L)
-    }.toMap
-    val stats = lines.collect { case l if l.startsWith("#stat=") =>
-      val p = l.stripPrefix("#stat=").split("\t")
-      (p(0), dec(p(1)),
-        ColStat(Some(p(2)).filter(_ != "-").map(dec), Some(p(3)).filter(_ != "-").map(dec),
-          p(4).toLong, if (p.length >= 7) FileCounts.parse(p(5), p(6)) else None))
-    }.groupBy(_._1)
-    val blooms = lines.collect { case l if l.startsWith("#bloom=") =>
-      val p = l.stripPrefix("#bloom=").split("\t")
-      (p(0), dec(p(1)), java.util.Base64.getDecoder.decode(p(2)))
-    }.groupBy(_._1)
-    rows.map { case (f, (n, bytes)) =>
-      f -> FileStat(n, stats.getOrElse(f, Seq.empty).map(s => s._2 -> s._3).toMap,
-        blooms.getOrElse(f, Seq.empty).map(s => s._2 -> s._3).toMap, bytes)
-    }
-  }
 
   /** Conservative may-match test of one DSv1 filter against one file's
     * recorded stats: true = the file could hold matching rows (or the
@@ -810,14 +902,14 @@ object GraftTable {
     }
   }
 
-  /** Stats-based file pruning for snapshot `v` under `filters`:
+  /** Stats-based file pruning for snapshot `s` under `filters`:
     * Some((inputPaths, keptFiles, totalStatFiles)) when the manifest
     * carries stats — inputPaths include stat-less carried dirs
     * wholesale (conservative) — or None for legacy manifests and empty
     * filter sets. A filter only prunes when EVERY file of a dir is
     * covered by stats or provably skippable.
     */
-  /** Conservative per-file keep test for snapshot `v` under DSv1
+  /** Conservative per-file keep test for snapshot `s` under DSv1
     * filters — the stats machinery behind [[prunedDataPaths]] exposed
     * per RELATIVE file path, so the DSv2 storage-partitioned scan
     * (graft.sources.v2) can skip files WITHIN its per-bucket
@@ -825,19 +917,18 @@ object GraftTable {
     * stats cannot prune (legacy manifest, empty filters): read
     * everything. Unknown files keep (conservative).
     */
-  def fileKeepPredicate(path: String, v: Int,
-                        filters: Seq[org.apache.spark.sql.sources.Filter])
+  def fileKeepPredicate(s: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter])
       : Option[String => Boolean] = {
     if (filters.isEmpty) return None
-    val stats = manifestFileStats(path, v)
+    val stats = s.fileStats
     if (stats.isEmpty) return None
-    val schema = snapshotSchema(path, v).getOrElse(return None)
+    val schema = s.schema.getOrElse(return None)
     val kinds = schema.fields.flatMap(f => statKind(f.dataType).map(f.name -> _)).toMap
     Some(rel => stats.get(rel)
       .forall(st => filters.forall(fl => mayMatch(st, kinds, fl))))
   }
 
-  /** Metadata-only UPPER BOUND on snapshot `v`'s rows matching
+  /** Metadata-only UPPER BOUND on snapshot `s`'s rows matching
     * `filters`: Σ rowCount over files whose stats cannot rule the
     * filters out. Conservative by construction — dropped conjuncts and
     * may-match semantics only RAISE the bound — so a caller may treat
@@ -850,11 +941,11 @@ object GraftTable {
     * filtered index probe SKIP its match-count job when the answer is
     * already decidable from the skipping machinery's metadata.
     */
-  def matchUpperBound(path: String, v: Int,
+  def matchUpperBound(s: Snapshot,
                       filters: Seq[org.apache.spark.sql.sources.Filter]): Option[Long] =
-    matchBounds(path, v, filters, complete = false)._2
+    matchBounds(s, filters, complete = false)._2
 
-  /** Metadata-only (LOWER, UPPER) bounds on snapshot `v`'s rows
+  /** Metadata-only (LOWER, UPPER) bounds on snapshot `s`'s rows
     * matching `filters` — the [[matchUpperBound]] pair form, summed
     * over files from each file's [[fileBounds]] (the conjunction of
     * every filter). Files whose stats carry [[FileCounts]] bound the
@@ -871,20 +962,19 @@ object GraftTable {
     * filters, stat-less dirs, MOR logs — [[matchUpperBound]]'s
     * refusals).
     */
-  def matchBounds(path: String, v: Int,
+  def matchBounds(s: Snapshot,
                   filters: Seq[org.apache.spark.sql.sources.Filter],
                   complete: Boolean,
                   requireNonNull: Seq[String] = Nil): (Option[Long], Option[Long]) = {
-    if (filters.isEmpty) return (None, None)
-    if (dvEntries(path, v).nonEmpty || deltaEntries(path, v).nonEmpty) return (None, None)
-    val stats = manifestFileStats(path, v)
+    if (filters.isEmpty || s.hasLog) return (None, None)
+    val stats = s.fileStats
     if (stats.isEmpty) return (None, None)
-    val schema = snapshotSchema(path, v).getOrElse(return (None, None))
+    val schema = s.schema.getOrElse(return (None, None))
     val kinds = schema.fields.flatMap(f => statKind(f.dataType).map(f.name -> _)).toMap
     val dataTypes = schema.fields.map(f => f.name -> f.dataType).toMap
     var hi = 0L
     var lo = 0L
-    manifest(path, v).values.toSeq.foreach { d =>
+    s.dirs.values.toSeq.foreach { d =>
       val files = stats.keys.filter(_.startsWith(d + "/")).toSeq
       if (files.isEmpty) return (None, None) // stat-less dir: rows unknown
       files.foreach { rel =>
@@ -1020,7 +1110,7 @@ object GraftTable {
     * an arbitrarily larger true match set — results would stay exact
     * but the broadcast unbounded.
     */
-  def metadataMatchCount(spark: SparkSession, path: String, v: Int,
+  def metadataMatchCount(spark: SparkSession, s: Snapshot,
                          pred: org.apache.spark.sql.Column,
                          requireNonNull: Seq[String],
                          bruteForceCap: Long, acceptCap: Long)
@@ -1030,11 +1120,11 @@ object GraftTable {
       s"need acceptCap ($acceptCap) >= bruteForceCap ($bruteForceCap) — the " +
         "metadata leg-selection proof assumes it (a smaller acceptCap could " +
         "route an unboundedly large match set onto the broadcast brute leg)")
-    val (lo, hi) = snapshotSchema(path, v).fold((Option.empty[Long], Option.empty[Long])) { sc =>
+    val (lo, hi) = s.schema.fold((Option.empty[Long], Option.empty[Long])) { sc =>
       val (filters, complete) =
         org.apache.spark.sql.graftshim.Bridge.translateFiltersWithCompleteness(
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc), pred)
-      matchBounds(path, v, filters, complete, requireNonNull)
+      matchBounds(s, filters, complete, requireNonNull)
     }
     hi match {
       case Some(h) if h <= bruteForceCap => h
@@ -1046,27 +1136,23 @@ object GraftTable {
     }
   }
 
-  def prunedDataPaths(path: String, v: Int,
-                      filters: Seq[org.apache.spark.sql.sources.Filter])
+  def prunedDataPaths(s: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter])
       : Option[(Seq[String], Int, Int)] = {
     if (filters.isEmpty) return None
-    val stats = manifestFileStats(path, v)
+    val stats = s.fileStats
     if (stats.isEmpty) return None
-    val schema = snapshotSchema(path, v) match {
-      case Some(sc) => sc
-      case None => return None
-    }
+    val schema = s.schema.getOrElse(return None)
     val kinds = schema.fields.flatMap(f => statKind(f.dataType).map(f.name -> _)).toMap
     val dirPaths = scala.collection.mutable.ArrayBuffer.empty[String]
     val keptFiles = scala.collection.mutable.ArrayBuffer.empty[String]
     var total = 0
-    manifest(path, v).values.toSeq.sorted.foreach { d =>
+    s.dirs.values.toSeq.sorted.foreach { d =>
       val files = stats.keys.filter(_.startsWith(d + "/")).toSeq.sorted
-      if (files.isEmpty) dirPaths += s"$path/$d" // stat-less dir: read whole
+      if (files.isEmpty) dirPaths += s"${s.path}/$d" // stat-less dir: read whole
       else files.foreach { rel =>
         total += 1
         if (filters.forall(fl => mayMatch(stats(rel), kinds, fl)))
-          keptFiles += s"$path/$rel"
+          keptFiles += s"${s.path}/$rel"
       }
     }
     Some((dirPaths.toSeq ++ keptFiles.toSeq, keptFiles.size, total))
@@ -1080,27 +1166,25 @@ object GraftTable {
     * here — callers re-apply them (skipping is conservative, kept files
     * still hold non-matching rows).
     */
-  def readStatsPruned(spark: SparkSession, path: String, version: Int,
+  def readStatsPruned(spark: SparkSession, s: Snapshot,
                       filters: Seq[org.apache.spark.sql.sources.Filter])
-      : Option[DataFrame] = {
-    val v = if (version >= 0) version else latestVersion(path)
-    prunedDataPaths(path, v, filters).flatMap { case (paths, kept, total) =>
+      : Option[DataFrame] =
+    prunedDataPaths(s, filters).flatMap { case (paths, kept, total) =>
       if (kept == total) None
-      else snapshotSchema(path, v).map { sc =>
+      else s.schema.map { sc =>
         // the MOR log applies to the pruned scan too: a kept file can
         // still hold MOR-deleted rows, and delta winner rows (not
         // stats-indexed — they live in the log, not in files the
         // manifest describes) may match the predicate anywhere, so
         // emission stays table-wide (scope = None) — even when stats
         // pruned EVERY stored file, the log can still hold matches
-        val rels = paths.map(_.stripPrefix(s"$path/"))
-        readMor(spark, path, v, rels)(g =>
+        val rels = paths.map(_.stripPrefix(s"${s.path}/"))
+        readMor(spark, s, rels)(g =>
           if (g.isEmpty)
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-          else spark.read.schema(sc).parquet(g.map(r => s"$path/$r"): _*))
+          else spark.read.schema(sc).parquet(g.map(r => s"${s.path}/$r"): _*))
       }
     }
-  }
 
   private def commitsDir(path: String) = new Path(path, "_commits")
   private def commitMarker(path: String, v: Int) = new Path(commitsDir(path), s"v$v")
@@ -1182,7 +1266,7 @@ object GraftTable {
     // declared time clustering (the days(ts) DDL intent): recorded once
     // at create; every argument-less compact() linearly clusters on it
     timeCluster.foreach(c => MetaIO.replaceString(clusterPath(path), c))
-    writeVersion(df, path, keyCols, nbuckets, v = 0, carryOver = Map.empty)
+    writeVersion(df, path, keyCols, nbuckets, v = 0, base = None, carryOver = Map.empty)
   }
 
   /** The time-cluster column declared at create (`PARTITIONED BY
@@ -1210,9 +1294,9 @@ object GraftTable {
                  newCols: Seq[types.StructField], maxRetries: Int = 5): Unit =
     occRetry(maxRetries) {
       require(newCols.nonEmpty, "ADD COLUMNS: no columns given")
-      val v = latestVersion(path)
-      require(v >= 0, s"no table at $path")
-      val schema = snapshotSchema(path, v).getOrElse(throw new IllegalStateException(
+      val s = snapshotAt(path, -1)
+      val v = s.version
+      val schema = s.schema.getOrElse(throw new IllegalStateException(
         s"$path: no recorded snapshot schema (legacy manifest) — " +
           "commit once through a write to upgrade, then ALTER"))
       newCols.foreach { f =>
@@ -1221,7 +1305,7 @@ object GraftTable {
       }
       // a name [[dropColumns]] retired may still exist in un-rewritten
       // files with its OLD values; re-adding it would resurrect them
-      val retired = droppedColumns(path, v).intersect(newCols.map(_.name).toSet)
+      val retired = s.dropped.intersect(newCols.map(_.name).toSet)
       require(retired.isEmpty,
         s"ADD COLUMNS: ${retired.mkString(", ")} previously dropped — existing " +
           "files still carry the old values under that name; compact() first " +
@@ -1230,7 +1314,7 @@ object GraftTable {
       require(dup.isEmpty, s"ADD COLUMNS: duplicate column(s) ${dup.mkString(", ")}")
       val extended = types.StructType(
         schema.fields ++ newCols.map(_.copy(nullable = true)))
-      val lines = manifestText(path, v).split("\n").map {
+      val lines = s.lines.map {
         case l if l.startsWith("#schema=") => "#schema=" + enc(extended.toDDL)
         case l => l
       }.mkString("\n")
@@ -1250,11 +1334,7 @@ object GraftTable {
     */
   def droppedColumns(path: String, version: Int = -1): Set[String] = {
     val v = if (version >= 0) version else latestVersion(path)
-    if (v < 0) Set.empty
-    else manifestText(path, v).split("\n")
-      .collectFirst { case l if l.startsWith("#dropped=") =>
-        dec(l.stripPrefix("#dropped=")).split(",").filter(_.nonEmpty).toSet }
-      .getOrElse(Set.empty)
+    if (v < 0) Set.empty else snapshot(path, v).dropped
   }
 
   /** Refuse a column mutation while derived state still references the
@@ -1310,9 +1390,9 @@ object GraftTable {
                   maxRetries: Int = 5): Unit =
     occRetry(maxRetries) {
       require(colNames.nonEmpty, "DROP COLUMN: no columns given")
-      val v = latestVersion(path)
-      require(v >= 0, s"no table at $path")
-      val schema = snapshotSchema(path, v).getOrElse(throw new IllegalStateException(
+      val s = snapshotAt(path, -1)
+      val v = s.version
+      val schema = s.schema.getOrElse(throw new IllegalStateException(
         s"$path: no recorded snapshot schema (legacy manifest) — " +
           "commit once through a write to upgrade, then ALTER"))
       val (keys, _, _) = meta(path)
@@ -1327,11 +1407,11 @@ object GraftTable {
       refuseColumnRefs(path, colNames.toSet, "DROP COLUMN")
       val remaining = types.StructType(
         schema.fields.filterNot(f => colNames.contains(f.name)))
-      val ledger = droppedColumns(path, v) ++ colNames
+      val ledger = s.dropped ++ colNames
       require(ledger.forall(c => !c.contains(",")),
         s"DROP COLUMN: ',' in a column name breaks the ledger encoding")
       val droppedLine = "#dropped=" + enc(ledger.toSeq.sorted.mkString(","))
-      val lines = manifestText(path, v).split("\n").toSeq
+      val lines = s.lines
         .filterNot(_.startsWith("#dropped=")).flatMap {
           case l if l.startsWith("#schema=") =>
             Seq("#schema=" + enc(remaining.toDDL), droppedLine)
@@ -1369,9 +1449,8 @@ object GraftTable {
   def renameColumn(spark: SparkSession, path: String, from: String, to: String,
                    maxRetries: Int = 5): Unit =
     occRetry(maxRetries) {
-      val v = latestVersion(path)
-      require(v >= 0, s"no table at $path")
-      val schema = snapshotSchema(path, v).getOrElse(throw new IllegalStateException(
+      val s = snapshotAt(path, -1)
+      val schema = s.schema.getOrElse(throw new IllegalStateException(
         s"$path: no recorded snapshot schema (legacy manifest) — " +
           "commit once through a write to upgrade, then ALTER"))
       require(schema.fieldNames.contains(from), s"RENAME COLUMN: no column '$from' " +
@@ -1380,13 +1459,12 @@ object GraftTable {
         s"RENAME COLUMN: column '$to' already exists")
       require(to.nonEmpty && !to.contains(",") && !to.contains("\t") && !to.contains("\n"),
         s"RENAME COLUMN: bad target name '$to'")
-      val (keys, defaultBuckets, _) = meta(path)
+      val keys = keyColumns(path)
       require(!keys.contains(from), s"RENAME COLUMN: '$from' is a record-key column — " +
         "the bucket layout and every manifest hash it; key evolution is not supported")
       refuseColumnRefs(path, Set(from), "RENAME COLUMN")
-      val nb = bucketsAt(path, v, defaultBuckets)
-      writeVersion(read(spark, path, v).withColumnRenamed(from, to), path, keys, nb,
-        v + 1, carryOver = Map.empty, sortWithin = keys, recordSorted = true)
+      writeVersion(read(spark, s).withColumnRenamed(from, to), path, keys, s.nbuckets,
+        s.version + 1, Some(s), carryOver = Map.empty, sortWithin = keys, recordSorted = true)
       // carry a bloom on the renamed column to its new name
       bloomConfig(path).foreach { case (cols, fpp) =>
         if (cols.contains(from))
@@ -1449,12 +1527,12 @@ object GraftTable {
     * tables created before the field existed fall back to one snapshot
     * schema read.
     */
-  private def alignKeyTypes(spark: SparkSession, path: String, v: Int,
+  private def alignKeyTypes(spark: SparkSession, s: Snapshot,
                             keys: Seq[String], keyTypes: Option[Seq[types.DataType]],
                             df: DataFrame): DataFrame = {
     val stored: Map[String, types.DataType] = keyTypes match {
       case Some(ts) => keys.zip(ts).toMap
-      case None => read(spark, path, v).schema.fields
+      case None => read(spark, s).schema.fields
         .map(f => f.name -> f.dataType).toMap
     }
     keys.foldLeft(df) { (d, k) =>
@@ -1472,10 +1550,9 @@ object GraftTable {
     * base read would fold retired bytes back into fresh files).
     * mergeSchema only for legacy schema-less manifests.
     */
-  private def readPinned(spark: SparkSession, path: String, v: Int)
-                        (g: Seq[String]): DataFrame = {
-    val dirs = g.map(d => s"$path/$d")
-    snapshotSchema(path, v) match {
+  private def readPinned(spark: SparkSession, s: Snapshot)(g: Seq[String]): DataFrame = {
+    val dirs = g.map(d => s"${s.path}/$d")
+    s.schema match {
       case Some(sc) => spark.read.schema(sc).parquet(dirs: _*)
       case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
     }
@@ -1492,13 +1569,12 @@ object GraftTable {
     */
   private def upsertImpl(spark: SparkSession, path: String, updates0: DataFrame,
                          precombine: Seq[String], branch: Option[String]): Unit = {
-    val v = branch.fold(latestVersion(path))(branchHead(path, _))
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, keyTypes) = meta(path)
-    val nbuckets = bucketsAt(path, v, defaultBuckets)
+    val s = snapshotAt(path, branch.fold(latestVersion(path))(branchHead(path, _)))
+    val (keys, _, keyTypes) = meta(path)
+    val nbuckets = s.nbuckets
     keys.foreach(k => require(updates0.columns.contains(k), s"updates missing key column $k"))
-    val updates = alignKeyTypes(spark, path, v, keys, keyTypes, updates0)
-    val current = manifest(path, v)
+    val updates = alignKeyTypes(spark, s, keys, keyTypes, updates0)
+    val current = s.dirs
     val touched = updates.select(bucketCol(keys, nbuckets).as(BUCKET))
       .distinct().collect().map(_.getInt(0)).toSet
     val baseDirs = current.filter { case (b, _) => touched(b) }.values.toSeq
@@ -1506,19 +1582,20 @@ object GraftTable {
     // deletion vector removed, and must MATERIALIZE the delta winner
     // rows of its buckets (including buckets with no dir yet) — the
     // rewrite folds the log for everything it touches
-    val base = readMor(spark, path, v, baseDirs, Some(touched))(g =>
+    val base = readMor(spark, s, baseDirs, Some(touched))(g =>
       if (g.isEmpty) updates.limit(0)
-      else readPinned(spark, path, v)(g))
+      else readPinned(spark, s)(g))
     val (base2, updates2) = alignSchemas(base, updates)
     val merged = Upsert.merge(base2, updates2, keys, precombine.map(col))
     val carryOver = current.filter { case (b, _) => !touched(b) }
     branch match {
       case None =>
-        writeVersion(merged, path, keys, nbuckets, v + 1, carryOver, touched = touched)
+        writeVersion(merged, path, keys, nbuckets, s.version + 1, Some(s), carryOver,
+          touched = touched)
       case Some(n) =>
         val seq = branchCommits(path, n).lastOption.fold(1)(_._1 + 1)
-        writeVersion(merged, path, keys, nbuckets, nextBranchSlot(path), carryOver,
-          touched = touched, base = v, branchCommit = Some((n, seq)),
+        writeVersion(merged, path, keys, nbuckets, nextBranchSlot(path), Some(s), carryOver,
+          touched = touched, branchCommit = Some((n, seq)),
           dirVersion = branchBase(path, n) + seq)
     }
   }
@@ -1554,11 +1631,11 @@ object GraftTable {
     */
   def upsertMor(spark: SparkSession, path: String, updates0: DataFrame,
                 precombine: Seq[String] = Nil): Unit = {
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, keyTypes) = meta(path)
+    val s = snapshotAt(path, -1)
+    val v = s.version
+    val (keys, _, keyTypes) = meta(path)
     keys.foreach(k => require(updates0.columns.contains(k), s"updates missing key column $k"))
-    val updates = alignKeyTypes(spark, path, v, keys, keyTypes, updates0)
+    val updates = alignKeyTypes(spark, s, keys, keyTypes, updates0)
     // in-batch dedupe under the SAME winner rule the COW merge applies
     // (precombine desc, deterministic tie-break) — the stored delta
     // holds one row per key, so read-side merging never re-arbitrates
@@ -1568,15 +1645,15 @@ object GraftTable {
     // columns cast to the table's type, omitted columns null-padded,
     // genuinely new columns appended — the stored file IS the new
     // snapshot schema, so schema-pinned reads never hit a type clash
-    val prevSc = snapshotSchema(path, v).getOrElse(
-      types.StructType(read(spark, path, v).schema.fields.map(_.copy(nullable = true))))
+    val prevSc = s.schema.getOrElse(
+      types.StructType(read(spark, s).schema.fields.map(_.copy(nullable = true))))
     val newSc = types.StructType(prevSc.fields ++
       deduped.schema.fields.filterNot(f => prevSc.fieldNames.contains(f.name))
         .map(_.copy(nullable = true)))
     // same resurrect guard as the COW path: a delta batch must not
     // widen the schema with a name the #dropped ledger retired
     val morResurrected = (newSc.fieldNames.toSet -- prevSc.fieldNames.toSet)
-      .intersect(droppedColumns(path, v))
+      .intersect(s.dropped)
     if (morResurrected.nonEmpty)
       throw new IllegalArgumentException(
         s"delta batch re-introduces previously dropped column(s) " +
@@ -1592,9 +1669,7 @@ object GraftTable {
       .write.mode(SaveMode.Overwrite).parquet(s"$path/$rel")
     // manifest: previous text verbatim, headers upgraded, #schema
     // replaced when the batch widened it, plus this delta's line
-    var lines = manifestText(path, v).split("\n").toSeq
-    if (!lines.exists(_.startsWith("#nbuckets=")))
-      lines = s"#nbuckets=${bucketsAt(path, v, defaultBuckets)}" +: lines
+    var lines = s.headedText.split("\n").toSeq
     val scLine = "#schema=" + enc(newSc.toDDL)
     lines =
       if (lines.exists(_.startsWith("#schema=")))
@@ -1629,33 +1704,33 @@ object GraftTable {
 
   private def deleteImpl(spark: SparkSession, path: String, keysDf: DataFrame,
                          branch: Option[String]): Unit = {
-    val v = branch.fold(latestVersion(path))(branchHead(path, _))
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, keyTypes) = meta(path)
-    val nbuckets = bucketsAt(path, v, defaultBuckets)
+    val s = snapshotAt(path, branch.fold(latestVersion(path))(branchHead(path, _)))
+    val (keys, _, keyTypes) = meta(path)
+    val nbuckets = s.nbuckets
     keys.foreach(k => require(keysDf.columns.contains(k), s"delete batch missing key column $k"))
-    val keyOnly = alignKeyTypes(spark, path, v, keys, keyTypes, keysDf)
+    val keyOnly = alignKeyTypes(spark, s, keys, keyTypes, keysDf)
       .select(keys.map(col): _*).distinct()
-    val current = manifest(path, v)
+    val current = s.dirs
     val touched = keyOnly.select(bucketCol(keys, nbuckets).as(BUCKET))
       .distinct().collect().map(_.getInt(0)).toSet
     val baseDirs = current.filter { case (b, _) => touched(b) }.values.toSeq
     // with no stored bucket AND no delta commits, no row can hold these
     // keys; delta rows may live in buckets with no dir, so they keep
     // the rewrite alive
-    if (baseDirs.isEmpty && deltaEntries(path, v).isEmpty) return
-    val base = readMor(spark, path, v, baseDirs, Some(touched))(g =>
+    if (baseDirs.isEmpty && s.delta.isEmpty) return
+    val base = readMor(spark, s, baseDirs, Some(touched))(g =>
       if (g.isEmpty) keyOnly.limit(0)
-      else readPinned(spark, path, v)(g))
+      else readPinned(spark, s)(g))
     val remaining = base.join(keyOnly, keys, "left_anti")
     val carryOver = current.filter { case (b, _) => !touched(b) }
     branch match {
       case None =>
-        writeVersion(remaining, path, keys, nbuckets, v + 1, carryOver, touched = touched)
+        writeVersion(remaining, path, keys, nbuckets, s.version + 1, Some(s), carryOver,
+          touched = touched)
       case Some(n) =>
         val seq = branchCommits(path, n).lastOption.fold(1)(_._1 + 1)
-        writeVersion(remaining, path, keys, nbuckets, nextBranchSlot(path), carryOver,
-          touched = touched, base = v, branchCommit = Some((n, seq)),
+        writeVersion(remaining, path, keys, nbuckets, nextBranchSlot(path), Some(s), carryOver,
+          touched = touched, branchCommit = Some((n, seq)),
           dirVersion = branchBase(path, n) + seq)
     }
   }
@@ -1674,14 +1749,13 @@ object GraftTable {
     * removals with `_deleted = true` exactly like a COW delete.
     */
   def deleteMor(spark: SparkSession, path: String, keysDf: DataFrame): Unit = {
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, keyTypes) = meta(path)
+    val s = snapshotAt(path, -1)
+    val (keys, _, keyTypes) = meta(path)
     keys.foreach(k => require(keysDf.columns.contains(k), s"delete batch missing key column $k"))
-    val keyOnly = alignKeyTypes(spark, path, v, keys, keyTypes, keysDf)
+    val keyOnly = alignKeyTypes(spark, s, keys, keyTypes, keysDf)
       .select(keys.map(col): _*).distinct()
     if (keyOnly.isEmpty) return // no keys: no version, same as a no-op DELETE
-    commitDv(spark, path, v, defaultBuckets, keyOnly)
+    commitDv(spark, s, keyOnly)
   }
 
   /** [[deleteMor]] with the optimistic-concurrency retry loop (key
@@ -1701,20 +1775,18 @@ object GraftTable {
     * scan never counts a row an earlier DV already removed).
     */
   def deleteWhereMor(spark: SparkSession, path: String, cond: Column): Long = {
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, _) = meta(path)
-    val current = manifest(path, v)
+    val s = snapshotAt(path, -1)
+    val keys = keyColumns(path)
     val filters = org.apache.spark.sql.graftshim.Bridge
-      .translateFilters(read(spark, path, v), cond)
-    val candidates = candidateBuckets(spark, path, v, current, filters)
+      .translateFilters(read(spark, s), cond)
+    val candidates = candidateBuckets(spark, s, filters)
     if (candidates.isEmpty) return 0L
-    val matched = readBuckets(spark, path, v, candidates)
+    val matched = readBuckets(spark, s, candidates)
       .filter(coalesce(cond, lit(false)))
       .select(keys.map(col): _*).distinct()
     val n = matched.count()
     if (n == 0L) return 0L
-    commitDv(spark, path, v, defaultBuckets, matched)
+    commitDv(spark, s, matched)
     n
   }
 
@@ -1733,21 +1805,19 @@ object GraftTable {
     * manifest is upgraded with #nbuckets/#schema headers first so every
     * DV-bearing snapshot plans from recorded metadata.
     */
-  private def commitDv(spark: SparkSession, path: String, v: Int,
-                       defaultBuckets: Int, keyOnly: DataFrame): Unit = {
+  private def commitDv(spark: SparkSession, s: Snapshot, keyOnly: DataFrame): Unit = {
+    val (path, v) = (s.path, s.version)
     val rel = s"dv/v${v + 1}-${java.util.UUID.randomUUID.toString.take(8)}"
     // one file: a DV is small by contract (compact folds it away long
     // before the single-writer coalesce could matter)
     keyOnly.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/$rel")
-    var lines = manifestText(path, v)
-    if (!lines.split("\n").exists(_.startsWith("#nbuckets=")))
-      lines = s"#nbuckets=${bucketsAt(path, v, defaultBuckets)}\n" + lines
-    if (!lines.split("\n").exists(_.startsWith("#schema="))) {
-      val sc = types.StructType(read(spark, path, v).schema
-        .fields.map(_.copy(nullable = true)))
-      lines = s"#schema=${enc(sc.toDDL)}\n" + lines
-    }
-    lines = lines + s"\n#dv=$rel"
+    val schemaLine =
+      if (s.schema.isDefined) Nil
+      else {
+        val sc = types.StructType(read(spark, s).schema.fields.map(_.copy(nullable = true)))
+        Seq(s"#schema=${enc(sc.toDDL)}")
+      }
+    val lines = (schemaLine :+ s.headedText :+ s"#dv=$rel").mkString("\n")
     if (!MetaIO.putIfAbsent(manifestPath(path, v + 1), lines))
       throw new java.util.ConcurrentModificationException(
         s"concurrent writer committed v${v + 1} first at $path; re-read and retry the delete")
@@ -1758,32 +1828,23 @@ object GraftTable {
     * `filters`. Stat-less dirs (legacy writes, failed stats jobs) are
     * always candidates — pruning is an optimization, never a filter.
     */
-  private def candidateBuckets(spark: SparkSession, path: String, v: Int,
-                               current: Map[Int, String],
+  private def candidateBuckets(spark: SparkSession, s: Snapshot,
                                filters: Seq[org.apache.spark.sql.sources.Filter])
       : Set[Int] = {
     // delta winner rows are not stats-indexed (they live in the log,
     // not in manifest-described files), so every bucket holding delta
     // keys is a candidate regardless of what file stats rule out —
     // including buckets with no data dir at all
-    val deltaBuckets: Set[Int] = {
-      val deltas = deltaEntries(path, v)
-      if (deltas.isEmpty) Set.empty
-      else {
-        val (keys, defaultBuckets, _) = meta(path)
-        val nb = bucketsAt(path, v, defaultBuckets)
-        spark.read.parquet(deltas.map(e => s"$path/${e._1}"): _*)
-          .select(bucketCol(keys, nb).as(BUCKET)).distinct()
-          .collect().map(_.getInt(0)).toSet
-      }
-    }
+    val deltaBuckets: Set[Int] =
+      if (s.delta.isEmpty) Set.empty
+      else spark.read.parquet(s.delta.map(e => s"${s.path}/${e._1}"): _*)
+        .select(bucketCol(keyColumns(s.path), s.nbuckets).as(BUCKET)).distinct()
+        .collect().map(_.getInt(0)).toSet
+    val current = s.dirs
     if (filters.isEmpty) return current.keySet ++ deltaBuckets
-    val stats = manifestFileStats(path, v)
+    val stats = s.fileStats
     if (stats.isEmpty) return current.keySet ++ deltaBuckets
-    val schema = snapshotSchema(path, v) match {
-      case Some(sc) => sc
-      case None => return current.keySet ++ deltaBuckets
-    }
+    val schema = s.schema.getOrElse(return current.keySet ++ deltaBuckets)
     val kinds = schema.fields.flatMap(f => statKind(f.dataType).map(f.name -> _)).toMap
     current.filter { case (_, d) =>
       val files = stats.keys.filter(_.startsWith(d + "/"))
@@ -1800,14 +1861,13 @@ object GraftTable {
     * positive candidate (stats couldn't disprove, no row matches) is
     * never rewritten. Returns (buckets holding matches, matching rows).
     */
-  private def bucketsWithMatches(spark: SparkSession, path: String, v: Int,
+  private def bucketsWithMatches(spark: SparkSession, s: Snapshot,
                                  candidates: Set[Int], cond: Column): (Set[Int], Long) = {
     if (candidates.isEmpty) return (Set.empty, 0L)
-    val hasLog = dvEntries(path, v).nonEmpty || deltaEntries(path, v).nonEmpty
-    if (!hasLog) {
+    if (!s.hasLog) {
       // pure-COW path: attribute matches to buckets via the file name,
       // captured AT SCAN LEVEL (it is undefined above joins)
-      val perFile = readBuckets(spark, path, v, candidates)
+      val perFile = readBuckets(spark, s, candidates)
         .withColumn("__f", input_file_name())
         .filter(coalesce(cond, lit(false)))
         .groupBy(col("__f")).agg(count(lit(1)).as("__n"))
@@ -1819,11 +1879,9 @@ object GraftTable {
       // MOR path: delta winner rows carry no file name — attribute via
       // the SAME bucket hash the writers use (all dirs of one snapshot
       // share its layout; rebucket is a full rewrite that drops the log)
-      val (keys, defaultBuckets, _) = meta(path)
-      val nb = bucketsAt(path, v, defaultBuckets)
-      val perBucket = readBuckets(spark, path, v, candidates)
+      val perBucket = readBuckets(spark, s, candidates)
         .filter(coalesce(cond, lit(false)))
-        .groupBy(bucketCol(keys, nb).as(BUCKET)).agg(count(lit(1)).as("__n"))
+        .groupBy(bucketCol(keyColumns(s.path), s.nbuckets).as(BUCKET)).agg(count(lit(1)).as("__n"))
         .collect()
       (perBucket.map(_.getInt(0)).toSet, perBucket.map(_.getLong(1)).sum)
     }
@@ -1849,20 +1907,17 @@ object GraftTable {
     * reports them with `_deleted = true`.
     */
   def deleteWhere(spark: SparkSession, path: String, cond: Column): Long = {
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, _) = meta(path)
-    val nbuckets = bucketsAt(path, v, defaultBuckets)
-    val current = manifest(path, v)
+    val s = snapshotAt(path, -1)
     val filters = org.apache.spark.sql.graftshim.Bridge
-      .translateFilters(read(spark, path, v), cond)
-    val candidates = candidateBuckets(spark, path, v, current, filters)
-    val (touched, matchedRows) = bucketsWithMatches(spark, path, v, candidates, cond)
+      .translateFilters(read(spark, s), cond)
+    val candidates = candidateBuckets(spark, s, filters)
+    val (touched, matchedRows) = bucketsWithMatches(spark, s, candidates, cond)
     if (touched.isEmpty) return 0L
-    val remaining = readBuckets(spark, path, v, touched)
+    val remaining = readBuckets(spark, s, touched)
       .filter(!coalesce(cond, lit(false)))
-    val carryOver = current.filter { case (b, _) => !touched(b) }
-    writeVersion(remaining, path, keys, nbuckets, v + 1, carryOver, touched = touched)
+    val carryOver = s.dirs.filter { case (b, _) => !touched(b) }
+    writeVersion(remaining, path, keyColumns(path), s.nbuckets, s.version + 1, Some(s),
+      carryOver, touched = touched)
     matchedRows
   }
 
@@ -1881,21 +1936,18 @@ object GraftTable {
   def update(spark: SparkSession, path: String, cond: Column,
              set: Map[String, Column]): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, _) = meta(path)
-    val nbuckets = bucketsAt(path, v, defaultBuckets)
-    val snapshot = read(spark, path, v)
+    val s = snapshotAt(path, -1)
+    val keys = keyColumns(path)
+    val snapshot = read(spark, s)
     val schema = snapshot.schema
     set.keys.foreach { c =>
       require(schema.fieldNames.contains(c), s"SET column $c not in table schema")
       require(!keys.contains(c),
         s"cannot SET key column $c — a key update moves the row's bucket; delete + upsert instead")
     }
-    val current = manifest(path, v)
     val filters = org.apache.spark.sql.graftshim.Bridge.translateFilters(snapshot, cond)
-    val candidates = candidateBuckets(spark, path, v, current, filters)
-    val (touched, matchedRows) = bucketsWithMatches(spark, path, v, candidates, cond)
+    val candidates = candidateBuckets(spark, s, filters)
+    val (touched, matchedRows) = bucketsWithMatches(spark, s, candidates, cond)
     if (touched.isEmpty) return 0L
     val hit = coalesce(cond, lit(false))
     val outCols = schema.fields.map { f =>
@@ -1904,10 +1956,10 @@ object GraftTable {
         case None => col(f.name)
       }
     }
-    val rewritten = readBuckets(spark, path, v, touched)
+    val rewritten = readBuckets(spark, s, touched)
       .select(outCols.toIndexedSeq: _*)
-    writeVersion(rewritten, path, keys, nbuckets, v + 1,
-      current.filter { case (b, _) => !touched(b) }, touched = touched)
+    writeVersion(rewritten, path, keys, s.nbuckets, s.version + 1, Some(s),
+      s.dirs.filter { case (b, _) => !touched(b) }, touched = touched)
     matchedRows
   }
 
@@ -1927,10 +1979,9 @@ object GraftTable {
                 notMatchedInsertSet: Map[String, Column] = Map.empty,
                 bySourceDelete: Option[Column] = None,
                 bySourceUpdate: Option[(Column, Map[String, Column])] = None): Unit = {
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, keyTypes) = meta(path)
-    val nbuckets = bucketsAt(path, v, defaultBuckets)
+    val s = snapshotAt(path, -1)
+    val (keys, _, keyTypes) = meta(path)
+    val nbuckets = s.nbuckets
     keys.foreach(k => require(source0.columns.contains(k), s"source missing key column $k"))
     // same invariant update() enforces: a SET that rewrites a key column
     // would leave the row in the bucket its OLD key hashed to — point
@@ -1944,8 +1995,8 @@ object GraftTable {
     notMatchedInsertSet.keys.foreach(c => require(!keys.contains(c),
       s"cannot override key column $c in WHEN NOT MATCHED INSERT — the inserted " +
         "row was bucketed by its source key; insert the desired key in the source instead"))
-    val source = alignKeyTypes(spark, path, v, keys, keyTypes, source0)
-    val current = manifest(path, v)
+    val source = alignKeyTypes(spark, s, keys, keyTypes, source0)
+    val current = s.dirs
     // WHEN NOT MATCHED BY SOURCE reaches target rows in EVERY bucket
     // (any row may lack a source pair), so the statement is a
     // full-table rewrite — the same cost Delta pays for these clauses.
@@ -1963,12 +2014,13 @@ object GraftTable {
     // new version); WITH them, every target row is not-matched-by-
     // source and the clauses must still run
     if (touched.isEmpty && !bySource) return
-    val base = readBuckets(spark, path, v, touched)
+    val base = readBuckets(spark, s, touched)
     val merged = Upsert.mergeConditional(base, source, keys,
       matchedDelete, matchedUpdate, notMatchedInsert, notMatchedInsertSet,
       bySourceDelete, bySourceUpdate)
     val carryOver = current.filter { case (b, _) => !touched(b) }
-    writeVersion(merged, path, keys, nbuckets, v + 1, carryOver, touched = touched)
+    writeVersion(merged, path, keys, nbuckets, s.version + 1, Some(s), carryOver,
+      touched = touched)
   }
 
   /** [[deleteWhere]]/[[update]]/[[mergeInto]] with the optimistic-
@@ -2011,15 +2063,16 @@ object GraftTable {
     * job, or a dir holding only empty files — completeness can't be
     * proven), in which case the caller falls back to `read().count()`.
     */
-  def countRows(path: String, version: Int = -1): Option[Long] = {
-    val v = if (version >= 0) version else latestVersion(path)
-    require(v >= 0, s"no table at $path")
+  def countRows(path: String, version: Int = -1): Option[Long] =
+    countRows(snapshotAt(path, version))
+
+  def countRows(s: Snapshot): Option[Long] = {
     // the MOR log changes the row count in ways metadata can't see:
     // a DV may name keys that never existed, a delta both inserts and
     // replaces — the stats answer would miscount either way
-    if (dvEntries(path, v).nonEmpty || deltaEntries(path, v).nonEmpty) return None
-    val stats = manifestFileStats(path, v)
-    val dirs = manifest(path, v).values.toSeq
+    if (s.hasLog) return None
+    val stats = s.fileStats
+    val dirs = s.dirs.values.toSeq
     if (!dirs.forall(d => stats.keys.exists(_.startsWith(d + "/")))) None
     else Some(dirs.flatMap(d =>
       stats.collect { case (rel, st) if rel.startsWith(d + "/") => st.rows }).sum)
@@ -2055,13 +2108,14 @@ object GraftTable {
     *  - string bounds merge under UTF-8 byte order (Spark/DuckDB binary
     *    collation), not Java's UTF-16 compareTo.
     */
-  def statsProfile(path: String, version: Int = -1): Option[(Long, Map[String, ColumnProfile])] = {
-    val v = if (version >= 0) version else latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    if (dvEntries(path, v).nonEmpty || deltaEntries(path, v).nonEmpty) return None
-    val sc = snapshotSchema(path, v).getOrElse(return None)
-    val stats = manifestFileStats(path, v)
-    val dirs = manifest(path, v).values.toSeq
+  def statsProfile(path: String, version: Int = -1): Option[(Long, Map[String, ColumnProfile])] =
+    statsProfile(snapshotAt(path, version))
+
+  def statsProfile(s: Snapshot): Option[(Long, Map[String, ColumnProfile])] = {
+    if (s.hasLog) return None
+    val sc = s.schema.getOrElse(return None)
+    val stats = s.fileStats
+    val dirs = s.dirs.values.toSeq
     if (!dirs.forall(d => stats.keys.exists(_.startsWith(d + "/")))) return None
     val files = stats.filter { case (rel, _) =>
       val cut = rel.lastIndexOf('/')
@@ -2374,12 +2428,11 @@ object GraftTable {
                          histogramBins: Int = 0): Map[String, ColumnNdv] = {
     require(histogramBins >= 0 && histogramBins <= 254,
       s"histogramBins in [0, 254], got $histogramBins")
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    require(dvEntries(path, v).isEmpty && deltaEntries(path, v).isEmpty,
+    val head = snapshotAt(path, -1)
+    require(!head.hasLog,
       s"$path has outstanding MOR log entries: per-file sketches cannot attribute " +
         "merged rows to immutable files — GraftTable.compact(...) first")
-    val sc = snapshotSchema(path, v).getOrElse(
+    val sc = head.schema.getOrElse(
       throw new IllegalStateException(s"$path: no recorded snapshot schema"))
     val eligible = sc.fields.toSeq.filter(f => f.dataType match {
       case _: org.apache.spark.sql.types.ArrayType => false
@@ -2391,8 +2444,8 @@ object GraftTable {
     require(eligible.nonEmpty, s"$path: no analyzable (atomic-typed) columns")
     // head snapshot's file list: from the stats segments (metadata-
     // only), falling back to listing just the dirs without coverage
-    val dirs = manifest(path, v).values.toSeq
-    val stats = manifestFileStats(path, v)
+    val dirs = head.dirs.values.toSeq
+    val stats = head.fileStats
     val files: Seq[String] = dirs.flatMap { rel =>
       val covered = stats.keys.filter(_.startsWith(rel + "/")).toSeq
       if (covered.nonEmpty) covered
@@ -2529,7 +2582,7 @@ object GraftTable {
         }
       f.name -> ColumnNdv(ndvByCol.getOrElse(f.name, 0L), strLen, histByCol.get(f.name))
     }.toMap
-    val body = (s"version=$v" +: s"approx=true" +:
+    val body = (s"version=${head.version}" +: s"approx=true" +:
       (out.toSeq.sortBy(_._1).map { case (c, n) =>
         s"${enc(c)}=${n.ndv}${n.strLen.map { case (a, m) => s",$a,$m" }.getOrElse("")}"
       } ++
@@ -2641,19 +2694,11 @@ object GraftTable {
     * read the newer columns as null (the reader pads missing columns).
     * Legacy manifests fall back to mergeSchema inference.
     */
-  def read(spark: SparkSession, path: String, version: Int = -1): DataFrame = {
-    val v = if (version >= 0) version else latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val rels = manifest(path, v).values.toSeq
-    val sc = snapshotSchema(path, v)
-    readMor(spark, path, v, rels) { g =>
-      val dirs = g.map(d => s"$path/$d")
-      sc match {
-        case Some(s) => spark.read.schema(s).parquet(dirs: _*)
-        case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-      }
-    }
-  }
+  def read(spark: SparkSession, path: String, version: Int = -1): DataFrame =
+    read(spark, snapshotAt(path, version))
+
+  def read(spark: SparkSession, s: Snapshot): DataFrame =
+    readMor(spark, s, s.dirs.values.toSeq)(readPinned(spark, s))
 
   /** The table's record-key columns (create-time order). */
   def keyColumns(path: String): Seq[String] = meta(path)._1
@@ -2665,17 +2710,14 @@ object GraftTable {
     * row lives in, not a reimplementation that could drift. One
     * driver-local 1-row job.
     */
-  def bucketFor(spark: SparkSession, path: String, version: Int,
-                keyValues: Map[String, Any]): Int = {
-    val v = if (version >= 0) version else latestVersion(path)
-    val (keys, defaultBuckets, keyTypes) = meta(path)
+  def bucketFor(spark: SparkSession, s: Snapshot, keyValues: Map[String, Any]): Int = {
+    val (keys, _, keyTypes) = meta(s.path)
     require(keys.forall(keyValues.contains), s"bucketFor needs all key columns $keys")
-    val nbuckets = bucketsAt(path, v, defaultBuckets)
     val oneRow = keys.foldLeft(spark.range(1).toDF()) { (d, k) =>
       d.withColumn(k, lit(keyValues(k)))
     }
-    alignKeyTypes(spark, path, v, keys, keyTypes, oneRow)
-      .select(bucketCol(keys, nbuckets).as("b")).head().getInt(0)
+    alignKeyTypes(spark, s, keys, keyTypes, oneRow)
+      .select(bucketCol(keys, s.nbuckets).as("b")).head().getInt(0)
   }
 
   /** Snapshot restricted to the manifest dirs of `buckets` — the
@@ -2685,12 +2727,13 @@ object GraftTable {
     * old un-rewritten bucket after additive evolution still line up.
     */
   def readBuckets(spark: SparkSession, path: String, version: Int,
-                  buckets: Set[Int]): DataFrame = {
-    val v = if (version >= 0) version else latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val rels = manifest(path, v).filter { case (b, _) => buckets(b) }
-      .values.toSeq
-    snapshotSchema(path, v) match {
+                  buckets: Set[Int]): DataFrame =
+    readBuckets(spark, snapshotAt(path, version), buckets)
+
+  def readBuckets(spark: SparkSession, s: Snapshot, buckets: Set[Int]): DataFrame = {
+    val path = s.path
+    val rels = s.dirs.filter { case (b, _) => buckets(b) }.values.toSeq
+    s.schema match {
       case Some(sc) =>
         // manifest-recorded schema: the point lookup plans WITHOUT
         // listing/footer-reading the rest of the table's files — the
@@ -2699,14 +2742,14 @@ object GraftTable {
         // a point-looked-up key that was MOR-deleted must be absent
         // here exactly as in a full read, and a key living only in a
         // delta commit (even in a bucket with no dir) must be served.
-        readMor(spark, path, v, rels, Some(buckets))(g =>
+        readMor(spark, s, rels, Some(buckets))(g =>
           if (g.isEmpty)
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
           else spark.read.schema(sc).parquet(g.map(d => s"$path/$d"): _*))
       case None => // legacy manifest: one full-relation pass for the schema.
         // (Never log-bearing: the MOR commits upgrade a legacy manifest
         // with #schema before they append the first #dv/#delta line.)
-        val full = read(spark, path, v)
+        val full = read(spark, s)
         if (rels.isEmpty) return full.limit(0)
         val sub = spark.read.option("mergeSchema", "true")
           .parquet(rels.map(d => s"$path/$d"): _*)
@@ -2724,57 +2767,6 @@ object GraftTable {
     require(eligible.nonEmpty, s"no commit at or before $tsMillis in $path")
     read(spark, path, eligible.last._1)
   }
-
-  /** Manifest text for snapshot `v`, with the clear failure modes a
-    * lakehouse owes its users instead of a raw filesystem error:
-    *  - version committed but manifest reclaimed → "vacuumed", naming
-    *    the earliest still-readable version (the commit markers keep
-    *    full history for audit, so this case is precisely detectable);
-    *  - version never committed → "no committed version", naming the
-    *    latest. Every snapshot read, time travel, restore, and change
-    *    feed routes through here.
-    */
-  private def manifestText(path: String, v: Int): String = {
-    val p = manifestPath(path, v)
-    if (!MetaIO.exists(p)) {
-      val readable = MetaIO.list(new Path(path, "manifests")).map(_.getPath.getName)
-        .collect { case VersionFile(n) => n.toInt }
-      if (MetaIO.exists(commitMarker(path, v)))
-        throw new IllegalStateException(
-          s"version $v of $path was vacuumed" +
-            (if (readable.nonEmpty) s"; earliest readable version is ${readable.min}"
-             else "") +
-            " — snapshot reads, time travel, restore, and change feeds cannot cross the vacuum horizon")
-      else
-        throw new IllegalArgumentException(
-          s"no committed version $v at $path (latest is ${latestVersion(path)})")
-    }
-    MetaIO.readString(p)
-  }
-
-  /** bucket → relative data dir for snapshot v (header lines skipped) */
-  def manifest(path: String, v: Int): Map[Int, String] =
-    manifestText(path, v).split("\n").toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-        val Array(b, d) = line.split("\t")
-        b.toInt -> d
-      }.toMap
-
-  /** The bucket count snapshot `v` was written with, from the manifest's
-    * `#nbuckets=` header. The count is PER-SNAPSHOT (not table-global)
-    * so [[rebucket]] can evolve the layout: writers bucket new data by
-    * the CURRENT head's count, and the OCC manifest lock serializes a
-    * racing upsert against a rebucket (the loser re-reads the new head —
-    * and with it the new count). Manifests written before the header
-    * existed fall back to the `_keys` create-time count.
-    */
-  def manifestBuckets(path: String, v: Int): Option[Int] =
-    manifestText(path, v).split("\n")
-      .collectFirst { case l if l.startsWith("#nbuckets=") =>
-        l.stripPrefix("#nbuckets=").trim.toInt }
-
-  private[sources] def bucketsAt(path: String, v: Int, default: Int): Int =
-    manifestBuckets(path, v).getOrElse(default)
 
   // ---- the MOR log (merge-on-read deletes AND upserts) -----------------
   //
@@ -2813,27 +2805,6 @@ object GraftTable {
   private def relVersion(rel: String): Int =
     RelVersionRe.findFirstMatchIn(rel).map(_.group(1).toInt).getOrElse(0)
 
-  /** Snapshot v's deletion vectors: (relative path, create version),
-    * ascending by version. Empty for tables without MOR deletes — every
-    * read path short-circuits to its plain plan then.
-    */
-  def dvEntries(path: String, v: Int): Seq[(String, Int)] =
-    manifestText(path, v).split("\n").toSeq
-      .collect { case l if l.startsWith("#dv=") =>
-        val rel = l.stripPrefix("#dv=").trim
-        rel -> relVersion(rel)
-      }.sortBy(_._2)
-
-  /** Snapshot v's delta commits (merge-on-read upserts): (relative
-    * path, create version), ascending. Empty for pure-COW tables.
-    */
-  def deltaEntries(path: String, v: Int): Seq[(String, Int)] =
-    manifestText(path, v).split("\n").toSeq
-      .collect { case l if l.startsWith("#delta=") =>
-        val rel = l.stripPrefix("#delta=").trim
-        rel -> relVersion(rel)
-      }.sortBy(_._2)
-
   /** Total on-disk bytes of the given DV files — the broadcast-safety
     * gate. DVs small enough to broadcast (the design contract; compact
     * folds them away when they grow) anti-join with zero shuffle on the
@@ -2856,7 +2827,7 @@ object GraftTable {
     padded.select(sc.fieldNames.map(col).toIndexedSeq: _*)
   }
 
-  /** Read manifest-relative paths (dirs or files) with snapshot v's
+  /** Read manifest-relative paths (dirs or files) with snapshot `s`'s
     * MOR log — deletion vectors AND delta commits — applied under
     * version scoping.
     *
@@ -2879,13 +2850,12 @@ object GraftTable {
     *
     * No overlays ⇒ the untouched single-scan plan from `readGroup`.
     */
-  private def readMor(spark: SparkSession, path: String, v: Int,
+  private def readMor(spark: SparkSession, s: Snapshot,
                       rels: Seq[String], scope: Option[Set[Int]] = None)
                      (readGroup: Seq[String] => DataFrame): DataFrame = {
-    val dvs = dvEntries(path, v)
-    val deltas = deltaEntries(path, v)
+    val (path, dvs, deltas) = (s.path, s.dv, s.delta)
     if (dvs.isEmpty && deltas.isEmpty) return readGroup(rels)
-    val (keys, defaultBuckets, _) = meta(path)
+    val keys = keyColumns(path)
     // (rel, commit version, isDelete), ascending by version — versions
     // are unique per overlay (one log line per commit)
     val overlays = (dvs.map(e => (e._1, e._2, true)) ++
@@ -2913,9 +2883,9 @@ object GraftTable {
         // commit upgrades first), so winner rows read schema-pinned —
         // files written before an additive evolution pad the new
         // columns as null, exactly like data files
-        val sc = snapshotSchema(path, v).getOrElse(throw new IllegalStateException(
-          s"delta-bearing manifest without #schema at $path v$v"))
-        val nb = bucketsAt(path, v, defaultBuckets)
+        val sc = s.schema.getOrElse(throw new IllegalStateException(
+          s"delta-bearing manifest without #schema at $path v${s.version}"))
+        val nb = s.nbuckets
         val events = overlays.map { case (rel, ver, del) =>
           val raw =
             if (del) padToSchema(
@@ -2923,7 +2893,7 @@ object GraftTable {
             else spark.read.schema(sc).parquet(s"$path/$rel")
           raw.withColumn("__ver", lit(ver)).withColumn("__del", lit(del))
         }.reduce(_.unionByName(_)).withColumn("__b", bucketCol(keys, nb))
-        val dirVer = typedLit(manifest(path, v).map { case (b, d) => b -> relVersion(d) })
+        val dirVer = typedLit(s.dirs.map { case (b, d) => b -> relVersion(d) })
         var ev = events.filter(
           col("__ver") >= coalesce(element_at(dirVer, col("__b")), lit(-1)))
         scope.foreach(s =>
@@ -2987,11 +2957,13 @@ object GraftTable {
     require(targetFilesPerBucket >= 1, "need at least one file per bucket")
     require(curve == "zorder" || curve == "hilbert",
       s"unknown clustering curve '$curve' (zorder | hilbert)")
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val (keys, defaultBuckets, _) = meta(path)
-    val nbuckets = bucketsAt(path, v, defaultBuckets)
-    val snap = read(spark, path, v)
+    val s = snapshotAt(path, -1)
+    val keys = keyColumns(path)
+    def rewrite(df: DataFrame, sortWithin: Seq[String], rangeSplit: Int = 1,
+                recordSorted: Boolean = false): Unit =
+      writeVersion(df, path, keys, s.nbuckets, s.version + 1, Some(s), carryOver = Map.empty,
+        sortWithin = sortWithin, rangeSplit = rangeSplit, recordSorted = recordSorted)
+    val snap = read(spark, s)
     // an argument-less compact honors the clustering DECLARED at create
     // (days(ts) DDL): linear time clustering on that column — Delta's
     // OPTIMIZE against a declared layout, not a per-call choice. An
@@ -3008,8 +2980,7 @@ object GraftTable {
         // the ordering pass partitionBy pays anyway) and the manifest
         // records it — co-bucketed joins of two compacted tables then
         // skip the SMJ sorts as well as the shuffle
-        writeVersion(snap, path, keys, nbuckets, v + 1, carryOver = Map.empty,
-          sortWithin = keys, recordSorted = true)
+        rewrite(snap, keys, recordSorted = true)
       case Some(Seq(a)) =>
         // LINEAR clustering on one dimension — the TIME layout: each
         // bucket's files become disjoint ranges of that column, so a
@@ -3020,21 +2991,16 @@ object GraftTable {
         // dimension — the manifest's per-file min/max over narrow
         // slices IS the partition tree, and the bucket invariant
         // (upserts, point lookups) is untouched.
-        writeVersion(snap.withColumn("__zc", col(a)), path, keys, nbuckets,
-          v + 1, carryOver = Map.empty, sortWithin = Seq("__zc"),
-          rangeSplit = targetFilesPerBucket)
+        rewrite(snap.withColumn("__zc", col(a)), Seq("__zc"), targetFilesPerBucket)
       case Some(dims) =>
         val cluster =
           if (curve == "hilbert") graft.operators.Layout.hcolumnN(snap, dims)
           else graft.operators.Layout.zcolumnN(snap, dims)
         cluster match {
           case None => // empty/all-null dimensions: plain compaction
-            writeVersion(snap, path, keys, nbuckets, v + 1, carryOver = Map.empty,
-              sortWithin = keys, recordSorted = true)
+            rewrite(snap, keys, recordSorted = true)
           case Some(z) =>
-            writeVersion(snap.withColumn("__zc", z), path, keys, nbuckets,
-              v + 1, carryOver = Map.empty, sortWithin = Seq("__zc"),
-              rangeSplit = targetFilesPerBucket)
+            rewrite(snap.withColumn("__zc", z), Seq("__zc"), targetFilesPerBucket)
         }
     }
   }
@@ -3056,10 +3022,9 @@ object GraftTable {
     */
   def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
     require(newBuckets >= 1, "need at least one bucket")
-    val v = latestVersion(path)
-    require(v >= 0, s"no table at $path")
-    val (keys, _, _) = meta(path)
-    writeVersion(read(spark, path, v), path, keys, newBuckets, v + 1,
+    val s = snapshotAt(path, -1)
+    val keys = keyColumns(path)
+    writeVersion(read(spark, s), path, keys, newBuckets, s.version + 1, Some(s),
       carryOver = Map.empty, sortWithin = keys, recordSorted = true)
   }
 
@@ -3095,28 +3060,12 @@ object GraftTable {
   def changes(spark: SparkSession, path: String, fromVersion: Int,
               toVersion: Int): DataFrame = {
     require(fromVersion <= toVersion, "fromVersion must be <= toVersion")
-    val (keys, defaultBuckets, _) = meta(path)
-    val mFrom = manifest(path, fromVersion)
-    val mTo = manifest(path, toVersion)
-    // changed in EITHER direction — a bucket missing from mTo was
-    // entirely deleted, a bucket missing from mFrom is entirely new
-    val changed = (mFrom.keySet ++ mTo.keySet).filter(b => mFrom.get(b) != mTo.get(b))
-    val newRels = changed.toSeq.flatMap(mTo.get)
-    val oldRels = changed.toSeq.flatMap(mFrom.get)
-    // each side reads DV-aware AT ITS OWN VERSION: a row a deletion
-    // vector had already removed at fromVersion is not a before-image,
-    // and a row a DV removes by toVersion is not an upsert image
-    // each side reads MOR-aware AT ITS OWN VERSION, scoped to the
-    // changed buckets: a changed bucket's state includes the delta
-    // winners that applied to it then — even when that version had no
-    // dir for the bucket at all (its rows lived only in the log), so a
-    // materializing rewrite of log-only rows is not a false upsert
-    def rdSide(ver: Int, rels: Seq[String]): Option[DataFrame] =
-      if (rels.isEmpty && deltaEntries(path, ver).isEmpty) None
-      else Some(readMor(spark, path, ver, rels, Some(changed))(g =>
-        readPinned(spark, path, ver)(g))) // pinned AT ITS OWN VERSION
-    val newSide = rdSide(toVersion, newRels)
-    val oldSide = rdSide(fromVersion, oldRels)
+    changes(spark, snapshot(path, fromVersion), snapshot(path, toVersion))
+  }
+
+  def changes(spark: SparkSession, from: Snapshot, to: Snapshot): DataFrame = {
+    val keys = keyColumns(to.path)
+    val (newSide, oldSide) = changedSides(spark, from, to)
     def sortedCols(df: DataFrame) = df.columns.sorted.map(col).toSeq
     // schema may have evolved between the versions — align both sides
     // (padding with typed nulls) so the full-row EXCEPT is well-typed
@@ -3135,23 +3084,11 @@ object GraftTable {
     // whose live image actually changed across the range (an upsert
     // overwritten back to its old value reports nothing). Cost is
     // O(buckets the delta keys hash into), not O(table).
-    val deltaFromRels = deltaEntries(path, fromVersion).map(_._1).toSet
-    val newDeltaRels = deltaEntries(path, toVersion).map(_._1).filterNot(deltaFromRels)
-    val deltaUpserts: Option[DataFrame] =
-      if (newDeltaRels.isEmpty) None
-      else {
-        val k = spark.read.parquet(newDeltaRels.map(r => s"$path/$r"): _*)
-          .select(keys.map(col): _*).distinct()
-        val kb = broadcast(k)
-        def keyState(ver: Int): DataFrame = {
-          val nb = bucketsAt(path, ver, defaultBuckets)
-          val bs = k.select(bucketCol(keys, nb).as(BUCKET))
-            .distinct().collect().map(_.getInt(0)).toSet
-          readBuckets(spark, path, ver, bs).join(kb, keys, "left_semi")
-        }
-        val (n2, o2) = alignSchemas(keyState(toVersion), keyState(fromVersion))
+    val deltaUpserts: Option[DataFrame] = addedLogKeys(spark, keys, from.delta, to.delta, to.path)
+      .map { k =>
+        val (n2, o2) = alignSchemas(keyRows(spark, to, keys, k), keyRows(spark, from, keys, k))
         val cols = sortedCols(n2)
-        Some(n2.select(cols: _*).exceptAll(o2.select(cols: _*)))
+        n2.select(cols: _*).exceptAll(o2.select(cols: _*))
       }
     // a key can reach both upsert channels (delta-written, then its
     // bucket rewritten later in the range) — both compute the same
@@ -3174,27 +3111,8 @@ object GraftTable {
     // toVersion, so a delete-then-reinsert in the range reports nothing
     // and restore churn self-corrects. Cost is O(buckets the DV keys
     // hash into), not O(table) — the same pruning a keyed delete does.
-    val dvFromRels = dvEntries(path, fromVersion).map(_._1).toSet
-    val newDvRels = dvEntries(path, toVersion).map(_._1).filterNot(dvFromRels)
-    val dvDeletes: Option[DataFrame] =
-      if (newDvRels.isEmpty) None
-      else {
-        val k = spark.read.parquet(newDvRels.map(r => s"$path/$r"): _*)
-          .select(keys.map(col): _*).distinct()
-        val kb = broadcast(k)
-        def keyBuckets(ver: Int): DataFrame = {
-          // DV keys were typed/aligned when written, so hashing them
-          // under each version's own layout lands on the right dirs
-          val nb = bucketsAt(path, ver, defaultBuckets)
-          val bs = k.select(bucketCol(keys, nb).as(BUCKET))
-            .distinct().collect().map(_.getInt(0)).toSet
-          readBuckets(spark, path, ver, bs)
-        }
-        val before = keyBuckets(fromVersion).join(kb, keys, "left_semi")
-        val still = keyBuckets(toVersion).join(kb, keys, "left_semi")
-          .select(keys.map(col): _*)
-        Some(before.join(still, keys, "left_anti"))
-      }
+    val dvDeletes: Option[DataFrame] = addedLogKeys(spark, keys, from.dv, to.dv, to.path)
+      .map(k => dvGone(spark, from, to, keys, k))
     // a key can appear in BOTH delete channels (MOR-deleted, then its
     // bucket rewritten later in the range) — images are identical
     // (fromVersion's stored row), so dedup by key keeps the contract of
@@ -3206,7 +3124,7 @@ object GraftTable {
     }
     (upserts, deletes) match {
       case (None, None) =>
-        val snap = read(spark, path, toVersion)
+        val snap = read(spark, to)
         snap.select(sortedCols(snap): _*).limit(0).withColumn("_deleted", lit(false))
       case (u, d) =>
         val uu = u.map(_.withColumn("_deleted", lit(false)))
@@ -3220,6 +3138,63 @@ object GraftTable {
             :+ col("_deleted")).toIndexedSeq: _*)
     }
   }
+
+  /** The dir channel shared by [[changes]] and [[retractions]]: only
+    * buckets whose manifest entry differs between the versions (in
+    * EITHER direction — a bucket missing from `to` was entirely deleted,
+    * one missing from `from` is entirely new) can hold changes. Each
+    * side reads MOR-aware AT ITS OWN VERSION, scoped to the changed
+    * buckets: a row a deletion vector had already removed at `from` is
+    * not a before-image, a row a DV removes by `to` is not an upsert
+    * image, and a changed bucket's state includes the delta winners
+    * that applied to it then — even when that version had no dir for
+    * the bucket at all (its rows lived only in the log), so a
+    * materializing rewrite of log-only rows is not a false upsert.
+    * Returns (to side, from side); None = nothing to read on that side.
+    */
+  private def changedSides(spark: SparkSession, from: Snapshot, to: Snapshot)
+      : (Option[DataFrame], Option[DataFrame]) = {
+    val changed = (from.dirs.keySet ++ to.dirs.keySet)
+      .filter(b => from.dirs.get(b) != to.dirs.get(b))
+    def side(s: Snapshot): Option[DataFrame] = {
+      val rels = changed.toSeq.flatMap(s.dirs.get)
+      if (rels.isEmpty && s.delta.isEmpty) None
+      else Some(readMor(spark, s, rels, Some(changed))(readPinned(spark, s)))
+    }
+    (side(to), side(from))
+  }
+
+  /** The keys of the MOR log files (`#delta=` or `#dv=` entries) `to`
+    * carries and `from` does not — a diff's candidate keys for the
+    * log channels. None when the range added no such file.
+    */
+  private def addedLogKeys(spark: SparkSession, keys: Seq[String],
+                           from: Seq[(String, Int)], to: Seq[(String, Int)],
+                           path: String): Option[DataFrame] = {
+    val added = to.map(_._1).filterNot(from.map(_._1).toSet)
+    if (added.isEmpty) None
+    else Some(spark.read.parquet(added.map(r => s"$path/$r"): _*)
+      .select(keys.map(col): _*).distinct())
+  }
+
+  /** Snapshot `s`'s rows for the candidate keys `k`, read bucket-pruned:
+    * log keys were typed/aligned when written, so hashing them under
+    * each version's own layout lands on the right dirs.
+    */
+  private def keyRows(spark: SparkSession, s: Snapshot, keys: Seq[String],
+                      k: DataFrame): DataFrame = {
+    val bs = k.select(bucketCol(keys, s.nbuckets).as(BUCKET))
+      .distinct().collect().map(_.getInt(0)).toSet
+    readBuckets(spark, s, bs).join(broadcast(k), keys, "left_semi")
+  }
+
+  /** The deletion-vector channel: rows of candidate keys `k` live at
+    * `from` and gone at `to` (a delete-then-reinsert reports nothing).
+    */
+  private def dvGone(spark: SparkSession, from: Snapshot, to: Snapshot, keys: Seq[String],
+                     k: DataFrame): DataFrame =
+    keyRows(spark, from, keys, k)
+      .join(keyRows(spark, to, keys, k).select(keys.map(col): _*), keys, "left_anti")
 
   /** The RETRACTION form of [[changes]]: the (fromVersion, toVersion]
     * delta as a z-set (Green et al.'s ring of multiplicities; DBSP's
@@ -3249,18 +3224,12 @@ object GraftTable {
   def retractions(spark: SparkSession, path: String, fromVersion: Int,
                   toVersion: Int): DataFrame = {
     require(fromVersion <= toVersion, "fromVersion must be <= toVersion")
-    val (keys, defaultBuckets, _) = meta(path)
-    val mFrom = manifest(path, fromVersion)
-    val mTo = manifest(path, toVersion)
-    val changed = (mFrom.keySet ++ mTo.keySet).filter(b => mFrom.get(b) != mTo.get(b))
-    val newRels = changed.toSeq.flatMap(mTo.get)
-    val oldRels = changed.toSeq.flatMap(mFrom.get)
-    def rdSide(ver: Int, rels: Seq[String]): Option[DataFrame] =
-      if (rels.isEmpty && deltaEntries(path, ver).isEmpty) None
-      else Some(readMor(spark, path, ver, rels, Some(changed))(g =>
-        readPinned(spark, path, ver)(g))) // pinned AT ITS OWN VERSION
-    val newSide = rdSide(toVersion, newRels)
-    val oldSide = rdSide(fromVersion, oldRels)
+    retractions(spark, snapshot(path, fromVersion), snapshot(path, toVersion))
+  }
+
+  def retractions(spark: SparkSession, from: Snapshot, to: Snapshot): DataFrame = {
+    val keys = keyColumns(to.path)
+    val (newSide, oldSide) = changedSides(spark, from, to)
     def sortedCols(df: DataFrame) = df.columns.sorted.map(col).toSeq
     // a channel's z-set in ONE aggregation pass (each endpoint state
     // scanned once — the two-directional EXCEPT ALL alternative scans
@@ -3268,12 +3237,12 @@ object GraftTable {
     // to), −1 (only at from), or 0 (carried unchanged — e.g. through a
     // compaction rewrite — and dropped). Keys are unique per snapshot,
     // so net weights beyond ±1 cannot occur.
-    def zdiff(to: Option[DataFrame], from: Option[DataFrame]): Option[DataFrame] = {
+    def zdiff(after: Option[DataFrame], before: Option[DataFrame]): Option[DataFrame] = {
       def w(df: DataFrame, v: Int) = {
         val cols = sortedCols(df)
         df.select(cols: _*).withColumn("_weight", lit(v))
       }
-      val both = (to, from) match {
+      val both = (after, before) match {
         case (Some(t), Some(f)) =>
           val (t2, f2) = alignSchemas(t, f)
           Some(w(t2, 1).unionByName(w(f2, -1)))
@@ -3291,50 +3260,19 @@ object GraftTable {
     // delta-commit channel: new #delta lines' keys are candidates; the
     // endpoint-state compare reduces them to keys whose live image
     // actually changed, each side read bucket-pruned at its own version
-    val deltaFromRels = deltaEntries(path, fromVersion).map(_._1).toSet
-    val newDeltaRels = deltaEntries(path, toVersion).map(_._1).filterNot(deltaFromRels)
-    val deltaZ =
-      if (newDeltaRels.isEmpty) None
-      else {
-        val k = spark.read.parquet(newDeltaRels.map(r => s"$path/$r"): _*)
-          .select(keys.map(col): _*).distinct()
-        val kb = broadcast(k)
-        def keyState(ver: Int): DataFrame = {
-          val nb = bucketsAt(path, ver, defaultBuckets)
-          val bs = k.select(bucketCol(keys, nb).as(BUCKET))
-            .distinct().collect().map(_.getInt(0)).toSet
-          readBuckets(spark, path, ver, bs).join(kb, keys, "left_semi")
-        }
-        zdiff(Some(keyState(toVersion)), Some(keyState(fromVersion)))
-      }
+    val deltaZ = addedLogKeys(spark, keys, from.delta, to.delta, to.path).flatMap(k =>
+      zdiff(Some(keyRows(spark, to, keys, k)), Some(keyRows(spark, from, keys, k))))
     // deletion-vector channel: DV commits touch no dir, so their keys'
     // before-images surface here — live at fromVersion, gone at
     // toVersion (delete-then-reinsert reports through the + channels)
-    val dvFromRels = dvEntries(path, fromVersion).map(_._1).toSet
-    val newDvRels = dvEntries(path, toVersion).map(_._1).filterNot(dvFromRels)
-    val dvZ: Option[DataFrame] =
-      if (newDvRels.isEmpty) None
-      else {
-        val k = spark.read.parquet(newDvRels.map(r => s"$path/$r"): _*)
-          .select(keys.map(col): _*).distinct()
-        val kb = broadcast(k)
-        def keyBuckets(ver: Int): DataFrame = {
-          val nb = bucketsAt(path, ver, defaultBuckets)
-          val bs = k.select(bucketCol(keys, nb).as(BUCKET))
-            .distinct().collect().map(_.getInt(0)).toSet
-          readBuckets(spark, path, ver, bs)
-        }
-        val before = keyBuckets(fromVersion).join(kb, keys, "left_semi")
-        val still = keyBuckets(toVersion).join(kb, keys, "left_semi")
-          .select(keys.map(col): _*)
-        Some(before.join(still, keys, "left_anti").withColumn("_weight", lit(-1)))
-      }
+    val dvZ: Option[DataFrame] = addedLogKeys(spark, keys, from.dv, to.dv, to.path)
+      .map(k => dvGone(spark, from, to, keys, k).withColumn("_weight", lit(-1)))
     // one emission per (key, sign): a key reaching two channels (e.g.
     // delta-written, bucket rewritten later in the range) computed the
     // same endpoint images in both — dedup keeps one
     val parts = Seq(dirZ, deltaZ, dvZ).flatten
     if (parts.isEmpty) {
-      val snap = read(spark, path, toVersion)
+      val snap = read(spark, to)
       snap.select(sortedCols(snap): _*).limit(0)
         .withColumn("_weight", lit(1))
     } else {
@@ -3570,7 +3508,7 @@ object GraftTable {
       val target = base + k
       val text =
         if (MetaIO.exists(manifestPath(path, slot)))
-          Some(manifestText(path, slot))
+          Some(snapshot(path, slot).text)
         else None
       text match {
         case None =>
@@ -3581,7 +3519,7 @@ object GraftTable {
               "branchDrop and re-stage")
         case Some(t) =>
           if (MetaIO.exists(manifestPath(path, target)) &&
-              manifestText(path, target) != t)
+              snapshot(path, target).text != t)
             throw new IllegalStateException(
               s"publish '$name': main advanced past base v$base at $path " +
                 s"(v$target exists with different content) — fast-forward only; " +
@@ -3596,7 +3534,7 @@ object GraftTable {
     staged.foreach { case (_, target, text) =>
       text.foreach { t =>
         if (!MetaIO.putIfAbsent(manifestPath(path, target), t)) {
-          if (manifestText(path, target) != t)
+          if (snapshot(path, target).text != t)
             throw new IllegalStateException(
               s"publish '$name': a mainline writer raced into v$target at $path " +
                 s"mid-publish — commits before v$target ARE LIVE on main " +
@@ -3682,18 +3620,17 @@ object GraftTable {
   def fsck(spark: SparkSession, path: String, version: Int = -1): Seq[FsckRow] = {
     val head = latestVersion(path)
     require(head >= 0, s"no graft table at $path")
-    val v = if (version < 0) head else version
-    val text = manifestText(path, v) // throws loudly for unknown/vacuumed
+    val s = snapshot(path, if (version < 0) head else version) // loud for unknown/vacuumed
     val out = scala.collection.mutable.ArrayBuffer.empty[FsckRow]
     def row(check: String, checked: Long, bad: Seq[String]): Unit =
       out += FsckRow(check, bad.isEmpty, checked, bad.size.toLong,
         if (bad.isEmpty) None else Some(bad.take(3).mkString("; ")))
 
     // -- manifest structure + schema header --
-    val dirs = manifest(path, v)
+    val dirs = s.dirs
     row("manifest_parse", dirs.size.toLong, Seq.empty)
     row("schema_header", 1L,
-      if (snapshotSchema(path, v).isDefined) Seq.empty
+      if (s.schema.isDefined) Seq.empty
       else Seq("no #schema= header (legacy manifest; planning falls back to footer reads)"))
 
     // -- every referenced data dir exists --
@@ -3703,8 +3640,8 @@ object GraftTable {
 
     // -- every stats-recorded file exists with the recorded length --
     val dirSet = dirs.values.toSet
-    val logRels = (dvEntries(path, v) ++ deltaEntries(path, v)).map(_._1)
-    val stats = manifestFileStats(path, v).filter { case (rel, _) =>
+    val logRels = (s.dv ++ s.delta).map(_._1)
+    val stats = s.fileStats.filter { case (rel, _) =>
       val cut = rel.lastIndexOf('/')
       cut > 0 && dirSet(rel.substring(0, cut))
     }
@@ -3752,10 +3689,9 @@ object GraftTable {
     val keysBad = scala.util.Try {
       val (keyCols, n, _) = meta(path)
       require(keyCols.nonEmpty && n > 0, s"_keys: empty keys or buckets=$n")
-      val mb = manifestBuckets(path, v)
       // a rebucket changes the per-snapshot count; _keys keeps the
       // CREATE-time count — only a non-positive header is corruption
-      require(mb.forall(_ > 0), s"manifest #nbuckets=${mb.get} invalid")
+      require(s.nbuckets > 0, s"manifest #nbuckets=${s.nbuckets} invalid")
     }.failed.toOption.map(_.getMessage).toSeq
     row("sidecar_keys", 1L, keysBad)
     row("sidecar_constraints", 1L,
@@ -3787,7 +3723,7 @@ object GraftTable {
       val slotBad = scala.util.Try(branchCommits(path, name)).toOption match {
         case None => Seq(s"_branches/$name: commit records unreadable")
         case Some(cs) => cs.collect {
-          case (k, slot) if scala.util.Try(manifest(path, slot)).isFailure =>
+          case (k, slot) if scala.util.Try(snapshot(path, slot)).isFailure =>
             s"_branches/$name: c$k -> staged manifest v$slot missing/corrupt"
         }
       }
@@ -3818,11 +3754,7 @@ object GraftTable {
     // bucket lines, schema, and file stats all still describe those
     // (immutable) files. Legacy manifests without a #nbuckets header get
     // one prepended so writers on top of the restore bucket correctly.
-    val restored = manifestText(path, version)
-    val (_, defaultBuckets, _) = meta(path)
-    val lines =
-      if (restored.split("\n").exists(_.startsWith("#nbuckets="))) restored
-      else s"#nbuckets=${bucketsAt(path, version, defaultBuckets)}\n" + restored
+    val lines = snapshot(path, version).headedText
     if (!MetaIO.putIfAbsent(manifestPath(path, v + 1), lines))
       throw new java.util.ConcurrentModificationException(
         s"concurrent writer committed v${v + 1} first at $path; re-read and retry the restore")
@@ -3859,12 +3791,12 @@ object GraftTable {
       s"$src has no readable version $v (committed: ${commitVersions(src).mkString(", ")})")
     require(latestVersion(dst) < 0, s"a graft table already exists at $dst")
     require(new Path(src).toUri != new Path(dst).toUri, "clone onto itself")
-    val text = manifestText(src, v)
+    val snap = snapshot(src, v)
     // everything the snapshot references, as table-relative paths:
     // data dirs + MOR log dirs, plus the stats segments derived from
     // the dir names (the same derivation rule readers use)
-    val dirRels = manifest(src, v).values.toSeq.distinct
-    val logRels = (dvEntries(src, v) ++ deltaEntries(src, v)).map(_._1).distinct
+    val dirRels = snap.dirs.values.toSeq.distinct
+    val logRels = (snap.dv ++ snap.delta).map(_._1).distinct
     val segRels = dirRels.map(d => d.split("/")(1)).distinct
       .map(att => s"manifests/$att.stats")
       .filter(rel => MetaIO.exists(new Path(src, rel)))
@@ -3917,11 +3849,8 @@ object GraftTable {
     }
     // legacy manifests without a #nbuckets header get one prepended so
     // writers on top of the clone bucket correctly (restoreTo's rule)
-    val text0 =
-      if (text.split("\n").exists(_.startsWith("#nbuckets="))) text
-      else s"#nbuckets=${bucketsAt(src, v, meta(src)._2)}\n" + text
     // standard commit ordering: data (copied above) → manifest → marker
-    if (!MetaIO.putIfAbsent(manifestPath(dst, 0), text0))
+    if (!MetaIO.putIfAbsent(manifestPath(dst, 0), snap.headedText))
       throw new java.util.ConcurrentModificationException(
         s"concurrent cloner committed v0 first at $dst")
     MetaIO.replaceString(commitMarker(dst, 0), System.currentTimeMillis().toString)
@@ -3976,22 +3905,27 @@ object GraftTable {
     // tagged versions are RETAINED regardless of the keep window (the
     // Iceberg keep-tagged-snapshots rule) — a tag is the durable claim
     // "this snapshot must stay readable"; drop the tag to release it
-    val tagged = tags(path).map(_._2).filter(t => MetaIO.exists(manifestPath(path, t)))
+    val tagged = tags(path).map(_._2)
     // live branches pin their staged slots AND their base (the branch's
     // reads and its eventual publish both need them servable)
     val branchPinned = branches(path).flatMap { case (n, b, _) =>
       b +: branchCommits(path, n).map(_._2)
-    }.filter(s => MetaIO.exists(manifestPath(path, s)))
+    }
     val keep = ((math.max(0, v - keepVersions + 1) to v) ++ tagged ++ branchPinned)
       .distinct.sorted
-    val referenced = keep.flatMap(manifest(path, _).values).toSet
-    // every dir ANY surviving manifest file references (incl. those
-    // past the horizon): membership distinguishes expired-committed
-    // dirs (safe to drop now) from never-committed ones (grace-guarded)
-    val referencedAny = MetaIO.list(new Path(path, "manifests"))
+    // every surviving manifest file (incl. those past the horizon),
+    // each read once. A kept version without one (reclaimed by an
+    // earlier, narrower vacuum) has nothing left to keep
+    val allManifests = MetaIO.list(new Path(path, "manifests"))
       .map(_.getPath.getName)
       .collect { case VersionFile(n) => n.toInt }
-      .flatMap(m => manifest(path, m).values).toSet
+    val surviving = allManifests.map(n => n -> snapshot(path, n)).toMap
+    val kept = keep.flatMap(surviving.get)
+    val referenced = kept.flatMap(_.dirs.values).toSet
+    // every dir ANY surviving manifest file references: membership
+    // distinguishes expired-committed dirs (safe to drop now) from
+    // never-committed ones (grace-guarded)
+    val referencedAny = surviving.values.flatMap(_.dirs.values).toSet
     val now = System.currentTimeMillis()
     val actions = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     MetaIO.list(new Path(path, "data")).filter(_.isDirectory).foreach { vDir =>
@@ -4020,16 +3954,13 @@ object GraftTable {
     // one referenced by NO manifest is a racing MOR writer's in-flight
     // write (log parquet lands before its manifest) and gets the
     // orphan grace
-    val allManifests = MetaIO.list(new Path(path, "manifests"))
-      .map(_.getPath.getName)
-      .collect { case VersionFile(n) => n.toInt }
-    for ((sub, entriesOf) <- Seq(
-        "dv" -> (dvEntries _), "delta" -> (deltaEntries _))) {
-      val kept = keep.flatMap(entriesOf(path, _)).map(_._1).toSet
-      val any = allManifests.flatMap(m => entriesOf(path, m).map(_._1)).toSet
+    for ((sub, entriesOf) <- Seq[(String, Snapshot => Seq[(String, Int)])](
+        "dv" -> (_.dv), "delta" -> (_.delta))) {
+      val keptLog = kept.flatMap(entriesOf).map(_._1).toSet
+      val any = surviving.values.flatMap(entriesOf).map(_._1).toSet
       MetaIO.list(new Path(path, sub)).filter(_.isDirectory).foreach { d =>
         val rel = s"$sub/${d.getPath.getName}"
-        if (!kept(rel) &&
+        if (!keptLog(rel) &&
             (any(rel) || now - d.getModificationTime > orphanGraceMs)) {
           actions += (("log", rel))
           if (execute) MetaIO.delete(d.getPath)
@@ -4082,9 +4013,13 @@ object GraftTable {
     * the lakehouse formats use; the caller retries the upsert against
     * the new head.
     *
+    * `base` is the snapshot the write read under that protocol (None
+    * only for create's v0): its manifest lines carry over (the MOR log,
+    * the `#dropped=` ledger, legacy inline stats) with no second read.
+    *
     * Branch commits ([[branchUpsert]]/[[branchDeleteKeys]]) reuse this
-    * whole path with three twists: `base` names the snapshot the write
-    * merged against (a branch head SLOT, not v−1); `branchCommit =
+    * whole path with three twists: `base` is the branch head SLOT the
+    * write merged against, not v−1; `branchCommit =
     * Some((name, seq))` replaces the commit marker with a put-if-absent
     * on the branch's own commit-sequence record (the branch's OCC
     * lock — the staged manifest slot stays marker-less and therefore
@@ -4092,18 +4027,17 @@ object GraftTable {
     * data dir with the version the commit will HOLD after [[publish]]
     * renumbers it (base+seq), so the MOR log's version-scoping
     * arithmetic — which compares versions PARSED FROM DIR NAMES — reads
-    * identically before and after publish. Mainline callers pass none
-    * of the three and behave exactly as before.
+    * identically before and after publish. Mainline callers pass
+    * neither of the last two.
     */
   private def writeVersion(df: DataFrame, path: String, keyCols: Seq[String],
-                           nbuckets: Int, v: Int, carryOver: Map[Int, String],
+                           nbuckets: Int, v: Int, base: Option[Snapshot],
+                           carryOver: Map[Int, String],
                            sortWithin: Seq[String] = Nil, rangeSplit: Int = 1,
                            touched: Set[Int] = Set.empty,
                            recordSorted: Boolean = false,
-                           base: Int = -1,
                            branchCommit: Option[(String, Int)] = None,
                            dirVersion: Int = -1): Unit = {
-    val prevV = if (base >= 0) base else v - 1
     // unique per-attempt dir: racing writers must not share a data path
     val dirV = if (dirVersion >= 0) dirVersion else v
     val dataRel = s"data/v$dirV-${java.util.UUID.randomUUID.toString.take(8)}"
@@ -4140,8 +4074,8 @@ object GraftTable {
       df.sparkSession.sparkContext.defaultParallelism * 2, nbuckets)
     val maxRecs: Option[Long] =
       if (rangeSplit <= 1 || targetParts <= partCap) None
-      else scala.util.Try(statsProfile(path, prevV).map(_._1)).toOption
-        .flatten.filter(_ > 0)
+      else base.flatMap(b => scala.util.Try(statsProfile(b).map(_._1)).toOption.flatten)
+        .filter(_ > 0)
         .map(n => math.max(1L, (n + targetParts - 1) / targetParts))
     val prepared =
       if (sortWithin.isEmpty) bucketed
@@ -4184,10 +4118,7 @@ object GraftTable {
     // (no dir = no dir version to scope them away). Write an empty
     // tombstone dir instead: its version v marks every older log event
     // for that bucket as materialized-away.
-    lazy val prevManifestLines: Seq[String] =
-      if (prevV < 0) Nil
-      else scala.util.Try(manifestText(path, prevV).split("\n").toSeq).getOrElse(Nil)
-    if (prevManifestLines.exists(_.startsWith("#delta=")) && carryOver.nonEmpty) {
+    if (base.exists(_.delta.nonEmpty) && carryOver.nonEmpty) {
       (touched -- written.keySet).foreach { b =>
         prepared.drop(BUCKET).limit(0)
           .write.mode(SaveMode.Overwrite).parquet(s"$path/$dataRel/$BUCKET=$b")
@@ -4201,13 +4132,14 @@ object GraftTable {
     // manifest (no #schema) pays ONE footer pass here to upgrade.
     val newSchema = types.StructType(prepared.schema.fields.filterNot(_.name == BUCKET))
     val prevLines: Seq[String] =
-      if (carryOver.isEmpty) Nil
-      else scala.util.Try(manifestText(path, prevV).split("\n").toSeq).getOrElse(Nil)
+      if (carryOver.isEmpty) Nil else base.fold(Seq.empty[String])(_.lines)
+    // the previous DDL as recorded (not the all-nullable read schema),
+    // so the carried columns' recorded nullability survives
     val prevSchema: Option[types.StructType] =
       if (carryOver.isEmpty) None
       else prevLines.collectFirst { case l if l.startsWith("#schema=") =>
           types.StructType.fromDDL(dec(l.stripPrefix("#schema="))) }
-        .orElse(scala.util.Try(read(spark, path, prevV).schema).toOption)
+        .orElse(base.flatMap(b => scala.util.Try(read(spark, b).schema).toOption))
     val snapshotSc = prevSchema match {
       case Some(ps) =>
         types.StructType(ps.fields ++
@@ -4221,9 +4153,8 @@ object GraftTable {
     // manifest lands — carried files would serve their old values as
     // the "new" column's data
     val droppedLedgerLine = prevLines.filter(_.startsWith("#dropped="))
-    val retiredNames = droppedLedgerLine.headOption.map(l =>
-      dec(l.stripPrefix("#dropped=")).split(",").filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
+    val retiredNames =
+      if (carryOver.isEmpty) Set.empty[String] else base.fold(Set.empty[String])(_.dropped)
     val resurrected = prevSchema.fold(Set.empty[String])(ps =>
       newSchema.fieldNames.toSet -- ps.fieldNames.toSet).intersect(retiredNames)
     if (resurrected.nonEmpty)

@@ -47,42 +47,40 @@ private[graft] object IndexServing {
       .trigger(trigger)
       .start()
 
-  /** Bucket-pruned point lookup at the pinned `version`: the table rows
-    * of the serving-sized key frame `keys` (all `keyCols`, plus any
+  /** Bucket-pruned point lookup at the pinned snapshot `s`: the table
+    * rows of the serving-sized key frame `keys` (all `keyCols`, plus any
     * columns it carries) — n keys → ≤ n bucket reads, never a table
     * scan. The exact-rerank and payload substrate of both families.
     */
-  def pointLookup(spark: SparkSession, tablePath: String, version: Int,
+  def pointLookup(spark: SparkSession, s: GraftTable.Snapshot,
                   keyCols: Seq[String], keys: DataFrame): DataFrame = {
-    val (_, defaultBuckets, _) = GraftTable.meta(tablePath)
-    val nb = GraftTable.bucketsAt(tablePath, version, defaultBuckets)
     val buckets = keys
-      .select(GraftTable.bucketCol(keyCols, nb).as("__b"))
+      .select(GraftTable.bucketCol(keyCols, s.nbuckets).as("__b"))
       .distinct().collect().map(_.getInt(0)).toSet
-    GraftTable.readBuckets(spark, tablePath, version, buckets)
+    GraftTable.readBuckets(spark, s, buckets)
       .join(broadcast(keys), keyCols)
   }
 
   /** The frontier keys' float vectors (keyCols + `vecCol`) by one
     * [[pointLookup]] — the exact-rerank substrate.
     */
-  def exactVectors(spark: SparkSession, tablePath: String, version: Int,
+  def exactVectors(spark: SparkSession, s: GraftTable.Snapshot,
                    keyCols: Seq[String], vecCol: String, keys: DataFrame): DataFrame =
-    pointLookup(spark, tablePath, version, keyCols, keys)
+    pointLookup(spark, s, keyCols, keys)
       .select(keyCols.map(col) :+ col(vecCol): _*)
 
-  /** The filtered legs' match count at the pinned version — rows
+  /** The filtered legs' match count at the pinned snapshot — rows
     * passing `pred` that carry a vector — metadata-first through
     * [[GraftTable.metadataMatchCount]] (two-regime callers pass
     * acceptCap = bruteForceCap), and the match set itself, built on
     * first use: only the legs that scan it (and a count the metadata
     * could not decide) resolve the table relation.
     */
-  def matchSet(spark: SparkSession, tablePath: String, version: Int, vecCol: String,
+  def matchSet(spark: SparkSession, s: GraftTable.Snapshot, vecCol: String,
                pred: Column, bruteForceCap: Int, acceptCap: Int): (Long, () => DataFrame) = {
-    lazy val matched = GraftTable.read(spark, tablePath, version)
+    lazy val matched = GraftTable.read(spark, s)
       .filter(pred).filter(col(vecCol).isNotNull)
-    (GraftTable.metadataMatchCount(spark, tablePath, version, pred,
+    (GraftTable.metadataMatchCount(spark, s, pred,
       Seq(vecCol), bruteForceCap, acceptCap)(matched.count()), () => matched)
   }
 
@@ -108,15 +106,14 @@ private[graft] object IndexServing {
     tableCols.filterNot(_ == vecCol) :+ "score"
 
   /** The canonical single-query shape with zero rows. */
-  def emptyShape(spark: SparkSession, tablePath: String, version: Int,
-                 vecCol: String): DataFrame =
-    GraftTable.read(spark, tablePath, version).limit(0)
+  def emptyShape(spark: SparkSession, s: GraftTable.Snapshot, vecCol: String): DataFrame =
+    GraftTable.read(spark, s).limit(0)
       .withColumn("score", lit(0.0)).drop(vecCol)
 
   /** The batch output shape (qid, key…, score) with zero rows. */
-  def emptyBatch(spark: SparkSession, tablePath: String, version: Int,
+  def emptyBatch(spark: SparkSession, s: GraftTable.Snapshot,
                  keyCols: Seq[String]): DataFrame =
-    GraftTable.read(spark, tablePath, version).limit(0)
+    GraftTable.read(spark, s).limit(0)
       .select(lit(0L).as("qid") +: keyCols.map(col) :+ lit(0.0).as("score"): _*)
 
   /** The single-query exact cut: exact float score of `rows`' vector,
@@ -161,12 +158,12 @@ private[graft] object IndexServing {
     * keys `lookupKeys` by ONE point lookup that serves every query (the
     * pair set is serving-sized), then cut per query.
     */
-  def rerankBatch(spark: SparkSession, tablePath: String, version: Int,
+  def rerankBatch(spark: SparkSession, s: GraftTable.Snapshot,
                   keyCols: Seq[String], vecCol: String, queries: Seq[(Long, Seq[Float])],
                   pairs: DataFrame, lookupKeys: DataFrame, k: Int, metric: String)
       : DataFrame = {
     import spark.implicits._
-    batchCut(exactVectors(spark, tablePath, version, keyCols, vecCol, lookupKeys)
+    batchCut(exactVectors(spark, s, keyCols, vecCol, lookupKeys)
         .join(broadcast(pairs.join(queries.toDF("qid", "__qvec"), "qid")), keyCols),
       col(vecCol), IvfIndex.keyStruct(keyCols), keyCols, k, metric)
   }
@@ -177,10 +174,10 @@ private[graft] object IndexServing {
     * driver-side (inherently sequential — each pick depends on all
     * previous). Output: `rank` + the slice's columns + `mmr_score`.
     */
-  def mmr(spark: SparkSession, tablePath: String, version: Int, keyCols: Seq[String],
+  def mmr(spark: SparkSession, s: GraftTable.Snapshot, keyCols: Seq[String],
           vecCol: String, cand: DataFrame, k: Int, lambda: Double, metric: String)
       : DataFrame = {
-    val vecs = exactVectors(spark, tablePath, version, keyCols, vecCol,
+    val vecs = exactVectors(spark, s, keyCols, vecCol,
       cand.select(keyCols.map(col): _*).distinct())
     VectorSearch.mmrOverCandidates(cand, keyCols, vecs, vecCol, k, lambda, metric)
   }

@@ -96,8 +96,9 @@ object GraftProcedures {
     * without stats coverage — unknown, never a guess).
     */
   private def fileCount(path: String, v: Int): Long = {
-    val dirs = GraftTable.manifest(path, v).values.toSet
-    val st = GraftTable.manifestFileStats(path, v).keys
+    val snap = GraftTable.snapshot(path, v)
+    val dirs = snap.dirs.values.toSet
+    val st = snap.fileStats.keys
       .filter { rel => val c = rel.lastIndexOf('/'); c > 0 && dirs(rel.substring(0, c)) }
     if (dirs.nonEmpty && st.isEmpty) -1L else st.size.toLong
   }
@@ -365,20 +366,20 @@ object GraftProcedures {
     override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
       val path = tablePath(input)
       val pred = str(input, 1)
-      val v0 = reqInt(input, 2)
-      val v = if (v0 >= 0) v0 else GraftTable.latestVersion(path)
+      val snap = GraftTable.snapshotAt(path, reqInt(input, 2))
+      val v = snap.version
       val filters = org.apache.spark.sql.graftshim.Bridge.translateFilters(
-        GraftTable.read(spark, path, v),
+        GraftTable.read(spark, snap),
         org.apache.spark.sql.functions.expr(pred))
       if (filters.isEmpty) throw new IllegalArgumentException(
         s"predicate '$pred' has no pushable (DSv1 filter) form — " +
           "the scan cannot skip files on it, so there is nothing to report")
-      val keep = GraftTable.fileKeepPredicate(path, v, filters).getOrElse(
+      val keep = GraftTable.fileKeepPredicate(snap, filters).getOrElse(
         throw new IllegalStateException(
           s"$path v$v has no stats coverage — nothing can be skipped (legacy " +
             "snapshot; compact or re-commit to generate stats segments)"))
-      val dirs = GraftTable.manifest(path, v).values.toSeq
-      val stats = GraftTable.manifestFileStats(path, v).filter { case (rel, _) =>
+      val dirs = snap.dirs.values.toSeq
+      val stats = snap.fileStats.filter { case (rel, _) =>
         val cut = rel.lastIndexOf('/')
         cut > 0 && dirs.contains(rel.substring(0, cut))
       }
@@ -476,10 +477,9 @@ object GraftProcedures {
         "version = -1 reads head"
     override protected def run(spark: SparkSession, input: InternalRow): Array[InternalRow] = {
       val path = tablePath(input)
-      val v = if (reqInt(input, 1) >= 0) reqInt(input, 1)
-              else GraftTable.latestVersion(path)
-      val stats = GraftTable.manifestFileStats(path, v)
-      GraftTable.manifest(path, v).toSeq.sortBy(_._1).flatMap { case (b, dir) =>
+      val snap = GraftTable.snapshotAt(path, reqInt(input, 1))
+      val stats = snap.fileStats
+      snap.dirs.toSeq.sortBy(_._1).flatMap { case (b, dir) =>
         val covered = stats.collect {
           case (rel, st) if rel.startsWith(dir + "/") => (rel, st.rows, st.bytes)
         }.toSeq
@@ -721,7 +721,7 @@ object GraftProcedures {
       // MOR log: outstanding deltas/DVs → compact folds them (and any
       // declared time clustering re-engages on the same rewrite)
       val head = GraftTable.latestVersion(path)
-      val morDebt = GraftTable.deltaEntries(path, head).size
+      val morDebt = GraftTable.snapshot(path, head).delta.size
       if (morDebt > 0) {
         if (apply) GraftTable.compact(spark, path)
         row("compact", needed = true, applied = apply,

@@ -377,20 +377,23 @@ class GraftV2Table(val path: String, val pinned: Option[Int] = None)
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with SupportsMetadataColumns {
-  private[v2] val snapVersion = pinned.getOrElse(GraftTable.latestVersion(path))
+  /** The pinned (or head) snapshot, read once: the schema, the layout
+    * and every scan this table plans come from it.
+    */
+  private[v2] val snap: GraftTable.Snapshot =
+    GraftTable.snapshot(path, pinned.getOrElse(GraftTable.latestVersion(path)))
   private def refuseTimeTravelWrite(): Unit = pinned.foreach { v =>
     throw new UnsupportedOperationException(
       s"$path VERSION AS OF $v is a read-only historical snapshot — " +
         "writes/DML go to the head table (use restoreTo to make a version current)")
   }
   private[v2] val tableSchema: StructType =
-    GraftTable.snapshotSchema(path, snapVersion).getOrElse(
+    snap.schema.getOrElse(
       throw new IllegalStateException(
         s"$path: no recorded snapshot schema (legacy manifest) — " +
           "read via GraftTable.read, or commit once to upgrade"))
   private[v2] val keys: Seq[String] = GraftTable.keyColumns(path)
-  private[v2] val nbuckets: Int =
-    GraftTable.manifestBuckets(path, snapVersion).getOrElse(16)
+  private[v2] val nbuckets: Int = snap.nbuckets
 
   /** Bucket count REPORTED to Spark — `spark.sql.graft.spj.coalesceBuckets=m`
     * lets a table bucketed at a MULTIPLE of m present the m-bucket
@@ -431,7 +434,7 @@ class GraftV2Table(val path: String, val pinned: Option[Int] = None)
     val m = new util.HashMap[String, String]()
     m.put("keys", keys.mkString(","))
     m.put("buckets", nbuckets.toString)
-    m.put("version", snapVersion.toString)
+    m.put("version", snap.version.toString)
     pinned.foreach(v => m.put("pinned", v.toString))
     val cs = GraftTable.constraints(path)
     if (cs.nonEmpty) m.put("constraints", cs.keys.toSeq.sorted.mkString(","))
@@ -462,8 +465,7 @@ class GraftV2Table(val path: String, val pinned: Option[Int] = None)
       "data file the row was read from, relative to the table root"))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(path, snapVersion, tableSchema, keys, nbuckets,
-      reportedBuckets)
+    new GraftScanBuilder(snap, tableSchema, keys, nbuckets, reportedBuckets)
 
   /** `INSERT INTO graft.`path`` — V1Write fallback routing the batch
     * into the table's KEYED UPSERT (last-wins on the record key, the
@@ -543,7 +545,7 @@ object GraftV2Table {
   }
 }
 
-class GraftScanBuilder(path: String, version: Int, full: StructType,
+class GraftScanBuilder(snap: GraftTable.Snapshot, full: StructType,
                        keys: Seq[String], nbuckets: Int,
                        reportedBuckets: Int)
     extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -634,7 +636,7 @@ class GraftScanBuilder(path: String, version: Int, full: StructType,
     if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty) return None
     // any statsProfile decline (MOR log, legacy manifest, stat gaps) →
     // no pushdown; a throw (corrupt metadata) must never fail the query
-    val (rows, prof) = scala.util.Try(GraftTable.statsProfile(path, version))
+    val (rows, prof) = scala.util.Try(GraftTable.statsProfile(snap))
       .toOption.flatten.getOrElse(return None)
     def colName(e: V2Expr): Option[String] = e match {
       case nr: NamedReference if nr.fieldNames.length == 1 => Some(nr.fieldNames.head)
@@ -674,9 +676,9 @@ class GraftScanBuilder(path: String, version: Int, full: StructType,
   override def build(): Scan = pushedAgg match {
     case Some((schema, row)) =>
       GraftMetaAggScan(schema, row,
-        s"GraftMetaAggScan($path v$version: ${schema.fieldNames.mkString(", ")})")
+        s"GraftMetaAggScan(${snap.path} v${snap.version}: ${schema.fieldNames.mkString(", ")})")
     case None =>
-      new GraftScan(path, version, full, required, keys, nbuckets, pushed.toSeq,
+      new GraftScan(snap, full, required, keys, nbuckets, pushed.toSeq,
         reportedBuckets, limit, requestedMeta)
   }
 }
@@ -718,7 +720,7 @@ final case class GraftMetaAggScan(schema: StructType, row: InternalRow,
   override def description(): String = desc
 }
 
-class GraftScan(path: String, version: Int, dataSchema: StructType,
+class GraftScan(snap: GraftTable.Snapshot, dataSchema: StructType,
                 requiredSchema: StructType, keys: Seq[String], nbuckets: Int,
                 filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
                 reportedBuckets0: Int = -1,
@@ -727,6 +729,7 @@ class GraftScan(path: String, version: Int, dataSchema: StructType,
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsReportStatistics with SupportsRuntimeV2Filtering
     with SupportsReportOrdering {
+  private val (path, version) = (snap.path, snap.version)
   // -1 (direct construction in tests) = report the physical layout
   private val reportedBuckets =
     if (reportedBuckets0 > 0) reportedBuckets0 else nbuckets
@@ -764,14 +767,11 @@ class GraftScan(path: String, version: Int, dataSchema: StructType,
           columnStatsMap
       }
     val none = java.util.OptionalLong.empty()
-    if (GraftTable.dvEntries(path, version).nonEmpty ||
-        GraftTable.deltaEntries(path, version).nonEmpty)
-      return stat(none, none) // MOR log changes visibility: don't guess
-    val dirs = GraftTable.manifest(path, version)
-    if (dirs.isEmpty) return stat(java.util.OptionalLong.of(1L), java.util.OptionalLong.of(0L))
-    val st = GraftTable.manifestFileStats(path, version)
+    if (snap.hasLog) return stat(none, none) // MOR log changes visibility: don't guess
+    if (snap.dirs.isEmpty) return stat(java.util.OptionalLong.of(1L), java.util.OptionalLong.of(0L))
+    val st = snap.fileStats
     if (st.isEmpty) return stat(none, none) // legacy snapshot: no stats recorded
-    val keep = GraftTable.fileKeepPredicate(path, version, filters ++ runtimeFilters)
+    val keep = GraftTable.fileKeepPredicate(snap, filters ++ runtimeFilters)
       .getOrElse((_: String) => true)
     val kept = st.collect { case (f, s) if keep(f) => s }
     val rows = java.util.OptionalLong.of(kept.map(_.rows).sum)
@@ -815,9 +815,9 @@ class GraftScan(path: String, version: Int, dataSchema: StructType,
     */
   private lazy val pruningRemovesNothing: Boolean =
     (filters.isEmpty && runtimeFilters.isEmpty) || {
-      val st = GraftTable.manifestFileStats(path, version)
+      val st = snap.fileStats
       st.nonEmpty &&
-        GraftTable.fileKeepPredicate(path, version, filters ++ runtimeFilters)
+        GraftTable.fileKeepPredicate(snap, filters ++ runtimeFilters)
           .forall(keep => st.keys.forall(keep))
     }
   private lazy val columnStatsMap: java.util.Map[
@@ -828,7 +828,7 @@ class GraftScan(path: String, version: Int, dataSchema: StructType,
       org.apache.spark.sql.connector.expressions.NamedReference, ColumnStatistics]()
     val prof: Map[String, GraftTable.ColumnProfile] =
       if (!pruningRemovesNothing) Map.empty
-      else scala.util.Try(GraftTable.statsProfile(path, version)).toOption.flatten
+      else scala.util.Try(GraftTable.statsProfile(snap)).toOption.flatten
         .map(_._2).getOrElse(Map.empty)
     val ndv: Map[String, GraftTable.ColumnNdv] =
       if (!pruningRemovesNothing) Map.empty
@@ -975,10 +975,10 @@ class GraftScan(path: String, version: Int, dataSchema: StructType,
   private lazy val provablyOrdered: Boolean =
     reportedBuckets == nbuckets &&
       keys.forall(k => requiredSchema.fieldNames.contains(k)) &&
-      GraftTable.sortedBy(path, version).contains(keys) && {
-        val stats = GraftTable.manifestFileStats(path, version)
+      snap.sortedBy.contains(keys) && {
+        val stats = snap.fileStats
         val maxBytes = math.max(1L, Bridge.filesMaxPartitionBytes)
-        GraftTable.manifest(path, version).values.forall { d =>
+        snap.dirs.values.forall { d =>
           val sizes = stats.collect {
             case (f, st) if f.startsWith(d + "/") => st.bytes
           }.toSeq
@@ -996,17 +996,16 @@ class GraftScan(path: String, version: Int, dataSchema: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     // MOR log entries change row visibility beyond the bucket files —
     // refuse rather than silently return stale rows (loud-or-safe)
-    if (GraftTable.dvEntries(path, version).nonEmpty ||
-        GraftTable.deltaEntries(path, version).nonEmpty)
+    if (snap.hasLog)
       throw new IllegalStateException(
         s"$path has outstanding MOR log entries (deltas/deletion vectors): " +
           "the storage-partitioned scan reads bucket files directly and cannot " +
           "merge the log. GraftTable.compact(...) first, or read via GraftTable.read")
-    val dirs = GraftTable.manifest(path, version)
+    val dirs = snap.dirs
     // pushed + runtime filters skip whole files from the stats segments
     // alone — the same may-match metadata pruning the DSv1 paths use,
     // kept INSIDE the bucket structure (None = no stats, keep everything)
-    val keep = GraftTable.fileKeepPredicate(path, version, filters ++ runtimeFilters)
+    val keep = GraftTable.fileKeepPredicate(snap, filters ++ runtimeFilters)
       .getOrElse((_: String) => true)
     // Planning is METADATA-ONLY for stats-bearing snapshots: the
     // manifest's per-file stats lines name every (file, byte-length) in
@@ -1017,7 +1016,7 @@ class GraftScan(path: String, version: Int, dataSchema: StructType,
     // (legacy write, failed stats job, or pre-byte-length lines) falls
     // back to listing JUST that dir — never a wrong file list. Files
     // with zero rows carry no stats line and are correctly absent.
-    val stats = GraftTable.manifestFileStats(path, version)
+    val stats = snap.fileStats
     // EVERY reported bucket id gets a partition (possibly file-less),
     // so the two sides of a join always expose identical partition-
     // value sets. Coalesced layouts (reportedBuckets < nbuckets) merge

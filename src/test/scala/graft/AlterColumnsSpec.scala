@@ -40,12 +40,12 @@ class AlterColumnsSpec extends AnyFunSuite with Matchers {
   test("DROP COLUMN is metadata-only: same data dirs, column gone, time travel keeps it") {
     val path = freshTable()
     val v0 = GraftTable.latestVersion(path)
-    val dirsBefore = GraftTable.manifest(path, v0)
+    val dirsBefore = GraftTable.snapshot(path, v0).dirs
     GraftTable.dropColumns(spark, path, Seq("s"))
     val v1 = GraftTable.latestVersion(path)
     v1 shouldBe v0 + 1
     // zero data IO: the new manifest points at the SAME dirs
-    GraftTable.manifest(path, v1) shouldBe dirsBefore
+    GraftTable.snapshot(path, v1).dirs shouldBe dirsBefore
     GraftTable.read(spark, path).columns.toSeq shouldBe Seq("k", "v")
     // the bytes are still there for time travel
     GraftTable.read(spark, path, v0).columns.toSeq shouldBe Seq("k", "v", "s")
@@ -142,12 +142,12 @@ class AlterColumnsSpec extends AnyFunSuite with Matchers {
   test("RENAME COLUMN is a full rewrite with exact content under the new name") {
     val path = freshTable()
     val v0 = GraftTable.latestVersion(path)
-    val dirsBefore = GraftTable.manifest(path, v0).values.toSet
+    val dirsBefore = GraftTable.snapshot(path, v0).dirs.values.toSet
     GraftTable.renameColumn(spark, path, "s", "label")
     val v1 = GraftTable.latestVersion(path)
     v1 shouldBe v0 + 1
     // full COW rewrite: every dir is fresh
-    GraftTable.manifest(path, v1).values.toSet.intersect(dirsBefore) shouldBe Set.empty
+    GraftTable.snapshot(path, v1).dirs.values.toSet.intersect(dirsBefore) shouldBe Set.empty
     val got = GraftTable.read(spark, path)
     got.columns.toSeq shouldBe Seq("k", "v", "label")
     got.filter(col("label") === concat(lit("row"), col("k"))).count() shouldBe 200L

@@ -207,7 +207,7 @@ class BranchSpec extends AnyFunSuite with Matchers {
       Seq((900L, 9L, "staged")).toDF("k", "v", "s"))
     // vandalize a STAGED data file behind the table's back
     val slot = GraftTable.branchCommits(path, "gated").head._2
-    val dirs = GraftTable.manifest(path, slot).values.toSeq
+    val dirs = GraftTable.snapshot(path, slot).dirs.values.toSeq
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val victim = dirs.map(d => new org.apache.hadoop.fs.Path(s"$path/$d"))

@@ -59,8 +59,8 @@ class CloneSpec extends AnyFunSuite with Matchers {
     GraftTable.cloneTo(spark, src, s"$d/c")
     content(s"$d/c") shouldBe content(src)
     // the clone's manifest carries the log lines (not a folded rewrite)
-    GraftTable.deltaEntries(s"$d/c", 0) should not be empty
-    GraftTable.dvEntries(s"$d/c", 0) should not be empty
+    GraftTable.snapshot(s"$d/c", 0).delta should not be empty
+    GraftTable.snapshot(s"$d/c", 0).dv should not be empty
   }
 
   test("independence: source vacuum and clone DML never cross") {

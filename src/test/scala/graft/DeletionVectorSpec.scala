@@ -44,13 +44,13 @@ class DeletionVectorSpec extends AnyFunSuite with Matchers {
   test("deleteMor removes the keys without touching a single data file") {
     val path = freshTable("graft_dv_basic")
     val filesBefore = dataFiles(path)
-    val m0 = GraftTable.manifest(path, 0)
+    val m0 = GraftTable.snapshot(path, 0).dirs
     GraftTable.deleteMor(spark, path, Seq(5L, 500L, 995L).toDF("k"))
     GraftTable.latestVersion(path) shouldBe 1
     // zero rewrite: same bucket→dir lines, same physical files
-    GraftTable.manifest(path, 1) shouldBe m0
+    GraftTable.snapshot(path, 1).dirs shouldBe m0
     dataFiles(path) shouldBe filesBefore
-    GraftTable.dvEntries(path, 1).map(_._2) shouldBe Seq(1)
+    GraftTable.snapshot(path, 1).dv.map(_._2) shouldBe Seq(1)
     val snap = GraftTable.read(spark, path)
     snap.count() shouldBe 997L
     snap.filter(col("k").isin(5L, 500L, 995L)).count() shouldBe 0L
@@ -66,18 +66,18 @@ class DeletionVectorSpec extends AnyFunSuite with Matchers {
     snap.filter(col("k").isin(1L, 3L)).count() shouldBe 0L
     snap.count() shouldBe 998L
     // the carried DV still deletes 1 and 3 from their untouched buckets
-    GraftTable.dvEntries(path, GraftTable.latestVersion(path)) should not be empty
+    GraftTable.snapshot(path, GraftTable.latestVersion(path)).dv should not be empty
   }
 
   test("a bucket rewrite materializes its deletes; compact folds every DV away") {
     val path = freshTable("graft_dv_compact")
     GraftTable.deleteMor(spark, path, Seq(10L, 11L, 12L).toDF("k"))
     GraftTable.deleteMor(spark, path, Seq(13L).toDF("k"))
-    GraftTable.dvEntries(path, 2).map(_._2) shouldBe Seq(1, 2)
+    GraftTable.snapshot(path, 2).dv.map(_._2) shouldBe Seq(1, 2)
     val expected = GraftTable.read(spark, path).orderBy("k").collect()
     GraftTable.compact(spark, path)
     val v = GraftTable.latestVersion(path)
-    GraftTable.dvEntries(path, v) shouldBe empty
+    GraftTable.snapshot(path, v).dv shouldBe empty
     GraftTable.read(spark, path).orderBy("k").collect() shouldBe expected
     // and the metadata count path is back
     GraftTable.countRows(path) shouldBe Some(996L)
@@ -95,7 +95,7 @@ class DeletionVectorSpec extends AnyFunSuite with Matchers {
   test("point lookups and stats-pruned scans apply the DV") {
     val path = freshTable("graft_dv_lookup")
     GraftTable.deleteMor(spark, path, Seq(42L).toDF("k"))
-    val b = GraftTable.bucketFor(spark, path, 1, Map("k" -> 42L))
+    val b = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> 42L))
     GraftTable.readBuckets(spark, path, 1, Set(b))
       .filter(col("k") === 42L).count() shouldBe 0L
     // the DSv1 point-lookup path (full-key equality through format("graft"))
@@ -104,7 +104,7 @@ class DeletionVectorSpec extends AnyFunSuite with Matchers {
     rel.filter(col("k") === 41L).count() shouldBe 1L
     // the stats-pruned path (range predicate) excludes the deleted key too
     import org.apache.spark.sql.sources.LessThan
-    GraftTable.readStatsPruned(spark, path, 1, Seq(LessThan("k", 100L))) match {
+    GraftTable.readStatsPruned(spark, GraftTable.snapshotAt(path, 1), Seq(LessThan("k", 100L))) match {
       case Some(pruned) =>
         pruned.filter(col("k") < 100L).count() shouldBe 99L
       case None => // nothing skippable at this layout: the plain path covered it

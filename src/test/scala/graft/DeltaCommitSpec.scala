@@ -45,13 +45,13 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
   test("upsertMor updates and inserts without touching a single data file") {
     val path = freshTable("graft_dc_basic")
     val filesBefore = dataFiles(path)
-    val m0 = GraftTable.manifest(path, 0)
+    val m0 = GraftTable.snapshot(path, 0).dirs
     GraftTable.upsertMor(spark, path,
       Seq((5L, -5L, 0), (500L, -500L, 0), (2000L, -2000L, 0)).toDF("k", "x", "grp"))
     GraftTable.latestVersion(path) shouldBe 1
-    GraftTable.manifest(path, 1) shouldBe m0
+    GraftTable.snapshot(path, 1).dirs shouldBe m0
     dataFiles(path) shouldBe filesBefore
-    GraftTable.deltaEntries(path, 1).map(_._2) shouldBe Seq(1)
+    GraftTable.snapshot(path, 1).delta.map(_._2) shouldBe Seq(1)
     val snap = GraftTable.read(spark, path)
     snap.count() shouldBe 1001L // 2 updates + 1 brand-new key
     snap.filter(col("k").isin(5L, 500L, 2000L)).select("x").as[Long]
@@ -95,7 +95,7 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     snap.count() shouldBe 32L
     snap.filter(col("k") === 111L).select("x").as[Long].collect() shouldBe Array(333L)
     // point lookup of a log-only key in a dir-less bucket
-    val b = GraftTable.bucketFor(spark, path, 1, Map("k" -> 111L))
+    val b = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> 111L))
     GraftTable.readBuckets(spark, path, 1, Set(b))
       .filter(col("k") === 111L).count() shouldBe 1L
   }
@@ -110,7 +110,7 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     // materialized state exactly once (no duplicates, no stale rows)
     GraftTable.upsert(spark, path,
       Seq((3000L, 1L, 0)).toDF("k", "x", "grp"))
-    GraftTable.deltaEntries(path, 2) should not be empty
+    GraftTable.snapshot(path, 2).delta should not be empty
     val snap = GraftTable.read(spark, path)
     snap.count() shouldBe expected.length + 1L
     snap.filter(col("k") < 1000L).orderBy("k").collect() shouldBe expected
@@ -122,7 +122,7 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     // delete EVERY key of 500's bucket (stored and log alike): the
     // bucket comes out empty, and without a tombstone dir the carried
     // #delta line would resurrect key 500
-    val b = GraftTable.bucketFor(spark, path, 1, Map("k" -> 500L))
+    val b = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> 500L))
     val victims = GraftTable.readBuckets(spark, path, 1, Set(b)).select("k")
     GraftTable.delete(spark, path, victims)
     val snap = GraftTable.read(spark, path)
@@ -139,8 +139,8 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     val expected = GraftTable.read(spark, path).orderBy("k").collect()
     GraftTable.compact(spark, path)
     val v = GraftTable.latestVersion(path)
-    GraftTable.deltaEntries(path, v) shouldBe empty
-    GraftTable.dvEntries(path, v) shouldBe empty
+    GraftTable.snapshot(path, v).delta shouldBe empty
+    GraftTable.snapshot(path, v).dv shouldBe empty
     GraftTable.read(spark, path).orderBy("k").collect() shouldBe expected
     GraftTable.countRows(path) shouldBe Some(200L) // 200 - 1 deleted + 1 new
   }
@@ -151,7 +151,7 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     // rules it out, so candidate selection must add the delta's buckets
     GraftTable.upsertMor(spark, path, Seq((7L, 777777L, 7)).toDF("k", "x", "grp"))
     import org.apache.spark.sql.sources.EqualTo
-    GraftTable.readStatsPruned(spark, path, 1, Seq(EqualTo("x", 777777L))) match {
+    GraftTable.readStatsPruned(spark, GraftTable.snapshotAt(path, 1), Seq(EqualTo("x", 777777L))) match {
       case Some(pruned) => pruned.filter(col("x") === 777777L).count() shouldBe 1L
       case None => GraftTable.read(spark, path).filter(col("x") === 777777L).count() shouldBe 1L
     }
@@ -182,9 +182,9 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     GraftTable.upsertMor(spark, path, Seq((100L, -100L, 0)).toDF("k", "x", "grp")) // v1
     // v2 rewrites 100's bucket for an unrelated key: 100's image is
     // unchanged (log → materialized), so (1, 2] must report ONLY 37
-    val sameBucket = GraftTable.bucketFor(spark, path, 1, Map("k" -> 100L))
+    val sameBucket = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> 100L))
     val other = (0L until 40L).find(k =>
-      GraftTable.bucketFor(spark, path, 1, Map("k" -> k)) == sameBucket).get
+      GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> k)) == sameBucket).get
     GraftTable.upsert(spark, path, Seq((other, 5555L, 0)).toDF("k", "x", "grp")) // v2
     val ch = GraftTable.changes(spark, path, 1, 2)
     ch.filter(col("_deleted")).count() shouldBe 0L
@@ -300,7 +300,7 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     GraftTable.upsertMor(spark, path, Seq((301L, 1L, 0)).toDF("k", "x", "grp"))
     GraftTable.rebucket(spark, path, 8)
     val v = GraftTable.latestVersion(path)
-    GraftTable.deltaEntries(path, v) shouldBe empty
+    GraftTable.snapshot(path, v).delta shouldBe empty
     GraftTable.read(spark, path).count() shouldBe 62L
     GraftTable.read(spark, path).filter(col("k") === 301L).count() shouldBe 1L
   }

@@ -38,13 +38,13 @@ class GraftDmlSpec extends AnyFunSuite with Matchers {
 
   test("deleteWhere rewrites only buckets holding matches; the rest carry over") {
     val path = freshTable("graft_delw_cow")
-    val m0 = GraftTable.manifest(path, 0)
+    val m0 = GraftTable.snapshot(path, 0).dirs
     // three specific keys → at most three buckets hold matches
     val victims = Seq(7L, 400L, 901L)
     val matchBuckets = victims
-      .map(k => GraftTable.bucketFor(spark, path, 0, Map("k" -> k))).toSet
+      .map(k => GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 0), Map("k" -> k))).toSet
     GraftTable.deleteWhere(spark, path, col("k").isin(victims: _*)) shouldBe 3L
-    val m1 = GraftTable.manifest(path, 1)
+    val m1 = GraftTable.snapshot(path, 1).dirs
     val changed = m1.filter { case (b, d) => m0(b) != d }
     changed.keySet shouldBe matchBuckets
     (m1 -- changed.keys) shouldBe (m0 -- changed.keys)
@@ -92,10 +92,10 @@ class GraftDmlSpec extends AnyFunSuite with Matchers {
 
   test("update rewrites only buckets holding matches; zero matches commits nothing") {
     val path = freshTable("graft_upd_cow")
-    val m0 = GraftTable.manifest(path, 0)
-    val b42 = GraftTable.bucketFor(spark, path, 0, Map("k" -> 42L))
+    val m0 = GraftTable.snapshot(path, 0).dirs
+    val b42 = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 0), Map("k" -> 42L))
     GraftTable.update(spark, path, col("k") === 42L, Map("x" -> lit(-1L))) shouldBe 1L
-    val m1 = GraftTable.manifest(path, 1)
+    val m1 = GraftTable.snapshot(path, 1).dirs
     m1.filter { case (b, d) => m0(b) != d }.keySet shouldBe Set(b42)
     GraftTable.update(spark, path, col("k") === -99L, Map("x" -> lit(0L))) shouldBe 0L
     GraftTable.latestVersion(path) shouldBe 1
@@ -141,7 +141,7 @@ class GraftDmlSpec extends AnyFunSuite with Matchers {
 
   test("mergeInto applies the clauses through touched-bucket COW") {
     val path = freshTable("graft_merge", n = 500, nbuckets = 8)
-    val m0 = GraftTable.manifest(path, 0)
+    val m0 = GraftTable.snapshot(path, 0).dirs
     // sources: update k=10 (x := 1000), delete k=11, insert k=5000
     val source = Seq((10L, 1000L, false), (11L, 0L, true), (5000L, 42L, false))
       .toDF("k", "nx", "del")
@@ -157,8 +157,8 @@ class GraftDmlSpec extends AnyFunSuite with Matchers {
     t.filter(col("k") === 5000L).head().getLong(1) shouldBe 42L
     // COW minimality: only the source keys' buckets were rewritten
     val touched = Seq(10L, 11L, 5000L)
-      .map(k => GraftTable.bucketFor(spark, path, 0, Map("k" -> k))).toSet
-    val m1 = GraftTable.manifest(path, 1)
+      .map(k => GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 0), Map("k" -> k))).toSet
+    val m1 = GraftTable.snapshot(path, 1).dirs
     m1.filter { case (b, d) => m0.get(b).contains(d) }.keySet shouldBe
       m0.keySet.filterNot(touched)
   }

@@ -38,13 +38,13 @@ class GraftProceduresSpec extends AnyFunSuite with Matchers {
     val root = mkTable()
     GraftTable.upsertMor(spark, root,
       spark.range(450, 550).toDF("k").withColumn("x", lit(-1L)))
-    GraftTable.deltaEntries(root, GraftTable.latestVersion(root)) should not be empty
+    GraftTable.snapshot(root, GraftTable.latestVersion(root)).delta should not be empty
     withCatalog {
       val r = spark.sql(s"CALL graft.compact('$root')").collect().head
       val (v0, v1) = (r.getInt(0), r.getInt(1))
       v1 shouldBe v0 + 1
       r.getLong(3) should be > 0L // files_after
-      GraftTable.deltaEntries(root, v1) shouldBe empty
+      GraftTable.snapshot(root, v1).delta shouldBe empty
       // the compacted snapshot reads identically through the v2 path
       spark.table(s"graft.`$root`").count() shouldBe 550L
       GraftTable.read(spark, root).filter(col("x") === -1L).count() shouldBe 100L
@@ -94,7 +94,7 @@ class GraftProceduresSpec extends AnyFunSuite with Matchers {
     withCatalog {
       val r = spark.sql(s"CALL graft.rebucket('$root', 8)").collect().head
       r.getInt(1) shouldBe 8
-      GraftTable.manifestBuckets(root, r.getInt(0)) shouldBe Some(8)
+      GraftTable.snapshot(root, r.getInt(0)).nbuckets shouldBe 8
       GraftTable.read(spark, root).count() shouldBe 500L
     }
   }
@@ -509,14 +509,14 @@ class GraftProceduresSpec extends AnyFunSuite with Matchers {
         .map(r => r.getString(0) -> (r.getBoolean(1), r.getBoolean(2))).toMap
       dry("compact") shouldBe ((true, false))
       dry("text_index_refresh") shouldBe ((true, false))
-      GraftTable.deltaEntries(root, GraftTable.latestVersion(root)) should not be empty
+      GraftTable.snapshot(root, GraftTable.latestVersion(root)).delta should not be empty
       // apply: MOR log folded, index refreshed; vacuum only recommended
       val ran = spark.sql(s"CALL graft.maintain('$root', true)").collect()
         .map(r => r.getString(0) -> (r.getBoolean(1), r.getBoolean(2))).toMap
       ran("compact") shouldBe ((true, true))
       ran("text_index_refresh") shouldBe ((true, true))
       ran("vacuum")._2 shouldBe false
-      GraftTable.deltaEntries(root, GraftTable.latestVersion(root)) shouldBe empty
+      GraftTable.snapshot(root, GraftTable.latestVersion(root)).delta shouldBe empty
       graft.sources.TextIndex.meta(root).indexedVersion shouldBe
         GraftTable.latestVersion(root)
       // second apply: clean again (idempotent fixed point)
@@ -565,9 +565,9 @@ class GraftProceduresSpec extends AnyFunSuite with Matchers {
       (r.getLong(4) >= r.getLong(5)) shouldBe true
       // the report equals the read path's own pruning
       val filters = Seq(org.apache.spark.sql.sources.EqualTo("k", 7L))
-      val keep = GraftTable.fileKeepPredicate(root, GraftTable.latestVersion(root), filters).get
-      val dirs = GraftTable.manifest(root, GraftTable.latestVersion(root)).values.toSeq
-      val stats = GraftTable.manifestFileStats(root, GraftTable.latestVersion(root))
+      val keep = GraftTable.fileKeepPredicate(GraftTable.snapshot(root, GraftTable.latestVersion(root)), filters).get
+      val dirs = GraftTable.snapshot(root, GraftTable.latestVersion(root)).dirs.values.toSeq
+      val stats = GraftTable.snapshot(root, GraftTable.latestVersion(root)).fileStats
         .filter { case (rel, _) =>
           val cut = rel.lastIndexOf('/')
           cut > 0 && dirs.contains(rel.substring(0, cut))
@@ -606,7 +606,7 @@ class GraftProceduresSpec extends AnyFunSuite with Matchers {
   test("fsck reports a data file deleted behind the table's back") {
     val root = mkTable()
     val v = GraftTable.latestVersion(root)
-    val rel = GraftTable.manifestFileStats(root, v).keys.toSeq.sorted.head
+    val rel = GraftTable.snapshot(root, v).fileStats.keys.toSeq.sorted.head
     new java.io.File(s"$root/$rel").delete() shouldBe true
     val bad = GraftTable.fsck(spark, root).find(_.check == "data_files").get
     bad.ok shouldBe false
@@ -618,7 +618,7 @@ class GraftProceduresSpec extends AnyFunSuite with Matchers {
   test("fsck reports a length mismatch (silent truncation/corruption)") {
     val root = mkTable()
     val v = GraftTable.latestVersion(root)
-    val rel = GraftTable.manifestFileStats(root, v).keys.toSeq.sorted.head
+    val rel = GraftTable.snapshot(root, v).fileStats.keys.toSeq.sorted.head
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/$rel"),
       Array[Byte](1, 2, 3))
     val bad = GraftTable.fsck(spark, root).find(_.check == "data_files").get

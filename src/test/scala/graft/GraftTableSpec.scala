@@ -38,13 +38,13 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     val path = Files.createTempDirectory("graft_cow").toString + "/t"
     val base = spark.range(0, 1000).toDF("k").withColumn("x", col("k") * 2)
     GraftTable.create(base, path, Seq("k"), nbuckets = 16)
-    val m0 = GraftTable.manifest(path, 0)
+    val m0 = GraftTable.snapshot(path, 0).dirs
     m0.size shouldBe 16
 
     // one updated key → exactly one touched bucket
     val up = Seq((7L, -1L)).toDF("k", "x")
     GraftTable.upsert(spark, path, up)
-    val m1 = GraftTable.manifest(path, 1)
+    val m1 = GraftTable.snapshot(path, 1).dirs
     val changed = m1.filter { case (b, d) => m0(b) != d }
     changed.size shouldBe 1
     changed.keys.foreach(b => m1(b) should startWith("data/v1-"))
@@ -70,7 +70,7 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     live.count() shouldBe 200L
     live.filter(col("k") === 2).head().getLong(1) shouldBe -2L
     // only dirs referenced by the surviving manifest remain on disk
-    val referenced = GraftTable.manifest(path, 3).values.toSet
+    val referenced = GraftTable.snapshot(path, 3).dirs.values.toSet
     val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(path, "data"))
       .filter(p => p.getFileName.toString.startsWith("__bucket="))
       .map[String](p => java.nio.file.Paths.get(path).relativize(p).toString)
@@ -79,6 +79,11 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     // time travel past the horizon is gone
     an[Exception] should be thrownBy
       GraftTable.read(spark, path, version = 0).collect()
+    // a wider keep window after a narrower vacuum keeps what survives
+    // (versions 1 and 2 are already gone) instead of refusing
+    GraftTable.vacuumPlan(path, keepVersions = 3) shouldBe empty
+    GraftTable.vacuum(path, keepVersions = 3)
+    GraftTable.read(spark, path).count() shouldBe 200L
   }
 
   test("reads, restores, and time travel past the vacuum horizon fail with a clear error") {
@@ -118,7 +123,7 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     GraftTable.vacuum(path, keepVersions = 1) // default 24h grace
     // the racing writer's fresh dir survives; the expired committed v0 dir is gone
     java.nio.file.Files.exists(inflight) shouldBe true
-    GraftTable.manifest(path, 1).values.foreach { d =>
+    GraftTable.snapshot(path, 1).dirs.values.foreach { d =>
       java.nio.file.Files.exists(java.nio.file.Paths.get(path, d)) shouldBe true
     }
     an[Exception] should be thrownBy GraftTable.read(spark, path, version = 0).collect()
@@ -141,7 +146,7 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     after shouldBe before
     // every bucket dir of the compacted version holds exactly one data file
-    GraftTable.manifest(path, GraftTable.latestVersion(path)).values.foreach { d =>
+    GraftTable.snapshot(path, GraftTable.latestVersion(path)).dirs.values.foreach { d =>
       val files = java.nio.file.Files.list(java.nio.file.Paths.get(path, d))
       try files.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")) shouldBe 1
       finally files.close()
@@ -176,7 +181,7 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
       (0 until 16).map(i => (((a >> i) & 1L) << (2 * i)) | (((b >> i) & 1L) << (2 * i + 1)))
         .reduce(_ | _)
     val vNow = GraftTable.latestVersion(path)
-    GraftTable.manifest(path, vNow).values.foreach { d =>
+    GraftTable.snapshot(path, vNow).dirs.values.foreach { d =>
       val files = java.nio.file.Files.list(java.nio.file.Paths.get(path, d))
       val parquets =
         try files.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
@@ -198,15 +203,15 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     GraftTable.rebucket(spark, path, 16)
     // content identical, new manifest pins the new count
     GraftTable.read(spark, path).count() shouldBe 200
-    GraftTable.manifestBuckets(path, 1) shouldBe Some(16)
-    GraftTable.manifest(path, 1).size should be > 4
+    GraftTable.snapshot(path, 1).nbuckets shouldBe 16
+    GraftTable.snapshot(path, 1).dirs.size should be > 4
     // a pure layout rewrite is NOT a data change
     GraftTable.changes(spark, path, 0, 1).count() shouldBe 0
 
     // an upsert after the rebucket buckets by 16: one key touches ONE dir
     GraftTable.upsert(spark, path, Seq((7L, -7L)).toDF("k", "x"))
-    val m1 = GraftTable.manifest(path, 1)
-    val m2 = GraftTable.manifest(path, 2)
+    val m1 = GraftTable.snapshot(path, 1).dirs
+    val m2 = GraftTable.snapshot(path, 2).dirs
     m2.count { case (b, d) => !m1.get(b).contains(d) } shouldBe 1
     GraftTable.read(spark, path).filter(col("k") === 7).head().getLong(1) shouldBe -7L
     GraftTable.read(spark, path).count() shouldBe 200
@@ -364,7 +369,7 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     val path = Files.createTempDirectory("graft_del").toString + "/t"
     val base = spark.range(0, 100).toDF("k").withColumn("x", col("k") * 2)
     GraftTable.create(base, path, Seq("k"), nbuckets = 8)
-    val m0 = GraftTable.manifest(path, 0)
+    val m0 = GraftTable.snapshot(path, 0).dirs
 
     GraftTable.delete(spark, path, Seq(7L, 13L).toDF("k"))
     GraftTable.latestVersion(path) shouldBe 1
@@ -372,7 +377,7 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     live.count() shouldBe 98L
     live.filter(col("k").isin(7L, 13L)).count() shouldBe 0L
     // COW held: at most the two buckets the keys hash into were rewritten
-    val m1 = GraftTable.manifest(path, 1)
+    val m1 = GraftTable.snapshot(path, 1).dirs
     (m0.keySet ++ m1.keySet).count(b => m0.get(b) != m1.get(b)) should be <= 2
     // CDC: removals surface as _deleted=true carrying the last stored image
     val ch = GraftTable.changes(spark, path, 0, 1)
@@ -424,7 +429,7 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     // head == v0 content, via a pure manifest copy (nothing rewritten)
     GraftTable.read(spark, path).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getInt(1))) shouldBe Array((1L, 1), (2L, 2))
-    GraftTable.manifest(path, 3) shouldBe GraftTable.manifest(path, 0)
+    GraftTable.snapshot(path, 3).dirs shouldBe GraftTable.snapshot(path, 0).dirs
     // the rolled-back history is still time-travelable
     GraftTable.read(spark, path, version = 2).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getInt(1))) shouldBe Array((2L, 22), (3L, 3))

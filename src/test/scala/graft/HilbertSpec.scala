@@ -80,7 +80,7 @@ class HilbertSpec extends AnyFunSuite with Matchers {
     }
     def spanStats(path: String, c: String): Seq[Long] = {
       val v = GraftTable.latestVersion(path)
-      GraftTable.manifestFileStats(path, v).values.toSeq
+      GraftTable.snapshot(path, v).fileStats.values.toSeq
         .flatMap(st => st.cols.get(c))
         .map(p => p.max.get.toLong - p.min.get.toLong).sorted
     }
@@ -89,11 +89,11 @@ class HilbertSpec extends AnyFunSuite with Matchers {
     Seq(hp, zp).foreach { p =>
       val v = GraftTable.latestVersion(p)
       Seq("x", "y", "z").foreach { c =>
-        val Some((_, kept, total)) = GraftTable.prunedDataPaths(p, v, Seq(LessThan(c, 64)))
+        val Some((_, kept, total)) = GraftTable.prunedDataPaths(GraftTable.snapshot(p, v), Seq(LessThan(c, 64)))
         withClue(s"$p $c: $kept/$total") { kept should be < total }
       }
       // pruned read == full read
-      val pruned = GraftTable.readStatsPruned(spark, p, v, Seq(LessThan("x", 64))).get
+      val pruned = GraftTable.readStatsPruned(spark, GraftTable.snapshotAt(p, v), Seq(LessThan("x", 64))).get
       pruned.filter(col("x") < 64).agg(sum("k")).collect() shouldBe
         GraftTable.read(spark, p, v).filter(col("x") < 64).agg(sum("k")).collect()
     }

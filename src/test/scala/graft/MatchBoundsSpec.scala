@@ -113,13 +113,13 @@ class MatchBoundsSpec extends AnyFunSuite with Matchers {
         sum(when(p, 1L).otherwise(0L)) }: _*)
       .head().toSeq.map(x => if (x == null) 0L else x.asInstanceOf[Long])
     val rows = exact.head
-    val sc = GraftTable.snapshotSchema(path, v).get
+    val sc = GraftTable.snapshot(path, v).schema.get
     var decided = 0
     ps.zip(exact.tail).foreach { case ((what, p), n) =>
       val (filters, complete) = org.apache.spark.sql.graftshim.Bridge
         .translateFiltersWithCompleteness(
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sc), p)
-      val (lo, hi) = GraftTable.matchBounds(path, v, filters, complete, Seq("v"))
+      val (lo, hi) = GraftTable.matchBounds(GraftTable.snapshot(path, v), filters, complete, Seq("v"))
       withClue(s"[$what] exact $n, bounds ($lo, $hi): ") {
         // a pred the optimizer folds away leaves no filter to bound
         if (expectBounds && filters.nonEmpty) hi should not be empty
@@ -131,7 +131,7 @@ class MatchBoundsSpec extends AnyFunSuite with Matchers {
         .map { case (b, a) => (math.max(0L, b), math.max(math.max(0L, b), a)) }
       caps.foreach { case (brute, accept) =>
         var counted = false
-        val got = GraftTable.metadataMatchCount(spark, path, v, p, Seq("v"),
+        val got = GraftTable.metadataMatchCount(spark, GraftTable.snapshot(path, v), p, Seq("v"),
           brute, accept) { counted = true; n }
         if (!counted) decided += 1
         withClue(s"[$what] caps ($brute, $accept), exact $n, metadata said $got: ") {
@@ -153,7 +153,7 @@ class MatchBoundsSpec extends AnyFunSuite with Matchers {
 
   test("metadata legs == counted legs on a COW table, with lo <= count <= hi") {
     val path = table()
-    val stats = GraftTable.manifestFileStats(path, GraftTable.latestVersion(path))
+    val stats = GraftTable.snapshot(path, GraftTable.latestVersion(path)).fileStats
     // the counts are recorded: listed columns, and bins for the numerics
     stats.values.forall(_.cols("i").counts.exists(_.list.isDefined)) shouldBe true
     stats.values.exists(_.cols("l").counts.exists(_.bins.isDefined)) shouldBe true
@@ -171,7 +171,7 @@ class MatchBoundsSpec extends AnyFunSuite with Matchers {
     val path =
       try table()
       finally tiny.foreach { case (k, _) => spark.conf.unset(k) }
-    val files = GraftTable.manifestFileStats(path, GraftTable.latestVersion(path)).keys
+    val files = GraftTable.snapshot(path, GraftTable.latestVersion(path)).fileStats.keys
     val groups = files.map { rel =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(s"$path/$rel"), spark.sparkContext.hadoopConfiguration)

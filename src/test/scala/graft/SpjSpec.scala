@@ -118,9 +118,9 @@ class SpjSpec extends AnyFunSuite with Matchers {
       got.length shouldBe 500
       // unit-level: the scan plans FEWER files under the pushed filter
       val v = GraftTable.latestVersion(a)
-      val sc = GraftTable.snapshotSchema(a, v).get
+      val sc = GraftTable.snapshot(a, v).schema.get
       def filesPlanned(fs: Seq[org.apache.spark.sql.sources.Filter]): Int =
-        new graft.sources.v2.GraftScan(a, v, sc, sc, Seq("k"), 2, fs)
+        new graft.sources.v2.GraftScan(GraftTable.snapshot(a, v), sc, sc, Seq("k"), 2, fs)
           .planInputPartitions()
           .map(_.asInstanceOf[graft.sources.v2.GraftInputPartition].files.length).sum
       val all = filesPlanned(Nil)
@@ -247,18 +247,18 @@ class SpjSpec extends AnyFunSuite with Matchers {
       a, Seq("k"), nbuckets = 4)
     val v = GraftTable.latestVersion(a)
     val schema = GraftTable.read(spark, a).schema
-    val full = new graft.sources.v2.GraftScan(a, v, schema, schema, Seq("k"), 4)
+    val full = new graft.sources.v2.GraftScan(GraftTable.snapshot(a, v), schema, schema, Seq("k"), 4)
     val st = full.estimateStatistics()
     st.numRows.getAsLong shouldBe 5000L
     st.sizeInBytes.isPresent shouldBe true
     st.sizeInBytes.getAsLong should be > 0L
     // a pushed filter excluding every file must shrink the estimate to
     // zero rows through the same may-match pruning the scan itself uses
-    val none = new graft.sources.v2.GraftScan(a, v, schema, schema, Seq("k"), 4,
+    val none = new graft.sources.v2.GraftScan(GraftTable.snapshot(a, v), schema, schema, Seq("k"), 4,
       filters = Seq(org.apache.spark.sql.sources.GreaterThan("k", 999999L)))
     none.estimateStatistics().numRows.getAsLong shouldBe 0L
     // column pruning prices the projected fraction, not the full row
-    val pruned = new graft.sources.v2.GraftScan(a, v, schema,
+    val pruned = new graft.sources.v2.GraftScan(GraftTable.snapshot(a, v), schema,
       org.apache.spark.sql.types.StructType(schema.fields.filter(_.name == "k")),
       Seq("k"), 4)
     pruned.estimateStatistics().sizeInBytes.getAsLong should be <
@@ -297,7 +297,7 @@ class SpjSpec extends AnyFunSuite with Matchers {
       a, Seq("k"), nbuckets = 8)
     val v = GraftTable.latestVersion(a)
     val schema = GraftTable.read(spark, a).schema
-    val scan = new graft.sources.v2.GraftScan(a, v, schema, schema, Seq("k"), 8)
+    val scan = new graft.sources.v2.GraftScan(GraftTable.snapshot(a, v), schema, schema, Seq("k"), 8)
     val all = scan.planInputPartitions()
     all.length shouldBe 8
     all.forall(_.asInstanceOf[graft.sources.v2.GraftInputPartition].files.nonEmpty) shouldBe true
@@ -325,7 +325,7 @@ class SpjSpec extends AnyFunSuite with Matchers {
       a, Seq("k"), nbuckets = 2)
     val v = GraftTable.latestVersion(a)
     val schema = GraftTable.read(spark, a).schema
-    val scan = new graft.sources.v2.GraftScan(a, v, schema, schema, Seq("k"), 2)
+    val scan = new graft.sources.v2.GraftScan(GraftTable.snapshot(a, v), schema, schema, Seq("k"), 2)
     val natural = scan.planInputPartitions()
     // force splitting: a tiny maxPartitionBytes must break each bucket
     // file into many byte-range chunks, every chunk keyed by its bucket
@@ -333,7 +333,7 @@ class SpjSpec extends AnyFunSuite with Matchers {
     val prev = spark.conf.get(kMax)
     spark.conf.set(kMax, (64 * 1024).toString)
     try {
-      val scan2 = new graft.sources.v2.GraftScan(a, v, schema, schema, Seq("k"), 2)
+      val scan2 = new graft.sources.v2.GraftScan(GraftTable.snapshot(a, v), schema, schema, Seq("k"), 2)
       val chunked = scan2.planInputPartitions()
       chunked.length should be > natural.length
       chunked.length should be > 2
@@ -465,8 +465,8 @@ class SpjSpec extends AnyFunSuite with Matchers {
     // the key-sorted full rewrite records #sorted=k in both manifests
     GraftTable.compact(spark, a)
     GraftTable.compact(spark, b)
-    GraftTable.sortedBy(a, 1) shouldBe Some(Seq("k"))
-    GraftTable.sortedBy(b, 1) shouldBe Some(Seq("k"))
+    GraftTable.snapshot(a, 1).sortedBy shouldBe Some(Seq("k"))
+    GraftTable.snapshot(b, 1).sortedBy shouldBe Some(Seq("k"))
     withSpjConf {
       val joined = spark.table(s"graft.`$a`")
         .join(spark.table(s"graft.`$b`"), "k")
@@ -487,7 +487,7 @@ class SpjSpec extends AnyFunSuite with Matchers {
     // an upsert lapses the claim — the next join sorts again, correctly
     GraftTable.upsert(spark, a,
       spark.range(1000, 1010).toDF("k").withColumn("x", lit(-1L)))
-    GraftTable.sortedBy(a, 2) shouldBe None
+    GraftTable.snapshot(a, 2).sortedBy shouldBe None
     withSpjConf {
       val joined2 = spark.table(s"graft.`$a`")
         .join(spark.table(s"graft.`$b`"), "k")

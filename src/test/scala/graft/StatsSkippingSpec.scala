@@ -39,12 +39,12 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     // the post-enable write carries blooms for every rewritten file
     GraftTable.upsert(spark, path, df(4096))
     val v = GraftTable.latestVersion(path)
-    val stats = GraftTable.manifestFileStats(path, v)
+    val stats = GraftTable.snapshot(path, v).fileStats
     stats.values.foreach(_.blooms.keySet shouldBe Set("tag"))
     // a value present in exactly one bucket's files: bloom prunes to
     // (about) that bucket; min/max alone provably cannot prune here
     val present = "tag-0007" // k = (7 * 7919^-1) mod 2000 … exists by construction
-    val Some((_, kept, total)) = GraftTable.prunedDataPaths(path, v,
+    val Some((_, kept, total)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v),
       Seq(org.apache.spark.sql.sources.EqualTo("tag", present)))
     total shouldBe 8
     kept should be < total
@@ -52,7 +52,7 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     val full = GraftTable.read(spark, path, v).filter(col("tag") === present)
       .select("k").as[Long].collect().sorted
     full should not be empty
-    GraftTable.readStatsPruned(spark, path, v,
+    GraftTable.readStatsPruned(spark, GraftTable.snapshotAt(path, v),
         Seq(org.apache.spark.sql.sources.EqualTo("tag", present))) match {
       case Some(pruned) =>
         pruned.filter(col("tag") === present)
@@ -62,12 +62,12 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     // an absent value: provable absence everywhere (fpp 0.001 over 8
     // files — deterministic for fixed data; a false positive would
     // only keep a file, never break correctness)
-    val Some((_, keptAbs, _)) = GraftTable.prunedDataPaths(path, v,
+    val Some((_, keptAbs, _)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v),
       Seq(org.apache.spark.sql.sources.EqualTo("tag", "tag-9999")))
     keptAbs should be <= 1
     GraftTable.read(spark, path, v).filter(col("tag") === "tag-9999").count() shouldBe 0L
     // non-bloom column equality still behaves (min/max path untouched)
-    GraftTable.prunedDataPaths(path, v,
+    GraftTable.prunedDataPaths(GraftTable.snapshot(path, v),
       Seq(org.apache.spark.sql.sources.EqualTo("k", 5L))) should not be None
   }
 
@@ -76,12 +76,12 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     GraftTable.create(spark.range(0, 128).toDF("k").withColumn("s", lit("x")),
       path, Seq("k"), nbuckets = 2)
     // no _bloom config: no bloom lines, stats still there
-    GraftTable.manifestFileStats(path, 0).values.foreach(_.blooms shouldBe empty)
+    GraftTable.snapshot(path, 0).fileStats.values.foreach(_.blooms shouldBe empty)
     // enabling with a column the schema lacks is harmless (filtered out)
     GraftTable.enableBloomFilters(path, Seq("nope"))
     GraftTable.upsert(spark, path, spark.range(0, 64).toDF("k").withColumn("s", lit("y")))
     val v = GraftTable.latestVersion(path)
-    GraftTable.manifestFileStats(path, v).values.foreach(_.blooms shouldBe empty)
+    GraftTable.snapshot(path, v).fileStats.values.foreach(_.blooms shouldBe empty)
     GraftTable.read(spark, path, v).count() shouldBe 128L
   }
 
@@ -90,39 +90,39 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     val v = GraftTable.latestVersion(path)
     // the bound dominates the true count for any pushable predicate
     val trueN = GraftTable.read(spark, path).filter(col("k") < 100).count()
-    val hi = GraftTable.matchUpperBound(path, v, Seq(LessThan("k", 100L)))
+    val hi = GraftTable.matchUpperBound(GraftTable.snapshot(path, v), Seq(LessThan("k", 100L)))
     hi should not be empty
     hi.get should be >= trueN
     // a provably-empty predicate is EXACTLY zero (skip-everything proof)
-    GraftTable.matchUpperBound(path, v, Seq(LessThan("k", -1L))) shouldBe Some(0L)
+    GraftTable.matchUpperBound(GraftTable.snapshot(path, v), Seq(LessThan("k", -1L))) shouldBe Some(0L)
     // the total-row ceiling: an unselective filter bounds by the snapshot
-    GraftTable.matchUpperBound(path, v,
+    GraftTable.matchUpperBound(GraftTable.snapshot(path, v),
       Seq(GreaterThanOrEqual("k", 0L))).get shouldBe 4096L
     // the LOWER bound (matchBounds): every row provably matching ⇒ the
     // file's whole count contributes; nothing provable ⇒ 0 — and the
     // lower slot exists ONLY under a complete translation
-    val (loAll, hiAll) = GraftTable.matchBounds(path, v,
+    val (loAll, hiAll) = GraftTable.matchBounds(GraftTable.snapshot(path, v),
       Seq(GreaterThanOrEqual("k", 0L)), complete = true)
     loAll shouldBe Some(4096L) // min >= 0 in every file, k never null
     hiAll shouldBe Some(4096L)
-    val (loSel, _) = GraftTable.matchBounds(path, v,
+    val (loSel, _) = GraftTable.matchBounds(GraftTable.snapshot(path, v),
       Seq(LessThan("k", 100L)), complete = true)
     loSel.get should be <= trueN // sound, typically 0 (hash-spread files)
-    GraftTable.matchBounds(path, v,
+    GraftTable.matchBounds(GraftTable.snapshot(path, v),
       Seq(LessThan("k", 100L)), complete = false)._1 shouldBe None
     // requireNonNull over a stats'd column with zero nulls keeps the
     // full lower bound; an unknown column collapses it to 0
-    GraftTable.matchBounds(path, v, Seq(GreaterThanOrEqual("k", 0L)),
+    GraftTable.matchBounds(GraftTable.snapshot(path, v), Seq(GreaterThanOrEqual("k", 0L)),
       complete = true, requireNonNull = Seq("x"))._1 shouldBe Some(4096L)
-    GraftTable.matchBounds(path, v, Seq(GreaterThanOrEqual("k", 0L)),
+    GraftTable.matchBounds(GraftTable.snapshot(path, v), Seq(GreaterThanOrEqual("k", 0L)),
       complete = true, requireNonNull = Seq("nope"))._1 shouldBe Some(0L)
     // refusals, honest: empty filters; an outstanding MOR log
-    GraftTable.matchUpperBound(path, v, Nil) shouldBe None
+    GraftTable.matchUpperBound(GraftTable.snapshot(path, v), Nil) shouldBe None
     GraftTable.upsertMor(spark, path,
       spark.range(0, 3).toDF("k").withColumn("x", col("k") % 64)
         .withColumn("y", (col("k") * 7) % 64)
         .withColumn("s", concat(lit("row-"), format_string("%05d", col("k")))))
-    GraftTable.matchUpperBound(path, GraftTable.latestVersion(path),
+    GraftTable.matchUpperBound(GraftTable.snapshot(path, GraftTable.latestVersion(path)),
       Seq(LessThan("k", 100L))) shouldBe None
   }
 
@@ -140,26 +140,26 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     val full = mk(nullVec = false)
     val vF = GraftTable.latestVersion(full)
     // the sidecar records (min = max = unknown, nulls = 0) for the array
-    GraftTable.manifestFileStats(full, vF).values.foreach { st =>
+    GraftTable.snapshot(full, vF).fileStats.values.foreach { st =>
       val cs = st.cols("vec")
       cs.min shouldBe None
       cs.nullCount shouldBe 0L
     }
     // a zero-null vector column: IsNotNull is metadata-provable BOTH ways
-    GraftTable.matchUpperBound(full, vF,
+    GraftTable.matchUpperBound(GraftTable.snapshot(full, vF),
       Seq(org.apache.spark.sql.sources.IsNotNull("vec"))) shouldBe Some(200L)
-    GraftTable.matchBounds(full, vF,
+    GraftTable.matchBounds(GraftTable.snapshot(full, vF),
       Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("k", 0L)),
       complete = true, requireNonNull = Seq("vec"))._1 shouldBe Some(200L)
     // an all-null vector column: provably ZERO non-null rows
     val empty = mk(nullVec = true)
-    GraftTable.matchUpperBound(empty, GraftTable.latestVersion(empty),
+    GraftTable.matchUpperBound(GraftTable.snapshot(empty, GraftTable.latestVersion(empty)),
       Seq(org.apache.spark.sql.sources.IsNotNull("vec"))) shouldBe Some(0L)
   }
 
   test("manifests record snapshot schema and per-file min/max stats") {
     val path = freshTable()
-    val stats = GraftTable.manifestFileStats(path, 0)
+    val stats = GraftTable.snapshot(path, 0).fileStats
     stats should not be empty
     stats.values.map(_.rows).sum shouldBe 4096L
     // every file carries stats for all four eligible columns
@@ -168,26 +168,26 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
       fs.cols("x").min should not be empty
       fs.cols("x").nullCount shouldBe 0L
     }
-    val sc = GraftTable.snapshotSchema(path, 0)
+    val sc = GraftTable.snapshot(path, 0).schema
     sc.map(_.fieldNames.toSeq) shouldBe Some(Seq("k", "x", "y", "s"))
   }
 
   test("z-order clustered compaction with file splits -> range predicates skip files") {
     val path = freshTable()
     // hash-bucketed files each span the whole x/y domain: nothing skips
-    val before = GraftTable.prunedDataPaths(path, 0, Seq(LessThan("x", 8)))
+    val before = GraftTable.prunedDataPaths(GraftTable.snapshot(path, 0), Seq(LessThan("x", 8)))
     before.map { case (_, kept, total) => kept shouldBe total }
     // z-order on (x, y), several files per bucket → each file covers a
     // narrow z-slice, so a range predicate on EITHER dimension skips
     GraftTable.compact(spark, path, clusterBy = Some(Seq("x", "y")), targetFilesPerBucket = 8)
     val v = GraftTable.latestVersion(path)
-    val Some((_, keptX, totalX)) = GraftTable.prunedDataPaths(path, v, Seq(LessThan("x", 8)))
+    val Some((_, keptX, totalX)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v), Seq(LessThan("x", 8)))
     totalX should be >= 16
     keptX should be < totalX
-    val Some((_, keptY, totalY)) = GraftTable.prunedDataPaths(path, v, Seq(GreaterThan("y", 55)))
+    val Some((_, keptY, totalY)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v), Seq(GreaterThan("y", 55)))
     keptY should be < totalY
     // and the pruned read returns EXACTLY the full-scan answer
-    val pruned = GraftTable.readStatsPruned(spark, path, v, Seq(LessThan("x", 8)))
+    val pruned = GraftTable.readStatsPruned(spark, GraftTable.snapshotAt(path, v), Seq(LessThan("x", 8)))
     pruned should not be empty
     pruned.get.filter(col("x") < 8).agg(count(lit(1)), sum("k")).collect() shouldBe
       GraftTable.read(spark, path, v).filter(col("x") < 8)
@@ -205,7 +205,7 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
       targetFilesPerBucket = 8)
     val v = GraftTable.latestVersion(path)
     Seq(LessThan("x", 8), GreaterThan("y", 55), LessThan("z", 8)).foreach { f =>
-      val Some((_, kept, total)) = GraftTable.prunedDataPaths(path, v, Seq(f))
+      val Some((_, kept, total)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v), Seq(f))
       withClue(s"$f: kept=$kept total=$total") {
         total should be >= 16
         kept should be < total
@@ -215,7 +215,7 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     Seq(col("x") < 8, col("y") > 55, col("z") < 8).zip(
       Seq(LessThan("x", 8), GreaterThan("y", 55), LessThan("z", 8))).foreach {
       case (c, f) =>
-        val pruned = GraftTable.readStatsPruned(spark, path, v, Seq(f)).get
+        val pruned = GraftTable.readStatsPruned(spark, GraftTable.snapshotAt(path, v), Seq(f)).get
         pruned.filter(c).agg(count(lit(1)), sum("k")).collect() shouldBe
           GraftTable.read(spark, path, v).filter(c)
             .agg(count(lit(1)), sum("k")).collect()
@@ -242,11 +242,11 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
   test("stats survive carry-over: untouched dirs resolve from their attempts' segments") {
     val path = freshTable(n = 1024)
     GraftTable.upsert(spark, path, Seq((7L, 999L, 999L, "upd")).toDF("k", "x", "y", "s"))
-    val stats = GraftTable.manifestFileStats(path, 1)
+    val stats = GraftTable.snapshot(path, 1).fileStats
     // all rows still stat-covered: rewritten bucket fresh, others carried
     stats.values.map(_.rows).sum shouldBe 1024L
-    val m0 = GraftTable.manifest(path, 0)
-    val m1 = GraftTable.manifest(path, 1)
+    val m0 = GraftTable.snapshot(path, 0).dirs
+    val m1 = GraftTable.snapshot(path, 1).dirs
     val carried = m1.filter { case (b, d) => m0.get(b).contains(d) }.values
     carried should not be empty
     carried.foreach { d =>
@@ -271,12 +271,12 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
       new java.io.File(path + "/data/" + s.stripSuffix(".stats")).isDirectory shouldBe true
     }
     // old snapshots' stats stay fully resolvable (time travel prunes too)
-    GraftTable.manifestFileStats(path, 0).values.map(_.rows).sum shouldBe 1024L
+    GraftTable.snapshot(path, 0).fileStats.values.map(_.rows).sum shouldBe 1024L
     // vacuum to the head: v0's rewritten bucket dir goes; its attempt
     // dir survives (still carries v1's carried buckets) and so must its
     // segment — stats for the HEAD still resolve completely
     GraftTable.vacuum(path)
-    GraftTable.manifestFileStats(path, 1).values.map(_.rows).sum shouldBe 1024L
+    GraftTable.snapshot(path, 1).fileStats.values.map(_.rows).sum shouldBe 1024L
   }
 
   test("a legacy inline-stats manifest upgrades to segments on the next commit") {
@@ -292,17 +292,17 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     new java.io.File(mdir, ".v0.crc").delete()
     Files.write(v0.toPath, (headers ++ segLines.linesIterator ++ dirs).mkString("\n").getBytes)
     seg.delete()
-    GraftTable.manifestFileStats(path, 0).values.map(_.rows).sum shouldBe 512L // inline resolves
+    GraftTable.snapshot(path, 0).fileStats.values.map(_.rows).sum shouldBe 512L // inline resolves
     // next commit copies the carried dirs' inline lines out to segments
     GraftTable.upsert(spark, path, Seq((7L, 999L, 999L, "upd")).toDF("k", "x", "y", "s"))
     val v1text = new String(Files.readAllBytes(new java.io.File(mdir, "v1").toPath))
     v1text.linesIterator.count(_.startsWith("#stat=")) shouldBe 0
-    GraftTable.manifestFileStats(path, 1).values.map(_.rows).sum shouldBe 512L
+    GraftTable.snapshot(path, 1).fileStats.values.map(_.rows).sum shouldBe 512L
     mdir.listFiles().count(_.getName.endsWith(".stats")) shouldBe 2 // upgraded v0 + fresh v1
     // and pruning works off the upgraded segments: x > 63 lives only in
     // the freshly upserted file, every carried file proves x <= 63
     val v = GraftTable.latestVersion(path)
-    val Some((_, kept, total)) = GraftTable.prunedDataPaths(path, v, Seq(GreaterThan("x", 63L)))
+    val Some((_, kept, total)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v), Seq(GreaterThan("x", 63L)))
     kept should be < total
   }
 
@@ -313,7 +313,7 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     GraftTable.upsert(spark, path,
       Seq((3L, 3L, 21L, "row-00003", "tagged")).toDF("k", "x", "y", "s", "tag"))
     val v = GraftTable.latestVersion(path)
-    GraftTable.snapshotSchema(path, v).map(_.fieldNames.last) shouldBe Some("tag")
+    GraftTable.snapshot(path, v).schema.map(_.fieldNames.last) shouldBe Some("tag")
     val out = spark.read.format("graft").load(path)
       .filter(col("x") === 3).select("k", "tag").orderBy("k").collect()
     out.map(r => (r.getLong(0), r.getString(1))).toSeq shouldBe
@@ -328,8 +328,8 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     GraftTable.create(df, path, Seq("k"), nbuckets = 2)
     GraftTable.compact(spark, path, clusterBy = Some(Seq("k", "z")), targetFilesPerBucket = 4)
     val v = GraftTable.latestVersion(path)
-    val Some((_, keptNull, total)) = GraftTable.prunedDataPaths(path, v, Seq(IsNull("v")))
-    val Some((_, keptNotNull, _)) = GraftTable.prunedDataPaths(path, v, Seq(IsNotNull("v")))
+    val Some((_, keptNull, total)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v), Seq(IsNull("v")))
+    val Some((_, keptNotNull, _)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v), Seq(IsNotNull("v")))
     keptNull should be < total
     keptNotNull should be < total
     spark.read.format("graft").load(path).filter(col("v").isNull).count() shouldBe 128L
@@ -347,7 +347,7 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     val v = GraftTable.latestVersion(path)
     val cutoff = java.sql.Timestamp.from(
       java.time.Instant.ofEpochSecond(1700000000L + 50L * 86400))
-    val Some((_, kept, total)) = GraftTable.prunedDataPaths(path, v,
+    val Some((_, kept, total)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v),
       Seq(LessThan("ts", cutoff)))
     kept should be < total
     spark.read.format("graft").load(path)
@@ -367,7 +367,7 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     val v = GraftTable.latestVersion(path)
     val lo = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1700000000L + 100L * 86400))
     val hi = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1700000000L + 140L * 86400))
-    val Some((_, kept, total)) = GraftTable.prunedDataPaths(path, v,
+    val Some((_, kept, total)) = GraftTable.prunedDataPaths(GraftTable.snapshot(path, v),
       Seq(GreaterThanOrEqual("ts", lo), LessThan("ts", hi)))
     // ~40/512 of the time range over 16 disjoint slices: most files skip
     kept.toDouble / total should be < 0.35
@@ -382,7 +382,7 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
       .withColumn("text", concat(format_string("%03d-", col("k")),
         lit("x" * 500))) // ~0.5 KB per value
     GraftTable.create(df, path, Seq("k"), nbuckets = 2)
-    val stats = GraftTable.manifestFileStats(path, 0)
+    val stats = GraftTable.snapshot(path, 0).fileStats
     stats.values.flatMap(_.cols.get("text")).foreach { cs =>
       cs.min.foreach(_.length should be <= 120) // truncated = valid lower bound
       cs.max shouldBe None // a truncated max would over-prune: unknown instead
@@ -403,15 +403,15 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
       .filterNot(l => l.startsWith("#schema=") || l.startsWith("#file=") || l.startsWith("#stat="))
       .mkString("\n")
     Files.writeString(mf, legacy)
-    GraftTable.snapshotSchema(path, 0) shouldBe None
-    GraftTable.prunedDataPaths(path, 0, Seq(LessThan("x", 8))) shouldBe None
+    GraftTable.snapshot(path, 0).schema shouldBe None
+    GraftTable.prunedDataPaths(GraftTable.snapshot(path, 0), Seq(LessThan("x", 8))) shouldBe None
     GraftTable.read(spark, path).count() shouldBe 256L
     spark.read.format("graft").load(path).filter(col("x") < 8).count() shouldBe
       256L / 8
     // the next write upgrades the table: schema + stats appear
     GraftTable.upsert(spark, path, Seq((1L, 1L, 7L, "row-00001")).toDF("k", "x", "y", "s"))
-    GraftTable.snapshotSchema(path, 1) should not be None
-    GraftTable.manifestFileStats(path, 1) should not be empty
+    GraftTable.snapshot(path, 1).schema should not be None
+    GraftTable.snapshot(path, 1).fileStats should not be empty
   }
 
   test("restore carries the restored version's schema and stats forward") {
@@ -420,8 +420,8 @@ class StatsSkippingSpec extends AnyFunSuite with Matchers {
     GraftTable.restoreTo(path, 0)
     val v = GraftTable.latestVersion(path)
     v shouldBe 2
-    GraftTable.snapshotSchema(path, v) shouldBe GraftTable.snapshotSchema(path, 0)
-    GraftTable.manifestFileStats(path, v) shouldBe GraftTable.manifestFileStats(path, 0)
+    GraftTable.snapshot(path, v).schema shouldBe GraftTable.snapshot(path, 0).schema
+    GraftTable.snapshot(path, v).fileStats shouldBe GraftTable.snapshot(path, 0).fileStats
     GraftTable.read(spark, path).filter(col("k") === 1).head().getLong(1) shouldBe 1L % 64
   }
 }

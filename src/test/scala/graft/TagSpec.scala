@@ -190,7 +190,7 @@ class TagSpec extends AnyFunSuite with Matchers {
     plan should not be empty
     plan.map(_._1).toSet.subsetOf(Set("data", "log", "manifest")) shouldBe true
     // tagged v1's dirs must not appear in the plan
-    val v1dirs = GraftTable.manifest(root, 1).values.toSet
+    val v1dirs = GraftTable.snapshot(root, 1).dirs.values.toSet
     plan.collect { case ("data", rel) => rel }.toSet
       .intersect(v1dirs) shouldBe empty
     plan should contain ("manifest", "manifests/v0")
