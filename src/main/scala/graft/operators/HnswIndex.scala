@@ -494,7 +494,7 @@ object HnswIndex {
     Seq((model.metric, model.m, model.efConstruction, model.nPartitions,
         model.storage, model.centroid.map(_.toSeq)))
       .toDF("metric", "m", "ef_construction", "n_partitions", "storage", "centroid")
-      .repartition(1)
+      .coalesce(1)
       .write.mode("overwrite").parquet(s"${model.path}/_model")
   }
 

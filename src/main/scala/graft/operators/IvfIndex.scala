@@ -1,10 +1,7 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.vectors._
 import Quantize.normalize
 
 /** IVF (inverted-file) ANN index — the scale path for vector search,
@@ -13,9 +10,11 @@ import Quantize.normalize
   * Lance"). We implement IVF-Flat: exact distances inside probed cells.
   *
   * Spark-first design: the "index" IS a partitioned parquet layout.
-  *  - build: MLlib KMeans (sampled) fits nlist centroids; every row is
-  *    assigned to its nearest centroid and the table is written
-  *    `partitionBy(cluster_id)` — one directory per inverted list.
+  *  - build: Lloyd's k-means ([[PqIndex.lloyd]], the fit the PQ coarse
+  *    quantizer and the Dedup blockers use) fits nlist centroids on the
+  *    DRIVER from a bounded sample; every row is assigned to its nearest
+  *    centroid and the table is written `partitionBy(cluster_id)` — one
+  *    directory per inverted list.
   *  - probe: rank centroids against the query ON THE DRIVER (nlist
   *    floats — tiny), then read only the `nprobe` nearest partitions.
   *    The `cluster_id IN (...)` filter is a partition filter, so Spark
@@ -163,10 +162,41 @@ object IvfIndex {
       graft.functions.vectors.adc_dot(qvec, col("vq_bits"))
   }
 
+  /** The fit sample's row cap: 256 rows per centroid — Lance's IVF
+    * `sample_rate` and FAISS's `max_points_per_centroid` — and never
+    * more than 100 000 rows, so the driver-side fit stays bounded at
+    * any corpus size.
+    */
+  private[graft] def fitSampleCap(nlist: Int): Int = math.min(256L * nlist, 100000L).toInt
+
+  /** The sample fraction that draws about [[fitSampleCap]] of `nRows`
+    * rows (1.0 = every row) — what [[build]] uses when the caller passes
+    * no `fitSampleFraction`. Callers that know the row count from
+    * metadata pass this fraction and save the build its count job.
+    */
+  private[graft] def fitFraction(nlist: Int, nRows: Long): Double =
+    math.min(1.0, fitSampleCap(nlist).toDouble / math.max(1L, nRows))
+
   /** Fit nlist centroids and lay the table out as one partition dir per
-    * cluster. For cosine, vectors are L2-normalized before KMeans so
-    * euclidean cells == angular cells (standard spherical-kmeans
-    * approximation).
+    * cluster.
+    *
+    * The fit runs on the DRIVER: a seeded sample of at most
+    * [[fitSampleCap]] non-null vectors is collected and [[PqIndex.lloyd]]
+    * (8 iterations) fits the centroids — centroid quality saturates long
+    * before the full corpus is seen, and at 100 TB a full-data fit is a
+    * non-starter. Its cost is O(sample × nlist × dim × 8): about a
+    * second at nlist = 32 and dim 384, and bounded by the 100 000-row
+    * cap at any nlist — the same driver-side bound ivfpq's coarse fit
+    * has. For cosine the sample is L2-normalized first, so euclidean
+    * cells == angular cells (standard spherical-kmeans approximation).
+    * The sample is drawn with [[fitFraction]] of a `count()`, or with
+    * `fitSampleFraction` when given (no count then; the whole fraction
+    * is collected before the cap applies, so size it for the driver).
+    *
+    * The layout is then written in one pass over `data`: every row's
+    * `cluster_id` is [[cellUdf]]'s assignment — the one the
+    * table-attached refresh recomputes to find a row's cell — followed
+    * by the storage's [[quantizeLayoutModel]].
     */
   def build(data: DataFrame, vecCol: String, nlist: Int, path: String,
             metric: String = "cosine", seed: Long = 42L,
@@ -174,37 +204,25 @@ object IvfIndex {
             persistModel: Boolean = true,
             storage: String = "float32"): Model = {
     Quantize.requireStorage(storage, "ivf")
-    val feat =
-      if (metric == "cosine")
-        data.withColumn("_n", vector_norm(col(vecCol))) // hoisted: norm once per row, not per element
-          .withColumn("_feat", array_to_vector(
-            transform(col(vecCol), x => (x / col("_n")).cast("float"))))
-          .drop("_n")
-      else data.withColumn("_feat", array_to_vector(col(vecCol)))
-    val km = new KMeans().setK(nlist).setSeed(seed).setMaxIter(8)
-      .setFeaturesCol("_feat").setPredictionCol("cluster_id")
-    // fit on a bounded sample — centroid quality saturates long before
-    // the full corpus is seen, and at 100 TB a full-data fit is a
-    // non-starter; assignment below still covers every row. The default
-    // sizes the sample via count() (an empty-schema metadata scan on
-    // columnar sources — cheap, but still a listing pass); at corpus
-    // scale pass fitSampleFraction to skip that pass entirely.
-    val fitInput = fitSampleFraction match {
-      case Some(f) => feat.sample(f, seed)
-      case None =>
-        val nRows = feat.count()
-        if (nRows > 100000) feat.sample(100000.0 / nRows, seed) else feat
-    }
-    val model = km.fit(fitInput)
+    require(nlist > 1, s"ivf needs nlist > 1, got $nlist")
+    val cap = fitSampleCap(nlist)
+    val fraction = fitSampleFraction.getOrElse(fitFraction(nlist, data.count()))
+    val drawn = data.sample(fraction, seed).filter(col(vecCol).isNotNull)
+      .select(vecCol).collect().map(_.getSeq[Float](0).toArray)
+    // Bernoulli sampling overshoots its expected size: a seeded subset
+    // keeps the fit at the cap
+    val capped =
+      if (drawn.length > cap) new scala.util.Random(seed).shuffle(drawn.toSeq).take(cap).toArray
+      else drawn
+    require(capped.nonEmpty, s"no non-null '$vecCol' vectors in the fit sample to fit $nlist cells")
+    val sample = if (metric == "cosine") capped.map(normalize) else capped
+    val centroids = PqIndex.lloyd(sample, nlist, iters = 8, seed)
     // rabitq: one seeded rotation per layout, derived before any row is
     // encoded (dim from the fitted centroids — no extra data pass)
     val rot = if (storage == "rabitq")
-      Some(Quantize.randomRotation(model.clusterCenters.head.size, seed + 1)) else None
-    val m0 = Model(path, model.clusterCenters.map(_.toArray.map(_.toFloat)), metric,
-      storage = storage, rot = rot)
-    quantizeLayoutModel(m0, model.transform(feat).drop("_feat"), vecCol)
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-    val m = m0
+      Some(Quantize.randomRotation(centroids.head.length, seed + 1)) else None
+    val m = Model(path, centroids, metric, storage = storage, rot = rot)
+    layout(m, data, vecCol).write.mode("overwrite").partitionBy("cluster_id").parquet(path)
     // opt-out for callers that version the model themselves (the
     // table-attached GraftIndex): a layout-local `_model` there would
     // be redundant AND go stale across refresh generations
@@ -229,7 +247,7 @@ object IvfIndex {
          ("coarse", i, 0, c.toSeq, null.asInstanceOf[String]) }) ++
       model.rot.toSeq.flatMap(_.zipWithIndex.map { case (r, i) =>
         ("rot", i, 0, r.toSeq, null.asInstanceOf[String]) })
-    rows.toDF("part", "i", "j", "vec", "s").repartition(1)
+    rows.toDF("part", "i", "j", "vec", "s").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"${model.path}/_model")
   }
 
@@ -402,10 +420,16 @@ object IvfIndex {
     * }}}
     */
   def append(model: Model, batch: DataFrame, vecCol: String): Unit =
-    quantizeLayoutModel(model,
-        batch.withColumn("cluster_id", cellUdf(batch.sparkSession, model)(col(vecCol))),
-        vecCol)
+    layout(model, batch, vecCol)
       .write.mode(SaveMode.Append).partitionBy("cluster_id").parquet(model.path)
+
+  /** `df` in the layout's row shape: its nearest cell as `cluster_id`
+    * ([[cellUdf]]) and the storage's payload — shared by [[build]] and
+    * [[append]].
+    */
+  private def layout(model: Model, df: DataFrame, vecCol: String): DataFrame =
+    quantizeLayoutModel(model,
+      df.withColumn("cluster_id", cellUdf(df.sparkSession, model)(col(vecCol))), vecCol)
 
   private[graft] def cellScan(spark: SparkSession, model: Model, cells: Seq[Int]): DataFrame =
     cellScan(spark, model.schema, model.files, model.path, cells)

@@ -127,7 +127,7 @@ object PqIndex {
           ("book", mi, ci, c.toSeq, null.asInstanceOf[String]) } } ++
       model.rot.toSeq.flatMap(_.zipWithIndex.toSeq.map { case (r, i) =>
         ("rot", i, 0, r.toSeq, null.asInstanceOf[String]) })
-    rows.toDF("part", "i", "j", "vec", "s").repartition(1)
+    rows.toDF("part", "i", "j", "vec", "s").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"${model.path}/_model")
   }
 

@@ -218,7 +218,7 @@ object GraftIndex {
       codebooks.toSeq.flatMap(_.zipWithIndex.toSeq.flatMap { case (book, mi) =>
         book.zipWithIndex.toSeq.map { case (c, ci) => ("book", mi, ci, c.toSeq) } }) ++
       rot.toSeq.flatMap(_.zipWithIndex.toSeq.map { case (r, i) => ("rot", i, 0, r.toSeq) })
-    rows.toDF("part", "i", "j", "vec").repartition(1)
+    rows.toDF("part", "i", "j", "vec").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(modelPath(tablePath, name, modelGen))
   }
 
@@ -338,6 +338,10 @@ object GraftIndex {
     * version. `kind = "ivf"` (default) or `"ivfpq"` (`m` subspaces,
     * `opq` for the learned rotation). Rows with a null vector are not
     * indexed (they reappear if a later upsert fills the vector in).
+    * `fitSampleFraction` (ivf only): the fraction of the snapshot's rows
+    * sampled to the driver for the centroid fit ([[IvfIndex.build]]);
+    * by default it is derived from the manifest's row count, so about
+    * [[IvfIndex.fitSampleCap]] rows are drawn and no count job runs.
     */
   def create(spark: SparkSession, tablePath: String, vecCol: String, nlist: Int,
              metric: String = "cosine", name: String = "vec",
@@ -356,11 +360,12 @@ object GraftIndex {
     require(v >= 0, s"no table at $tablePath")
     require(!exists(tablePath, name), s"index '$name' already exists at $tablePath")
     val keys = GraftTable.keyColumns(tablePath)
-    val snap = GraftTable.read(spark, tablePath, v).filter(col(vecCol).isNotNull)
+    val s = GraftTable.snapshot(tablePath, v)
+    val snap = GraftTable.read(spark, s).filter(col(vecCol).isNotNull)
     if (kind == "ivf") {
       val model = IvfIndex.build(snap, vecCol, nlist, dataPath(tablePath, name),
-        metric, fitSampleFraction = fitSampleFraction, persistModel = false,
-        storage = storage)
+        metric, fitSampleFraction = ivfFitFraction(s, nlist, fitSampleFraction),
+        persistModel = false, storage = storage)
       saveModel(spark, tablePath, name, model.centroids, None, model.rot, Some(0))
     } else {
       val model = PqIndex.build(snap, keys.head, vecCol, nlist, m,
@@ -373,6 +378,16 @@ object GraftIndex {
       IndexMeta(name, kind, vecCol, keys, metric, nlist, v, Some(0), Some(0),
         storage = storage))
   }
+
+  /** The ivf fit's sample fraction: the caller's, else
+    * [[IvfIndex.fitFraction]] of the snapshot's metadata row count — so
+    * the build runs no count job. The count includes null-vector rows,
+    * which only shrinks the sample below its cap. None (a snapshot with
+    * an outstanding MOR log) leaves the build to count.
+    */
+  private def ivfFitFraction(s: GraftTable.Snapshot, nlist: Int,
+                             given: Option[Double]): Option[Double] =
+    given.orElse(GraftTable.countRows(s).map(IvfIndex.fitFraction(nlist, _)))
 
   /** Full refit + relayout as ONE new generation — the drift answer the
     * append discipline defers to (refresh reuses the build's
@@ -398,11 +413,12 @@ object GraftIndex {
     val genDir = s"g$newGen-${java.util.UUID.randomUUID.toString.take(8)}"
     val layout = s"${dataPath(tablePath, name)}/$genDir"
     val newNlist = nlist.getOrElse(meta0.nlist)
-    val snap = GraftTable.read(spark, tablePath, head).filter(col(meta0.vecCol).isNotNull)
+    val s = GraftTable.snapshotAt(tablePath, head)
+    val snap = GraftTable.read(spark, s).filter(col(meta0.vecCol).isNotNull)
     if (meta0.kind == "ivf") {
       val model = IvfIndex.build(snap, meta0.vecCol, newNlist, layout,
-        meta0.metric, fitSampleFraction = fitSampleFraction, persistModel = false,
-        storage = meta0.storage)
+        meta0.metric, fitSampleFraction = ivfFitFraction(s, newNlist, fitSampleFraction),
+        persistModel = false, storage = meta0.storage)
       saveModel(spark, tablePath, name, model.centroids, None, model.rot, Some(newModelGen))
     } else {
       // defaults for the PQ shape come from the CURRENT model

@@ -1181,4 +1181,58 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
       }
     }
   }
+
+  test("create and rebuild lay every row in the cell refresh recomputes for it") {
+    // refresh finds a changed key's OLD cell with cellUdf: a build that
+    // put the row anywhere else would leave it behind as a stale duplicate
+    def assertCells(path: String): Unit = {
+      val table = GraftTable.read(spark, path, GraftIndex.meta(path).indexedVersion)
+      val (cells, cellOf) = GraftIndex.servingModel(spark, path) match {
+        case Left(m) =>
+          (IvfIndex.cellScan(spark, m, m.centroids.indices), IvfIndex.cellUdf(spark, m))
+        case Right(m) =>
+          (IvfIndex.cellScan(spark, m.schema, m.files, m.path, m.coarse.indices),
+            graft.operators.PqIndex.cellUdf(spark, m))
+      }
+      val rows = cells.select("k", "cluster_id").join(table.select("k", "v"), "k")
+        .select(col("cluster_id"), cellOf(col("v")).as("want")).collect()
+      rows.length.toLong shouldBe table.count()
+      rows.filter(r => r.getInt(0) != r.getInt(1)) shouldBe empty
+    }
+    for ((kind, metric, storage) <- Seq(("ivf", "cosine", "float32"),
+                                        ("ivf", "l2", "rabitq"),
+                                        ("ivfpq", "cosine", "float32"))) {
+      withClue(s"$kind/$metric/$storage: ") {
+        val path = freshTable(300)
+        GraftIndex.create(spark, path, "v", nlist = 4, metric = metric, kind = kind,
+          m = 4, storage = storage)
+        assertCells(path)
+        GraftTable.upsert(spark, path,
+          (280L until 330L).map(k => (k, s"n-$k", vec(k + 700))).toDF("k", "s", "v"))
+        GraftIndex.rebuild(spark, path)
+        assertCells(path)
+      }
+    }
+  }
+
+  test("GraftIndex.create on a small table runs at most three Spark jobs") {
+    // one sample collect, one layout write, one model write: the row
+    // count comes from the manifest and the model save does not shuffle
+    val path = freshTable(200)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      GraftIndex.create(spark, path, "v", nlist = 4)
+      org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(sc)
+      withClue("Spark jobs of GraftIndex.create: ") { jobs.get should be <= 3 }
+    } finally sc.removeSparkListener(listener)
+    GraftIndex.probe(spark, path, vec(5L), 5, nprobe = 4).count() shouldBe 5
+  }
 }
