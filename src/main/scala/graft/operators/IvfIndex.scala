@@ -162,41 +162,25 @@ object IvfIndex {
       graft.functions.vectors.adc_dot(qvec, col("vq_bits"))
   }
 
-  /** The fit sample's row cap: 256 rows per centroid — Lance's IVF
-    * `sample_rate` and FAISS's `max_points_per_centroid` — and never
-    * more than 100 000 rows, so the driver-side fit stays bounded at
-    * any corpus size.
+  /** The fit sample's row cap: 256 rows per centroid (Lance's IVF
+    * `sample_rate`, FAISS's `max_points_per_centroid`), at most 100 000.
     */
   private[graft] def fitSampleCap(nlist: Int): Int = math.min(256L * nlist, 100000L).toInt
 
-  /** The sample fraction that draws about [[fitSampleCap]] of `nRows`
-    * rows (1.0 = every row) — what [[build]] uses when the caller passes
-    * no `fitSampleFraction`. Callers that know the row count from
-    * metadata pass this fraction and save the build its count job.
-    */
+  /** The fraction of `nRows` rows that samples about [[fitSampleCap]]. */
   private[graft] def fitFraction(nlist: Int, nRows: Long): Double =
     math.min(1.0, fitSampleCap(nlist).toDouble / math.max(1L, nRows))
 
-  /** Fit nlist centroids and lay the table out as one partition dir per
-    * cluster.
-    *
-    * The fit runs on the DRIVER: a seeded sample of at most
-    * [[fitSampleCap]] non-null vectors is collected and [[PqIndex.lloyd]]
-    * (8 iterations) fits the centroids — centroid quality saturates long
-    * before the full corpus is seen, and at 100 TB a full-data fit is a
-    * non-starter. Its cost is O(sample × nlist × dim × 8): about a
-    * second at nlist = 32 and dim 384, and bounded by the 100 000-row
-    * cap at any nlist — the same driver-side bound ivfpq's coarse fit
-    * has. For cosine the sample is L2-normalized first, so euclidean
-    * cells == angular cells (standard spherical-kmeans approximation).
-    * The sample is drawn with [[fitFraction]] of a `count()`, or with
-    * `fitSampleFraction` when given (no count then; the whole fraction
-    * is collected before the cap applies, so size it for the driver).
-    *
-    * The layout is then written in one pass over `data`: every row's
-    * `cluster_id` is [[cellUdf]]'s assignment — the one the
-    * table-attached refresh recomputes to find a row's cell — followed
-    * by the storage's [[quantizeLayoutModel]].
+  /** Fit nlist centroids on the DRIVER and lay the table out as one
+    * partition dir per cluster. A seeded sample of at most
+    * [[fitSampleCap]] non-null vectors (L2-normalized for cosine, so
+    * euclidean cells == angular cells) is fit by [[PqIndex.lloyd]]:
+    * O(sample × nlist × dim × 8), ~1 s at nlist 32, dim 384 — the same
+    * driver-side bound as ivfpq's coarse fit. The sample fraction is
+    * `fitSampleFraction` when given (no count; the whole fraction is
+    * collected before the cap), else [[fitFraction]] of a `count()`.
+    * The layout is one pass: `cluster_id` = [[cellUdf]], the assignment
+    * refresh recomputes, then [[quantizeLayoutModel]].
     */
   def build(data: DataFrame, vecCol: String, nlist: Int, path: String,
             metric: String = "cosine", seed: Long = 42L,
@@ -209,8 +193,7 @@ object IvfIndex {
     val fraction = fitSampleFraction.getOrElse(fitFraction(nlist, data.count()))
     val drawn = data.sample(fraction, seed).filter(col(vecCol).isNotNull)
       .select(vecCol).collect().map(_.getSeq[Float](0).toArray)
-    // Bernoulli sampling overshoots its expected size: a seeded subset
-    // keeps the fit at the cap
+    // Bernoulli sampling overshoots: a seeded subset keeps the cap
     val capped =
       if (drawn.length > cap) new scala.util.Random(seed).shuffle(drawn.toSeq).take(cap).toArray
       else drawn
@@ -423,10 +406,7 @@ object IvfIndex {
     layout(model, batch, vecCol)
       .write.mode(SaveMode.Append).partitionBy("cluster_id").parquet(model.path)
 
-  /** `df` in the layout's row shape: its nearest cell as `cluster_id`
-    * ([[cellUdf]]) and the storage's payload — shared by [[build]] and
-    * [[append]].
-    */
+  /** `df` in the layout's row shape ([[cellUdf]] cell + payload). */
   private def layout(model: Model, df: DataFrame, vecCol: String): DataFrame =
     quantizeLayoutModel(model,
       df.withColumn("cluster_id", cellUdf(df.sparkSession, model)(col(vecCol))), vecCol)

@@ -338,10 +338,8 @@ object GraftIndex {
     * version. `kind = "ivf"` (default) or `"ivfpq"` (`m` subspaces,
     * `opq` for the learned rotation). Rows with a null vector are not
     * indexed (they reappear if a later upsert fills the vector in).
-    * `fitSampleFraction` (ivf only): the fraction of the snapshot's rows
-    * sampled to the driver for the centroid fit ([[IvfIndex.build]]);
-    * by default it is derived from the manifest's row count, so about
-    * [[IvfIndex.fitSampleCap]] rows are drawn and no count job runs.
+    * `fitSampleFraction` (ivf): the rows sampled for the driver-side
+    * centroid fit; default from the manifest row count (no count job).
     */
   def create(spark: SparkSession, tablePath: String, vecCol: String, nlist: Int,
              metric: String = "cosine", name: String = "vec",
@@ -379,11 +377,9 @@ object GraftIndex {
         storage = storage))
   }
 
-  /** The ivf fit's sample fraction: the caller's, else
-    * [[IvfIndex.fitFraction]] of the snapshot's metadata row count — so
-    * the build runs no count job. The count includes null-vector rows,
-    * which only shrinks the sample below its cap. None (a snapshot with
-    * an outstanding MOR log) leaves the build to count.
+  /** The caller's fit fraction, else one from the metadata row count
+    * (null-vector rows included: the sample only shrinks); None (a MOR
+    * log) leaves the build to count.
     */
   private def ivfFitFraction(s: GraftTable.Snapshot, nlist: Int,
                              given: Option[Double]): Option[Double] =
