@@ -279,29 +279,28 @@ object GraftFunctions {
       s"graft_table(path[, version]): got ${args.length} args")
     require(args.forall(_.foldable), "graft_table: path/version must be literals")
     val path = args(0).eval(null).toString
-    // through the DSv1 relation (not a raw snapshot read): WHERE clauses
-    // above the TVF reach GraftRelation's buildScan, so SQL readers get
-    // full-key bucket point lookups and manifest-stats file skipping,
-    // exactly like spark.read.format("graft"). The RESOLVED plan: an
-    // unresolved data source would be resolved again in the outer
-    // query, building (and pinning) a second relation
-    val reader = SparkSession.active.read.format("graft")
-    val versioned =
+    // the snapshot read itself: a native Parquet scan over the
+    // manifest's file list (GraftTable.read, a HadoopFsRelation over
+    // GraftFileIndex), so WHERE clauses above the TVF reach its
+    // listFiles — full-key bucket point lookups and stats file skipping
+    // from metadata, like spark.read.format("graft"); a MOR-log snapshot
+    // is readMor's plan. The ANALYZED plan, pinned to one snapshot.
+    val version =
       if (args.length == 2) args(1).eval(null) match {
-        case n: Number => reader.option("version", n.intValue())
+        case n: Number => n.intValue()
         case tag => // tag/branch names are never all-digit — no ambiguity
           val name = tag.toString
-          reader.option("version",
-            graft.sources.GraftTable.resolveTag(path, name)
-              .orElse(Option.when(graft.sources.GraftTable.branchExists(path, name))(
-                graft.sources.GraftTable.branchHead(path, name)))
-              .getOrElse(throw new IllegalArgumentException(
-                s"$path has no tag or branch '$name' (tags: " +
-                  s"${graft.sources.GraftTable.tags(path)
-                    .map { case (t, v) => s"$t→v$v" }.mkString(", ")})")))
+          graft.sources.GraftTable.resolveTag(path, name)
+            .orElse(Option.when(graft.sources.GraftTable.branchExists(path, name))(
+              graft.sources.GraftTable.branchHead(path, name)))
+            .getOrElse(throw new IllegalArgumentException(
+              s"$path has no tag or branch '$name' (tags: " +
+                s"${graft.sources.GraftTable.tags(path)
+                  .map { case (t, v) => s"$t→v$v" }.mkString(", ")})"))
       }
-      else reader
-    versioned.load(path).queryExecution.analyzed
+      else -1
+    graft.sources.GraftTable.read(SparkSession.active,
+      graft.sources.GraftTable.snapshotAt(path, version)).queryExecution.analyzed
   }
 
   /** `graft_table_changes(path, fromVersion, toVersion)` — SQL read of

@@ -11,15 +11,17 @@ import Quantize.normalize
   *
   * Spark-first design: the "index" IS a partitioned parquet layout.
   *  - build: Lloyd's k-means ([[PqIndex.lloyd]], the fit the PQ coarse
-  *    quantizer and the Dedup blockers use) fits nlist centroids on the
+  *    quantizer and the Dedup blockers use, here k-means++ seeded so the
+  *    cells do not depend on the order rows are read in) fits nlist centroids on the
   *    DRIVER from a bounded sample; every row is assigned to its nearest
   *    centroid and the table is written `partitionBy(cluster_id)` — one
-  *    directory per inverted list.
+  *    directory per inverted list, one file per cell per write.
   *  - probe: rank centroids against the query ON THE DRIVER (nlist
   *    floats — tiny), then read only the `nprobe` nearest partitions.
   *    The `cluster_id IN (...)` filter is a partition filter, so Spark
-  *    lists/reads nprobe/nlist of the files (`PartitionFilters` in
-  *    explain) — at 100 TB with nlist=4096, nprobe=64 that is 1.5 % of
+  *    reads nprobe/nlist of the files (`PartitionFilters` in explain;
+  *    a table-attached index prunes its manifest's file list without
+  *    listing) — at 100 TB with nlist=4096, nprobe=64 that is 1.5 % of
   *    the data, and each probed cell scans in parallel.
   *
   * Recall/cost tradeoff is nprobe/nlist; exactness inside cells means
@@ -56,7 +58,7 @@ object IvfIndex {
     */
   final case class Model(path: String, centroids: Array[Array[Float]], metric: String,
                          schema: Option[org.apache.spark.sql.types.StructType] = None,
-                         files: Option[Map[Int, Seq[String]]] = None,
+                         files: Option[Map[Int, Seq[(String, Long)]]] = None,
                          storage: String = "float32",
                          rot: Option[Array[Array[Float]]] = None)
 
@@ -174,7 +176,8 @@ object IvfIndex {
   /** Fit nlist centroids on the DRIVER and lay the table out as one
     * partition dir per cluster. A seeded sample of at most
     * [[fitSampleCap]] non-null vectors (L2-normalized for cosine, so
-    * euclidean cells == angular cells) is fit by [[PqIndex.lloyd]]:
+    * euclidean cells == angular cells) is fit by [[PqIndex.lloyd]]
+    * (k-means++ seeded):
     * O(sample × nlist × dim × 8), ~1 s at nlist 32, dim 384 — the same
     * driver-side bound as ivfpq's coarse fit. The sample fraction is
     * `fitSampleFraction` when given (no count; the whole fraction is
@@ -199,13 +202,14 @@ object IvfIndex {
       else drawn
     require(capped.nonEmpty, s"no non-null '$vecCol' vectors in the fit sample to fit $nlist cells")
     val sample = if (metric == "cosine") capped.map(normalize) else capped
-    val centroids = PqIndex.lloyd(sample, nlist, iters = 8, seed)
+    val centroids = PqIndex.lloyd(sample, nlist, iters = 8, seed, plusPlus = true)
     // rabitq: one seeded rotation per layout, derived before any row is
     // encoded (dim from the fitted centroids — no extra data pass)
     val rot = if (storage == "rabitq")
       Some(Quantize.randomRotation(centroids.head.length, seed + 1)) else None
     val m = Model(path, centroids, metric, storage = storage, rot = rot)
-    layout(m, data, vecCol).write.mode("overwrite").partitionBy("cluster_id").parquet(path)
+    graft.sources.GraftTable.clusteredFor(layout(m, data, vecCol), "cluster_id")
+      .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
     // opt-out for callers that version the model themselves (the
     // table-attached GraftIndex): a layout-local `_model` there would
     // be redundant AND go stale across refresh generations
@@ -403,7 +407,7 @@ object IvfIndex {
     * }}}
     */
   def append(model: Model, batch: DataFrame, vecCol: String): Unit =
-    layout(model, batch, vecCol)
+    graft.sources.GraftTable.clusteredFor(layout(model, batch, vecCol), "cluster_id")
       .write.mode(SaveMode.Append).partitionBy("cluster_id").parquet(model.path)
 
   /** `df` in the layout's row shape ([[cellUdf]] cell + payload). */
@@ -416,41 +420,31 @@ object IvfIndex {
 
   /** The scan of the probed `cells` — the one way every IVF/PQ probe
     * (and the refresh's kept-cells rewrite) reads cells. With a
-    * manifest-pinned file set the relation is built from the probed
-    * cells' files only: Spark stats every path a relation is given (one
-    * stat per file on the driver, and a distributed listing job once
-    * there are more than `parallelPartitionDiscovery.threshold` = 32
-    * paths), so it must never see the rest of the manifest. Each
-    * generation directory (the parent of its `cluster_id=` dirs) is
-    * read with its own `basePath` so the partition column parses, and
-    * the generations are unioned. Probed cells that deletes dropped
-    * from the manifest contribute nothing; when none is left the scan
-    * is empty in the layout schema. Without a file set (standalone and
-    * legacy layouts) it is the directory scan with the
-    * `cluster_id IN (cells)` partition filter.
+    * manifest-pinned file set it is Spark's native Parquet scan of that
+    * list ([[graft.sources.GraftFileIndex]]: each file with its recorded
+    * length and its cell as the `cluster_id` partition value), and the
+    * `cluster_id IN (cells)` partition filter prunes the list inside
+    * `listFiles` — no directory is listed and no file is statted, however
+    * many generations the cells' files span. Probed cells that deletes
+    * dropped from the manifest contribute nothing. Without a recorded
+    * schema the data schema is inferred from one file's footer. Without
+    * a file set (standalone layouts) it is the directory scan with the
+    * same partition filter.
     */
   private[graft] def cellScan(spark: SparkSession,
                               schema: Option[org.apache.spark.sql.types.StructType],
-                              files: Option[Map[Int, Seq[String]]],
+                              files: Option[Map[Int, Seq[(String, Long)]]],
                               path: String, cells: Seq[Int]): DataFrame = {
-    def reader = schema.fold(spark.read)(spark.read.schema(_))
-    files match {
-      case None => reader.parquet(path).filter(col("cluster_id").isin(cells: _*))
+    val scan = files match {
+      case None => schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
       case Some(fm) =>
         require(fm.nonEmpty, s"empty index manifest for layout $path — caller handles empty")
-        val probed = cells.distinct.flatMap(c => fm.getOrElse(c, Nil))
-        if (probed.isEmpty) schema match {
-          case Some(sc) =>
-            spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), sc)
-          // no recorded schema: infer it from one cell, keep no rows
-          case None => cellScan(spark, None, files, path, Seq(fm.keys.min)).limit(0)
-        }
-        else probed.groupBy(f => new org.apache.hadoop.fs.Path(f).getParent.getParent.toString)
-          .toSeq.sortBy(_._1)
-          .map { case (base, fs) => reader.option("basePath", base).parquet(fs: _*) }
-          // additive evolution: older generations pad newer columns null
-          .reduce(_.unionByName(_, allowMissingColumns = true))
+        val dataSchema = schema.fold(spark.read.parquet(fm.values.flatten.head._1).schema)(sc =>
+          org.apache.spark.sql.types.StructType(sc.fields.filterNot(_.name == "cluster_id")))
+        org.apache.spark.sql.graftshim.Bridge.parquetScan(spark,
+          graft.sources.GraftFileIndex.layout(path, fm), dataSchema)
     }
+    scan.filter(col("cluster_id").isin(cells.distinct: _*))
   }
 
   /** Nearest-existing-centroid assignment as a UDF (the same normalized

@@ -46,7 +46,7 @@ object PqIndex {
                          m: Int, dsub: Int, metric: String,
                          rot: Option[Array[Array[Float]]] = None,
                          schema: Option[org.apache.spark.sql.types.StructType] = None,
-                         files: Option[Map[Int, Seq[String]]] = None)
+                         files: Option[Map[Int, Seq[(String, Long)]]] = None)
 
   def build(data: DataFrame, idCol: String, vecCol: String, nlist: Int, m: Int,
             path: String, metric: String = "cosine", seed: Long = 42L,
@@ -98,10 +98,10 @@ object PqIndex {
       }
       code
     }
-    unit
+    graft.sources.GraftTable.clusteredFor(unit
       .withColumn("cluster_id", assignUdf(col("_v")))
       .withColumn("pq_code", encodeUdf(col("_v")))
-      .drop("_v")
+      .drop("_v"), "cluster_id")
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
     val built = Model(path, coarse, codebooks, m, dsub, metric, rot)
     // opt-out for callers that version the model themselves (see
@@ -214,7 +214,7 @@ object PqIndex {
     * stable; periodic rebuild handles drift.
     */
   def append(model: Model, batch: DataFrame, vecCol: String): Unit =
-    encodeBatch(model, batch, vecCol)
+    graft.sources.GraftTable.clusteredFor(encodeBatch(model, batch, vecCol), "cluster_id")
       .write.mode(SaveMode.Append).partitionBy("cluster_id").parquet(model.path)
 
   /** `batch` + (`cluster_id`, `pq_code`) in the build's quantization
@@ -361,14 +361,32 @@ object PqIndex {
 
   /** Plain Lloyd's k-means on a driver-side sample (k ≤ 256, few
     * iterations — exactly how PQ codebooks are fit in practice).
-    * Deterministic: seeded distinct-point init.
+    * Deterministic: seeded distinct-point init, or with `plusPlus` the
+    * seeded k-means++ (D²) init, which seats the first centroids in
+    * distinct clusters whatever order the sample arrives in.
     */
   private[graft] def lloyd(points: Array[Array[Float]], k: Int, iters: Int,
-                           seed: Long): Array[Array[Float]] = {
+                           seed: Long, plusPlus: Boolean = false): Array[Array[Float]] = {
     val n = points.length
     val kk = math.min(k, n)
     val rnd = new Random(seed)
-    val cents = rnd.shuffle(points.indices.toVector).take(kk).map(i => points(i).clone).toArray
+    val cents =
+      if (!plusPlus) rnd.shuffle(points.indices.toVector).take(kk).map(i => points(i).clone).toArray
+      else {
+        val picked = Array.fill(kk)(points(rnd.nextInt(n)).clone)
+        val d2 = points.map(l2sq(_, picked(0)))
+        var c = 1
+        while (c < kk) {
+          var r = rnd.nextDouble() * d2.sum
+          var i = 0
+          while (i < n - 1 && r >= d2(i)) { r -= d2(i); i += 1 }
+          picked(c) = points(i).clone
+          var p = 0
+          while (p < n) { d2(p) = math.min(d2(p), l2sq(points(p), picked(c))); p += 1 }
+          c += 1
+        }
+        picked
+      }
     val dim = points(0).length
     var it = 0
     while (it < iters) {

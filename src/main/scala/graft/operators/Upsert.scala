@@ -27,18 +27,25 @@ object Upsert {
     * no precombine given, the full non-key row struct breaks the tie,
     * so the result is deterministic for any input (never
     * partitioning-dependent).
+    *
+    * `clusterBy`: a column of both sides that is a function of the key
+    * (a table's bucket id). The merge's one shuffle is then on it, so
+    * the output arrives grouped and sorted by it — what a
+    * `partitionBy` writer needs to leave one file per value — at no
+    * extra shuffle.
     */
   def merge(base: DataFrame, updates: DataFrame, keyCols: Seq[String],
-            precombine: Seq[Column] = Nil): DataFrame = {
+            precombine: Seq[Column] = Nil, clusterBy: Option[String] = None): DataFrame = {
     require(base.columns.sorted.sameElements(updates.columns.sorted),
       s"schema mismatch: ${base.columns.mkString(",")} vs ${updates.columns.mkString(",")}")
-    val unioned = base.withColumn("__v", lit(0)).unionByName(updates.withColumn("__v", lit(1)))
-    val nonKey = base.columns.filterNot(keyCols.contains)
+    val unioned0 = base.withColumn("__v", lit(0)).unionByName(updates.withColumn("__v", lit(1)))
+    val unioned = clusterBy.fold(unioned0)(c => unioned0.repartition(col(c)))
+    val nonKey = base.columns.filterNot(c => keyCols.contains(c) || clusterBy.contains(c))
     val tieBreak: Seq[Column] =
       if (precombine.nonEmpty) precombine
       else if (nonKey.nonEmpty) Seq(struct(nonKey.map(col): _*))
       else Nil
-    val w = Window.partitionBy(keyCols.map(col): _*)
+    val w = Window.partitionBy((clusterBy.toSeq ++ keyCols).map(col): _*)
       .orderBy(col("__v").desc +: tieBreak.map(_.desc): _*)
     unioned
       .withColumn("__rn", row_number().over(w))

@@ -144,27 +144,38 @@ object GraftIndex {
 
   // ---- MVCC manifests: cell -> immutable data files ----------------------
 
-  /** One `cell<TAB>relPath` line per data file, paths relative to
-    * `data/` (`cluster_id=N/part…` for the build generation,
-    * `g<K>-<token>/cluster_id=N/part…` for refresh generations), plus a
-    * `#modelgen=<K>` header naming the model generation these cells
+  /** One `cell<TAB>relPath<TAB>bytes` line per data file, paths
+    * relative to `data/` (`cluster_id=N/part…` for the build generation,
+    * `g<K>-<token>/cluster_id=N/part…` for refresh generations) with the
+    * file's on-disk length, so a probe plans its cell scan from this
+    * file alone ([[GraftFileIndex]]: no listing, no stat per file); plus
+    * a `#modelgen=<K>` header naming the model generation these cells
     * were assigned/encoded under — the liveness anchor [[vacuum]] keeps
     * model dirs by.
     */
   private def writeManifest(tablePath: String, name: String, fileName: String,
-                            m: Map[Int, Seq[String]],
+                            m: Map[Int, Seq[(String, Long)]],
                             modelGen: Option[Int]): Unit =
     GraftTable.MetaIO.replaceString(manifestPath(tablePath, name, fileName),
       (modelGen.map(g => s"#modelgen=$g").toSeq ++
         m.toSeq.sortBy(_._1)
-          .flatMap { case (cell, fs) => fs.sorted.map(f => s"$cell\t$f") })
+          .flatMap { case (cell, fs) => fs.sorted.map { case (f, len) => s"$cell\t$f\t$len" } })
         .mkString("\n"))
 
+  /** cell → (relative file, bytes). A 2-field line (written before the
+    * byte length was recorded) stats its file for the length.
+    */
   private def readManifest(tablePath: String, name: String,
-                           fileName: String): Map[Int, Seq[String]] =
+                           fileName: String): Map[Int, Seq[(String, Long)]] =
     GraftTable.MetaIO.readString(manifestPath(tablePath, name, fileName))
       .split("\n").filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { l => val Array(c, f) = l.split("\t", 2); (c.toInt, f) }
+      .map { l =>
+        l.split("\t") match {
+          case Array(c, f, len) => (c.toInt, (f, len.toLong))
+          case Array(c, f) =>
+            (c.toInt, (f, GraftTable.MetaIO.length(new Path(s"${dataPath(tablePath, name)}/$f"))))
+        }
+      }
       .groupBy(_._1).map { case (c, fs) => c -> fs.map(_._2).toSeq }
 
   private def manifestModelGen(tablePath: String, name: String,
@@ -179,31 +190,36 @@ object GraftIndex {
   def manifest(tablePath: String, name: String = "vec"): Map[Int, Seq[String]] = {
     val m = meta(tablePath, name)
     m.manifestName.fold(listGeneration(tablePath, name, ""))(readManifest(tablePath, name, _))
+      .map { case (c, fs) => c -> fs.map(_._1) }
   }
 
-  /** List one generation's `cluster_id=` dirs into manifest entries.
-    * `prefix` = "" for the build generation (files directly under
-    * `data/`), `"g<K>"` for a refresh generation.
+  /** List one generation's `cluster_id=` dirs into manifest entries
+    * (cell → relative path, bytes). `prefix` = "" for the build
+    * generation (files directly under `data/`), `"g<K>"` for a refresh
+    * generation.
     */
   private def listGeneration(tablePath: String, name: String,
-                             prefix: String): Map[Int, Seq[String]] = {
+                             prefix: String): Map[Int, Seq[(String, Long)]] = {
     val dir = if (prefix.isEmpty) new Path(dataPath(tablePath, name))
               else new Path(dataPath(tablePath, name), prefix)
     GraftTable.MetaIO.list(dir)
       .filter(_.getPath.getName.startsWith("cluster_id="))
       .map { cd =>
         val cell = cd.getPath.getName.stripPrefix("cluster_id=").toInt
-        val rels = GraftTable.MetaIO.list(cd.getPath).map(_.getPath.getName)
-          .filterNot(n => n.startsWith("_") || n.startsWith("."))
-          .map(n => (if (prefix.isEmpty) "" else s"$prefix/") + s"${cd.getPath.getName}/$n")
+        val rels = GraftTable.MetaIO.list(cd.getPath)
+          .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+          .map(f => ((if (prefix.isEmpty) "" else s"$prefix/") +
+            s"${cd.getPath.getName}/${f.getPath.getName}", f.getLen))
         cell -> rels
       }
       .filter(_._2.nonEmpty).toMap
   }
 
   private def absFiles(tablePath: String, name: String,
-                       m: Map[Int, Seq[String]]): Map[Int, Seq[String]] =
-    m.map { case (c, rels) => c -> rels.map(r => s"${dataPath(tablePath, name)}/$r") }
+                       m: Map[Int, Seq[(String, Long)]]): Map[Int, Seq[(String, Long)]] = {
+    val root = GraftTable.MetaIO.qualify(dataPath(tablePath, name))
+    m.map { case (c, rels) => c -> rels.map { case (r, len) => (s"$root/$r", len) } }
+  }
 
   // ---- model persistence: (part, i, j, vec) rows -------------------------
 
@@ -298,7 +314,7 @@ object GraftIndex {
   }
 
   private def loadModel(spark: SparkSession, tablePath: String, m: IndexMeta,
-                        files: Option[Map[Int, Seq[String]]],
+                        files: Option[Map[Int, Seq[(String, Long)]]],
                         table: Option[org.apache.spark.sql.types.StructType])
       : Either[IvfIndex.Model, PqIndex.Model] = {
     val parts = modelParts(spark, modelPath(tablePath, m.name, m.modelGen))
@@ -524,7 +540,7 @@ object GraftIndex {
           .join(changedKeys, m.keyCols, "left_anti")
       // allowMissingColumns: additive table evolution — older index
       // rows read the new columns as null, like the table itself
-      kept.unionByName(additions, allowMissingColumns = true)
+      GraftTable.clusteredFor(kept.unionByName(additions, allowMissingColumns = true), "cluster_id")
         .write.mode(SaveMode.Overwrite)
         .partitionBy("cluster_id").parquet(s"$data/$genDir")
       // a cell whose rows were all deleted writes no partition dir and
@@ -617,7 +633,7 @@ object GraftIndex {
     val keep = all.filter(n =>
       keepGenNums(genOf(n)) && (genOf(n) != cur || n == curName)).toSet + curName
     val referenced = keep.filter(n => GraftTable.MetaIO.exists(manifestPath(tablePath, name, n)))
-      .flatMap(n => readManifest(tablePath, name, n).values.flatten)
+      .flatMap(n => readManifest(tablePath, name, n).values.flatten.map(_._1))
     val data = new Path(dataPath(tablePath, name))
     var deleted = 0
     def sweep(prefix: String, dir: Path): Unit = {

@@ -2,10 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, SubqueryExpression}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
@@ -23,13 +25,15 @@ import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
   *   spark.read.format("graft").option("version", "0").load(path)
   * }}}
   *
-  * Reads go through a PrunedFilteredScan that re-applies the requested
-  * columns and a translated subset of filters onto the underlying
-  * snapshot DataFrame — both reach the parquet scans (column pruning +
-  * PushedFilters), so `format("graft")` reads are as prunable as raw
-  * parquet. Untranslated filters are simply left for Spark to apply
-  * above the scan (DSv1 re-evaluates unhandled filters — correctness
-  * never depends on the translation).
+  * A read resolves to the snapshot's native Parquet scan: the relation
+  * is the `HadoopFsRelation` over [[GraftFileIndex]] that
+  * [[GraftTable.read]] plans, so Spark's FileSourceScanExec reads the
+  * recorded file list with vectorized batches, column pruning and
+  * PushedFilters, and the index's `listFiles` turns a full-key equality
+  * into a one-bucket read and stats-prunable filters into skipped files
+  * — no listing, no Row conversion. A snapshot with an outstanding MOR
+  * log has no file-list form (its rows are `readMor`'s joins), so it is
+  * served by [[GraftLogRelation]] over that plan.
   */
 class GraftSource extends RelationProvider with CreatableRelationProvider
     with SchemaRelationProvider with DataSourceRegister
@@ -138,7 +142,11 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
         GraftTable.branchHead(path, b)
       case None => parameters.get("version").map(_.toInt).getOrElse(-1)
     }
-    new GraftRelation(sqlContext, path, v)
+    val snapshot = GraftTable.read(sqlContext.sparkSession, GraftTable.snapshotAt(path, v))
+    snapshot.queryExecution.analyzed match {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(r, _, _, _, _) => r
+      case _ => new GraftLogRelation(sqlContext, snapshot)
+    }
   }
 
   override def createRelation(sqlContext: SQLContext, parameters: Map[String, String],
@@ -313,73 +321,25 @@ private[sources] class GraftStreamSink(path: String, keys: Option[Seq[String]],
   override def toString: String = s"GraftStreamSink[$path]"
 }
 
-private[sources] class GraftRelation(val sqlContext: SQLContext, path: String,
-                                     version: Int)
-    extends BaseRelation with PrunedFilteredScan {
-
-  /** Resolved and read ONCE per relation: every scan path (full
-    * snapshot, point lookup, stats-pruned scan) plans from this same
-    * pinned manifest, so two scans of one DataFrame can never straddle
-    * a concurrent commit (read skew) and no scan re-reads it.
-    */
-  private lazy val pinned: GraftTable.Snapshot = GraftTable.snapshotAt(path, version)
-
-  private lazy val snapshot: DataFrame = GraftTable.read(sqlContext.sparkSession, pinned)
-
+/** A MOR-log snapshot's rows as a DSv1 relation: [[GraftTable.read]]'s
+  * plan (the log's anti-joins and winner union over the native scans),
+  * handed to Spark as InternalRows (`needConversion = false`, so no
+  * Row round trip). A `CatalystScan`: the query's columns and
+  * predicates are applied to that plan by name, so the optimizer pushes
+  * them through the joins into the native scans (a full-key equality
+  * still reads one bucket). Spark re-applies every predicate above the
+  * scan.
+  */
+private[sources] class GraftLogRelation(val sqlContext: SQLContext, snapshot: DataFrame)
+    extends BaseRelation with CatalystScan {
   override def schema: StructType = snapshot.schema
-
-  /** Top-level filters arrive AND-ed; when they pin EVERY key column
-    * with an equality, the row — if it exists — lives in exactly one
-    * hash bucket, so the scan opens that bucket's files only (Hudi
-    * bucket-index point lookup). The equality filters are still
-    * re-applied on top: a bucket holds every key that hashes to it.
-    */
-  private def pointLookup(filters: Array[Filter]): Option[DataFrame] = {
-    val keys = GraftTable.keyColumns(path)
-    val eqs = filters.collect { case EqualTo(a, v) if keys.contains(a) => a -> v }.toMap
-    if (keys.nonEmpty && keys.forall(eqs.contains)) {
-      val spark = sqlContext.sparkSession
-      // the relation-pinned snapshot: the bucket computation, the dir
-      // read, AND the full-snapshot scan all use it, so a commit (worst
-      // case a rebucket) landing mid-query can neither hash the key
-      // under one layout and read dirs of another, nor serve different
-      // snapshots to different filter shapes
-      val b = GraftTable.bucketFor(spark, pinned, eqs)
-      Some(GraftTable.readBuckets(spark, pinned, Set(b)))
-    } else None
-  }
-
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    // scan choice, most- to least-pruned: full-key point lookup (one
-    // bucket's files) → manifest-stats file skipping (files whose
-    // min/max may satisfy the filters) → full snapshot. Skipped files
-    // are decided from the manifest alone — no footer reads; the
-    // filters are re-applied on top either way.
-    val base = pointLookup(filters)
-      .orElse(GraftTable.readStatsPruned(sqlContext.sparkSession, pinned,
-        filters.toIndexedSeq))
-      .getOrElse(snapshot)
-    val filtered = filters.flatMap(translate).foldLeft(base)(_.filter(_))
-    val pruned =
-      if (requiredColumns.isEmpty) filtered.select(col(snapshot.columns.head))
-      else filtered.select(requiredColumns.map(col).toSeq: _*)
-    pruned.rdd
-  }
-
-  /** best-effort Filter → Column translation; None = let Spark apply it */
-  private def translate(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v)            => Some(col(a) === v)
-    case GreaterThan(a, v)        => Some(col(a) > v)
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= v)
-    case LessThan(a, v)           => Some(col(a) < v)
-    case LessThanOrEqual(a, v)    => Some(col(a) <= v)
-    case In(a, vs)                => Some(col(a).isin(vs.toSeq: _*))
-    case IsNull(a)                => Some(col(a).isNull)
-    case IsNotNull(a)             => Some(col(a).isNotNull)
-    case StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-    case And(l, r)                => for (lc <- translate(l); rc <- translate(r)) yield lc && rc
-    case Or(l, r)                 => for (lc <- translate(l); rc <- translate(r)) yield lc || rc
-    case Not(c)                   => translate(c).map(!_)
-    case _                        => None
-  }
+  override def needConversion: Boolean = false
+  override def buildScan(requiredColumns: Seq[Attribute],
+                         filters: Seq[Expression]): RDD[Row] =
+    filters.filterNot(SubqueryExpression.hasSubquery)
+      .foldLeft(snapshot)((df, f) => df.filter(Bridge.column(f.transform {
+        case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
+      })))
+      .select(requiredColumns.map(a => Bridge.column(UnresolvedAttribute.quoted(a.name))): _*)
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }

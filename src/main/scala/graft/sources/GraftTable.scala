@@ -21,8 +21,9 @@ import java.nio.charset.StandardCharsets
   *     the log works on HDFS and object stores, where append either
   *     doesn't exist or isn't atomic.
   *   path/manifests/v<N>     bucket → data-dir lines for snapshot N
-  *   path/data/v<N>-<token>/__bucket=<b>/  (parquet files; token is
-  *     unique per write attempt so racing writers never share a dir)
+  *   path/data/v<N>-<token>/__bucket=<b>/  (one parquet file per
+  *     bucket per write, more past maxPartitionBytes; token is unique
+  *     per write attempt so racing writers never share a dir)
   * }}}
   *
   * A manifest is immutable once committed, so it is parsed ONCE per
@@ -117,6 +118,11 @@ object GraftTable {
       }
 
     def exists(p: Path): Boolean = withFs(p)(_.exists(p))
+
+    def length(p: Path): Long = withFs(p)(_.getFileStatus(p).getLen)
+
+    /** `p` with its store's scheme and authority (no IO). */
+    def qualify(p: String): String = { val q = new Path(p); withFs(q)(_.makeQualified(q).toString) }
 
     def readString(p: Path): String = withFs(p) { f =>
       val in = f.open(p)
@@ -429,12 +435,13 @@ object GraftTable {
     * sized for n holds fpp for any m ≤ n).
     */
   private def collectBloomLines(spark: SparkSession, tableRoot: String,
-                                writtenRelDirs: Seq[String], schema: types.StructType,
+                                written: Seq[(String, Long)], schema: types.StructType,
                                 statLines: Seq[String]): Seq[String] = {
     val cfg = bloomConfig(tableRoot)
-    if (cfg.isEmpty || writtenRelDirs.isEmpty) return Nil
+    if (cfg.isEmpty || written.isEmpty) return Nil
     val (cfgCols, fpp) = cfg.get
-    val src = spark.read.schema(schema).parquet(writtenRelDirs.map(d => s"$tableRoot/$d"): _*)
+    val writtenRelDirs = written.map(f => dirOf(f._1)).distinct
+    val src = scanFiles(spark, tableRoot, written, schema)
     val cols = cfgCols.filter(src.schema.fieldNames.contains)
     if (cols.isEmpty) return Nil
     val maxRows = statLines.collect {
@@ -463,19 +470,21 @@ object GraftTable {
       }
   }
 
-  /** One aggregate scan over the freshly written dirs → #file/#stat
+  /** One aggregate scan over the freshly written files (relative path,
+    * bytes — from the writer's listing of its attempt dir) → #file/#stat
     * lines. Runs BEFORE the manifest commit (same ordering as the data
     * itself); files just written are page-cache-warm, and the job is
-    * O(written buckets), not O(table). The dirs are read with the
-    * `schema` just written (no footer-inference job). Stats failures
-    * must never fail a commit — they are an optimization, and a
-    * manifest without them simply doesn't prune.
+    * O(written buckets), not O(table). The files are read with the
+    * `schema` just written (no listing, no footer-inference job). Stats
+    * failures must never fail a commit — they are an optimization, and
+    * a manifest without them simply doesn't prune.
     */
   private def collectStatLines(spark: SparkSession, tableRoot: String,
-                               writtenRelDirs: Seq[String],
+                               written: Seq[(String, Long)],
                                schema: types.StructType): Seq[String] = {
-    if (writtenRelDirs.isEmpty) return Nil
-    val src = spark.read.schema(schema).parquet(writtenRelDirs.map(d => s"$tableRoot/$d"): _*)
+    if (written.isEmpty) return Nil
+    val writtenRelDirs = written.map(f => dirOf(f._1)).distinct
+    val src = scanFiles(spark, tableRoot, written, schema)
     val fields = statFields(src.schema)
     val utc = spark.conf.get("spark.sql.session.timeZone") == "UTC"
     // null-count-ONLY stats for array/binary columns (min/max have no
@@ -539,14 +548,9 @@ object GraftTable {
     }) ++ nullOnly.zipWithIndex.map { case (f, i) =>
       sum(when(col(s"`${f.name}`").isNull, 1L).otherwise(0L)).as(s"__no$i")
     }
-    // on-disk lengths, keyed by rel path: one list per freshly-written
-    // dir (O(touched) at WRITE time — the writer just created these
-    // files) so QUERY planning never has to list anything
-    val sizes: Map[String, Long] = writtenRelDirs.flatMap { d =>
-      MetaIO.list(new Path(s"$tableRoot/$d"))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(f => s"$d/${f.getPath.getName}" -> f.getLen)
-    }.toMap
+    // on-disk lengths, keyed by rel path, from the writer's listing
+    // (O(touched) at WRITE time) so QUERY planning never lists anything
+    val sizes: Map[String, Long] = written.toMap
     src.groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*).collect().toSeq.flatMap { r =>
         val uri = r.getString(0)
@@ -673,6 +677,24 @@ object GraftTable {
         f -> FileStat(n, stats.getOrElse(f, Seq.empty).map(s => s._2 -> s._3).toMap,
           blooms.getOrElse(f, Seq.empty).map(s => s._2 -> s._3).toMap, bytes)
       }
+    }
+
+    private lazy val statsByDir: Map[String, Seq[(String, FileStat)]] =
+      fileStats.toSeq.groupBy { case (f, _) => f.substring(0, f.lastIndexOf('/')) }
+
+    /** (relative file, bytes) of every data file in relative dir `dir`,
+      * from the recorded stats — no listing. Files with zero rows carry
+      * no stats line and are rightly absent. A dir the stats do not
+      * cover with byte lengths (a legacy write, a failed stats job, an
+      * empty or tombstone dir) is listed instead: never a wrong list.
+      */
+    def filesIn(dir: String): Seq[(String, Long)] = {
+      val covered = statsByDir.getOrElse(dir, Nil)
+      if (covered.nonEmpty && covered.forall(_._2.bytes >= 0L))
+        covered.map { case (f, st) => (f, st.bytes) }.sortBy(_._1)
+      else MetaIO.list(new Path(path, dir))
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        .map(f => (s"$dir/${f.getPath.getName}", f.getLen)).sortBy(_._1)
     }
   }
 
@@ -902,30 +924,34 @@ object GraftTable {
     }
   }
 
-  /** Stats-based file pruning for snapshot `s` under `filters`:
-    * Some((inputPaths, keptFiles, totalStatFiles)) when the manifest
-    * carries stats — inputPaths include stat-less carried dirs
-    * wholesale (conservative) — or None for legacy manifests and empty
-    * filter sets. A filter only prunes when EVERY file of a dir is
-    * covered by stats or provably skippable.
-    */
   /** Conservative per-file keep test for snapshot `s` under DSv1
-    * filters — the stats machinery behind [[prunedDataPaths]] exposed
-    * per RELATIVE file path, so the DSv2 storage-partitioned scan
-    * (graft.sources.v2) can skip files WITHIN its per-bucket
-    * partitions without flattening the bucket structure. None when
-    * stats cannot prune (legacy manifest, empty filters): read
-    * everything. Unknown files keep (conservative).
+    * filters, per RELATIVE file path — the one metadata pruning rule of
+    * every scan (the table's file index, the DSv2 storage-partitioned
+    * scan, the skipping report): a file is dropped when it lies outside
+    * the buckets a full-key equality or IN hashes into
+    * ([[v2.BoundBucket.hit]]), or when its stats or blooms rule a filter
+    * out. None when nothing can prune (legacy manifest, empty filters):
+    * read everything. Unknown files keep (conservative).
     */
   def fileKeepPredicate(s: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter])
       : Option[String => Boolean] = {
     if (filters.isEmpty) return None
-    val stats = s.fileStats
-    if (stats.isEmpty) return None
     val schema = s.schema.getOrElse(return None)
+    val pinsKey = filters.exists {
+      case _: org.apache.spark.sql.sources.EqualTo | _: org.apache.spark.sql.sources.In => true
+      case _ => false
+    }
+    val bucketDirs: Option[Set[String]] = if (!pinsKey) None else {
+      val keys = keyColumns(s.path)
+      val kts = keys.flatMap(k => schema.fields.find(_.name == k).map(_.dataType))
+      Option.when(kts.size == keys.size)(v2.BoundBucket.hit(keys, kts, s.nbuckets, filters))
+        .flatten.map(bs => s.dirs.collect { case (b, d) if bs(b) => d }.toSet)
+    }
+    val stats = s.fileStats
+    if (stats.isEmpty && bucketDirs.isEmpty) return None
     val kinds = schema.fields.flatMap(f => statKind(f.dataType).map(f.name -> _)).toMap
-    Some(rel => stats.get(rel)
-      .forall(st => filters.forall(fl => mayMatch(st, kinds, fl))))
+    Some(rel => bucketDirs.forall(_.contains(dirOf(rel))) &&
+      stats.get(rel).forall(st => filters.forall(fl => mayMatch(st, kinds, fl))))
   }
 
   /** Metadata-only UPPER BOUND on snapshot `s`'s rows matching
@@ -1136,13 +1162,17 @@ object GraftTable {
     }
   }
 
+  /** [[fileKeepPredicate]] applied to snapshot `s`'s files:
+    * Some((inputPaths, keptFiles, totalStatFiles)) when the manifest
+    * carries stats — inputPaths include stat-less carried dirs
+    * wholesale (conservative) — or None for legacy manifests and empty
+    * filter sets.
+    */
   def prunedDataPaths(s: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter])
       : Option[(Seq[String], Int, Int)] = {
-    if (filters.isEmpty) return None
     val stats = s.fileStats
     if (stats.isEmpty) return None
-    val schema = s.schema.getOrElse(return None)
-    val kinds = schema.fields.flatMap(f => statKind(f.dataType).map(f.name -> _)).toMap
+    val keep = fileKeepPredicate(s, filters).getOrElse(return None)
     val dirPaths = scala.collection.mutable.ArrayBuffer.empty[String]
     val keptFiles = scala.collection.mutable.ArrayBuffer.empty[String]
     var total = 0
@@ -1151,8 +1181,7 @@ object GraftTable {
       if (files.isEmpty) dirPaths += s"${s.path}/$d" // stat-less dir: read whole
       else files.foreach { rel =>
         total += 1
-        if (filters.forall(fl => mayMatch(stats(rel), kinds, fl)))
-          keptFiles += s"${s.path}/$rel"
+        if (keep(rel)) keptFiles += s"${s.path}/$rel"
       }
     }
     Some((dirPaths.toSeq ++ keptFiles.toSeq, keptFiles.size, total))
@@ -1160,29 +1189,23 @@ object GraftTable {
 
   /** Snapshot read restricted to the files whose stats may satisfy
     * `filters` — Some only when at least one file is actually skipped
-    * (otherwise the caller's plain snapshot scan is identical). The
-    * scan carries the recorded snapshot schema, so planning lists
-    * nothing beyond the manifest read itself. Filters are NOT applied
-    * here — callers re-apply them (skipping is conservative, kept files
-    * still hold non-matching rows).
+    * (otherwise the caller's plain snapshot scan is identical). Filters
+    * are NOT applied here — callers re-apply them (skipping is
+    * conservative, kept files still hold non-matching rows). The MOR
+    * log applies to the pruned scan too: a kept file can still hold
+    * MOR-deleted rows, and delta winner rows (not stats-indexed — they
+    * live in the log, not in files the manifest describes) may match
+    * anywhere, so emission stays table-wide — even when stats pruned
+    * EVERY stored file, the log can still hold matches.
     */
   def readStatsPruned(spark: SparkSession, s: Snapshot,
                       filters: Seq[org.apache.spark.sql.sources.Filter])
       : Option[DataFrame] =
-    prunedDataPaths(s, filters).flatMap { case (paths, kept, total) =>
-      if (kept == total) None
-      else s.schema.map { sc =>
-        // the MOR log applies to the pruned scan too: a kept file can
-        // still hold MOR-deleted rows, and delta winner rows (not
-        // stats-indexed — they live in the log, not in files the
-        // manifest describes) may match the predicate anywhere, so
-        // emission stays table-wide (scope = None) — even when stats
-        // pruned EVERY stored file, the log can still hold matches
-        val rels = paths.map(_.stripPrefix(s"${s.path}/"))
-        readMor(spark, s, rels)(g =>
-          if (g.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-          else spark.read.schema(sc).parquet(g.map(r => s"${s.path}/$r"): _*))
+    prunedDataPaths(s, filters).flatMap { case (_, kept, total) =>
+      if (kept == total || s.schema.isEmpty) None
+      else {
+        val keep = fileKeepPredicate(s, filters).get
+        Some(readMor(spark, s, s.dirs.values.toSeq)(readPinned(spark, s, keep)))
       }
     }
 
@@ -1550,13 +1573,46 @@ object GraftTable {
     * base read would fold retired bytes back into fresh files).
     * mergeSchema only for legacy schema-less manifests.
     */
-  private def readPinned(spark: SparkSession, s: Snapshot)(g: Seq[String]): DataFrame = {
-    val dirs = g.map(d => s"${s.path}/$d")
+  private def readPinned(spark: SparkSession, s: Snapshot,
+                         fileKeep: String => Boolean = _ => true)(g: Seq[String]): DataFrame =
     s.schema match {
-      case Some(sc) => spark.read.schema(sc).parquet(dirs: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+      case Some(sc) => org.apache.spark.sql.graftshim.Bridge.parquetScan(spark,
+        fileIndex(s, g, fileKeep), sc)
+      case None => spark.read.option("mergeSchema", "true").parquet(g.map(d => s"${s.path}/$d"): _*)
     }
-  }
+
+  /** The file list of snapshot `s`'s relative data dirs `dirs` (files
+    * whose relative path passes `fileKeep`), read from its stats
+    * segments ([[Snapshot.filesIn]]). Its `listFiles` drops, from the
+    * pushed data filters alone, the buckets a full-key equality or IN
+    * cannot hash into and the files whose stats or blooms rule the
+    * filters out ([[fileKeepPredicate]]).
+    */
+  private[sources] def fileIndex(s: Snapshot, dirs: Seq[String],
+                                 fileKeep: String => Boolean = _ => true): GraftFileIndex =
+    GraftFileIndex.files(s.path, dirs.flatMap(s.filesIn).filter(f => fileKeep(f._1)),
+      dataFilters =>
+        fileKeepPredicate(s, org.apache.spark.sql.graftshim.Bridge.toV1Filters(dataFilters))
+          .fold((_: String) => true)(identity))
+
+  /** Rows grouped for a `partitionBy(c)` write so that each value of
+    * `c` lands in ONE write task, hence one file per value per attempt:
+    * a single task when the planned input fits one open-cost unit
+    * (`spark.sql.files.openCostInBytes`, where a shuffle's fixed cost
+    * outweighs the work it spreads), else a shuffle on `c`.
+    */
+  private[graft] def clusteredFor(df: DataFrame, c: String): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        org.apache.spark.sql.graftshim.Bridge.filesOpenCostInBytes) df.coalesce(1)
+    else df.repartition(col(c))
+
+  /** Native Parquet scan of table files (relative path, bytes). */
+  private def scanFiles(spark: SparkSession, tableRoot: String, files: Seq[(String, Long)],
+                        schema: types.StructType): DataFrame =
+    org.apache.spark.sql.graftshim.Bridge.parquetScan(spark,
+      GraftFileIndex.files(tableRoot, files, _ => _ => true), schema)
+
+  private def dirOf(rel: String): String = rel.substring(0, math.max(0, rel.lastIndexOf('/')))
 
   def upsert(spark: SparkSession, path: String, updates0: DataFrame,
              precombine: Seq[String] = Nil): Unit =
@@ -1586,17 +1642,21 @@ object GraftTable {
       if (g.isEmpty) updates.limit(0)
       else readPinned(spark, s)(g))
     val (base2, updates2) = alignSchemas(base, updates)
-    val merged = Upsert.merge(base2, updates2, keys, precombine.map(col))
+    // the merge's key shuffle clusters on the bucket (a function of the
+    // key), so the write leaves one file per touched bucket
+    val merged = Upsert.merge(base2.withColumn(BUCKET, bucketCol(keys, nbuckets)),
+      updates2.withColumn(BUCKET, bucketCol(keys, nbuckets)), keys, precombine.map(col),
+      clusterBy = Some(BUCKET))
     val carryOver = current.filter { case (b, _) => !touched(b) }
     branch match {
       case None =>
         writeVersion(merged, path, keys, nbuckets, s.version + 1, Some(s), carryOver,
-          touched = touched)
+          touched = touched, clustered = true)
       case Some(n) =>
         val seq = branchCommits(path, n).lastOption.fold(1)(_._1 + 1)
         writeVersion(merged, path, keys, nbuckets, nextBranchSlot(path), Some(s), carryOver,
           touched = touched, branchCommit = Some((n, seq)),
-          dirVersion = branchBase(path, n) + seq)
+          dirVersion = branchBase(path, n) + seq, clustered = true)
     }
   }
 
@@ -2687,12 +2747,14 @@ object GraftTable {
     (a2, b2)
   }
 
-  /** Snapshot read; `version` for time travel. When the manifest
-    * records the snapshot schema (all manifests written since stats
-    * landed), the scan is planned with it directly — NO mergeSchema
-    * footer-listing pass, and rows written before an additive evolution
-    * read the newer columns as null (the reader pads missing columns).
-    * Legacy manifests fall back to mergeSchema inference.
+  /** Snapshot read; `version` for time travel. The scan is Spark's
+    * native Parquet scan of the snapshot's recorded file list
+    * ([[fileIndex]]): no listing, no mergeSchema footer pass, and rows
+    * written before an additive evolution read the newer columns as
+    * null (the reader pads missing columns). A full-key equality above
+    * it reads one bucket's files, a stats-prunable filter only the files
+    * that may match — both decided in the index's `listFiles`. Legacy
+    * manifests (no recorded schema) fall back to mergeSchema inference.
     */
   def read(spark: SparkSession, path: String, version: Int = -1): DataFrame =
     read(spark, snapshotAt(path, version))
@@ -2703,56 +2765,30 @@ object GraftTable {
   /** The table's record-key columns (create-time order). */
   def keyColumns(path: String): Seq[String] = meta(path)._1
 
-  /** The bucket a fully-specified key tuple hashes into under snapshot
-    * `version`'s layout — evaluated with the SAME typed xxhash64
-    * expression the writers use (literals cast to the stored key types
-    * first, exactly like a write batch), so the answer is the dir the
-    * row lives in, not a reimplementation that could drift. One
-    * driver-local 1-row job.
-    */
-  def bucketFor(spark: SparkSession, s: Snapshot, keyValues: Map[String, Any]): Int = {
-    val (keys, _, keyTypes) = meta(s.path)
-    require(keys.forall(keyValues.contains), s"bucketFor needs all key columns $keys")
-    val oneRow = keys.foldLeft(spark.range(1).toDF()) { (d, k) =>
-      d.withColumn(k, lit(keyValues(k)))
-    }
-    alignKeyTypes(spark, s, keys, keyTypes, oneRow)
-      .select(bucketCol(keys, s.nbuckets).as("b")).head().getInt(0)
-  }
-
   /** Snapshot restricted to the manifest dirs of `buckets` — the
     * point-lookup path: a key-equality read opens ONE bucket's files
     * (file-group pruning, Hudi's bucket-index lookup), not the table.
-    * The frame is padded to the full snapshot schema, so reads of an
-    * old un-rewritten bucket after additive evolution still line up.
+    * The frame has the full snapshot schema, so reads of an old
+    * un-rewritten bucket after additive evolution still line up. The
+    * MOR log applies on top, scoped to the requested buckets: a
+    * point-looked-up key that was MOR-deleted must be absent here
+    * exactly as in a full read, and a key living only in a delta commit
+    * (even in a bucket with no dir) must be served.
     */
   def readBuckets(spark: SparkSession, path: String, version: Int,
                   buckets: Set[Int]): DataFrame =
     readBuckets(spark, snapshotAt(path, version), buckets)
 
   def readBuckets(spark: SparkSession, s: Snapshot, buckets: Set[Int]): DataFrame = {
-    val path = s.path
     val rels = s.dirs.filter { case (b, _) => buckets(b) }.values.toSeq
     s.schema match {
-      case Some(sc) =>
-        // manifest-recorded schema: the point lookup plans WITHOUT
-        // listing/footer-reading the rest of the table's files — the
-        // reader itself pads columns missing from old bucket files.
-        // The MOR log applies on top, scoped to the requested buckets:
-        // a point-looked-up key that was MOR-deleted must be absent
-        // here exactly as in a full read, and a key living only in a
-        // delta commit (even in a bucket with no dir) must be served.
-        readMor(spark, s, rels, Some(buckets))(g =>
-          if (g.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-          else spark.read.schema(sc).parquet(g.map(d => s"$path/$d"): _*))
+      case Some(_) => readMor(spark, s, rels, Some(buckets))(readPinned(spark, s))
       case None => // legacy manifest: one full-relation pass for the schema.
         // (Never log-bearing: the MOR commits upgrade a legacy manifest
         // with #schema before they append the first #dv/#delta line.)
         val full = read(spark, s)
         if (rels.isEmpty) return full.limit(0)
-        val sub = spark.read.option("mergeSchema", "true")
-          .parquet(rels.map(d => s"$path/$d"): _*)
+        val sub = readPinned(spark, s)(rels)
         val padded = full.schema.fields.filterNot(f => sub.columns.contains(f.name))
           .foldLeft(sub)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
         padded.select(full.columns.map(col).toIndexedSeq: _*)
@@ -2912,9 +2948,8 @@ object GraftTable {
 
   /** Major compaction: rewrite the current snapshot as a fresh version
     * with exactly one file per bucket. Bucket-level COW accretes files
-    * (every upsert adds a dir for each touched bucket, and task
-    * parallelism splits dirs into many small parquet files) — the
-    * classic small-files problem; at 100 TB scan throughput dies on
+    * (every upsert adds a dir for each touched bucket) — the classic
+    * small-files problem; at 100 TB scan throughput dies on
     * file-open overhead long before bytes. The repartition pins each
     * bucket to one task so each dir is one well-sized file. Runs
     * through the same optimistic-commit path as upsert (a racing
@@ -4037,13 +4072,18 @@ object GraftTable {
                            touched: Set[Int] = Set.empty,
                            recordSorted: Boolean = false,
                            branchCommit: Option[(String, Int)] = None,
-                           dirVersion: Int = -1): Unit = {
+                           dirVersion: Int = -1,
+                           clustered: Boolean = false): Unit = {
     // unique per-attempt dir: racing writers must not share a data path
     val dirV = if (dirVersion >= 0) dirVersion else v
     val dataRel = s"data/v$dirV-${java.util.UUID.randomUUID.toString.take(8)}"
     // CHECK guard rides the write job itself (no pre-pass): a violating
     // row fails the job here, before any manifest or commit marker
-    val bucketed = constraintGuard(path, df).withColumn(BUCKET, bucketCol(keyCols, nbuckets))
+    // a `clustered` caller's frame already carries BUCKET, computed
+    // and shuffled on in its own merge: it arrives grouped by bucket
+    val guarded = constraintGuard(path, df)
+    val bucketed =
+      if (clustered) guarded else guarded.withColumn(BUCKET, bucketCol(keyCols, nbuckets))
     // sortWithin: transient cluster-sort columns (e.g. compact's
     // z-value) — each task's rows arrive sorted by (bucket, sortCols),
     // which satisfies the writer's required partition-column ordering,
@@ -4072,14 +4112,32 @@ object GraftTable {
     val targetParts = nbuckets * rangeSplit
     val partCap = math.max(
       df.sparkSession.sparkContext.defaultParallelism * 2, nbuckets)
+    // Unsorted writes group rows by bucket first (the caller's own
+    // shuffle when `clustered`, else [[clusteredFor]]), so each
+    // attempt leaves ONE file per bucket — every file is a Parquet open,
+    // a Configuration copy and a footer read on every later scan — and
+    // a bucket past `spark.sql.files.maxPartitionBytes` (never less than
+    // the open cost, the smallest split Spark packs) rolls into several,
+    // capped by maxRecordsPerFile at that many bytes' worth of rows by
+    // the base snapshot's recorded rows and bytes.
     val maxRecs: Option[Long] =
-      if (rangeSplit <= 1 || targetParts <= partCap) None
-      else base.flatMap(b => scala.util.Try(statsProfile(b).map(_._1)).toOption.flatten)
-        .filter(_ > 0)
-        .map(n => math.max(1L, (n + targetParts - 1) / targetParts))
+      if (rangeSplit > 1) {
+        if (targetParts <= partCap) None
+        else base.flatMap(b => scala.util.Try(statsProfile(b).map(_._1)).toOption.flatten)
+          .filter(_ > 0)
+          .map(n => math.max(1L, (n + targetParts - 1) / targetParts))
+      } else if (sortWithin.nonEmpty) None
+      else base.flatMap { b =>
+        val sized = b.fileStats.values.filter(_.bytes > 0L)
+        val (rows, bytes) = (sized.map(_.rows).sum, sized.map(_.bytes).sum)
+        val cap = math.max(org.apache.spark.sql.graftshim.Bridge.filesMaxPartitionBytes,
+          org.apache.spark.sql.graftshim.Bridge.filesOpenCostInBytes)
+        Option.when(rows > 0L)(math.max(1L, (cap.toDouble * rows / bytes).toLong))
+      }
     val prepared =
-      if (sortWithin.isEmpty) bucketed
-      else {
+      if (sortWithin.isEmpty) {
+        if (clustered) bucketed else clusteredFor(bucketed, BUCKET)
+      } else {
         val parted =
           if (rangeSplit > 1)
             bucketed.repartitionByRange(
@@ -4096,10 +4154,15 @@ object GraftTable {
     maxRecs.fold(prepared.write)(r => prepared.write.option("maxRecordsPerFile", r))
       .mode(SaveMode.Overwrite).partitionBy(BUCKET)
       .parquet(s"$path/$dataRel")
-    // manifest = freshly written bucket dirs + carried-over references
-    var written = MetaIO.list(new Path(path, dataRel))
-      .map(_.getPath.getName).filter(_.startsWith(s"$BUCKET="))
-      .map(d => d.stripPrefix(s"$BUCKET=").toInt -> s"$dataRel/$d").toMap
+    // manifest = freshly written bucket dirs + carried-over references;
+    // the written files' lengths feed the stats lines, so no later
+    // step lists these dirs again
+    val writtenFiles = MetaIO.list(new Path(path, dataRel))
+      .filter(_.getPath.getName.startsWith(s"$BUCKET="))
+      .flatMap(d => MetaIO.list(d.getPath).filter(_.getPath.getName.endsWith(".parquet"))
+        .map(f => (s"$dataRel/${d.getPath.getName}/${f.getPath.getName}", f.getLen)))
+    var written = writtenFiles.map(f => dirOf(f._1)).distinct
+      .map(d => d.substring(d.lastIndexOf('=') + 1).toInt -> d).toMap
     if (written.isEmpty && carryOver.isEmpty) {
       // empty snapshot (e.g. a delete removed every row): partitionBy
       // emits no dirs for zero rows, but the table must stay readable
@@ -4190,8 +4253,8 @@ object GraftTable {
     }
     val freshStats =
       try {
-        val sl = collectStatLines(spark, path, written.values.toSeq, newSchema)
-        sl ++ collectBloomLines(spark, path, written.values.toSeq, newSchema, sl)
+        val sl = collectStatLines(spark, path, writtenFiles, newSchema)
+        sl ++ collectBloomLines(spark, path, writtenFiles, newSchema, sl)
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[graft] stats collection failed for $path v$v: $e"); Nil

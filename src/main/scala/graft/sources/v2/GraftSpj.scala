@@ -367,9 +367,37 @@ object BoundBucket {
     */
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(Seq[DataType], Int), InternalRow => Int]()
-  private[v2] def evaluator(keyTypes: Seq[DataType], n: Int): InternalRow => Int =
+  private[sources] def evaluator(keyTypes: Seq[DataType], n: Int): InternalRow => Int =
     cache.computeIfAbsent((keyTypes, n),
       { case (kt, nb) => Bridge.bucketExprEval(kt, nb) })
+
+  /** The buckets rows matching DSv1 `filters` can live in, from the
+    * filter values alone (no job): every key column pinned by an
+    * equality or IN (intersected per column), each value tuple hashed
+    * with the writers' own expression. None = the filters do not pin
+    * the full key (or a value does not convert): no bucket pruning.
+    * Null values match no equi-predicate and are dropped.
+    */
+  private[sources] def hit(keys: Seq[String], keyTypes: Seq[DataType], n: Int,
+                           filters: Seq[org.apache.spark.sql.sources.Filter])
+      : Option[Set[Int]] = {
+    val pinned = keys.map { k =>
+      filters.collect {
+        case org.apache.spark.sql.sources.EqualTo(c, v) if c == k => Set(v)
+        case org.apache.spark.sql.sources.In(c, vs) if c == k => vs.toSet
+      }.reduceOption(_ intersect _).map(_.filter(_ != null).toSeq)
+    }
+    if (pinned.exists(_.isEmpty)) return None
+    val tuples = pinned.flatten.foldLeft(Seq(Seq.empty[Any])) { (acc, vs) =>
+      for (t <- acc; v <- vs) yield t :+ v
+    }
+    if (tuples.size > 4096) return None
+    val eval = evaluator(keyTypes, n)
+    scala.util.Try(tuples.map { t =>
+      eval(InternalRow.fromSeq(t.zip(keyTypes).map { case (v, kt) =>
+        Bridge.toCatalystValue(v, kt).get }))
+    }.toSet).toOption
+  }
 }
 
 class GraftV2Table(val path: String, val pinned: Option[Int] = None)
@@ -773,7 +801,12 @@ class GraftScan(snap: GraftTable.Snapshot, dataSchema: StructType,
     if (st.isEmpty) return stat(none, none) // legacy snapshot: no stats recorded
     val keep = GraftTable.fileKeepPredicate(snap, filters ++ runtimeFilters)
       .getOrElse((_: String) => true)
-    val kept = st.collect { case (f, s) if keep(f) => s }
+    // runtime bucket pruning drops whole dirs, as planInputPartitions does
+    val prunedDirs = runtimeBuckets.fold(Set.empty[String])(rb =>
+      snap.dirs.collect { case (b, d) if !rb(b % reportedBuckets) => d + "/" }.toSet)
+    val kept = st.collect {
+      case (f, s) if keep(f) && !prunedDirs.exists(f.startsWith) => s
+    }
     val rows = java.util.OptionalLong.of(kept.map(_.rows).sum)
     if (kept.exists(_.bytes < 0L)) return stat(none, rows) // pre-byte-length lines
     // scale by the projected column fraction, the FileScan estimate:
@@ -918,32 +951,15 @@ class GraftScan(snap: GraftTable.Snapshot, dataSchema: StructType,
     runtimeBuckets = bucketsHit(runtimeFilters)
   }
 
-  /** Bucket ids the runtime key values can possibly live in — only
-    * derivable for single-key tables (the placement hash covers ALL
-    * keys jointly, so one key's values don't pin a bucket when there
-    * are several). None = no bucket-level pruning (file-level still
-    * applies). Null probe values are ignored: an equi-join never
-    * matches null. Any conversion failure degrades to None, never to
-    * a wrong bucket set.
+  /** Bucket ids the runtime key values can possibly live in
+    * ([[BoundBucket.hit]] under the reported layout — the pmod nesting
+    * keeps a coalesced id exact). None = no bucket-level pruning
+    * (file-level still applies).
     */
   private def bucketsHit(fs: Seq[org.apache.spark.sql.sources.Filter]): Option[Set[Int]] = {
-    if (keys.size != 1) return None
-    val k = keys.head
-    val kt = dataSchema.fields.find(_.name == k).map(_.dataType).getOrElse(return None)
-    val valueSets = fs.collect {
-      case org.apache.spark.sql.sources.In(c, vs) if c == k => vs.toSet
-      case org.apache.spark.sql.sources.EqualTo(c, v) if c == k => Set(v)
-    }
-    if (valueSets.isEmpty) return None
-    val values = valueSets.reduce(_ intersect _).filter(_ != null)
-    val eval = BoundBucket.evaluator(Seq(kt), reportedBuckets)
-    val buckets = values.map { v =>
-      Bridge.toCatalystValue(v, kt) match {
-        case Some(cv) => eval(InternalRow(cv))
-        case None => return None
-      }
-    }
-    Some(buckets)
+    val kts = keys.map(k => dataSchema.fields.find(_.name == k).map(_.dataType)
+      .getOrElse(return None))
+    BoundBucket.hit(keys, kts, reportedBuckets, fs)
   }
 
   override def outputPartitioning(): Partitioning =
@@ -1014,9 +1030,8 @@ class GraftScan(snap: GraftTable.Snapshot, dataSchema: StructType,
     // a per-bucket LIST per query is the planning bottleneck; on
     // object stores it's a LIST storm). A dir with no stats coverage
     // (legacy write, failed stats job, or pre-byte-length lines) falls
-    // back to listing JUST that dir — never a wrong file list. Files
-    // with zero rows carry no stats line and are correctly absent.
-    val stats = snap.fileStats
+    // back to listing JUST that dir — never a wrong file list
+    // ([[GraftTable.Snapshot.filesIn]], the list every table read uses).
     // EVERY reported bucket id gets a partition (possibly file-less),
     // so the two sides of a join always expose identical partition-
     // value sets. Coalesced layouts (reportedBuckets < nbuckets) merge
@@ -1030,18 +1045,7 @@ class GraftScan(snap: GraftTable.Snapshot, dataSchema: StructType,
         if (runtimeBuckets.exists(rb => !rb.contains(p))) Seq.empty[Int]
         else (p until nbuckets by reportedBuckets)
       val files = physical.flatMap(b => dirs.get(b).toSeq).flatMap { rel =>
-        val covered = stats.collect {
-          case (f, st) if f.startsWith(rel + "/") => (f, st.bytes)
-        }.toSeq
-        if (covered.nonEmpty && covered.forall(_._2 >= 0L))
-          covered.filter { case (f, _) => keep(f) }
-            .map { case (f, len) => (s"$path/$f", len) }
-            .sortBy(_._1)
-        else
-          GraftTable.MetaIO.list(new Path(s"$path/$rel"))
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .filter(f => keep(s"$rel/${f.getPath.getName}"))
-            .map(f => (f.getPath.toString, f.getLen))
+        snap.filesIn(rel).collect { case (f, len) if keep(f) => (s"$path/$f", len) }
       }
       // Within a bucket, parallelism is FILE-AND-BYTE-RANGE, not
       // one-task-per-bucket: each file splits at maxPartitionBytes

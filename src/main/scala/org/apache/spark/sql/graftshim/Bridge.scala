@@ -205,6 +205,31 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** DataFrame over a native Parquet scan of `index`'s files —
+    * `HadoopFsRelation(index, ParquetFileFormat)` under a
+    * LogicalRelation, the relation Spark's own `spark.read.parquet`
+    * resolves to, so the planner emits a FileSourceScanExec
+    * (vectorized batches, pushed filters, split packing) over a file
+    * list the caller built from metadata. Output = `dataSchema` ++ the
+    * index's partition columns.
+    */
+  def parquetScan(spark: SparkSession,
+                  index: org.apache.spark.sql.execution.datasources.FileIndex,
+                  dataSchema: StructType): DataFrame =
+    dataFrame(spark, org.apache.spark.sql.execution.datasources.LogicalRelation(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+        index.partitionSchema, dataSchema, None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+        Map.empty)(spark)))
+
+  /** Catalyst data filters → DSv1 [[org.apache.spark.sql.sources.Filter]]s,
+    * `DataSourceStrategy.translateFilter` per conjunct; untranslatable
+    * ones are dropped (callers prune conservatively with the rest).
+    */
+  def toV1Filters(exprs: Seq[Expression]): Seq[org.apache.spark.sql.sources.Filter] =
+    exprs.flatMap(e => org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false))
+
   /** Whether the session's CacheManager holds any cached plan — the
     * observable a no-cache-leak spec needs: a `df.persist()` inside an
     * operator registers a session-LIFETIME entry here (CacheManager

@@ -185,7 +185,7 @@ class AnalyzeSpec extends AnyFunSuite with Matchers {
       .filter(l => l.nonEmpty && !l.startsWith("lgk=")).toSet
     val store0 = store()
     val oneBucketKeys = (400L until 500L).filter(k =>
-      GraftTable.bucketFor(spark, GraftTable.snapshotAt(root, -1), Map("k" -> k)) == 0).take(20)
+      TestSpark.bucketOf(GraftTable.snapshotAt(root, -1), k) == 0).take(20)
     GraftTable.upsert(spark, root,
       oneBucketKeys.toDF("k").withColumn("grp", col("k") % 10)
         .withColumn("s", lit("brand_new_value"))

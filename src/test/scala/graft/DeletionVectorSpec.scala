@@ -95,7 +95,7 @@ class DeletionVectorSpec extends AnyFunSuite with Matchers {
   test("point lookups and stats-pruned scans apply the DV") {
     val path = freshTable("graft_dv_lookup")
     GraftTable.deleteMor(spark, path, Seq(42L).toDF("k"))
-    val b = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> 42L))
+    val b = TestSpark.bucketOf(GraftTable.snapshotAt(path, 1), 42L)
     GraftTable.readBuckets(spark, path, 1, Set(b))
       .filter(col("k") === 42L).count() shouldBe 0L
     // the DSv1 point-lookup path (full-key equality through format("graft"))

@@ -95,7 +95,7 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     snap.count() shouldBe 32L
     snap.filter(col("k") === 111L).select("x").as[Long].collect() shouldBe Array(333L)
     // point lookup of a log-only key in a dir-less bucket
-    val b = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> 111L))
+    val b = TestSpark.bucketOf(GraftTable.snapshotAt(path, 1), 111L)
     GraftTable.readBuckets(spark, path, 1, Set(b))
       .filter(col("k") === 111L).count() shouldBe 1L
   }
@@ -122,7 +122,7 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     // delete EVERY key of 500's bucket (stored and log alike): the
     // bucket comes out empty, and without a tombstone dir the carried
     // #delta line would resurrect key 500
-    val b = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> 500L))
+    val b = TestSpark.bucketOf(GraftTable.snapshotAt(path, 1), 500L)
     val victims = GraftTable.readBuckets(spark, path, 1, Set(b)).select("k")
     GraftTable.delete(spark, path, victims)
     val snap = GraftTable.read(spark, path)
@@ -182,9 +182,9 @@ class DeltaCommitSpec extends AnyFunSuite with Matchers {
     GraftTable.upsertMor(spark, path, Seq((100L, -100L, 0)).toDF("k", "x", "grp")) // v1
     // v2 rewrites 100's bucket for an unrelated key: 100's image is
     // unchanged (log → materialized), so (1, 2] must report ONLY 37
-    val sameBucket = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> 100L))
+    val sameBucket = TestSpark.bucketOf(GraftTable.snapshotAt(path, 1), 100L)
     val other = (0L until 40L).find(k =>
-      GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 1), Map("k" -> k)) == sameBucket).get
+      TestSpark.bucketOf(GraftTable.snapshotAt(path, 1), k) == sameBucket).get
     GraftTable.upsert(spark, path, Seq((other, 5555L, 0)).toDF("k", "x", "grp")) // v2
     val ch = GraftTable.changes(spark, path, 1, 2)
     ch.filter(col("_deleted")).count() shouldBe 0L

@@ -42,7 +42,7 @@ class GraftDmlSpec extends AnyFunSuite with Matchers {
     // three specific keys → at most three buckets hold matches
     val victims = Seq(7L, 400L, 901L)
     val matchBuckets = victims
-      .map(k => GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 0), Map("k" -> k))).toSet
+      .map(k => TestSpark.bucketOf(GraftTable.snapshotAt(path, 0), k)).toSet
     GraftTable.deleteWhere(spark, path, col("k").isin(victims: _*)) shouldBe 3L
     val m1 = GraftTable.snapshot(path, 1).dirs
     val changed = m1.filter { case (b, d) => m0(b) != d }
@@ -93,7 +93,7 @@ class GraftDmlSpec extends AnyFunSuite with Matchers {
   test("update rewrites only buckets holding matches; zero matches commits nothing") {
     val path = freshTable("graft_upd_cow")
     val m0 = GraftTable.snapshot(path, 0).dirs
-    val b42 = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 0), Map("k" -> 42L))
+    val b42 = TestSpark.bucketOf(GraftTable.snapshotAt(path, 0), 42L)
     GraftTable.update(spark, path, col("k") === 42L, Map("x" -> lit(-1L))) shouldBe 1L
     val m1 = GraftTable.snapshot(path, 1).dirs
     m1.filter { case (b, d) => m0(b) != d }.keySet shouldBe Set(b42)
@@ -157,7 +157,7 @@ class GraftDmlSpec extends AnyFunSuite with Matchers {
     t.filter(col("k") === 5000L).head().getLong(1) shouldBe 42L
     // COW minimality: only the source keys' buckets were rewritten
     val touched = Seq(10L, 11L, 5000L)
-      .map(k => GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, 0), Map("k" -> k))).toSet
+      .map(k => TestSpark.bucketOf(GraftTable.snapshotAt(path, 0), k)).toSet
     val m1 = GraftTable.snapshot(path, 1).dirs
     m1.filter { case (b, d) => m0.get(b).contains(d) }.keySet shouldBe
       m0.keySet.filterNot(touched)

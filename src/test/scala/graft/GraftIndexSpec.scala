@@ -964,7 +964,7 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
     val ivf = GraftIndex.servingModel(spark, path).left.toOption.get
     val near = IvfIndex.nearestCells(ivf, q, 1).head
     // every key living in the query's nearest cell, read off that cell's files
-    val doomed = spark.read.parquet(ivf.files.get(near): _*).select("k")
+    val doomed = spark.read.parquet(ivf.files.get(near).map(_._1): _*).select("k")
     doomed.count() should be > 0L
     GraftTable.delete(spark, path, doomed)
     GraftIndex.refresh(spark, path) shouldBe Some((0, 1))
@@ -1004,7 +1004,7 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
     val cell = IvfIndex.nearestCells(
       IvfIndex.Model("", recreated.map(_.toArray).toArray, "cosine"), q, 1).head
     val cellKeys = spark.read.parquet(
-      GraftIndex.servingModel(spark, path).left.toOption.get.files.get(cell): _*)
+      GraftIndex.servingModel(spark, path).left.toOption.get.files.get(cell).map(_._1): _*)
       .select("k").collect().map(_.getLong(0)).toSet
     GraftIndex.probe(spark, path, q, 5, nprobe = 1)
       .select("k").collect().map(_.getLong(0)).toSet.subsetOf(cellKeys) shouldBe true
@@ -1038,9 +1038,10 @@ class GraftIndexSpec extends AnyFunSuite with Matchers {
     val path = Files.createTempDirectory("graft_index_plan").toString + "/t"
     GraftTable.create((0L until 2000L).map(k => (k, s"doc-$k", vec(k))).toDF("k", "s", "v"),
       path, Seq("k"), nbuckets = 16)
-    GraftIndex.create(spark, path, "v", nlist = 16)
-    // more files than parallelPartitionDiscovery.threshold (32): handed
-    // the whole manifest, Spark would list them in a distributed job
+    // one file per cell: 48 cells give more files than
+    // parallelPartitionDiscovery.threshold (32) — handed the whole
+    // manifest as paths, Spark would list them in a distributed job
+    GraftIndex.create(spark, path, "v", nlist = 48)
     GraftIndex.manifest(path).values.map(_.size).sum should be > 32
     val q = vec(77L)
     val sql = s"SELECT * FROM graft_index_search('$path', " +

@@ -43,7 +43,7 @@ class GraftSourceSpec extends AnyFunSuite with Matchers {
     val base = spark.range(0, 100).toDF("k").withColumn("x", col("k") * 2)
     GraftTable.create(base, path, Seq("k"), nbuckets = 8)
 
-    val b7 = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, -1), Map("k" -> 7L))
+    val b7 = TestSpark.bucketOf(GraftTable.snapshotAt(path, -1), 7L)
     val hit = GraftTable.readBuckets(spark, path, -1, Set(b7))
     hit.filter(col("k") === 7).count() shouldBe 1
     // every other bucket combined does NOT hold the key
@@ -56,10 +56,10 @@ class GraftSourceSpec extends AnyFunSuite with Matchers {
     GraftTable.upsert(spark, path,
       Seq((7L, 14L, "fresh")).toDF("k", "x", "note"))
     val all = GraftTable.read(spark, path)
-    val oldBucket = GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, -1), Map("k" -> 8L))
+    val oldBucket = TestSpark.bucketOf(GraftTable.snapshotAt(path, -1), 8L)
     val padded = GraftTable.readBuckets(spark, path, -1, Set(oldBucket))
     padded.columns.toSeq shouldBe all.columns.toSeq
-    if (oldBucket != GraftTable.bucketFor(spark, GraftTable.snapshotAt(path, -1), Map("k" -> 7L)))
+    if (oldBucket != TestSpark.bucketOf(GraftTable.snapshotAt(path, -1), 7L))
       padded.filter(col("k") === 8).head().getAs[String]("note") shouldBe null
   }
 

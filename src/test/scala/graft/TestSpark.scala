@@ -22,4 +22,13 @@ object TestSpark {
   }
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** The bucket a bigint record key `k` hashes into under snapshot
+    * `s`'s layout — the writers' own `pmod(xxhash64(k), n)` expression,
+    * evaluated on the driver.
+    */
+  def bucketOf(s: graft.sources.GraftTable.Snapshot, k: Long): Int =
+    org.apache.spark.sql.graftshim.Bridge.bucketExprEval(
+      Seq(org.apache.spark.sql.types.LongType), s.nbuckets)(
+      org.apache.spark.sql.catalyst.InternalRow(k))
 }
